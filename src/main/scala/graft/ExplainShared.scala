@@ -39,7 +39,11 @@ object ExplainShared {
     val names = if (args.nonEmpty) args.toSeq else builds.keys.toSeq.sorted
     names.foreach { n =>
       println(s"\n===================== $n =====================")
-      builds(n)().explain("formatted")
+      builds.get(n) match {
+        case Some(build) => build().explain("formatted")
+        case None => println(s"unknown shared build '$n'; valid: " +
+          builds.keys.toSeq.sorted.mkString(", "))
+      }
     }
     spark.stop()
   }

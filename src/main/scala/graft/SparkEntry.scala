@@ -32,7 +32,53 @@ object SparkEntry {
   private def valid(s: SparkSession, dir: String): DataFrame =
     Readings.enriched(s, dir, T).filter(col("status") === "valid")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One `v_recall_*` row: the shared recall harness ([[VectorOps.recall]])
+    * over one search, at the matrix's standard 20 queries and k = 5. The
+    * search and its DuckDB mirror sit side by side, so `queries` and
+    * `oracleSql` cannot grade different searches or parameters. `filtered`
+    * grades against the label-filtered exact top-k instead of [[VectorOps.knn]].
+    * Recall rows with their own logic (filtered IVF, split, trained,
+    * margin) stay in the maps below.
+    */
+  private final case class RecallRow(name: String,
+                                     search: (SparkSession, String) => DataFrame,
+                                     searchSql: String, filtered: Boolean = false) {
+    def query(s: SparkSession, dir: String): DataFrame =
+      if (filtered)
+        VectorOps.recall(s, dir, search(s, dir), 20, 5, VectorOps.sharedKnnFilteredExact)
+      else VectorOps.recall(s, dir, search(s, dir), 20, 5)
+    def oracle: String =
+      if (filtered) VectorOps.recallSql(searchSql, 20, 5, VectorOps.knnFilteredSql)
+      else VectorOps.recallSql(searchSql, 20, 5)
+  }
+
+  private val recallRows: Seq[RecallRow] = Seq(
+    // IVF candidate pruning, exact ranking of the probed lists
+    RecallRow("v_recall", VectorOps.annIvfMulti(_, _), VectorOps.annIvfMultiSql()),
+    // sign-LSH single-probe bucketing
+    RecallRow("v_recall_lsh", VectorOps.annLsh(_, _), VectorOps.annLshSql()),
+    // SQ8 full scan: pure scalar-quantization loss
+    RecallRow("v_recall_sq", VectorOps.annSq(_, _), VectorOps.annSqSql()),
+    // random projection: pure dimension-reduction loss, then exact re-rank
+    RecallRow("v_recall_rp", VectorOps.annRp(_, _), VectorOps.annRpSql()),
+    RecallRow("v_recall_rp_rr", VectorOps.annRpRr(_, _), VectorOps.annRpRrSql()),
+    // IVF + SQ: both losses at once
+    RecallRow("v_recall_ivfsq", VectorOps.annIvfSq(_, _), VectorOps.annIvfSqSql()),
+    // PQ alone (pure quantization), then IVF+PQ, re-ranked and residual
+    RecallRow("v_recall_pq", VectorOps.annPq(_, _), VectorOps.annPqSql()),
+    RecallRow("v_recall_ivfpq", VectorOps.annIvfPq(_, _), VectorOps.annIvfPqSql()),
+    RecallRow("v_recall_ivfpq_rr", VectorOps.annIvfPqRr(_, _), VectorOps.annIvfPqRrSql()),
+    RecallRow("v_recall_ivfpq_res", VectorOps.annIvfPqRes(_, _), VectorOps.annIvfPqResSql()),
+    // graph beam search, plain and label-filtered
+    RecallRow("v_recall_graph", VectorOps.annGraphBeam(_, _), VectorOps.annGraphBeamSql()),
+    RecallRow("v_recall_graph_filtered", VectorOps.annGraphFiltered(_, _),
+      VectorOps.annGraphFilteredSql(), filtered = true),
+    // incrementally maintained IVF: base and delta vectors in one search
+    RecallRow("v_recall_ivf_incr", VectorOps.annIvfIncrSearch(_, _, 20, 5, 16, 2, 5),
+      VectorOps.annIvfIncrSearchSql(20, 5, 16, 2, 5)))
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     // ---- relational core (SURVEY §2.5-2.6 generic capability) ----
     "q1_pricing" -> ((s, dir) => Relational.pricingSummary(s, dir)),
     "q3_top_orders" -> ((s, dir) => Relational.topRevenueOrders(s, dir)),
@@ -330,9 +376,7 @@ object SparkEntry {
     "v_recall_margin" -> ((s, dir) => VectorOps.marginRecall(s, dir)),
     "v_recall_margin_trained" -> ((s, dir) => VectorOps.marginRecallTrained(s, dir)),
     "v_ann_graph" -> ((s, dir) => VectorOps.annGraphBeam(s, dir)),
-    "v_recall_graph" -> ((s, dir) => VectorOps.annRecallGraph(s, dir)),
     "v_ann_graph_filtered" -> ((s, dir) => VectorOps.annGraphFiltered(s, dir)),
-    "v_recall_graph_filtered" -> ((s, dir) => VectorOps.annRecallGraphFiltered(s, dir)),
     "v_graph_compact" -> ((s, dir) => VectorOps.graphCompact(s, dir)),
     "v_graph_merge" -> ((s, dir) => VectorOps.graphMerge(s, dir)),
     "v_ivf_stats" -> ((s, dir) => VectorOps.ivfStats(s, dir)),
@@ -344,20 +388,9 @@ object SparkEntry {
     "v_ann_pq" -> ((s, dir) => VectorOps.annPq(s, dir)),
     "v_ann_ivfpq" -> ((s, dir) => VectorOps.annIvfPq(s, dir)),
     "v_ann_ivfpq_rr" -> ((s, dir) => VectorOps.annIvfPqRr(s, dir)),
-    "v_recall_ivfpq_rr" -> ((s, dir) => VectorOps.annRecallIvfPqRr(s, dir)),
     "v_ann_ivfpq_res" -> ((s, dir) => VectorOps.annIvfPqRes(s, dir)),
-    "v_recall_ivfpq_res" -> ((s, dir) => VectorOps.annRecallIvfPqRes(s, dir)),
-    "v_recall" -> ((s, dir) => VectorOps.annRecall(s, dir)),
-    "v_recall_lsh" -> ((s, dir) => VectorOps.annRecallLsh(s, dir)),
-    "v_recall_sq" -> ((s, dir) => VectorOps.annRecallSq(s, dir)),
-    "v_recall_rp" -> ((s, dir) => VectorOps.annRecallRp(s, dir)),
-    "v_recall_rp_rr" -> ((s, dir) => VectorOps.annRecallRpRr(s, dir)),
-    "v_recall_ivfsq" -> ((s, dir) => VectorOps.annRecallIvfSq(s, dir)),
-    "v_recall_ivfpq" -> ((s, dir) => VectorOps.annRecallIvfPq(s, dir)),
-    "v_recall_pq" -> ((s, dir) => VectorOps.annRecallPq(s, dir)),
     "v_kmeans_step" -> ((s, dir) => VectorOps.kmeansStep(s, dir)),
     "v_ivf_incr" -> ((s, dir) => VectorOps.ivfIncr(s, dir)),
-    "v_recall_ivf_incr" -> ((s, dir) => VectorOps.annRecallIvfIncr(s, dir)),
     "v_recall_ivf_trained" -> ((s, dir) => VectorOps.annRecallIvfTrained(s, dir)),
     "v_knn_graph_incr" -> ((s, dir) => VectorOps.knnGraphIncr(s, dir)),
     "v_knn_graph" -> ((s, dir) => VectorOps.knnGraph(s, dir)),
@@ -397,7 +430,7 @@ object SparkEntry {
     "mm_audio_neardup" -> ((s, dir) => Multimodal.audioNearDup(s, dir)),
     "mm_audio_dedup_incr" -> ((s, dir) => Multimodal.audioDedupIncr(s, dir)),
     "mm_video_dedup_incr" -> ((s, dir) => Multimodal.videoDedupIncr(s, dir))
-  )
+  ) ++ recallRows.map(r => r.name -> (r.query _))
 
   /** DuckDB SQL mirrors. Column names/aliases match the Spark side exactly
     * (the driver sorts columns by name before hashing). Aggregates that mix
@@ -841,9 +874,7 @@ object SparkEntry {
       "v_recall_margin" -> VectorOps.marginRecallSql(),
       "v_recall_margin_trained" -> VectorOps.marginRecallTrainedSql(),
       "v_ann_graph" -> VectorOps.annGraphBeamSql(),
-      "v_recall_graph" -> VectorOps.annRecallGraphSql(),
       "v_ann_graph_filtered" -> VectorOps.annGraphFilteredSql(),
-      "v_recall_graph_filtered" -> VectorOps.annRecallGraphFilteredSql(),
       "v_graph_compact" -> VectorOps.graphCompactSql(),
       "v_graph_merge" -> VectorOps.graphMergeSql(),
       "v_ivf_stats" -> VectorOps.ivfStatsSql(),
@@ -854,20 +885,9 @@ object SparkEntry {
       "v_ann_pq" -> VectorOps.annPqSql(),
       "v_ann_ivfpq" -> VectorOps.annIvfPqSql(),
       "v_ann_ivfpq_rr" -> VectorOps.annIvfPqRrSql(),
-      "v_recall_ivfpq_rr" -> VectorOps.annRecallIvfPqRrSql(),
       "v_ann_ivfpq_res" -> VectorOps.annIvfPqResSql(),
-      "v_recall_ivfpq_res" -> VectorOps.annRecallIvfPqResSql(),
-      "v_recall" -> VectorOps.annRecallSql(),
-      "v_recall_lsh" -> VectorOps.annRecallLshSql(),
-      "v_recall_sq" -> VectorOps.annRecallSqSql(),
-      "v_recall_rp" -> VectorOps.annRecallRpSql(),
-      "v_recall_rp_rr" -> VectorOps.annRecallRpRrSql(),
-      "v_recall_ivfsq" -> VectorOps.annRecallIvfSqSql(),
-      "v_recall_ivfpq" -> VectorOps.annRecallIvfPqSql(),
-      "v_recall_pq" -> VectorOps.annRecallPqSql(),
       "v_kmeans_step" -> VectorOps.kmeansStepSql(),
       "v_ivf_incr" -> VectorOps.ivfIncrSql(),
-      "v_recall_ivf_incr" -> VectorOps.annRecallIvfIncrSql(),
       "v_recall_ivf_trained" -> VectorOps.annRecallIvfTrainedSql(),
       "v_knn_graph_incr" -> VectorOps.knnGraphIncrSql(),
       "v_knn_graph" -> VectorOps.knnGraphSql(),
@@ -905,6 +925,6 @@ object SparkEntry {
       "mm_audio_neardup" -> Multimodal.audioNearDupSql(),
       "mm_audio_dedup_incr" -> Multimodal.audioDedupIncrSql(),
       "mm_video_dedup_incr" -> Multimodal.videoDedupIncrSql()
-    )
+    ) ++ recallRows.map(r => r.name -> r.oracle)
   }
 }

@@ -1902,7 +1902,8 @@ object TextOps {
     * the position rows — one more exchange and two window sorts; one
     * doc-keyed aggregation (map-side deduped) now feeds [[spanFoldArr]]
     * directly. Docs whose every island is below the floor fold to an
-    * empty array and are dropped (spanFoldArr's non-empty contract).
+    * empty array and are dropped: an output-shape choice (a fully spared
+    * doc has no cut row), not a [[spanFoldArr]] requirement.
     */
   private def minRunFloor(cutArrays: DataFrame, minRun: Int): DataFrame = {
     val c = col("all_cuts")
@@ -4394,7 +4395,7 @@ object TextOps {
 
   /** Pair-level recall of the MinHash-LSH candidate generator against the
     * exact df-capped Jaccard pairs — the text-dedup analog of the ANN
-    * recall matrix ([[graft.functions.VectorOps.annRecall]]): "how many of
+    * recall matrix ([[graft.functions.VectorOps.recall]]): "how many of
     * the true ≥0.9 near-dup pairs does the banded index surface?", graded
     * per Jaccard bucket so threshold-edge loss is visible separately from
     * exact-duplicate recall. Fully differential: both inputs are

@@ -110,8 +110,8 @@ object VectorOps {
     graft.SharedRel(spark, s"knnexact|$dir|$nQueries|$k", Materialize.Local)(
       knn(spark, dir, nQueries, k).select(col("q_id"), col("neighbor_id")))
 
-  private def sharedKnnFilteredExact(spark: SparkSession, dir: String,
-                                     nQueries: Int, k: Int): DataFrame =
+  private[graft] def sharedKnnFilteredExact(spark: SparkSession, dir: String,
+                                            nQueries: Int, k: Int): DataFrame =
     graft.SharedRel(spark, s"knnexact|f|$dir|$nQueries|$k", Materialize.Local)(
       knnFiltered(spark, dir, nQueries, k).select(col("q_id"), col("neighbor_id")))
 
@@ -1691,7 +1691,7 @@ object VectorOps {
                         k: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
                         topM: Int = 2,
                         mat: Materialize = Materialize.Local): DataFrame = {
-    val seed = recallAgainstExact(spark, dir,
+    val seed = recall(spark, dir,
         annIvfMulti(spark, dir, nQueries, k, kCentroids, nProbe, mat), nQueries, k)
       .select(col("q_id"), col("n_hits").as("n_hits_seed"),
         col("recall_at_k").as("recall_seed"))
@@ -1703,7 +1703,7 @@ object VectorOps {
       (lit(kCentroids.toLong) + lit(2L) * col("parent") + col("sub")).as("centroid_id"),
       col("cv"), col("cn"))
     val newCents = unsplitCents.unionByName(childCents)
-    val sp = recallAgainstExact(spark, dir,
+    val sp = recall(spark, dir,
         annIvfMultiWith(r.e0, newCents, nQueries, k, nProbe), nQueries, k)
       .select(col("q_id"), col("n_hits").as("n_hits_split"),
         col("recall_at_k").as("recall_split"))
@@ -1745,10 +1745,10 @@ object VectorOps {
          |WHERE rank <= $k""".stripMargin
     s"""WITH seed AS (
        |  SELECT q_id, n_hits AS n_hits_seed, recall_at_k AS recall_seed FROM (
-       |    ${recallSqlOf(annIvfMultiSql(nQueries, k, kCentroids, nProbe), nQueries, k)})),
+       |    ${recallSql(annIvfMultiSql(nQueries, k, kCentroids, nProbe), nQueries, k)})),
        |sp AS (
        |  SELECT q_id, n_hits AS n_hits_split, recall_at_k AS recall_split FROM (
-       |    ${recallSqlOf(splitSearch, nQueries, k)}))
+       |    ${recallSql(splitSearch, nQueries, k)}))
        |SELECT q_id, n_hits_seed, recall_seed, n_hits_split, recall_split
        |FROM seed JOIN sp USING (q_id) ORDER BY q_id""".stripMargin
   }
@@ -1949,15 +1949,6 @@ object VectorOps {
     (centDf(cents), objective.toSeq)
   }
 
-  /** Recall harness over [[annIvfMultiWith]] — measures what TRAINED
-    * centroids buy over the fixed first-k quantizer at equal probe budget.
-    */
-  def annRecallWith(spark: SparkSession, dir: String, centroids: DataFrame,
-                    nQueries: Int = 20, k: Int = 5, nProbe: Int = 2): DataFrame =
-    recallAgainstExact(spark, dir,
-      annIvfMultiWith(prepared(spark, dir), centroids, nQueries, k, nProbe),
-      nQueries, k)
-
   /** ORACLE-PORTABLE spherical k-means: [[kmeansTrain]]'s Lloyd loop with
     * every round's centroid coordinates ROUNDED to 4 decimals before the
     * next assignment — the [[kmeansStep]] cross-engine trick extended to
@@ -2059,12 +2050,12 @@ object VectorOps {
                           k: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
                           iters: Int = 3,
                           mat: Materialize = Materialize.Local): DataFrame = {
-    val seed = recallAgainstExact(spark, dir,
+    val seed = recall(spark, dir,
         annIvfMulti(spark, dir, nQueries, k, kCentroids, nProbe, mat), nQueries, k)
       .select(col("q_id"), col("n_hits").as("n_hits_seed"),
         col("recall_at_k").as("recall_seed"))
     val trained = sharedTrained(spark, dir, kCentroids, iters, mat)
-    val tr = recallAgainstExact(spark, dir,
+    val tr = recall(spark, dir,
         annIvfMultiWith(prepared(spark, dir), trained, nQueries, k, nProbe),
         nQueries, k)
       .select(col("q_id"), col("n_hits").as("n_hits_trained"),
@@ -2106,10 +2097,10 @@ object VectorOps {
          |WHERE rank <= $k""".stripMargin
     s"""WITH seed AS (
        |  SELECT q_id, n_hits AS n_hits_seed, recall_at_k AS recall_seed FROM (
-       |    ${recallSqlOf(annIvfMultiSql(nQueries, k, kCentroids, nProbe), nQueries, k)})),
+       |    ${recallSql(annIvfMultiSql(nQueries, k, kCentroids, nProbe), nQueries, k)})),
        |tr AS (
        |  SELECT q_id, n_hits AS n_hits_trained, recall_at_k AS recall_trained FROM (
-       |    ${recallSqlOf(trainedSearch, nQueries, k)}))
+       |    ${recallSql(trainedSearch, nQueries, k)}))
        |SELECT q_id, n_hits_seed, recall_seed, n_hits_trained, recall_trained
        |FROM seed JOIN tr USING (q_id) ORDER BY q_id""".stripMargin
   }
@@ -2203,14 +2194,6 @@ object VectorOps {
       .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("adc_score"))
       .orderBy(col("q_id"), col("rank"))
   }
-
-  /** Recall harness over [[annPqWith]] — what codebook TRAINING buys over
-    * [[annRecallPq]]'s fixed first-k codebook at identical code budget.
-    */
-  def annRecallPqWith(spark: SparkSession, dir: String, codebook: DataFrame,
-                      nQueries: Int = 20, k: Int = 5, blocks: Int = 4): DataFrame =
-    recallAgainstExact(spark, dir,
-      annPqWith(prepared(spark, dir), codebook, nQueries, k, blocks), nQueries, k)
 
   def annIvfMultiSql(nQueries: Int = 20, kNn: Int = 5, kCentroids: Int = 16,
                      nProbe: Int = 2): String =
@@ -2542,6 +2525,9 @@ object VectorOps {
   private[graft] def marginCore(spark: SparkSession, dir: String, aFilter: Column,
                          k: Int, kCentroids: Int, minMargin: Double,
                          nProbe: Int, mat: Materialize): DataFrame = {
+    // the kCentroids == 1 branch below skips the probe cap, so a probe
+    // count below 1 would mine the full A side instead of nothing
+    require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     val e = prepared(spark, dir)
     // A-side vectors probe their nProbe nearest cells (every A vector is a
     // query here — the multi-probe that recovers cross-cell partners the
@@ -3471,31 +3457,30 @@ object VectorOps {
        |ORDER BY q_id, rank""".stripMargin
 
   /** Recall@k harness — the metric every ANN deployment gates on: for each
-    * query, how many of the exact top-k ([[knn]]) the approximate search
-    * ([[annIvfMulti]]) recovered. Both sides have exact DuckDB mirrors, so
-    * recall itself is FULLY differential — the oracle recomputes the exact
-    * search, the approximate search, and their intersection, and must land
-    * on identical per-query hit counts. Scale shape: both searches as
+    * query, how many of the `exact` top-k (default [[knn]]) the approximate
+    * search `approx` recovered. Every `v_recall_*` row grades its search
+    * through this one harness and its DuckDB mirror [[recallSql]]. Both
+    * sides have exact DuckDB mirrors, so recall itself is FULLY
+    * differential — the oracle recomputes the exact search, the
+    * approximate search, and their intersection, and must land on
+    * identical per-query hit counts. Scale shape: both searches as
     * documented on their operators; the comparison is a narrow
     * (q_id, neighbor_id) join — negligible at any scale.
     */
-  /** Shared comparison: per-query overlap of an approximate top-k with the
-    * exact top-k ([[knn]]).
-    */
-  private def recallAgainstExact(spark: SparkSession, dir: String,
-                                 approx: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val exact = sharedKnnExact(spark, dir, nQueries, k)
-    exact.join(approx.select(col("q_id"), col("neighbor_id"))
+  def recall(spark: SparkSession, dir: String, approx: DataFrame, nQueries: Int, k: Int,
+             exact: (SparkSession, String, Int, Int) => DataFrame = sharedKnnExact): DataFrame =
+    exact(spark, dir, nQueries, k).join(approx.select(col("q_id"), col("neighbor_id"))
         .withColumn("hit", lit(1)), Seq("q_id", "neighbor_id"), "left")
       .groupBy(col("q_id"))
       .agg(sum(coalesce(col("hit"), lit(0))).as("n_hits"))
       .select(col("q_id"), col("n_hits"),
         (col("n_hits") / lit(k.toDouble)).as("recall_at_k"))
       .orderBy(col("q_id"))
-  }
 
-  private def recallSqlOf(approxSql: String, nQueries: Int, k: Int): String =
-    s"""WITH exact AS (SELECT q_id, neighbor_id FROM (${knnSql(nQueries, k)})),
+  /** DuckDB mirror of [[recall]]; `exactSql` mirrors its `exact` side. */
+  def recallSql(approxSql: String, nQueries: Int, k: Int,
+                exactSql: (Int, Int) => String = knnSql): String =
+    s"""WITH exact AS (SELECT q_id, neighbor_id FROM (${exactSql(nQueries, k)})),
        |approx AS (SELECT q_id, neighbor_id FROM (
        |  $approxSql))
        |SELECT q_id, n_hits, n_hits / CAST($k AS DOUBLE) AS recall_at_k FROM (
@@ -4079,153 +4064,6 @@ object VectorOps {
        |ORDER BY q_id""".stripMargin
   }
 
-  /** The recall row for the graph tier at the matrix's standard
-    * (nQueries, k) — where beam search lands against exact top-k, next to
-    * the IVF/PQ/LSH rows.
-    */
-  def annRecallGraph(spark: SparkSession, dir: String, nQueries: Int = 20,
-                     k: Int = 5, beam: Int = 8, hops: Int = 3,
-                     mat: Materialize = Materialize.Local): DataFrame =
-    recallAgainstExact(spark, dir,
-      annGraphBeam(spark, dir, nQueries, k, beam, hops, mat = mat),
-      nQueries, k)
-
-  def annRecallGraphSql(nQueries: Int = 20, k: Int = 5, beam: Int = 8,
-                        hops: Int = 3): String =
-    recallSqlOf(annGraphBeamSql(nQueries, k, beam, hops), nQueries, k)
-
-  /** Filtered-graph recall against the exact FILTERED top-k ([[knnFiltered]])
-    * — where harvest-while-traversing lands, next to the IVF pre/post
-    * contrast rows.
-    */
-  def annRecallGraphFiltered(spark: SparkSession, dir: String,
-                             nQueries: Int = 20, k: Int = 5, beam: Int = 16,
-                             hops: Int = 3,
-                             mat: Materialize = Materialize.Local): DataFrame = {
-    val exact = sharedKnnFilteredExact(spark, dir, nQueries, k)
-    val approx = annGraphFiltered(spark, dir, nQueries, k, beam, hops, mat = mat)
-      .select(col("q_id"), col("neighbor_id")).withColumn("hit", lit(1))
-    exact.join(approx, Seq("q_id", "neighbor_id"), "left")
-      .groupBy(col("q_id"))
-      .agg(sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-      .select(col("q_id"), col("n_hits"),
-        (col("n_hits") / lit(k.toDouble)).as("recall_at_k"))
-      .orderBy(col("q_id"))
-  }
-
-  def annRecallGraphFilteredSql(nQueries: Int = 20, k: Int = 5, beam: Int = 16,
-                                hops: Int = 3): String =
-    s"""WITH exact AS (SELECT q_id, neighbor_id FROM (${knnFilteredSql(nQueries, k)})),
-       |approx AS (SELECT q_id, neighbor_id FROM (
-       |  ${annGraphFilteredSql(nQueries, k, beam, hops)}))
-       |SELECT q_id, n_hits, n_hits / CAST($k AS DOUBLE) AS recall_at_k FROM (
-       |  SELECT e.q_id,
-       |    CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-       |  FROM exact e LEFT JOIN approx a
-       |    ON e.q_id = a.q_id AND e.neighbor_id = a.neighbor_id
-       |  GROUP BY e.q_id)
-       |ORDER BY q_id""".stripMargin
-
-  def annRecall(spark: SparkSession, dir: String, nQueries: Int = 20, k: Int = 5,
-                kCentroids: Int = 16, nProbe: Int = 2,
-                mat: Materialize = Materialize.Local): DataFrame =
-    recallAgainstExact(spark, dir,
-      annIvfMulti(spark, dir, nQueries, k, kCentroids, nProbe, mat), nQueries, k)
-
-  def annRecallSql(nQueries: Int = 20, k: Int = 5, kCentroids: Int = 16,
-                   nProbe: Int = 2): String =
-    recallSqlOf(annIvfMultiSql(nQueries, k, kCentroids, nProbe), nQueries, k)
-
-  /** Same harness over the sign-LSH single-probe search — the recall
-    * contrast between the two bucketing strategies at equal k.
-    */
-  def annRecallLsh(spark: SparkSession, dir: String, nQueries: Int = 20,
-                   k: Int = 5, bits: Int = 4): DataFrame =
-    recallAgainstExact(spark, dir, annLsh(spark, dir, nQueries, k, bits), nQueries, k)
-
-  def annRecallLshSql(nQueries: Int = 20, k: Int = 5, bits: Int = 4): String =
-    recallSqlOf(annLshSql(nQueries, k, bits), nQueries, k)
-
-  /** Same harness over SQ8 asymmetric ranking (full scan, no pruning) —
-    * isolates pure scalar-quantization loss: the gap between this and 1.0
-    * is what 8× storage compression costs in ranking fidelity, with no
-    * probe-restriction term mixed in.
-    */
-  def annRecallSq(spark: SparkSession, dir: String, nQueries: Int = 20,
-                  k: Int = 5): DataFrame =
-    recallAgainstExact(spark, dir, annSq(spark, dir, nQueries, k), nQueries, k)
-
-  def annRecallSqSql(nQueries: Int = 20, k: Int = 5): String =
-    recallSqlOf(annSqSql(nQueries, k), nQueries, k)
-
-  /** Same harness over the signed-random-projection reduced space —
-    * isolates pure dimension-reduction loss: the gap to 1.0 is what a
-    * `d/kDim`× cheaper distance costs in ranking fidelity, the third
-    * compression axis beside [[annRecallSq]] (precision) and
-    * [[annRecall]] (candidate pruning).
-    */
-  def annRecallRp(spark: SparkSession, dir: String, nQueries: Int = 20,
-                  k: Int = 5, kDim: Int = 32): DataFrame =
-    recallAgainstExact(spark, dir, annRp(spark, dir, nQueries, k, kDim), nQueries, k)
-
-  def annRecallRpSql(nQueries: Int = 20, k: Int = 5, kDim: Int = 32): String =
-    recallSqlOf(annRpSql(nQueries, k, kDim), nQueries, k)
-
-  /** Same harness over the RP-prefilter + exact-re-rank pipeline — the
-    * production form's recall; the gap to [[annRecallRp]] is what exact
-    * re-ranking recovers from the candidate pool.
-    */
-  def annRecallRpRr(spark: SparkSession, dir: String, nQueries: Int = 20,
-                    k: Int = 5, kDim: Int = 32, cand: Int = 100): DataFrame =
-    recallAgainstExact(spark, dir,
-      annRpRr(spark, dir, nQueries, k, kDim, cand), nQueries, k)
-
-  def annRecallRpRrSql(nQueries: Int = 20, k: Int = 5, kDim: Int = 32,
-                       cand: Int = 100): String =
-    recallSqlOf(annRpRrSql(nQueries, k, kDim, cand), nQueries, k)
-
-  /** Same harness over the IVF+SQ composed index — total loss with both
-    * knobs on; compare against [[annRecallSq]] (SQ only) and [[annRecall]]
-    * (IVF only) to attribute the gap.
-    */
-  def annRecallIvfSq(spark: SparkSession, dir: String, nQueries: Int = 20,
-                     k: Int = 5, kCentroids: Int = 16, nProbe: Int = 2): DataFrame =
-    recallAgainstExact(spark, dir,
-      annIvfSq(spark, dir, nQueries, k, kCentroids, nProbe), nQueries, k)
-
-  def annRecallIvfSqSql(nQueries: Int = 20, k: Int = 5, kCentroids: Int = 16,
-                        nProbe: Int = 2): String =
-    recallSqlOf(annIvfSqSql(nQueries, k, kCentroids, nProbe), nQueries, k)
-
-  /** Same harness over PQ-only ADC ranking (all candidates, no probe
-    * restriction) — isolates pure quantization loss: any gap between this
-    * and [[annRecallIvfPq]] is the probe restriction's contribution.
-    */
-  def annRecallPq(spark: SparkSession, dir: String, nQueries: Int = 20,
-                  k: Int = 5, blocks: Int = 4, codebook: Int = 16): DataFrame =
-    recallAgainstExact(spark, dir,
-      annPq(spark, dir, nQueries, k, blocks, codebook), nQueries, k)
-
-  def annRecallPqSql(nQueries: Int = 20, k: Int = 5, blocks: Int = 4,
-                     codebook: Int = 16): String =
-    recallSqlOf(annPqSql(nQueries, k, blocks, codebook), nQueries, k)
-
-  /** Same harness over the full IVF+PQ stack — quantifies what the code
-    * compression costs ON TOP of the probe restriction (compare against
-    * [[annRecall]], which ranks the same probed candidates exactly).
-    */
-  def annRecallIvfPq(spark: SparkSession, dir: String, nQueries: Int = 20,
-                     k: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
-                     blocks: Int = 4, codebook: Int = 16): DataFrame =
-    recallAgainstExact(spark, dir,
-      annIvfPq(spark, dir, nQueries, k, kCentroids, nProbe, blocks, codebook),
-      nQueries, k)
-
-  def annRecallIvfPqSql(nQueries: Int = 20, k: Int = 5, kCentroids: Int = 16,
-                        nProbe: Int = 2, blocks: Int = 4, codebook: Int = 16): String =
-    recallSqlOf(annIvfPqSql(nQueries, k, kCentroids, nProbe, blocks, codebook),
-      nQueries, k)
-
   /** IVF+PQ combined — the full architecture production ANN systems run:
     * the IVF half restricts candidates to the query's `nProbe` nearest
     * centroids' inverted lists ([[annIvfMulti]]'s probe mechanism), and the
@@ -4343,7 +4181,7 @@ object VectorOps {
     * re-ranks ONLY the shortlist by exact cosine over the real embeddings,
     * keeping `kNn`. Quantization error then only costs recall when the
     * true neighbor misses the whole shortlist, not when ADC merely
-    * misorders it — the [[annRecallIvfPqRr]] row grades the uplift at
+    * misorders it — the `v_recall_ivfpq_rr` row grades the uplift at
     * equal `nProbe`.
     *
     * Scale shape: stage 1 as [[annIvfPq]] (codes only); the shortlist is
@@ -4406,22 +4244,6 @@ object VectorOps {
        |WHERE rank <= $kNn
        |ORDER BY q_id, rank""".stripMargin
 
-  /** Recall row for the re-ranked stack — same harness, same probe count
-    * as [[annRecallIvfPq]], so the delta is pure re-ranking uplift.
-    */
-  def annRecallIvfPqRr(spark: SparkSession, dir: String, nQueries: Int = 20,
-                       k: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
-                       blocks: Int = 4, codebook: Int = 16, mult: Int = 4): DataFrame =
-    recallAgainstExact(spark, dir,
-      annIvfPqRr(spark, dir, nQueries, k, kCentroids, nProbe, blocks, codebook, mult),
-      nQueries, k)
-
-  def annRecallIvfPqRrSql(nQueries: Int = 20, k: Int = 5, kCentroids: Int = 16,
-                          nProbe: Int = 2, blocks: Int = 4, codebook: Int = 16,
-                          mult: Int = 4): String =
-    recallSqlOf(annIvfPqRrSql(nQueries, k, kCentroids, nProbe, blocks, codebook, mult),
-      nQueries, k)
-
   /** Residual IVF+PQ — the refinement every production IVF+PQ system ships
     * (FAISS `IndexIVFPQ` default): PQ codes quantize the RESIDUAL
     * `r = x − centroid(x)` instead of the raw vector. Residuals are
@@ -4432,7 +4254,7 @@ object VectorOps {
     * with the first term exact (tiny query × centroid table) and only the
     * residual quantized. Same probe restriction and ADC plan shape as
     * [[annIvfPq]]; the recall delta against it is pure residual-encoding
-    * gain, measured by [[annRecallIvfPqRes]].
+    * gain, measured by the `v_recall_ivfpq_res` row.
     *
     * Measured caveat (recorded, not hidden): on the synthetic embeddings
     * residual recall@5 is 0.25 vs 0.30 plain — the corpus is CLUSTER-FREE
@@ -4598,22 +4420,6 @@ object VectorOps {
        |ORDER BY q_id, rank""".stripMargin
   }
 
-  /** Recall harness over residual IVF+PQ — the delta against
-    * [[annRecallIvfPq]] at identical parameters is the residual encoding's
-    * contribution, fully differential on both sides.
-    */
-  def annRecallIvfPqRes(spark: SparkSession, dir: String, nQueries: Int = 20,
-                        k: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
-                        blocks: Int = 4, codebook: Int = 16): DataFrame =
-    recallAgainstExact(spark, dir,
-      annIvfPqRes(spark, dir, nQueries, k, kCentroids, nProbe, blocks, codebook),
-      nQueries, k)
-
-  def annRecallIvfPqResSql(nQueries: Int = 20, k: Int = 5, kCentroids: Int = 16,
-                           nProbe: Int = 2, blocks: Int = 4, codebook: Int = 16): String =
-    recallSqlOf(annIvfPqResSql(nQueries, k, kCentroids, nProbe, blocks, codebook),
-      nQueries, k)
-
   // ---- incremental index maintenance (new vectors vs a frozen index) ----
 
   /** Base/delta split — the stand-in for "the corpus as of the last index
@@ -4772,8 +4578,8 @@ object VectorOps {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  private def annIvfIncrSearchSql(nQueries: Int, kNn: Int, kCentroids: Int,
-                                  nProbe: Int, mod: Int): String =
+  private[graft] def annIvfIncrSearchSql(nQueries: Int, kNn: Int, kCentroids: Int,
+                                         nProbe: Int, mod: Int): String =
     s"""WITH e0 AS ($preparedSql),
        |c AS (SELECT vec_id AS centroid_id, v AS cv, nrm AS cn FROM e0
        |      WHERE ${incSplitSql(mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids),
@@ -4802,22 +4608,4 @@ object VectorOps {
        |  FROM sims)
        |WHERE rank <= $kNn
        |ORDER BY q_id, rank""".stripMargin
-
-  /** Recall-matrix row for the incrementally-maintained index: recall@k of
-    * [[annIvfIncrSearch]] against the exact [[knn]]. The search's candidate
-    * set spans base AND delta vectors, so a delta vector mis-assigned by
-    * the incremental path would surface here as a recall loss — parity
-    * with the batch-built index is asserted row-exactly in OperatorsSpec.
-    */
-  def annRecallIvfIncr(spark: SparkSession, dir: String, nQueries: Int = 20,
-                       k: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
-                       mod: Int = 5): DataFrame =
-    recallAgainstExact(spark, dir,
-      annIvfIncrSearch(spark, dir, nQueries, k, kCentroids, nProbe, mod),
-      nQueries, k)
-
-  def annRecallIvfIncrSql(nQueries: Int = 20, k: Int = 5, kCentroids: Int = 16,
-                          nProbe: Int = 2, mod: Int = 5): String =
-    recallSqlOf(annIvfIncrSearchSql(nQueries, k, kCentroids, nProbe, mod),
-      nQueries, k)
 }

@@ -9,13 +9,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (`front_end/src/hooks/useAlertManager.js:12-29`: repeats of the same
   * (severity, lat@3dp, lon@3dp) key within 30 s are dropped).
   *
-  * Implemented with `flatMapGroupsWithState` + event-time timeout — the
-  * low-level keyed-state tier (the Spark analog of the reference's
+  * Implemented with `flatMapGroupsWithState` + event-time timeout — Spark's
+  * arbitrary keyed-state API (the analog of the reference's
   * `KeyedProcessFunction` + `ValueState`), here because
   * `dropDuplicatesWithinWatermark` can't express "re-emit after the
   * cooldown elapses, keyed on rolling time" semantics exactly. State per
-  * key is one long; the timeout clears state for idle keys so the state
-  * store stays bounded at scale.
+  * key is one long; the event-time timeout clears state for idle keys once
+  * the watermark passes their horizon, so the state store stays bounded by
+  * the watermark at scale and expiry never depends on the wall clock.
   */
 object AlertCooldown {
 

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming twin of [[graft.functions.MixOps.mixRebalance]]: enforce a
+/** Streaming form of [[graft.functions.MixOps.mixRebalance]]: enforce a
   * per-source TOKEN budget over a live document stream — the admission gate
   * a continuous ingest runs so no single source floods the training mix
   * between batch rebalances.

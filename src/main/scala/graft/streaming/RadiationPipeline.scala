@@ -294,29 +294,20 @@ object RadiationPipeline {
       .option("truncate", value = false)
       .start()
 
-  /** Default trigger per transport. A Kafka deployment is the reference's
-    * CONTINUOUS job — and `Trigger.AvailableNow` with the Kafka default
-    * `startingOffsets=latest` would be a silent no-op (start offsets ==
-    * end target, zero batches, immediate exit). A [[Transport.Dir]] run is
-    * a bounded replay, where AvailableNow is exactly right. Pass a trigger
-    * explicitly to override (e.g. AvailableNow + `startingOffsets =
-    * "earliest"` for a bounded Kafka backfill).
-    */
-  def defaultTrigger(t: Transport): Trigger = t match {
-    case _: Transport.Kafka => Trigger.ProcessingTime(0L)
-    case _: Transport.Dir => Trigger.AvailableNow()
-  }
-
   /** End-to-end over a [[Transport]]: [[source]] → parse → validate → dedup →
     * cohort → route → [[writeEpoch]] per micro-batch (kafka topics or
-    * epoch-partitioned parquet). The termination note on the DataFrame
-    * overload below applies here too.
+    * epoch-partitioned parquet), with `onEpoch` run after the sinks in the
+    * same epoch. The termination note on the DataFrame overload below
+    * applies here too.
+    *
+    * `trigger`: a [[Transport.Dir]] run is a bounded replay, where
+    * `Trigger.AvailableNow()` is exactly right. A Kafka deployment is the
+    * reference's CONTINUOUS job (`Trigger.ProcessingTime(0L)`): AvailableNow
+    * with the Kafka default `startingOffsets=latest` does nothing and gives
+    * no error (start offsets == end target, zero batches, immediate exit).
+    * Pair AvailableNow with `startingOffsets = "earliest"` for a bounded
+    * Kafka backfill.
     */
-  def run(spark: SparkSession, t: Transport, checkpointDir: String,
-          thresholds: Thresholds, bounded: Boolean,
-          trigger: Trigger): StreamingQuery =
-    run(spark, t, checkpointDir, thresholds, bounded, trigger, (_, _) => ())
-
   def run(spark: SparkSession, t: Transport, checkpointDir: String,
           thresholds: Thresholds, bounded: Boolean,
           trigger: Trigger,
@@ -324,16 +315,10 @@ object RadiationPipeline {
     runRouted(source(spark, t), t, checkpointDir, thresholds, bounded,
       trigger = trigger, onEpoch = onEpoch)
 
-  def run(spark: SparkSession, t: Transport, checkpointDir: String,
-          thresholds: Thresholds, bounded: Boolean): StreamingQuery =
-    run(spark, t, checkpointDir, thresholds, bounded, defaultTrigger(t))
-
-  def run(spark: SparkSession, t: Transport, checkpointDir: String): StreamingQuery =
-    run(spark, t, checkpointDir, Thresholds(), bounded = true)
-
   /** End-to-end driven entirely by a reference `config.ini`
     * ([[GraftConfig]]): topics, thresholds, watermark, cohort window, and
     * the ENABLE_TEMPORAL_ORDERING topology gate all come from the file.
+    * `trigger` as on the [[Transport]] overload above.
     */
   def run(spark: SparkSession, cfg: GraftConfig, checkpointDir: String,
           trigger: Trigger): StreamingQuery =
@@ -341,9 +326,6 @@ object RadiationPipeline {
       cfg.thresholds, bounded = true, watermark = cfg.watermark,
       window_ = cfg.temporalWindow, annotate = cfg.temporalOrdering,
       trigger = trigger)
-
-  def run(spark: SparkSession, cfg: GraftConfig, checkpointDir: String): StreamingQuery =
-    run(spark, cfg, checkpointDir, defaultTrigger(cfg.transport))
 
   /** End-to-end: source of JSON strings → parse → validate → dedup → cohort →
     * route → one foreachBatch epoch writing the three outputs as parquet
@@ -365,10 +347,12 @@ object RadiationPipeline {
     runRouted(raw, Transport.Dir(inPath = "", outPath = outDir), checkpointDir, t, bounded,
       onEpoch = onEpoch)
 
-  /** Shared tail of both `run` overloads: transforms + one foreachBatch
+  /** Shared tail of every `run` overload: transforms + one foreachBatch
     * epoch routed through [[writeEpoch]]. foreachBatch is at-least-once —
     * a retried epoch re-runs the body; each transport's writer documents
-    * how it absorbs the retry.
+    * how it absorbs the retry. The epoch's cached batch is released even
+    * when a sink throws, so a failed query leaves nothing pinned in the
+    * session's cache.
     */
   private def runRouted(raw: DataFrame, t: Transport, checkpointDir: String,
                         thresholds: Thresholds, bounded: Boolean,
@@ -385,18 +369,19 @@ object RadiationPipeline {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val routed = route(batch.cache())
-        writeEpoch(routed, epochId, t)
-        // serving fold (S9): runs in the SAME epoch as the sinks, so a
-        // served snapshot reflects exactly the delivered records — but a
-        // dashboard-only hook must never fail sink delivery, so failures
-        // log and the stream continues (the hook is idempotent per epoch,
-        // see Serve.Snapshot.beginEpoch, so a skipped/failed fold is a
-        // stale snapshot, not corruption)
-        try onEpoch(routed, epochId)
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[serve] epoch $epochId fold failed (snapshot stale): $e")
-        }
-        batch.unpersist()
+        try {
+          writeEpoch(routed, epochId, t)
+          // serving fold (S9): runs in the SAME epoch as the sinks, so a
+          // served snapshot reflects exactly the delivered records — but a
+          // dashboard-only hook must never fail sink delivery, so failures
+          // log and the stream continues (the hook is idempotent per epoch,
+          // see Serve.Snapshot.beginEpoch, so a skipped/failed fold is a
+          // stale snapshot, not corruption)
+          try onEpoch(routed, epochId)
+          catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[serve] epoch $epochId fold failed (snapshot stale): $e")
+          }
+        } finally batch.unpersist()
         ()
       }
       .start()

@@ -273,6 +273,14 @@ class EdgeCaseSpec extends SparkSuite {
       .marginPairs(spark, dir, k = 2, kCentroids = 1).isEmpty)
   }
 
+  test("marginCore refuses a probe count below 1 instead of mining the full A side") {
+    val e = intercept[IllegalArgumentException] {
+      VectorOps.marginCore(spark, sf(), lit(true), k = 2, kCentroids = 1,
+        minMargin = 1.0, nProbe = 0, mat = Materialize.Passthrough)
+    }
+    assert(e.getMessage.contains("nProbe"))
+  }
+
   test("marginRecall: nothing mined yields defined zero permilles, not nulls") {
     // reuse the empty-B-side shape: exact AND approx miners both return
     // nothing -> n_exact = n_mined = 0 -> the guarded divisions must

@@ -170,7 +170,9 @@ class GatePlanSpec extends SparkSuite {
     import scala.jdk.CollectionConverters._
     val dir = java.nio.file.Paths.get("src/main/scala/graft/streaming")
     assume(java.nio.file.Files.isDirectory(dir), "runs from the repo root")
-    val defPat = """def (frozen\w*)""".r
+    // definition lines only: a comment or scaladoc naming `def frozenX`
+    // must not enter the inventory
+    val defPat = """(?m)^\s*(?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+)*def (frozen\w*)""".r
     val walk = java.nio.file.Files.walk(dir)
     val found =
       try walk.iterator().asScala

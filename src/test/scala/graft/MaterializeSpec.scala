@@ -173,7 +173,8 @@ class MaterializeSpec extends SparkSuite {
     val (book2, _) = VectorOps.pqTrainCodebook(spark, sf(), blocks = 2, k = 4, iters = 1)
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
     intercept[IllegalArgumentException] {
-      VectorOps.annRecallPqWith(spark, sf(), book2, blocks = 4)
+      VectorOps.recall(spark, sf(),
+        VectorOps.annPqWith(VectorOps.prepared(spark, sf()), book2, 20, 5, 4), 20, 5)
     }
     // centroid relation missing cn: same contract
     val badCents = Seq((0, Seq(1.0, 0.0))).toDF("centroid_id", "cv")

@@ -1143,11 +1143,11 @@ class OperatorsSpec extends SparkSuite {
     // raw projection ranking on isotropic testdata is lossy but far above
     // the ~0.01 chance floor; exact re-rank over the candidate pool
     // recovers most of it — the gap IS the operator's story
-    val rec = VectorOps.annRecallRp(spark, sf()).collect()
+    val rec = VectorOps.recall(spark, sf(), VectorOps.annRp(spark, sf()), 20, 5).collect()
       .map(_.getAs[Double]("recall_at_k"))
     val raw = rec.sum / rec.length
     assert(raw >= 0.1, s"avg raw RP recall $raw < 0.1")
-    val recRr = VectorOps.annRecallRpRr(spark, sf()).collect()
+    val recRr = VectorOps.recall(spark, sf(), VectorOps.annRpRr(spark, sf()), 20, 5).collect()
       .map(_.getAs[Double]("recall_at_k"))
     val rr = recRr.sum / recRr.length
     assert(rr >= 0.7, s"avg re-ranked RP recall $rr < 0.7")
@@ -2176,7 +2176,7 @@ class OperatorsSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(got == expected, "SQ ranking diverges from brute-force")
     // quantization loss stays small: recall@5 of the SQ tier on testdata
-    val rec = VectorOps.annRecallSq(spark, sf()).collect()
+    val rec = VectorOps.recall(spark, sf(), VectorOps.annSq(spark, sf()), 20, 5).collect()
       .map(_.getAs[Double]("recall_at_k"))
     assert(rec.sum / rec.length >= 0.8, s"avg SQ recall ${rec.sum / rec.length} < 0.8")
   }
@@ -2477,7 +2477,8 @@ class OperatorsSpec extends SparkSuite {
     // from the probed routing layer must beat the same beam trapped at a
     // single fixed entry (the cell-bounded edge graph is disconnected
     // across cells — measured 0.08 recall@5 without routing)
-    val routed = VectorOps.annRecallGraph(spark, sf("sf0.01")).collect()
+    val routed = VectorOps.recall(spark, sf("sf0.01"),
+        VectorOps.annGraphBeam(spark, sf("sf0.01")), 20, 5).collect()
       .map(_.getDouble(2))
     assert(routed.sum / routed.length >= 0.5,
       s"routed beam recall collapsed: ${routed.sum / routed.length}")
@@ -2492,7 +2493,9 @@ class OperatorsSpec extends SparkSuite {
     filt.foreach { case (q, n) =>
       assert(labels(n) == labels(q), s"neighbor $n breaks q $q's predicate")
     }
-    val fRecall = VectorOps.annRecallGraphFiltered(spark, sf("sf0.01"))
+    val fRecall = VectorOps.recall(spark, sf("sf0.01"),
+        VectorOps.annGraphFiltered(spark, sf("sf0.01")), 20, 5,
+        VectorOps.sharedKnnFilteredExact)
       .collect().map(_.getDouble(2))
     assert(fRecall.sum / fRecall.length >= 0.4,
       s"filtered harvest recall collapsed: ${fRecall.sum / fRecall.length}")
@@ -3054,8 +3057,10 @@ class OperatorsSpec extends SparkSuite {
     // fixed first-k quantizer
     def meanRecall(df: org.apache.spark.sql.DataFrame): Double =
       df.agg(avg("recall_at_k")).head().getDouble(0)
-    val init = meanRecall(VectorOps.annRecall(spark, sf(), kCentroids = 8))
-    val post = meanRecall(VectorOps.annRecallWith(spark, sf(), trained))
+    val init = meanRecall(VectorOps.recall(spark, sf(),
+      VectorOps.annIvfMulti(spark, sf(), kCentroids = 8), 20, 5))
+    val post = meanRecall(VectorOps.recall(spark, sf(),
+      VectorOps.annIvfMultiWith(VectorOps.prepared(spark, sf()), trained, 20, 5, 2), 20, 5))
     assert(post >= init - 0.05, s"trained recall $post regressed vs init $init")
   }
 
@@ -3105,17 +3110,21 @@ class OperatorsSpec extends SparkSuite {
     // on clustered data training must pay
     val (cb, _) = VectorOps.pqTrainCodebook(spark, clusteredDir, blocks = 4,
       k = 16, iters = 4)
-    val fixed = meanRecall(VectorOps.annRecallPq(spark, clusteredDir))
-    val trained = meanRecall(VectorOps.annRecallPqWith(spark, clusteredDir, cb))
+    val fixed = meanRecall(VectorOps.recall(spark, clusteredDir,
+      VectorOps.annPq(spark, clusteredDir), 20, 5))
+    val trained = meanRecall(VectorOps.recall(spark, clusteredDir,
+      VectorOps.annPqWith(VectorOps.prepared(spark, clusteredDir), cb, 20, 5, 4), 20, 5))
     assert(trained >= fixed,
       s"trained-codebook recall $trained must not lose to fixed $fixed on clustered data")
   }
 
   test("residual IVF+PQ beats plain IVF+PQ on clustered embeddings") {
-    val res = meanRecall(VectorOps.annRecallIvfPqRes(spark, clusteredDir,
-      nQueries = 20, k = 5, kCentroids = 4, nProbe = 2, blocks = 4, codebook = 16))
-    val plain = meanRecall(VectorOps.annRecallIvfPq(spark, clusteredDir,
-      nQueries = 20, k = 5, kCentroids = 4, nProbe = 2, blocks = 4, codebook = 16))
+    val res = meanRecall(VectorOps.recall(spark, clusteredDir,
+      VectorOps.annIvfPqRes(spark, clusteredDir, nQueries = 20, kNn = 5,
+        kCentroids = 4, nProbe = 2, blocks = 4, k = 16), 20, 5))
+    val plain = meanRecall(VectorOps.recall(spark, clusteredDir,
+      VectorOps.annIvfPq(spark, clusteredDir, nQueries = 20, kNn = 5,
+        kCentroids = 4, nProbe = 2, blocks = 4, k = 16), 20, 5))
     assert(res > plain,
       s"residual recall $res must beat plain $plain on clustered data")
   }
@@ -3125,16 +3134,18 @@ class OperatorsSpec extends SparkSuite {
     // the re-rank stage, so any recall delta is its uplift. On clustered
     // data ADC misorders true neighbors it did shortlist; re-ranking must
     // recover them (strictly, on this fixture).
-    val rr = meanRecall(VectorOps.annRecallIvfPqRr(spark, clusteredDir,
-      nQueries = 20, k = 5, kCentroids = 4, nProbe = 2, blocks = 4, codebook = 16))
-    val plain = meanRecall(VectorOps.annRecallIvfPq(spark, clusteredDir,
-      nQueries = 20, k = 5, kCentroids = 4, nProbe = 2, blocks = 4, codebook = 16))
+    val rr = meanRecall(VectorOps.recall(spark, clusteredDir,
+      VectorOps.annIvfPqRr(spark, clusteredDir, nQueries = 20, kNn = 5,
+        kCentroids = 4, nProbe = 2, blocks = 4, k = 16), 20, 5))
+    val plain = meanRecall(VectorOps.recall(spark, clusteredDir,
+      VectorOps.annIvfPq(spark, clusteredDir, nQueries = 20, kNn = 5,
+        kCentroids = 4, nProbe = 2, blocks = 4, k = 16), 20, 5))
     assert(rr > plain, s"re-ranked recall $rr must beat plain ADC $plain")
     // and on the cluster-free sf embeddings it must never LOSE recall:
     // the shortlist contains the ADC top-k, so exact re-scoring can only
     // promote true neighbors into the cut, not evict them for impostors
-    val rrSf = meanRecall(VectorOps.annRecallIvfPqRr(spark, sf()))
-    val plainSf = meanRecall(VectorOps.annRecallIvfPq(spark, sf()))
+    val rrSf = meanRecall(VectorOps.recall(spark, sf(), VectorOps.annIvfPqRr(spark, sf()), 20, 5))
+    val plainSf = meanRecall(VectorOps.recall(spark, sf(), VectorOps.annIvfPq(spark, sf()), 20, 5))
     assert(rrSf >= plainSf, s"re-ranking lost recall on sf: $rrSf < $plainSf")
   }
 

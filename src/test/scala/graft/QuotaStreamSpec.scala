@@ -51,44 +51,23 @@ class QuotaStreamSpec extends SparkSuite {
     assert(!rows(8L).admitted, "srcB exhausted after doc 7")
   }
 
-  test("transformWithState quota tier matches the flatMapGroupsWithState tier") {
+  test("quota: one batch yields the golden decisions") {
     import spark.implicits._
-    import graft.streaming.QuotaStreamTws
-    // TWS executes only on the RocksDB provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val data = Seq(
-        QDoc(1L, "srcA", 50L, ts("2026-01-01 10:00:00")),
-        QDoc(2L, "srcA", 40L, ts("2026-01-01 10:00:01")),
-        QDoc(3L, "srcA", 40L, ts("2026-01-01 10:00:02")),
-        QDoc(4L, "srcA", 10L, ts("2026-01-01 10:00:03")),
-        QDoc(5L, "srcB", 99L, ts("2026-01-01 10:00:00")))
-      def run(name: String,
-              f: org.apache.spark.sql.Dataset[QDoc] =>
-                org.apache.spark.sql.Dataset[Decision]): Seq[(Long, Boolean, Long)] = {
-        val in = MemoryStream[QDoc]
-        val q = f(in.toDS()).writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        in.addData(data: _*)
-        q.processAllAvailable()
-        val rows = spark.table(name)
-          .select("doc_id", "admitted", "admitted_tok")
-          .as[(Long, Boolean, Long)].collect().sorted.toSeq
-        q.stop(); rows
-      }
-      val tws = run("quota_tws_t", ds => QuotaStreamTws(ds, quota = 100L))
-      val fmgs = run("quota_fmgs_t", ds => QuotaStream(ds, quota = 100L))
-      assert(tws == fmgs)
-      assert(tws.map(r => r._1 -> r._2).toMap ==
-        Map(1L -> true, 2L -> true, 3L -> false, 4L -> true, 5L -> true))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val in = MemoryStream[QDoc]
+    val q = QuotaStream(in.toDS(), quota = 100L).writeStream
+      .format("memory").queryName("quota_golden_t").outputMode("append").start()
+    in.addData(
+      QDoc(1L, "srcA", 50L, ts("2026-01-01 10:00:00")),
+      QDoc(2L, "srcA", 40L, ts("2026-01-01 10:00:01")),
+      QDoc(3L, "srcA", 40L, ts("2026-01-01 10:00:02")),
+      QDoc(4L, "srcA", 10L, ts("2026-01-01 10:00:03")),
+      QDoc(5L, "srcB", 99L, ts("2026-01-01 10:00:00")))
+    q.processAllAvailable()
+    val rows = spark.table("quota_golden_t")
+      .select("doc_id", "admitted", "admitted_tok")
+      .as[(Long, Boolean, Long)].collect().sorted.toSeq
+    q.stop()
+    assert(rows == Seq((1L, true, 50L), (2L, true, 90L), (3L, false, 90L),
+      (4L, true, 100L), (5L, true, 99L)))
   }
 }

@@ -177,49 +177,28 @@ class StreamingSpec extends SparkSuite {
     assert(dirty.where(col("temporal_batch_size").isNotNull).count() == 0)
   }
 
-  test("alert cooldown: transformWithState twin emits identically to flatMapGroupsWithState") {
-    import graft.streaming.AlertCooldownTws
-    // TWS executes only on the RocksDB provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def alert(ts: String, k: String = "warning|1.000|2.000") = AlertCooldown.Alert(
-        key = k, severity = "warning", lat = 1, lon = 2, value = 60,
-        event_time = java.sql.Timestamp.valueOf(ts))
-      val data = Seq(
-        alert("2011-03-15 10:00:00"),
-        alert("2011-03-15 10:00:10"),                              // inside cooldown
-        alert("2011-03-15 10:00:31"),                              // ≥ 30 s → re-emits
-        alert("2011-03-15 10:00:05", k = "critical|1.000|2.000"),  // independent key
-        alert("2011-03-15 10:01:40"))                              // past the 2nd emit
-      def run(name: String,
-              f: org.apache.spark.sql.Dataset[AlertCooldown.Alert] =>
-                org.apache.spark.sql.Dataset[AlertCooldown.Alert]): Seq[(String, String)] = {
-        val in = MemoryStream[AlertCooldown.Alert]
-        val q = f(in.toDS()).writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        in.addData(data: _*)
-        q.processAllAvailable()
-        val rows = spark.table(name).as[AlertCooldown.Alert].collect()
-          .map(a => (a.key, a.event_time.toString)).sorted.toSeq
-        q.stop(); rows
-      }
-      val tws = run("cd_tws_t", ds => AlertCooldownTws(ds))
-      val fmgs = run("cd_fmgs_t", ds => AlertCooldown(ds))
-      assert(tws == fmgs, s"tiers diverged: $tws vs $fmgs")
-      assert(tws.toSet == Set(
-        ("critical|1.000|2.000", "2011-03-15 10:00:05.0"),
-        ("warning|1.000|2.000", "2011-03-15 10:00:00.0"),
-        ("warning|1.000|2.000", "2011-03-15 10:00:31.0"),
-        ("warning|1.000|2.000", "2011-03-15 10:01:40.0")))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
-    }
+  test("alert cooldown: one batch yields the golden emissions") {
+    def alert(ts: String, k: String = "warning|1.000|2.000") = AlertCooldown.Alert(
+      key = k, severity = "warning", lat = 1, lon = 2, value = 60,
+      event_time = java.sql.Timestamp.valueOf(ts))
+    val in = MemoryStream[AlertCooldown.Alert]
+    val q = AlertCooldown(in.toDS()).writeStream.format("memory")
+      .queryName("cd_golden_t").outputMode("append").start()
+    in.addData(
+      alert("2011-03-15 10:00:00"),
+      alert("2011-03-15 10:00:10"),                              // inside cooldown
+      alert("2011-03-15 10:00:31"),                              // ≥ 30 s → re-emits
+      alert("2011-03-15 10:00:05", k = "critical|1.000|2.000"),  // independent key
+      alert("2011-03-15 10:01:40"))                              // past the 2nd emit
+    q.processAllAvailable()
+    val rows = spark.table("cd_golden_t").as[AlertCooldown.Alert].collect()
+      .map(a => (a.key, a.event_time.toString)).sorted.toSeq
+    q.stop()
+    assert(rows == Seq(
+      ("critical|1.000|2.000", "2011-03-15 10:00:05.0"),
+      ("warning|1.000|2.000", "2011-03-15 10:00:00.0"),
+      ("warning|1.000|2.000", "2011-03-15 10:00:31.0"),
+      ("warning|1.000|2.000", "2011-03-15 10:01:40.0")))
   }
 
   test("alert cooldown state expires via event-time timeout after the horizon") {
@@ -230,12 +209,21 @@ class StreamingSpec extends SparkSuite {
     val out = AlertCooldown(in.toDS(), cooldownSec = 30)
     val q = out.writeStream.format("memory").queryName("cooldown_to_t")
       .outputMode("append").start()
+    // state rows per executed batch (progress events of idle triggers
+    // carry no state operators)
+    def stateHistory = q.recentProgress.flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
+    def stateRows = stateHistory.last
     in.addData(alert("2011-03-15 10:00:00"))
     q.processAllAvailable()
+    assert(stateRows == 1)
     // advance the watermark far past the 2× cooldown horizon → state removed
     in.addData(AlertCooldown.Alert("other", "warning", 9, 9, 60,
       java.sql.Timestamp.valueOf("2011-03-15 11:00:00")))
     q.processAllAvailable()
+    // both keys were held while the pusher's batch ran; the no-data batch
+    // that follows the watermark advance times the first key out
+    assert(stateHistory.max == 2)
+    assert(stateRows == 1, "the key past its horizon must leave the state store")
     // same key again: with state expired this emits even though a live
     // cooldown window from 10:00:00 would not have mattered anyway —
     // documents the bounded-state tradeoff of the timeout
@@ -332,45 +320,35 @@ class StreamingSpec extends SparkSuite {
       (1L, 1, "view"), (1L, 2, "click"), (1L, 3, "purchase"), (2L, 1, "view")))
   }
 
-  test("transformWithState funnel matches the flatMapGroupsWithState tier") {
-    import graft.streaming.{FunnelStream, FunnelStreamTws}
+  test("streaming funnel: one batch yields the golden stage hits") {
+    import graft.streaming.FunnelStream
     import graft.streaming.FunnelStream.Activity
-    // TWS executes only on the RocksDB provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ts = (s: Int) => Timestamp.valueOf(f"2026-01-01 10:00:$s%02d")
-      val data = Seq(
-        Activity(1L, "view", ts(0)), Activity(1L, "click", ts(10)),
-        Activity(1L, "purchase", ts(20)),
-        Activity(2L, "click", ts(1)), Activity(2L, "view", ts(5)))
-      def run(name: String, f: org.apache.spark.sql.Dataset[Activity] =>
-          org.apache.spark.sql.Dataset[graft.streaming.FunnelStream.StageHit]) = {
-        val in = MemoryStream[Activity]
-        val q = f(in.toDS()).writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        in.addData(data: _*)
-        q.processAllAvailable()
-        val rows = spark.table(name)
-          .select("user_id", "stage", "stage_name").as[(Long, Int, String)]
-          .collect().sorted.toSeq
-        q.stop(); rows
-      }
-      // idleTtlMs = 0: TTL needs ProcessingTime mode, whose self-triggering
-      // clock never lets processAllAvailable settle in a deterministic test
-      val tws = run("funnel_tws_t", ds => FunnelStreamTws(ds, idleTtlMs = 0))
-      val fmgs = run("funnel_fmgs_t", ds => FunnelStream(ds))
-      assert(tws == fmgs)
-      assert(tws == Seq((1L, 1, "view"), (1L, 2, "click"), (1L, 3, "purchase"),
-        (2L, 1, "view")))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val ts = (s: Int) => Timestamp.valueOf(f"2026-01-01 10:00:$s%02d")
+    val in = MemoryStream[Activity]
+    val q = FunnelStream(in.toDS(), idleTimeoutSec = 60).writeStream
+      .format("memory").queryName("funnel_golden_t").outputMode("append").start()
+    // state rows per executed batch (progress events of idle triggers
+    // carry no state operators)
+    def stateHistory = q.recentProgress.flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
+    def stateRows = stateHistory.last
+    in.addData(
+      Activity(1L, "view", ts(0)), Activity(1L, "click", ts(10)),
+      Activity(1L, "purchase", ts(20)),
+      Activity(2L, "click", ts(1)), Activity(2L, "view", ts(5)))
+    q.processAllAvailable()
+    val hits = spark.table("funnel_golden_t")
+      .select("user_id", "stage", "stage_name").as[(Long, Int, String)]
+      .collect().sorted.toSeq
+    assert(hits == Seq((1L, 1, "view"), (1L, 2, "click"), (1L, 3, "purchase"),
+      (2L, 1, "view")))
+    assert(stateRows == 2)
+    // a third user an hour later pushes the watermark past both users'
+    // 60 s idle horizon: their state expires, only the new user's remains
+    in.addData(Activity(3L, "noop", Timestamp.valueOf("2026-01-01 11:00:00")))
+    q.processAllAvailable()
+    assert(stateHistory.max == 3)
+    assert(stateRows == 1, "idle users must leave the state store")
+    q.stop()
   }
 
   test("streaming funnel state survives a checkpointed restart") {

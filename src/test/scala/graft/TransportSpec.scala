@@ -52,7 +52,7 @@ class TransportSpec extends SparkSuite {
     // trigger is continuous, matching the reference's always-on job)
     val q = RadiationPipeline.run(spark, kafka, ckpt,
       graft.operators.Readings.Thresholds(), bounded = true,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      org.apache.spark.sql.streaming.Trigger.AvailableNow(), onEpoch = (_, _) => ())
     q.awaitTermination()
 
     val byTopic = FakeKafka.sentByTopic
@@ -153,10 +153,33 @@ class TransportSpec extends SparkSuite {
     Files.writeString(java.nio.file.Path.of(in, "a.jsonl"),
       Seq(rec("2011-03-15 10:00:00"), rec("2011-03-15 10:00:30", lat = 10.0))
         .mkString("\n"))
-    val q = RadiationPipeline.run(spark, Transport.Dir(in, out), ckpt)
+    val q = RadiationPipeline.run(spark, Transport.Dir(in, out), ckpt,
+      graft.operators.Readings.Thresholds(), bounded = true,
+      org.apache.spark.sql.streaming.Trigger.AvailableNow(), onEpoch = (_, _) => ())
     q.awaitTermination()
     val normal = spark.read.parquet(s"$out/normal-data")
     assert(normal.count() == 1)
     assert(normal.select("value").head.getInt(0) == 42)
+  }
+
+  test("a failing sink fails the query and leaves no cached epoch behind") {
+    val in = Files.createTempDirectory("graft-dir-in").toString
+    val out = Files.createTempDirectory("graft-dir-out").toString
+    val ckpt = Files.createTempDirectory("graft-dir-ckpt").toString
+    Files.writeString(java.nio.file.Path.of(in, "a.jsonl"), rec("2011-03-15 10:00:00"))
+    // a regular file where the normal sink's directory must go
+    Files.writeString(java.nio.file.Path.of(out, "normal-data"), "not a directory")
+    // CacheManager.numCachedEntries is package-private in Spark; the
+    // bytecode method is public, so read it reflectively
+    val cache = spark.sharedState.cacheManager
+    def cached = cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    val before = cached
+    val q = RadiationPipeline.run(spark, Transport.Dir(in, out), ckpt,
+      graft.operators.Readings.Thresholds(), bounded = true,
+      org.apache.spark.sql.streaming.Trigger.AvailableNow(), onEpoch = (_, _) => ())
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.awaitTermination()
+    }
+    assert(cached == before, "the failed epoch's batch stayed cached")
   }
 }
