@@ -21,11 +21,6 @@ object Materialize {
     def apply(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
   }
 
-  /** Write to a parquet dir under `dir` (one subdir per materialization)
-    * and read back. Survives executor loss — the cluster-scale posture for
-    * anything long-running; also gives the re-read plan real parquet
-    * statistics and column pruning.
-    */
   /** No-op: keep the full lineage live. NOT for production iteration
     * (lineage grows per round) — exists so plan audits can explain the
     * per-round shape that `Local`/`Table` would otherwise hide behind a
@@ -35,6 +30,11 @@ object Materialize {
     def apply(df: DataFrame): DataFrame = df
   }
 
+  /** Write to a parquet dir under `dir` (one subdir per materialization)
+    * and read back. Survives executor loss — the cluster-scale posture for
+    * anything long-running; also gives the re-read plan real parquet
+    * statistics and column pruning.
+    */
   final case class Table(dir: String) extends Materialize {
     private val n = new java.util.concurrent.atomic.AtomicInteger(0)
     def apply(df: DataFrame): DataFrame = {
@@ -51,8 +51,13 @@ object Materialize {
   * from them; recomputing + re-materializing the identical deterministic
   * relation inside each query is pure waste, and reuse is value-neutral.
   *
-  * Only `Materialize.Local` memoizes — a `Table(...)` materialization is
-  * an explicit caller-owned location, not a query cache. Assumes `dir`
+  * [[once]] is the ONE place the memo policy lives (and [[apply]] goes
+  * through it): only `Materialize.Local` memoizes — a `Table(...)`
+  * materialization is an explicit caller-owned location, not a query
+  * cache, and `Passthrough` keeps the lineage live for plan audits.
+  * Operators take a `mat` parameter only on the chains a non-`Local`
+  * caller reaches (the fault-tolerant `Table` path, the plan audits);
+  * everywhere else they pass `Materialize.Local`. Assumes `dir`
   * contents are immutable within a session (the testdata contract).
   * Entries are keyed on the session OBJECT through a WeakHashMap (an
   * identityHashCode string key could collide a new session with a stopped
@@ -155,18 +160,22 @@ object SharedRel {
     }
   }
 
-  def apply(spark: SparkSession, key: String,
-            mat: Materialize)(build: => DataFrame): DataFrame = mat match {
-    case Materialize.Local => getOrBuild(spark, key)(Materialize.Local(build))
-    case m => m(build)
-  }
-
-  /** Once-per-session SIDE-EFFECT scaffold (e.g. writing a topic dir a
-    * query then reads back): `build` runs on the first call for `key`, its
-    * result is memoized, and its cost lands in [[buildSeconds]] so Bench
-    * charges it to the `shared_build` row — the query's own timed window
-    * then measures the mechanism the query is about, not setup I/O.
+  /** The relation `build` materialized by `mat`, memoized under `key`
+    * when `mat` is `Local` (see [[once]]).
     */
-  def once[A](spark: SparkSession, key: String)(build: => A): A =
-    getOrBuild(spark, key)(build)
+  def apply(spark: SparkSession, key: String,
+            mat: Materialize)(build: => DataFrame): DataFrame =
+    once(spark, key, mat)(mat(build))
+
+  /** Once-per-session result, any type — a relation, a tuple of relations,
+    * or a SIDE-EFFECT scaffold (e.g. writing a topic dir a query then
+    * reads back): under `Local`, `build` runs on the first call for `key`,
+    * its result is memoized, and its cost lands in [[buildSeconds]] so
+    * Bench charges it to the `shared_build` row — the query's own timed
+    * window then measures the mechanism the query is about, not setup
+    * I/O. Any other `mat` runs `build` on every call.
+    */
+  def once[A](spark: SparkSession, key: String,
+              mat: Materialize)(build: => A): A =
+    if (mat == Materialize.Local) getOrBuild(spark, key)(build) else build
 }

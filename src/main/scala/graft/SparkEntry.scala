@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.functions.{Bpe, MixOps, Retrieval, TextOps, VectorOps}
 import graft.multimodal.Multimodal
+import graft.streaming.RadiationPipeline
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -124,13 +125,13 @@ object SparkEntry {
     // ---- reference pipeline over events (SURVEY §2.2-2.5) ----
     "e_validate" -> ((s, dir) => Readings.enriched(s, dir, T).orderBy(col("event_id"))),
     "e_route_normal" -> ((s, dir) =>
-      Readings.routeNormal(Readings.enriched(s, dir, T))
+      RadiationPipeline.route(Readings.enriched(s, dir, T)).normal
         .select("event_id", "sec", "cpm", "level").orderBy(col("event_id"))),
     "e_route_critical" -> ((s, dir) =>
-      Readings.routeCritical(Readings.enriched(s, dir, T))
+      RadiationPipeline.route(Readings.enriched(s, dir, T)).critical
         .select("event_id", "sec", "cpm", "level").orderBy(col("event_id"))),
     "e_route_dirty" -> ((s, dir) =>
-      Readings.routeDirty(Readings.enriched(s, dir, T))
+      RadiationPipeline.route(Readings.enriched(s, dir, T)).dirty
         .select("event_id", "sec", "error").orderBy(col("event_id"))),
     "e_dedup_first" -> ((s, dir) => {
       val v = valid(s, dir).withColumn("vbucket", floor(col("cpm") / 10).cast("long"))
@@ -342,7 +343,7 @@ object SparkEntry {
     // row-identical to d_manifest_incr (spec-asserted), so it faces the
     // same oracle.
     "d_manifest_delta" -> ((s, dir) => {
-      val state = SharedRel.once(s, s"incrstate|$dir") {
+      val state = SharedRel.once(s, s"incrstate|$dir", Materialize.Local) {
         val p = java.nio.file.Files.createTempDirectory("graft-incr-state").toString
         MixOps.freezeBaseState(s, dir, p)
         p

@@ -128,21 +128,20 @@ object Bpe {
 
   /** Reference apply path: one nested `aggregate()` level PER merge, folded
     * in checkpointed batches of `batchSize` (each batch is one projection;
-    * `mat` truncates plan/codegen between batches). Semantically identical
+    * a local checkpoint truncates plan/codegen between batches). Semantically identical
     * to [[segmentWords]] by construction — the spec asserts it at 1000+
     * merges — but costs one materialization per batch, so the flat
     * single-pass [[segmentWords]] is the production path; this stays as
     * the independent implementation the identity test checks against.
     */
   private[graft] def segmentWordsNested(df: DataFrame, merges: Seq[(String, String)],
-                                        batchSize: Int = 200,
-                                        mat: graft.Materialize = graft.Materialize.Local): DataFrame = {
+                                        batchSize: Int = 200): DataFrame = {
     require(batchSize >= 1 && batchSize <= 200,
       s"batchSize $batchSize outside [1, 200]: each merge nests one aggregate() " +
       "level in the projection, and >200 levels risks codegen/stack limits")
     val init = df.withColumn("syms", expr(charsExpr))
     merges.grouped(batchSize).foldLeft(init) { (d, batch) =>
-      mat(batch.foldLeft(d) { case (acc, (a, b)) => applyMerge(acc, a, b) })
+      graft.Materialize.Local(batch.foldLeft(d) { case (acc, (a, b)) => applyMerge(acc, a, b) })
     }
   }
 

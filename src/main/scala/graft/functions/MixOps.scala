@@ -284,25 +284,23 @@ object MixOps {
     *
     * Output is row-identical to the single-window formulation (the spec
     * asserts it on a 90%-one-language fixture): ranks derive from the same
-    * total order, only the partitioning differs. `mat` pins the ranged
+    * total order, only the partitioning differs. A local checkpoint pins the ranged
     * relation (consumed by both the counts pass and the rank pass).
     */
-  def qualityTiers(spark: SparkSession, dir: String, rangeParts: Int = 32,
-                   mat: graft.Materialize = graft.Materialize.Local): DataFrame =
+  def qualityTiers(spark: SparkSession, dir: String, rangeParts: Int = 32): DataFrame =
     qualityTiersOf(spark,
       TextOps.prepared(spark, dir).select(
         col("doc_id"), col("lang"), TextOps.qualityScoreE.as("quality_score")),
-      rangeParts, mat)
+      rangeParts)
 
   /** [[qualityTiers]] over an arbitrary (doc_id, lang, quality_score)
     * relation — the same range-partitioned rank machinery, reusable on a
     * corpus subset (the frozen-base tier computation of [[manifestIncr]]).
     */
   private[graft] def qualityTiersOf(spark: SparkSession, base: DataFrame,
-                                    rangeParts: Int = 32,
-                                    mat: graft.Materialize = graft.Materialize.Local): DataFrame = {
+                                    rangeParts: Int = 32): DataFrame = {
     import spark.implicits._
-    val ranged = mat(base
+    val ranged = graft.Materialize.Local(base
       .repartitionByRange(rangeParts, col("lang"), col("quality_score").desc, col("doc_id"))
       .withColumn("pid", spark_partition_id()))
     // bounded collect: rangeParts × |langs| rows — partition-slice counts,
@@ -928,20 +926,17 @@ object MixOps {
       spark: SparkSession, dir: String, buckets: Int, budget: Long,
       deltaMod: Int, keepLang: String, probeMax: Long, contamMin: Long,
       sampleMod: Int, sampleKeep: Int, mixMod: Int,
-      mat: graft.Materialize): FrozenBase = mat match {
+      mat: graft.Materialize): FrozenBase =
     // "Yesterday's build" is one deterministic relation with two in-session
     // consumers (the freeze scaffold and the single-query d_manifest_incr
     // proof) — unmemoized, each re-ran the full base gate chain (measured
-    // ~4 s twice at sf0.1). Only Local memoizes, mirroring SharedRel.apply:
-    // Table/Passthrough are caller-owned materialization choices.
-    case graft.Materialize.Local => graft.SharedRel.once(spark,
+    // ~4 s twice at sf0.1). The state is a tuple of relations, not one
+    // DataFrame, so it memoizes through SharedRel.once.
+    graft.SharedRel.once(spark,
       s"incrbase|$dir|$buckets|$budget|$deltaMod|$keepLang|$probeMax|" +
-        s"$contamMin|$sampleMod|$sampleKeep|$mixMod")(
+        s"$contamMin|$sampleMod|$sampleKeep|$mixMod", mat)(
       incrBaseStateBuild(spark, dir, buckets, budget, deltaMod, keepLang,
         probeMax, contamMin, sampleMod, sampleKeep, mixMod, mat))
-    case _ => incrBaseStateBuild(spark, dir, buckets, budget, deltaMod,
-      keepLang, probeMax, contamMin, sampleMod, sampleKeep, mixMod, mat)
-  }
 
   private def incrBaseStateBuild(
       spark: SparkSession, dir: String, buckets: Int, budget: Long,
@@ -1286,16 +1281,14 @@ object MixOps {
     * vocabulary-bound — that is the entire point of the hashing.
     */
   def dsirWeights(spark: SparkSession, dir: String, probeMax: Long = 10,
-                  buckets: Int = 64,
-                  mat: graft.Materialize = graft.Materialize.Local): DataFrame =
+                  buckets: Int = 64): DataFrame =
     // session-shared: the verdict relation feeds its own driver query AND
     // the per-source mix monitor
-    graft.SharedRel(spark, s"dsir|$dir|$probeMax|$buckets", mat)(
-      dsirWeightsBuild(spark, dir, probeMax, buckets, mat))
+    graft.SharedRel(spark, s"dsir|$dir|$probeMax|$buckets", graft.Materialize.Local)(
+      dsirWeightsBuild(spark, dir, probeMax, buckets))
 
   private[graft] def dsirWeightsBuild(spark: SparkSession, dir: String,
-                                      probeMax: Long = 10, buckets: Int = 64,
-                                      mat: graft.Materialize = graft.Materialize.Local): DataFrame = {
+                                      probeMax: Long = 10, buckets: Int = 64): DataFrame = {
     val d = TextOps.prepared(spark, dir).select(
       col("doc_id"), filter(col("words"), w => w =!= "").as("ws"))
     // r21: unigram + bigram features explode from ONE row-local array —
@@ -1303,7 +1296,7 @@ object MixOps {
     // through a full shuffle+sort of the token mass, then unioned a second
     // explode pass for the unigrams; adjacency is a property of the row's
     // own array (slice-guarded index list, safe for 0/1-word docs)
-    val feats = mat(d.select(col("doc_id"), explode(concat(col("ws"), expr(
+    val feats = graft.Materialize.Local(d.select(col("doc_id"), explode(concat(col("ws"), expr(
         """transform(slice(sequence(0, greatest(size(ws) - 1, 0)),
           |          1, greatest(size(ws) - 1, 0)),
           |  i -> concat(ws[i], ' ', ws[i + 1]))""".stripMargin))).as("f"))

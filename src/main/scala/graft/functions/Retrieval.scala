@@ -41,9 +41,8 @@ object Retrieval {
     */
   def bm25(spark: SparkSession, dir: String, probeMax: Long = 10,
            k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-           maxDfFrac: Double = 0.9,
-           mat: Materialize = Materialize.Local): DataFrame = {
-    val scored = bm25Scored(spark, dir, probeMax, k1, b, maxDfFrac, mat)
+           maxDfFrac: Double = 0.9): DataFrame = {
+    val scored = bm25Scored(spark, dir, probeMax, k1, b, maxDfFrac)
     val w = Window.partitionBy(col("q_id")).orderBy(col("s_int").desc, col("doc_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -60,13 +59,12 @@ object Retrieval {
     * [[bm25IncrScored]], [[bm25IndexStats]], [[bm25Pruned]]) — four
     * previously-inlined copies forked the index silently if one changed.
     */
-  private[graft] def bm25Index(spark: SparkSession, dir: String,
-                               mat: Materialize): (DataFrame, DataFrame) = {
+  private[graft] def bm25Index(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val withLen = TextOps.prepared(spark, dir).select(
       col("doc_id"),
       filter(col("words"), w => w =!= "").as("ws"))
       .select(col("doc_id"), col("ws"), size(col("ws")).as("len"))
-    val tf = graft.SharedRel(spark, s"bm25idx|$dir", mat)(
+    val tf = graft.SharedRel(spark, s"bm25idx|$dir", Materialize.Local)(
       withLen.select(col("doc_id"), col("len"), explode(col("ws")).as("w"))
         .groupBy(col("doc_id"), col("len"), col("w"))
         .agg(count(lit(1)).as("tf")))
@@ -81,15 +79,14 @@ object Retrieval {
     * is exactly how [[bm25Pruned]] reuses this at two cap values.
     */
   private def bm25Scored(spark: SparkSession, dir: String, probeMax: Long,
-                         k1: Double, b: Double, maxDfFrac: Double,
-                         mat: Materialize): DataFrame = {
+                         k1: Double, b: Double, maxDfFrac: Double): DataFrame = {
     // the inverted index: session-shared (SharedRel) because it is a
     // derived index relation with MULTIPLE query consumers (d_bm25,
     // d_bm25_pruned and d_hybrid_rrf) and four in-plan consumers (df,
     // query terms, the candidate join, stats' len base) — unshared, each
     // consumer re-ran the explode + count over the corpus (measured
     // 5.8 s → ~2.6 s marginal at sf0.1)
-    val (withLen, tf) = bm25Index(spark, dir, mat)
+    val (withLen, tf) = bm25Index(spark, dir)
     val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
     val stats = withLen.agg(count(lit(1)).as("n_docs"), sum(col("len")).as("sum_len"))
     // query side: distinct probe terms, df-capped; carries df for the idf
@@ -170,10 +167,9 @@ object Retrieval {
     */
   def bm25Incr(spark: SparkSession, dir: String, probeMax: Long = 10,
                k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-               maxDfFrac: Double = 0.9, deltaMod: Int = 5,
-               mat: Materialize = Materialize.Local): DataFrame = {
+               maxDfFrac: Double = 0.9, deltaMod: Int = 5): DataFrame = {
     val scored = bm25IncrScored(spark, dir, probeMax, k1, b, maxDfFrac,
-      deltaMod, mat)
+      deltaMod)
     val w = Window.partitionBy(col("q_id")).orderBy(col("s_int").desc, col("doc_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -189,9 +185,8 @@ object Retrieval {
   private[graft] def bm25IncrScored(spark: SparkSession, dir: String,
                                     probeMax: Long, k1: Double, b: Double,
                                     maxDfFrac: Double, deltaMod: Int,
-                                    mat: Materialize,
                                     freshStats: Boolean = false): DataFrame = {
-    val (withLen, tf) = bm25Index(spark, dir, mat)
+    val (withLen, tf) = bm25Index(spark, dir)
     val isBase = TextOps.docSplitE(deltaMod) =!= 0
     // FROZEN statistics: df / N / Σlen over the base split only —
     // unless `freshStats`, which scores the same delta candidates under
@@ -301,9 +296,8 @@ object Retrieval {
     * the session-shared index; one pass, map-side combined.
     */
   def bm25IndexStats(spark: SparkSession, dir: String,
-                     maxDfFrac: Double = 0.9,
-                     mat: Materialize = Materialize.Local): DataFrame = {
-    val (withLen, tf) = bm25Index(spark, dir, mat)
+                     maxDfFrac: Double = 0.9): DataFrame = {
+    val (withLen, tf) = bm25Index(spark, dir)
     val stats = withLen.agg(count(lit(1)).as("n_docs"), sum(col("len")).as("sum_len"))
     val df = tf.groupBy(col("w"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("postings"))
@@ -367,12 +361,11 @@ object Retrieval {
     */
   def bm25Compact(spark: SparkSession, dir: String, probeMax: Long = 10,
                   k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-                  maxDfFrac: Double = 0.9, deltaMod: Int = 5,
-                  mat: Materialize = Materialize.Local): DataFrame = {
+                  maxDfFrac: Double = 0.9, deltaMod: Int = 5): DataFrame = {
     val frozen = bm25IncrScored(spark, dir, probeMax, k1, b, maxDfFrac,
-      deltaMod, mat)
+      deltaMod)
     val fresh = bm25IncrScored(spark, dir, probeMax, k1, b, maxDfFrac,
-      deltaMod, mat, freshStats = true)
+      deltaMod, freshStats = true)
     rankDriftFold(frozen, fresh, "frozen", "fresh", k)
   }
 
@@ -510,11 +503,10 @@ object Retrieval {
     */
   def bm25Pruned(spark: SparkSession, dir: String, probeMax: Long = 10,
                  k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-                 pruneFrac: Double = 0.78,
-                 mat: Materialize = Materialize.Local): DataFrame = {
-    val full = bm25Scored(spark, dir, probeMax, k1, b, 1.0, mat)
-    val pruned = bm25Scored(spark, dir, probeMax, k1, b, pruneFrac, mat)
-    val (withLen, tf) = bm25Index(spark, dir, mat)
+                 pruneFrac: Double = 0.78): DataFrame = {
+    val full = bm25Scored(spark, dir, probeMax, k1, b, 1.0)
+    val pruned = bm25Scored(spark, dir, probeMax, k1, b, pruneFrac)
+    val (withLen, tf) = bm25Index(spark, dir)
     val nDocs = withLen.agg(count(lit(1)).as("n_docs"))
     val mass = tf.groupBy(col("w"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("postings"))
@@ -607,10 +599,9 @@ object Retrieval {
     * carry their own documented postures.
     */
   def hybridRrf(spark: SparkSession, dir: String, nQueries: Int = 10,
-                k: Int = 10, k0: Int = 60, maxDfFrac: Double = 0.9,
-                mat: Materialize = Materialize.Local): DataFrame = {
+                k: Int = 10, k0: Int = 60, maxDfFrac: Double = 0.9): DataFrame = {
     val lex = bm25(spark, dir, probeMax = nQueries, k = k,
-        maxDfFrac = maxDfFrac, mat = mat)
+        maxDfFrac = maxDfFrac)
       .select(col("q_id"), col("doc_id"), col("rank").as("rank_lex"))
     val sem = VectorOps.knn(spark, dir, nQueries, k)
       .select(col("q_id"), col("neighbor_id").as("doc_id"),

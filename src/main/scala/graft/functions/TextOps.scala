@@ -806,7 +806,7 @@ object TextOps {
     */
   private def bloomSplit(spark: SparkSession, dir: String,
                          deltaMod: Int): (DataFrame, DataFrame) =
-    graft.SharedRel.once(spark, s"bloomsplit|$dir|$deltaMod") {
+    graft.SharedRel.once(spark, s"bloomsplit|$dir|$deltaMod", Materialize.Local) {
       // ONE distinct over (shingle, side) — base and probes are then
       // projections of the same checkpointed relation (two separate
       // explode+distinct passes measured 6.5 s vs 4.1 s at sf0.1; a
@@ -1483,19 +1483,14 @@ object TextOps {
     * that doc's own length (the lag window and re-assembly collect shuffle
     * on doc_id, never corpus-wide).
     */
-  def decontamSpans(spark: SparkSession, dir: String, probeMax: Long = 10,
-                    mat: Materialize = Materialize.Local): DataFrame = mat match {
-    // session-shared under the default materialization: the span-cleaned
-    // relation feeds d_decontam_spans AND both corpus builds; an explicit
-    // Table(...) materialization stays caller-owned (no memo)
-    case Materialize.Local =>
-      graft.SharedRel(spark, s"decontam|$dir|$probeMax", Materialize.Local)(
-        decontamSpansBuild(spark, dir, probeMax, Materialize.Local))
-    case m => decontamSpansBuild(spark, dir, probeMax, m)
-  }
+  def decontamSpans(spark: SparkSession, dir: String, probeMax: Long = 10): DataFrame =
+    // session-shared: the span-cleaned relation feeds d_decontam_spans AND
+    // both corpus builds
+    graft.SharedRel(spark, s"decontam|$dir|$probeMax", Materialize.Local)(
+      decontamSpansBuild(spark, dir, probeMax))
 
-  private[graft] def decontamSpansBuild(spark: SparkSession, dir: String, probeMax: Long,
-                                        mat: Materialize): DataFrame = {
+  private[graft] def decontamSpansBuild(spark: SparkSession, dir: String,
+                                        probeMax: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val probe = shingles3(spark, dir).filter(col("doc_id") < probeMax)
       .select("sh").distinct()
@@ -1503,7 +1498,7 @@ object TextOps {
     // (positioned shingles, word re-assembly, final counts); norm itself is
     // not needed past this point (≥3-word docs never take the whole-norm
     // shingle fallback), so the checkpoint carries only (doc_id, words)
-    val pw = mat(prepared(spark, dir)
+    val pw = Materialize.Local(prepared(spark, dir)
       .filter(col("doc_id") >= probeMax && size(col("words")) >= 3)
       .select(col("doc_id"), col("words")))
     val sh = pw.select(col("doc_id"), posexplode(expr(
@@ -1583,24 +1578,17 @@ object TextOps {
     * side at 100 TB.
     */
   def dupSpans(spark: SparkSession, dir: String, n: Int = 5,
-               mat: Materialize = Materialize.Local): DataFrame = mat match {
+               mat: Materialize = Materialize.Local): DataFrame =
     // session-shared under the default materialization: the relation
     // feeds its own verdict query and the optional [[curate]] gate
-    case Materialize.Local =>
-      graft.SharedRel(spark, s"dupspans|$dir|$n", Materialize.Local)(
-        dupSpansBuild(spark, dir, n, Materialize.Local))
-    case m => dupSpansBuild(spark, dir, n, m)
-  }
+    graft.SharedRel(spark, s"dupspans|$dir|$n", mat)(dupSpansBuild(spark, dir, n, mat))
 
   private[graft] def dupSpansBuild(spark: SparkSession, dir: String, n: Int,
                                    mat: Materialize): DataFrame = {
     val pw = mat(prepared(spark, dir).filter(size(col("words")) >= n)
       .select(col("doc_id"), col("words")))
-    val cuts = mat match {
-      case Materialize.Local => sortedCutArrays(spark, dir, n)
-      case _ => cutArraysOf(firstOccCutHits(pw, n))
-    }
-    spanFoldArr(pw, cuts.withColumnRenamed("all_cuts", "cuts"))
+    spanFoldArr(pw, sortedCutArrays(spark, dir, n, mat)
+      .withColumnRenamed("all_cuts", "cuts"))
   }
 
   /** Cut positions (doc_id, p): every position covered by a duplicated
@@ -1639,8 +1627,9 @@ object TextOps {
     * incremental twin ([[dupSpansIncr]] / [[dupRunsIncr]], whose frozen
     * base-set + in-increment-keeper chain is likewise identical pairwise).
     */
-  private def sortedCutArrays(spark: SparkSession, dir: String, n: Int): DataFrame =
-    graft.SharedRel(spark, s"spancuts|$dir|$n", Materialize.Local)(
+  private def sortedCutArrays(spark: SparkSession, dir: String, n: Int,
+                              mat: Materialize): DataFrame =
+    graft.SharedRel(spark, s"spancuts|$dir|$n", mat)(
       sortedCutArraysBuild(spark, dir, n))
 
   private[graft] def sortedCutArraysBuild(spark: SparkSession, dir: String,
@@ -1722,15 +1711,11 @@ object TextOps {
     * can recompute it.
     */
   def dupSpansIncr(spark: SparkSession, dir: String, n: Int = 5,
-                   deltaMod: Int = 5,
-                   mat: Materialize = Materialize.Local): DataFrame = {
-    val pw = mat(incrPw(spark, dir, n, deltaMod).filter(col("is_delta"))
+                   deltaMod: Int = 5): DataFrame = {
+    val pw = Materialize.Local(incrPw(spark, dir, n, deltaMod).filter(col("is_delta"))
       .select("doc_id", "words"))
-    val cuts = mat match {
-      case Materialize.Local => sortedCutArraysIncr(spark, dir, n, deltaMod)
-      case _ => cutArraysOf(incrCutHits(spark, dir, n, deltaMod, pw))
-    }
-    spanFoldArr(pw, cuts.withColumnRenamed("all_cuts", "cuts"))
+    spanFoldArr(pw, sortedCutArraysIncr(spark, dir, n, deltaMod)
+      .withColumnRenamed("all_cuts", "cuts"))
   }
 
   private def incrPw(spark: SparkSession, dir: String, n: Int,
@@ -1880,17 +1865,12 @@ object TextOps {
     * one doc-keyed window pair over the hit positions — the hit relation
     * is the duplicated-token subset, far below corpus token mass.
     */
-  def dupRuns(spark: SparkSession, dir: String, n: Int = 5, minRun: Int = 8,
-              mat: Materialize = Materialize.Local): DataFrame = {
-    val pw = mat(prepared(spark, dir).filter(size(col("words")) >= n)
+  def dupRuns(spark: SparkSession, dir: String, n: Int = 5, minRun: Int = 8): DataFrame = {
+    val pw = Materialize.Local(prepared(spark, dir).filter(size(col("words")) >= n)
       .select(col("doc_id"), col("words")))
     // the cut chain is the session-shared spancuts relation — only the
     // row-local minRun floor differs between dupSpans/dupRuns variants
-    val cutArrays = mat match {
-      case Materialize.Local => sortedCutArrays(spark, dir, n)
-      case _ => cutArraysOf(firstOccCutHits(pw, n))
-    }
-    spanFoldArr(pw, minRunFloor(cutArrays, minRun))
+    spanFoldArr(pw, minRunFloor(sortedCutArrays(spark, dir, n, Materialize.Local), minRun))
   }
 
   /** Fold the cut positions into sorted per-doc arrays and keep only
@@ -1927,15 +1907,10 @@ object TextOps {
     * re-opened. Same asymmetric-staleness contract as [[dupSpansIncr]].
     */
   def dupRunsIncr(spark: SparkSession, dir: String, n: Int = 5,
-                  minRun: Int = 8, deltaMod: Int = 5,
-                  mat: Materialize = Materialize.Local): DataFrame = {
-    val pw = mat(incrPw(spark, dir, n, deltaMod).filter(col("is_delta"))
+                  minRun: Int = 8, deltaMod: Int = 5): DataFrame = {
+    val pw = Materialize.Local(incrPw(spark, dir, n, deltaMod).filter(col("is_delta"))
       .select("doc_id", "words"))
-    val cutArrays = mat match {
-      case Materialize.Local => sortedCutArraysIncr(spark, dir, n, deltaMod)
-      case _ => cutArraysOf(incrCutHits(spark, dir, n, deltaMod, pw))
-    }
-    spanFoldArr(pw, minRunFloor(cutArrays, minRun))
+    spanFoldArr(pw, minRunFloor(sortedCutArraysIncr(spark, dir, n, deltaMod), minRun))
   }
 
   def dupRunsIncrSql(n: Int = 5, minRun: Int = 8, deltaMod: Int = 5): String =
@@ -2315,21 +2290,16 @@ object TextOps {
     * every audit from it.
     */
   def jaccardPairs(spark: SparkSession, dir: String, threshold: Double = 0.9,
-                   dfCap: Int = 100,
-                   mat: Materialize = Materialize.Local): DataFrame = mat match {
-    case Materialize.Local =>
-      graft.SharedRel(spark, s"jacpairs|$dir|$threshold|$dfCap", Materialize.Local)(
-        jaccardPairsBuild(spark, dir, threshold, dfCap, Materialize.Local))
-    case m => jaccardPairsBuild(spark, dir, threshold, dfCap, m)
-  }
+                   dfCap: Int = 100): DataFrame =
+    graft.SharedRel(spark, s"jacpairs|$dir|$threshold|$dfCap", Materialize.Local)(
+      jaccardPairsBuild(spark, dir, threshold, dfCap))
 
   private[graft] def jaccardPairsBuild(spark: SparkSession, dir: String,
-                                       threshold: Double, dfCap: Int,
-                                       mat: Materialize): DataFrame = {
+                                       threshold: Double, dfCap: Int): DataFrame = {
     // materialized once: normText + split + array_distinct feed three
     // consumers (candidate explode + both exact-verify sides) and dominate
     // the per-doc cost
-    val d = mat(prepared(spark, dir).select(
+    val d = Materialize.Local(prepared(spark, dir).select(
       col("doc_id"), col("lang"), expr("n_chars DIV 100").as("bkt"),
       array_distinct(col("words")).as("ws")))
     val ex = d.select(col("doc_id"), col("lang"), col("bkt"), explode(col("ws")).as("w"))
@@ -2539,17 +2509,12 @@ object TextOps {
     * the shared signature table (~2 s/pass at sf0.1). The serving-path
     * analog of storing the candidate index a dedup pipeline probes.
     */
-  def minhashPairs(spark: SparkSession, dir: String,
-                   mat: Materialize = Materialize.Local): DataFrame = mat match {
-    case Materialize.Local =>
-      graft.SharedRel(spark, s"minhashpairs|$dir", Materialize.Local)(
-        minhashPairsBuild(spark, dir, Materialize.Local))
-    case m => minhashPairsBuild(spark, dir, m)
-  }
+  def minhashPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.SharedRel(spark, s"minhashpairs|$dir", Materialize.Local)(
+      minhashPairsBuild(spark, dir))
 
-  private[graft] def minhashPairsBuild(spark: SparkSession, dir: String,
-                                       mat: Materialize): DataFrame = {
-    val sig = bandedSignatures(spark, dir, mat)
+  private[graft] def minhashPairsBuild(spark: SparkSession, dir: String): DataFrame = {
+    val sig = bandedSignatures(spark, dir)
     // A pair can only appear in both joins when BOTH bands match, so the
     // band2 join emits only pairs whose band1 differs — exact dedup with a
     // per-row filter instead of a global 5M-row DISTINCT shuffle.
@@ -2725,9 +2690,8 @@ object TextOps {
     * the decision relation stays narrow (3 columns) however wide the docs
     * are.
     */
-  def dedupApply(spark: SparkSession, dir: String,
-                 mat: Materialize = Materialize.Local): DataFrame =
-    dupClusters(spark, dir, mat)
+  def dedupApply(spark: SparkSession, dir: String): DataFrame =
+    dupClusters(spark, dir)
       .select(col("doc_id"), col("cluster_rep"),
         (col("doc_id") === col("cluster_rep")).as("keep"))
 
@@ -2758,9 +2722,8 @@ object TextOps {
     * float divergence can't flip the representative (same guard as every
     * rank in the ANN tier).
     */
-  def dedupBest(spark: SparkSession, dir: String,
-                mat: Materialize = Materialize.Local): DataFrame = {
-    val clusters = dupClusters(spark, dir, mat)
+  def dedupBest(spark: SparkSession, dir: String): DataFrame = {
+    val clusters = dupClusters(spark, dir)
       .select(col("doc_id"), col("cluster_rep"))
     val q = quality(spark, dir).select(col("doc_id"), col("quality_score"))
     val w = org.apache.spark.sql.expressions.Window
@@ -2804,10 +2767,9 @@ object TextOps {
     * |sources|²-bounded agg — the matrix itself is tiny at any corpus
     * size.
     */
-  def dupMatrix(spark: SparkSession, dir: String,
-                mat: Materialize = Materialize.Local): DataFrame = {
+  def dupMatrix(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
-    minhashPairs(spark, dir, mat)
+    minhashPairs(spark, dir)
       .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")), "doc_a")
       .join(src.select(col("doc_id").as("doc_b"), col("source").as("sb")), "doc_b")
       .select(least(col("sa"), col("sb")).as("source_a"),
@@ -2995,9 +2957,8 @@ object TextOps {
     * were admitted, keeping the daily job O(delta), not O(corpus²).
     */
   def nearDupIncr(spark: SparkSession, dir: String, deltaMod: Int = 5,
-                  minAgree: Int = 7,
-                  mat: Materialize = Materialize.Local): DataFrame = {
-    val sig = bandedSignatures(spark, dir, mat)
+                  minAgree: Int = 7): DataFrame = {
+    val sig = bandedSignatures(spark, dir)
       .withColumn("is_delta", docSplitE(deltaMod) === 0)
     val ms = (0 until 8).map(i => s"m$i")
     def side(suffix: String)(d: DataFrame): DataFrame =
@@ -3501,11 +3462,10 @@ object TextOps {
     * `maxHamming` ≤ [[SimhashBlocks]] − 1 the result is exact, not a
     * candidate approximation.
     */
-  def simhashPairs(spark: SparkSession, dir: String, maxHamming: Int = 3,
-                   mat: Materialize = Materialize.Local): DataFrame = {
+  def simhashPairs(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
     val blocks = (0 until SimhashBlocks).map(k => s"b$k")
     // signature agg feeds all join sides; materialize once
-    val s = mat(blocks.zipWithIndex.foldLeft(simhash(spark, dir)) { case (df, (b, k)) =>
+    val s = Materialize.Local(blocks.zipWithIndex.foldLeft(simhash(spark, dir)) { case (df, (b, k)) =>
       df.withColumn(b, shiftright(col("simhash60"), k * BlockBits).bitwiseAND(BlockMask))
     })
     def joinOn(k: Int): DataFrame = {
@@ -3577,7 +3537,6 @@ object TextOps {
     * segs⋈freq join collapses to a shuffle of the duplicate hits only.
     */
   def segmentDedup(spark: SparkSession, dir: String, width: Int = 5,
-                   mat: Materialize = Materialize.Local,
                    bloomBits: Long = 1L << 23): DataFrame = {
     // ceil(n/width) segments; slice() tolerates a short tail segment
     val segments = expr(
@@ -3586,7 +3545,7 @@ object TextOps {
     val segs = prepared(spark, dir)
       .select(col("doc_id"), posexplode(segments).as(Seq("pos", "seg")))
     // pinned: consumed by the sketch build (eager) and the exact join
-    val dups = mat(segs.groupBy(col("seg")).agg(count(lit(1)).as("n"))
+    val dups = Materialize.Local(segs.groupBy(col("seg")).agg(count(lit(1)).as("n"))
       .filter(col("n") >= 2).select(col("seg")))
     // sketch sized by BIT BUDGET (1 MB default ≈ 840k duplicate segments at
     // ~1% fpp), not by counting dups — the count was one extra job per call
@@ -4173,19 +4132,17 @@ object TextOps {
     * [[containmentPairs]] and [[jaccard3Pairs]] differ only in the score
     * they derive from (n_shared, n_a, n_b).
     */
-  private def shinglePairCounts(spark: SparkSession, dir: String, dfCap: Int,
-                                mat: Materialize): DataFrame =
+  private def shinglePairCounts(spark: SparkSession, dir: String, dfCap: Int): DataFrame =
     // the candidate scaffold is itself a derived relation two operators
     // score differently — computed once per (session, dir, dfCap)
-    graft.SharedRel(spark, s"shingle-pairs|$dir|$dfCap", mat)(
-      shinglePairCountsBuild(spark, dir, dfCap, mat))
+    graft.SharedRel(spark, s"shingle-pairs|$dir|$dfCap", Materialize.Local)(
+      shinglePairCountsBuild(spark, dir, dfCap))
 
-  private def shinglePairCountsBuild(spark: SparkSession, dir: String, dfCap: Int,
-                                     mat: Materialize): DataFrame = {
+  private def shinglePairCountsBuild(spark: SparkSession, dir: String, dfCap: Int): DataFrame = {
     // materialized once: the shingle explode feeds FOUR consumers (df
     // counts, both self-join sides, per-doc sizes) and dominates per-doc
     // cost — same shape as [[jaccardPairs]]'s materialization point
-    val ex = mat(shingles3(spark, dir))
+    val ex = Materialize.Local(shingles3(spark, dir))
     // the hot list is tiny (shingles in > dfCap docs) → broadcast anti-join,
     // never a shuffle join against the full per-shingle df relation
     val hot = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -4202,9 +4159,8 @@ object TextOps {
   }
 
   def containmentPairs(spark: SparkSession, dir: String, threshold: Double = 0.3,
-                       dfCap: Int = 50,
-                       mat: Materialize = Materialize.Local): DataFrame =
-    shinglePairCounts(spark, dir, dfCap, mat)
+                       dfCap: Int = 50): DataFrame =
+    shinglePairCounts(spark, dir, dfCap)
       .withColumn("n_small", least(col("n_a"), col("n_b")))
       // ONE integer/integer double division — deterministic across engines
       .withColumn("containment", col("n_shared") / col("n_small").cast("double"))
@@ -4221,9 +4177,8 @@ object TextOps {
     * the score divides by the capped-set UNION.
     */
   def jaccard3Pairs(spark: SparkSession, dir: String, threshold: Double = 0.5,
-                    dfCap: Int = 50,
-                    mat: Materialize = Materialize.Local): DataFrame =
-    shinglePairCounts(spark, dir, dfCap, mat)
+                    dfCap: Int = 50): DataFrame =
+    shinglePairCounts(spark, dir, dfCap)
       .withColumn("n_union", col("n_a") + col("n_b") - col("n_shared"))
       .withColumn("jaccard3",
         round(col("n_shared") / col("n_union").cast("double"), 4))
@@ -4404,11 +4359,10 @@ object TextOps {
     * precision for a bounded join); recall is the metric a dedup pipeline
     * gates on.
     */
-  def lshRecall(spark: SparkSession, dir: String, threshold: Double = 0.9,
-                mat: Materialize = Materialize.Local): DataFrame = {
-    val exact = jaccardPairs(spark, dir, threshold, mat = mat)
+  def lshRecall(spark: SparkSession, dir: String, threshold: Double = 0.9): DataFrame = {
+    val exact = jaccardPairs(spark, dir, threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    val cand = minhashPairs(spark, dir, mat)
+    val cand = minhashPairs(spark, dir)
       .select(col("doc_a"), col("doc_b")).withColumn("hit", lit(1L))
     exact.join(cand, Seq("doc_a", "doc_b"), "left")
       // 0.02-wide buckets over [threshold, 1]: floor(j*50) is exact for the
@@ -4628,28 +4582,22 @@ object TextOps {
     * live.
     */
   private[graft] def lshCandidatesAt(spark: SparkSession, dir: String,
-                                         nb: Int,
-                                         mat: Materialize): DataFrame =
-    lshCandidates(bandedSignatures(spark, dir, mat), lshGroupsOf(nb))
+                                         nb: Int): DataFrame =
+    lshCandidates(bandedSignatures(spark, dir), lshGroupsOf(nb))
 
-  def lshSweep(spark: SparkSession, dir: String, threshold: Double = 0.9,
-               mat: Materialize = Materialize.Local): DataFrame = mat match {
-    // session-shared under the default materialization: the 3-row S-curve
-    // feeds its own query AND the retune action's pick
-    case Materialize.Local =>
-      graft.SharedRel(spark, s"lshsweep|$dir|$threshold", Materialize.Local)(
-        lshSweepBuild(spark, dir, threshold, Materialize.Local))
-    case m => lshSweepBuild(spark, dir, threshold, m)
-  }
+  def lshSweep(spark: SparkSession, dir: String, threshold: Double = 0.9): DataFrame =
+    // session-shared: the 3-row S-curve feeds its own query AND the retune
+    // action's pick
+    graft.SharedRel(spark, s"lshsweep|$dir|$threshold", Materialize.Local)(
+      lshSweepBuild(spark, dir, threshold))
 
   private[graft] def lshSweepBuild(spark: SparkSession, dir: String,
-                                   threshold: Double,
-                                   mat: Materialize): DataFrame = {
-    val exact = jaccardPairs(spark, dir, threshold, mat = mat)
+                                   threshold: Double): DataFrame = {
+    val exact = jaccardPairs(spark, dir, threshold)
       .select(col("doc_a"), col("doc_b"))
     val nTrue = exact.agg(count(lit(1)).as("n_true"))
     val perConfig = lshGroupsOf.keys.toSeq.sorted.map { nb =>
-      val cand = lshCandidatesAt(spark, dir, nb, mat)
+      val cand = lshCandidatesAt(spark, dir, nb)
       cand.join(exact.withColumn("istrue", lit(1L)), Seq("doc_a", "doc_b"), "left")
         .agg(count(lit(1)).as("n_cand"),
           // sum over an empty (zero-candidate) config is null, not 0
@@ -4770,9 +4718,8 @@ object TextOps {
     * of an IndexOutOfBounds.
     */
   def lshRetune(spark: SparkSession, dir: String, threshold: Double = 0.9,
-                floorPm: Long = 950,
-                mat: Materialize = Materialize.Local): DataFrame = {
-    val sweep = lshSweep(spark, dir, threshold, mat)
+                floorPm: Long = 950): DataFrame = {
+    val sweep = lshSweep(spark, dir, threshold)
     val pickOrder = Seq(
       (col("recall_pm") >= floorPm).desc,
       when(col("recall_pm") >= floorPm, col("n_cand"))

@@ -69,17 +69,18 @@ object VectorOps {
       ivfAssign(spark, dir, k).select("vec_id", "centroid_id"))
 
   private def sharedPqCodes(spark: SparkSession, dir: String, blocks: Int,
-                            k: Int, mat: Materialize): DataFrame =
-    graft.SharedRel(spark, s"pq|$dir|$blocks|$k", mat)(pqAssign(spark, dir, blocks, k))
+                            k: Int): DataFrame =
+    graft.SharedRel(spark, s"pq|$dir|$blocks|$k", Materialize.Local)(
+      pqAssign(spark, dir, blocks, k))
 
   /** The quantized-Lloyd trained centroid relation, session-shared: the
     * trained-recall harness and the trained margin miner consume the same
     * deterministic k×dim relation — retraining it per query is pure waste.
     */
   private def sharedTrained(spark: SparkSession, dir: String, k: Int,
-                            iters: Int, mat: Materialize): DataFrame =
-    graft.SharedRel(spark, s"kmtrained|$dir|$k|$iters", mat)(
-      kmeansTrainRounded(spark, dir, k, iters, mat))
+                            iters: Int): DataFrame =
+    graft.SharedRel(spark, s"kmtrained|$dir|$k|$iters", Materialize.Local)(
+      kmeansTrainRounded(spark, dir, k, iters))
 
   /** Approximate top-k hit relations, session-shared (key `annhits`, one
     * segment per search variant + its full parameterization): every
@@ -250,7 +251,7 @@ object VectorOps {
     // session-shared (SharedRel.once): the direction feeds BOTH the
     // monitor (v_anisotropy) and its action (v_abtt) — the deployment
     // computes it once per corpus snapshot
-    graft.SharedRel.once(spark, s"powertop|$dir|$iters") {
+    graft.SharedRel.once(spark, s"powertop|$dir|$iters", Materialize.Local) {
       powerIterTopBuild(spark, dir, iters)
     }
 
@@ -1032,19 +1033,17 @@ object VectorOps {
     * re-propagating per consumer is pure waste.
     */
   def semClusters(spark: SparkSession, dir: String, threshold: Double = 0.4,
-                  kNn: Int = 5, kCentroids: Int = 16,
-                  mat: Materialize = Materialize.Local): DataFrame =
-    graft.SharedRel(spark, s"semcc|$dir|$threshold|$kNn|$kCentroids", mat)(
-      semClustersBuild(spark, dir, threshold, kNn, kCentroids, mat))
+                  kNn: Int = 5, kCentroids: Int = 16): DataFrame =
+    graft.SharedRel(spark, s"semcc|$dir|$threshold|$kNn|$kCentroids", Materialize.Local)(
+      semClustersBuild(spark, dir, threshold, kNn, kCentroids))
 
   private def semClustersBuild(spark: SparkSession, dir: String, threshold: Double,
-                               kNn: Int, kCentroids: Int,
-                               mat: Materialize): DataFrame = {
-    val edges = mat(knnGraph(spark, dir, kNn, kCentroids, mat)
+                               kNn: Int, kCentroids: Int): DataFrame = {
+    val edges = Materialize.Local(knnGraph(spark, dir, kNn, kCentroids)
       .filter(col("mutual") && col("cos_sim") >= threshold)
       .select(col("src"), col("dst")))
     val nodes = prepared(spark, dir).select(col("vec_id"))
-    propagateMinLabels(nodes, edges, mat)
+    propagateMinLabels(nodes, edges)
       .withColumn("cluster_size", count(lit(1)).over(
         Window.partitionBy(col("label"))))
       .select(col("vec_id"), col("label").as("cluster_rep"), col("cluster_size"))
@@ -1060,9 +1059,8 @@ object VectorOps {
     * as [[knnGraph]]'s mutual relation is.
     */
   private[graft] def propagateMinLabels(nodes: DataFrame, edges: DataFrame,
-                                        mat: Materialize,
                                         maxRounds: Int = 40): DataFrame = {
-    var labels = mat(nodes.select(col("vec_id"))
+    var labels = Materialize.Local(nodes.select(col("vec_id"))
       .withColumn("label", col("vec_id")))
     var changed = 1L
     var rounds = 0
@@ -1076,7 +1074,7 @@ object VectorOps {
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"),
           (coalesce(col("nbr_min"), col("label")) < col("label")).cast("long").as("chg"))
       val obs = org.apache.spark.sql.Observation()
-      val next = mat(stepped.observe(obs, sum(col("chg")).as("changed")))
+      val next = Materialize.Local(stepped.observe(obs, sum(col("chg")).as("changed")))
       changed = obs.get("changed").asInstanceOf[Long]
       labels = next.drop("chg")
       rounds += 1
@@ -1107,10 +1105,9 @@ object VectorOps {
     * non-converged run must never ship partial labels.
     */
   private[graft] def propagateLsLs(nodes: DataFrame, edges0: DataFrame,
-                                   mat: Materialize,
                                    maxRounds: Int = 25): DataFrame = {
     // canonicalize: undirected, no self-loops, deduped, a < b
-    var e = mat(edges0.filter(col("src") =!= col("dst"))
+    var e = Materialize.Local(edges0.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct())
@@ -1132,7 +1129,7 @@ object VectorOps {
     var rounds = 0
     var stable = e.isEmpty
     while (!stable && rounds < maxRounds) {
-      val next = mat(smallStar(largeStar(e)))
+      val next = Materialize.Local(smallStar(largeStar(e)))
       stable = next.exceptAll(e).isEmpty && e.exceptAll(next).isEmpty
       e = next
       rounds += 1
@@ -1157,13 +1154,12 @@ object VectorOps {
     * implemented and differentially graded rather than just described.
     */
   def semClustersLsLs(spark: SparkSession, dir: String, threshold: Double = 0.4,
-                      kNn: Int = 5, kCentroids: Int = 16,
-                      mat: Materialize = Materialize.Local): DataFrame = {
-    val edges = mat(knnGraph(spark, dir, kNn, kCentroids, mat)
+                      kNn: Int = 5, kCentroids: Int = 16): DataFrame = {
+    val edges = Materialize.Local(knnGraph(spark, dir, kNn, kCentroids)
       .filter(col("mutual") && col("cos_sim") >= threshold)
       .select(col("src"), col("dst")))
     val nodes = prepared(spark, dir).select(col("vec_id"))
-    propagateLsLs(nodes, edges, mat)
+    propagateLsLs(nodes, edges)
       .withColumn("cluster_size", count(lit(1)).over(
         Window.partitionBy(col("label"))))
       .select(col("vec_id"), col("label").as("cluster_rep"), col("cluster_size"))
@@ -1187,9 +1183,8 @@ object VectorOps {
     */
   def clusterStats(spark: SparkSession, dir: String, maxSize: Long = 25,
                    threshold: Double = 0.4, kNn: Int = 5,
-                   kCentroids: Int = 16,
-                   mat: Materialize = Materialize.Local): DataFrame = {
-    val clusters = semClusters(spark, dir, threshold, kNn, kCentroids, mat)
+                   kCentroids: Int = 16): DataFrame = {
+    val clusters = semClusters(spark, dir, threshold, kNn, kCentroids)
       .select(col("vec_id").as("doc_id"), col("cluster_rep"))
     val docs = TextOps.quality(spark, dir)
       .select(col("doc_id"), (col("quality_bucket") === "low").as("is_low"),
@@ -1325,9 +1320,8 @@ object VectorOps {
     * decision relation stays 3 columns wide however wide the payload is.
     */
   def semClustersApply(spark: SparkSession, dir: String, threshold: Double = 0.4,
-                       kNn: Int = 5, kCentroids: Int = 16,
-                       mat: Materialize = Materialize.Local): DataFrame =
-    semClusters(spark, dir, threshold, kNn, kCentroids, mat)
+                       kNn: Int = 5, kCentroids: Int = 16): DataFrame =
+    semClusters(spark, dir, threshold, kNn, kCentroids)
       .select(col("vec_id"), col("cluster_rep"),
         (col("vec_id") === col("cluster_rep")).as("keep"))
 
@@ -1408,9 +1402,8 @@ object VectorOps {
     * the vectors are), a map-side-combinable k-row agg, and the share
     * window runs over k rows — nothing downstream of the join exceeds k.
     */
-  def domainMix(spark: SparkSession, dir: String, k: Int = 16,
-                mat: Materialize = Materialize.Local): DataFrame = {
-    val assigned = sharedIvfAssign(spark, dir, k, mat)
+  def domainMix(spark: SparkSession, dir: String, k: Int = 16): DataFrame = {
+    val assigned = sharedIvfAssign(spark, dir, k, Materialize.Local)
     val toks = TextOps.prepared(spark, dir)
       .select(col("doc_id").as("vec_id"), size(col("words")).as("ws_tokens"))
     assigned.join(toks, "vec_id")
@@ -1469,9 +1462,8 @@ object VectorOps {
     * flag is stable as cells drain). All-integer except the quantized
     * floor; rides the session-shared assignment.
     */
-  def ivfStats(spark: SparkSession, dir: String, k: Int = 16,
-               mat: Materialize = Materialize.Local): DataFrame = {
-    val assign = sharedIvfAssignSim(spark, dir, k, mat)
+  def ivfStats(spark: SparkSession, dir: String, k: Int = 16): DataFrame = {
+    val assign = sharedIvfAssignSim(spark, dir, k)
     val tot = assign.agg(count(lit(1)).as("n"))
     assign.groupBy(col("centroid_id"))
       .agg(count(lit(1)).as("n_vecs"),
@@ -1488,9 +1480,8 @@ object VectorOps {
     * similarity — shared so [[ivfStats]] does not re-run the argmax the
     * plain id-only [[sharedIvfAssign]] already paid for.
     */
-  private def sharedIvfAssignSim(spark: SparkSession, dir: String, k: Int,
-                                 mat: Materialize): DataFrame =
-    graft.SharedRel(spark, s"ivfsim|$dir|$k", mat)(ivfAssign(spark, dir, k))
+  private def sharedIvfAssignSim(spark: SparkSession, dir: String, k: Int): DataFrame =
+    graft.SharedRel(spark, s"ivfsim|$dir|$k", Materialize.Local)(ivfAssign(spark, dir, k))
 
   def ivfStatsSql(k: Int = 16): String =
     s"""WITH a AS (${ivfAssignSql(k)}),
@@ -1534,9 +1525,9 @@ object VectorOps {
                                   ccn: DataFrame, reassign: DataFrame)
 
   private def ivfSplitRels(spark: SparkSession, dir: String, k: Int,
-                           topM: Int, mat: Materialize): IvfSplitRels = {
+                           topM: Int): IvfSplitRels = {
     val e0 = prepared(spark, dir)
-    val assign = sharedIvfAssign(spark, dir, k, mat)
+    val assign = sharedIvfAssign(spark, dir, k, Materialize.Local)
     val tot = assign.agg(count(lit(1)).as("n"))
     val sz = assign.groupBy(col("centroid_id")).agg(count(lit(1)).as("n_vecs"))
     // k rows: the single-partition rank window is over the CELL relation,
@@ -1589,9 +1580,8 @@ object VectorOps {
     * never the full index ([[annRecallIvfSplit]] prices the full-corpus
     * reassignment the next full rebuild would apply).
     */
-  def ivfSplit(spark: SparkSession, dir: String, k: Int = 16, topM: Int = 2,
-               mat: Materialize = Materialize.Local): DataFrame = {
-    val r = ivfSplitRels(spark, dir, k, topM, mat)
+  def ivfSplit(spark: SparkSession, dir: String, k: Int = 16, topM: Int = 2): DataFrame = {
+    val r = ivfSplitRels(spark, dir, k, topM)
     val unsplit = r.sz.join(broadcast(r.tgt),
         r.sz("centroid_id") === r.tgt("parent"), "left_anti")
       .select(col("centroid_id").as("cell_id"),
@@ -1689,13 +1679,12 @@ object VectorOps {
     */
   def annRecallIvfSplit(spark: SparkSession, dir: String, nQueries: Int = 20,
                         k: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
-                        topM: Int = 2,
-                        mat: Materialize = Materialize.Local): DataFrame = {
+                        topM: Int = 2): DataFrame = {
     val seed = recall(spark, dir,
-        annIvfMulti(spark, dir, nQueries, k, kCentroids, nProbe, mat), nQueries, k)
+        annIvfMulti(spark, dir, nQueries, k, kCentroids, nProbe), nQueries, k)
       .select(col("q_id"), col("n_hits").as("n_hits_seed"),
         col("recall_at_k").as("recall_seed"))
-    val r = ivfSplitRels(spark, dir, kCentroids, topM, mat)
+    val r = ivfSplitRels(spark, dir, kCentroids, topM)
     val unsplitCents = r.e0.filter(col("vec_id") < kCentroids)
       .select(col("vec_id").as("centroid_id"), col("v").as("cv"), col("nrm").as("cn"))
       .join(broadcast(r.tgt), col("centroid_id") === col("parent"), "left_anti")
@@ -1758,13 +1747,12 @@ object VectorOps {
     * shuffled once on centroid_id, per-list top-k.
     */
   def annIvf(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
-             kCentroids: Int = 16,
-             mat: Materialize = Materialize.Local): DataFrame = {
+             kCentroids: Int = 16): DataFrame = {
     // materialize the assignment once: it feeds both the broadcast query
     // side and the probe side, and canonical-plan reuse doesn't cover that
     // split (same rationale as TextOps.bandedSignatures); shared across the
     // ANN family per session (deterministic, so reuse is value-neutral)
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, mat)
+    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
     val e = prepared(spark, dir).join(assigned, "vec_id")
     val q = broadcast(e.filter(col("vec_id") < nQueries)
       .select(col("centroid_id").as("q_cent"), col("vec_id").as("q_id"),
@@ -1833,18 +1821,14 @@ object VectorOps {
   }
 
   def annIvfMulti(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
-                  kCentroids: Int = 16, nProbe: Int = 2,
-                  mat: Materialize = Materialize.Local): DataFrame = (mat match {
-    case Materialize.Local =>
-      sharedAnnHits(spark, "ivfmulti", dir, s"$nQueries|$kNn|$kCentroids|$nProbe")(
-        annIvfMultiBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, Materialize.Local))
-    case m => annIvfMultiBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, m)
-  }).orderBy(col("q_id"), col("rank"))
+                  kCentroids: Int = 16, nProbe: Int = 2): DataFrame =
+    sharedAnnHits(spark, "ivfmulti", dir, s"$nQueries|$kNn|$kCentroids|$nProbe")(
+      annIvfMultiBuild(spark, dir, nQueries, kNn, kCentroids, nProbe))
+      .orderBy(col("q_id"), col("rank"))
 
   private[graft] def annIvfMultiBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                      kNn: Int, kCentroids: Int, nProbe: Int,
-                                      mat: Materialize): DataFrame = {
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, mat)
+                                      kNn: Int, kCentroids: Int, nProbe: Int): DataFrame = {
+    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
     val e = prepared(spark, dir).join(assigned, "vec_id")
     val qProbes = queryProbes(prepared(spark, dir), nQueries, kCentroids, nProbe)
     val sims = e.join(broadcast(qProbes),
@@ -1967,10 +1951,9 @@ object VectorOps {
     * Returns (centroid_id, cv, cn) — the [[annIvfMultiWith]] input shape.
     */
   def kmeansTrainRounded(spark: SparkSession, dir: String, k: Int = 16,
-                         iters: Int = 3,
-                         mat: Materialize = Materialize.Local): DataFrame = {
+                         iters: Int = 3): DataFrame = {
     import spark.implicits._
-    val e = mat(prepared(spark, dir).select(col("vec_id"), col("v"), col("nrm")))
+    val e = Materialize.Local(prepared(spark, dir).select(col("vec_id"), col("v"), col("nrm")))
     // seed = raw first-k vectors (float32→double, exactly representable on
     // both engines — no rounding needed at round 0)
     var cents: Seq[(Int, Seq[Double])] = e.filter(col("vec_id") < k)
@@ -2048,13 +2031,12 @@ object VectorOps {
     */
   def annRecallIvfTrained(spark: SparkSession, dir: String, nQueries: Int = 20,
                           k: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
-                          iters: Int = 3,
-                          mat: Materialize = Materialize.Local): DataFrame = {
+                          iters: Int = 3): DataFrame = {
     val seed = recall(spark, dir,
-        annIvfMulti(spark, dir, nQueries, k, kCentroids, nProbe, mat), nQueries, k)
+        annIvfMulti(spark, dir, nQueries, k, kCentroids, nProbe), nQueries, k)
       .select(col("q_id"), col("n_hits").as("n_hits_seed"),
         col("recall_at_k").as("recall_seed"))
-    val trained = sharedTrained(spark, dir, kCentroids, iters, mat)
+    val trained = sharedTrained(spark, dir, kCentroids, iters)
     val tr = recall(spark, dir,
         annIvfMultiWith(prepared(spark, dir), trained, nQueries, k, nProbe),
         nQueries, k)
@@ -2277,18 +2259,14 @@ object VectorOps {
     * the RESULT after scoring.
     */
   def annIvfFiltered(spark: SparkSession, dir: String, nQueries: Int = 20,
-                     kNn: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
-                     mat: Materialize = Materialize.Local): DataFrame = (mat match {
-    case Materialize.Local =>
-      sharedAnnHits(spark, "ivff", dir, s"$nQueries|$kNn|$kCentroids|$nProbe")(
-        annIvfFilteredBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, Materialize.Local))
-    case m => annIvfFilteredBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, m)
-  }).orderBy(col("q_id"), col("rank"))
+                     kNn: Int = 5, kCentroids: Int = 16, nProbe: Int = 2): DataFrame =
+    sharedAnnHits(spark, "ivff", dir, s"$nQueries|$kNn|$kCentroids|$nProbe")(
+      annIvfFilteredBuild(spark, dir, nQueries, kNn, kCentroids, nProbe))
+      .orderBy(col("q_id"), col("rank"))
 
   private[graft] def annIvfFilteredBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                         kNn: Int, kCentroids: Int, nProbe: Int,
-                                         mat: Materialize): DataFrame = {
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, mat)
+                                         kNn: Int, kCentroids: Int, nProbe: Int): DataFrame = {
+    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
     val e = prepared(spark, dir).join(assigned, "vec_id")
     val qProbes = queryProbes(prepared(spark, dir), nQueries, kCentroids, nProbe, withLabel = true)
     val sims = e.join(broadcast(qProbes),
@@ -2343,9 +2321,8 @@ object VectorOps {
     */
   def annIvfPostFiltered(spark: SparkSession, dir: String, nQueries: Int = 20,
                          kNn: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
-                         expand: Int = 3,
-                         mat: Materialize = Materialize.Local): DataFrame = {
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, mat)
+                         expand: Int = 3): DataFrame = {
+    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
     val e = prepared(spark, dir).join(assigned, "vec_id")
     val qProbes = queryProbes(prepared(spark, dir), nQueries, kCentroids, nProbe, withLabel = true)
     val sims = e.join(broadcast(qProbes),
@@ -2410,13 +2387,12 @@ object VectorOps {
     */
   def annRecallFiltered(spark: SparkSession, dir: String, nQueries: Int = 20,
                         k: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
-                        expand: Int = 3,
-                        mat: Materialize = Materialize.Local): DataFrame = {
+                        expand: Int = 3): DataFrame = {
     val exact = sharedKnnFilteredExact(spark, dir, nQueries, k)
-    val pre = annIvfFiltered(spark, dir, nQueries, k, kCentroids, nProbe, mat)
+    val pre = annIvfFiltered(spark, dir, nQueries, k, kCentroids, nProbe)
       .select(col("q_id"), col("neighbor_id")).withColumn("hit_pre", lit(1))
     val post = annIvfPostFiltered(spark, dir, nQueries, k, kCentroids, nProbe,
-        expand, mat)
+        expand)
       .select(col("q_id"), col("neighbor_id")).withColumn("hit_post", lit(1))
     exact.join(pre, Seq("q_id", "neighbor_id"), "left")
       .join(post, Seq("q_id", "neighbor_id"), "left")
@@ -2489,17 +2465,11 @@ object VectorOps {
     */
   def marginPairs(spark: SparkSession, dir: String, k: Int = 4,
                   kCentroids: Int = 16, minMargin: Double = 1.0,
-                  nProbe: Int = 4,
-                  mat: Materialize = Materialize.Local): DataFrame = (mat match {
-    case Materialize.Local =>
-      graft.SharedRel(spark, s"margpairs|$dir|$k|$kCentroids|$minMargin|$nProbe",
-        Materialize.Local)(
-        marginCore(spark, dir, pmod(col("label"), lit(2)) === 0,
-          k, kCentroids, minMargin, nProbe, Materialize.Local))
-    case m =>
+                  nProbe: Int = 4): DataFrame =
+    graft.SharedRel(spark, s"margpairs|$dir|$k|$kCentroids|$minMargin|$nProbe",
+      Materialize.Local)(
       marginCore(spark, dir, pmod(col("label"), lit(2)) === 0,
-        k, kCentroids, minMargin, nProbe, m)
-  }).orderBy(col("a_id"))
+        k, kCentroids, minMargin, nProbe, Materialize.Local)).orderBy(col("a_id"))
 
   /** The DAILY-ARRIVAL form of [[marginPairs]] — new source-side vectors
     * (the salted delta split of the A parity) mined against the full
@@ -2516,11 +2486,10 @@ object VectorOps {
     */
   def marginPairsIncr(spark: SparkSession, dir: String, deltaMod: Int = 5,
                       k: Int = 4, kCentroids: Int = 16,
-                      minMargin: Double = 1.0, nProbe: Int = 4,
-                      mat: Materialize = Materialize.Local): DataFrame =
+                      minMargin: Double = 1.0, nProbe: Int = 4): DataFrame =
     marginCore(spark, dir,
       pmod(col("label"), lit(2)) === 0 && incSplitE(deltaMod) === 0,
-      k, kCentroids, minMargin, nProbe, mat).orderBy(col("a_id"))
+      k, kCentroids, minMargin, nProbe, Materialize.Local).orderBy(col("a_id"))
 
   private[graft] def marginCore(spark: SparkSession, dir: String, aFilter: Column,
                          k: Int, kCentroids: Int, minMargin: Double,
@@ -2687,21 +2656,20 @@ object VectorOps {
     * and the single most expensive piece of either harness.
     */
   private def sharedMarginExact(spark: SparkSession, dir: String, k: Int,
-                                minMargin: Double, mat: Materialize): DataFrame =
-    graft.SharedRel(spark, s"marginexact|$dir|$k|$minMargin", mat)(
+                                minMargin: Double): DataFrame =
+    graft.SharedRel(spark, s"marginexact|$dir|$k|$minMargin", Materialize.Local)(
       // the kCentroids = 1 miner built directly (not via the shared
       // marginPairs surface — a nested one-consumer `margpairs|…|1` entry
       // would just duplicate this checkpoint)
       marginCore(spark, dir, pmod(col("label"), lit(2)) === 0,
-        k, 1, minMargin, nProbe = 4, mat = mat)
+        k, 1, minMargin, nProbe = 4, mat = Materialize.Local)
         .select(col("a_id"), col("b_id")))
 
   def marginRecall(spark: SparkSession, dir: String, k: Int = 4,
-                   kCentroids: Int = 16, minMargin: Double = 1.0,
-                   mat: Materialize = Materialize.Local): DataFrame = {
-    val approx = marginPairs(spark, dir, k, kCentroids, minMargin, mat = mat)
+                   kCentroids: Int = 16, minMargin: Double = 1.0): DataFrame = {
+    val approx = marginPairs(spark, dir, k, kCentroids, minMargin)
       .select(col("a_id"), col("b_id")).withColumn("ap", lit(1))
-    val exact = sharedMarginExact(spark, dir, k, minMargin, mat)
+    val exact = sharedMarginExact(spark, dir, k, minMargin)
       .withColumn("ex", lit(1))
     exact.join(approx, Seq("a_id", "b_id"), "full_outer")
       .agg(
@@ -2737,9 +2705,8 @@ object VectorOps {
   def marginRecallTrained(spark: SparkSession, dir: String, k: Int = 4,
                           kCentroids: Int = 16, iters: Int = 3,
                           minMargin: Double = 1.0,
-                          probes: Seq[Int] = Seq(1, 4, 8),
-                          mat: Materialize = Materialize.Local): DataFrame = {
-    val exact = sharedMarginExact(spark, dir, k, minMargin, mat)
+                          probes: Seq[Int] = Seq(1, 4, 8)): DataFrame = {
+    val exact = sharedMarginExact(spark, dir, k, minMargin)
       .withColumn("ex", lit(1))
     def row(mined: DataFrame, quant: String, np: Int): DataFrame =
       exact.join(mined.select(col("a_id"), col("b_id")).withColumn("ap", lit(1)),
@@ -2771,12 +2738,12 @@ object VectorOps {
       val pw = Window.partitionBy(col("vec_id"))
         .orderBy((dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).desc,
           col("centroid_id"))
-      val a = mat(e.filter(aF).join(cents)
+      val a = Materialize.Local(e.filter(aF).join(cents)
         .withColumn("__rn", row_number().over(pw))
         .filter(col("__rn") <= probes.max)
         .select(col("centroid_id"), col("vec_id").as("a_id"),
           col("v").as("va"), col("nrm").as("na"), col("__rn")))
-      val b = mat(e.filter(pmod(col("label"), lit(2)) === 1).join(cents)
+      val b = Materialize.Local(e.filter(pmod(col("label"), lit(2)) === 1).join(cents)
         .withColumn("__rn", row_number().over(pw)).filter(col("__rn") === 1)
         .select(col("centroid_id"), col("vec_id").as("b_id"),
           col("v").as("vb"), col("nrm").as("nb")))
@@ -2786,7 +2753,7 @@ object VectorOps {
       .select(col("vec_id").as("centroid_id"), col("v").as("cv"), col("nrm").as("cn"))
     val bySide = Seq(
       "seed" -> sides(seedCents),
-      "trained" -> sides(sharedTrained(spark, dir, kCentroids, iters, mat)))
+      "trained" -> sides(sharedTrained(spark, dir, kCentroids, iters)))
     probes.flatMap { np =>
       bySide.map { case (quant, (a, b)) =>
         row(marginJoinScore(a.filter(col("__rn") <= np).drop("__rn"), b,
@@ -2994,19 +2961,14 @@ object VectorOps {
   }
 
   def annPq(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
-            blocks: Int = 4, k: Int = 16,
-            mat: Materialize = Materialize.Local): DataFrame = mat match {
-    case Materialize.Local =>
-      sharedAnnHits(spark, "pq", dir, s"$nQueries|$kNn|$blocks|$k")(
-        annPqBuild(spark, dir, nQueries, kNn, blocks, k, Materialize.Local))
-    case m => annPqBuild(spark, dir, nQueries, kNn, blocks, k, m)
-  }
+            blocks: Int = 4, k: Int = 16): DataFrame =
+    sharedAnnHits(spark, "pq", dir, s"$nQueries|$kNn|$blocks|$k")(
+      annPqBuild(spark, dir, nQueries, kNn, blocks, k))
 
   private[graft] def annPqBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                kNn: Int, blocks: Int, k: Int,
-                                mat: Materialize): DataFrame = {
+                                kNn: Int, blocks: Int, k: Int): DataFrame = {
     val e = prepared(spark, dir)
-    val codes = sharedPqCodes(spark, dir, blocks, k, mat)
+    val codes = sharedPqCodes(spark, dir, blocks, k)
     val lut = broadcast(adcLut(e, nQueries, blocks, k))
     val scored = codes.withColumn("code", col("code").cast("long"))
       .join(lut, Seq("block", "code"))
@@ -3387,18 +3349,14 @@ object VectorOps {
     * lists broadcast per query, per-query top-k window. Never all-pairs.
     */
   def annIvfSq(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
-               kCentroids: Int = 16, nProbe: Int = 2,
-               mat: Materialize = Materialize.Local): DataFrame = (mat match {
-    case Materialize.Local =>
-      sharedAnnHits(spark, "ivfsq", dir, s"$nQueries|$kNn|$kCentroids|$nProbe")(
-        annIvfSqBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, Materialize.Local))
-    case m => annIvfSqBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, m)
-  }).orderBy(col("q_id"), col("rank"))
+               kCentroids: Int = 16, nProbe: Int = 2): DataFrame =
+    sharedAnnHits(spark, "ivfsq", dir, s"$nQueries|$kNn|$kCentroids|$nProbe")(
+      annIvfSqBuild(spark, dir, nQueries, kNn, kCentroids, nProbe))
+      .orderBy(col("q_id"), col("rank"))
 
   private[graft] def annIvfSqBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                   kNn: Int, kCentroids: Int, nProbe: Int,
-                                   mat: Materialize): DataFrame = {
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, mat)
+                                   kNn: Int, kCentroids: Int, nProbe: Int): DataFrame = {
+    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
     val e = prepared(spark, dir)
     val sq = e
       .withColumn("max_abs",
@@ -3521,18 +3479,14 @@ object VectorOps {
   def annGraphBeam(spark: SparkSession, dir: String, nQueries: Int = 20,
                    k: Int = 5, beam: Int = 8, hops: Int = 3, kNn: Int = 5,
                    kCentroids: Int = 16, nProbe: Int = 2,
-                   mat: Materialize = Materialize.Local): DataFrame = mat match {
+                   mat: Materialize = Materialize.Local): DataFrame =
     // session-shared under the default materialization: the search result
     // feeds its own query AND the recall row (deterministic relation)
-    case Materialize.Local =>
-      graft.SharedRel(spark,
-        s"anngraph|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$nProbe",
-        Materialize.Local)(
-        annGraphBeamBuild(spark, dir, nQueries, k, beam, hops, kNn,
-          kCentroids, nProbe, Materialize.Local))
-    case m => annGraphBeamBuild(spark, dir, nQueries, k, beam, hops, kNn,
-      kCentroids, nProbe, m)
-  }
+    graft.SharedRel(spark,
+      s"anngraph|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$nProbe",
+      mat)(
+      annGraphBeamBuild(spark, dir, nQueries, k, beam, hops, kNn,
+        kCentroids, nProbe, mat))
 
   private[graft] def annGraphBeamBuild(
       spark: SparkSession, dir: String, nQueries: Int,
@@ -3627,17 +3581,12 @@ object VectorOps {
     */
   def annGraphFiltered(spark: SparkSession, dir: String, nQueries: Int = 20,
                        k: Int = 5, beam: Int = 16, hops: Int = 3, kNn: Int = 5,
-                       kCentroids: Int = 16, nProbe: Int = 4,
-                       mat: Materialize = Materialize.Local): DataFrame = mat match {
-    case Materialize.Local =>
-      graft.SharedRel(spark,
-        s"anngraphf|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$nProbe",
-        Materialize.Local)(
-        annGraphBeamBuild(spark, dir, nQueries, k, beam, hops, kNn,
-          kCentroids, nProbe, Materialize.Local, filtered = true))
-    case m => annGraphBeamBuild(spark, dir, nQueries, k, beam, hops, kNn,
-      kCentroids, nProbe, m, filtered = true)
-  }
+                       kCentroids: Int = 16, nProbe: Int = 4): DataFrame =
+    graft.SharedRel(spark,
+      s"anngraphf|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$nProbe",
+      Materialize.Local)(
+      annGraphBeamBuild(spark, dir, nQueries, k, beam, hops, kNn,
+        kCentroids, nProbe, Materialize.Local, filtered = true))
 
   def annGraphBeamSql(nQueries: Int = 20, k: Int = 5, beam: Int = 8,
                       hops: Int = 3, kNn: Int = 5,
@@ -3919,8 +3868,7 @@ object VectorOps {
     */
   def graphMerge(spark: SparkSession, dir: String, nQueries: Int = 20,
                  k: Int = 5, beam: Int = 8, hops: Int = 3, kNn: Int = 5,
-                 kCentroids: Int = 16, mod: Int = 5, nProbe: Int = 2,
-                 mat: Materialize = Materialize.Local): DataFrame = {
+                 kCentroids: Int = 16, mod: Int = 5, nProbe: Int = 2): DataFrame = {
     val e = prepared(spark, dir)
     val queries = broadcast(e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -3928,7 +3876,7 @@ object VectorOps {
     val cents = frozenCentroids(e, kCentroids, mod)
     // the session-shared stale graph ([[staleGraphEdges]]) — the SAME
     // relation the compact audit prices, never rebuilt here
-    val edges = staleGraphEdges(spark, dir, kNn, kCentroids, mod, mat)
+    val edges = staleGraphEdges(spark, dir, kNn, kCentroids, mod, Materialize.Local)
     val deltaEdges = edges.filter(col("is_delta_edge"))
       .select(col("src"), col("dst"), col("cos_sim"))
     // the reverse proposals: cosine is symmetric and both directions
@@ -3937,7 +3885,7 @@ object VectorOps {
       col("src").as("dst"), col("cos_sim"))
     val wSrc = Window.partitionBy(col("src"))
       .orderBy(col("cos_sim").desc, col("dst"))
-    val merged = mat(edges.select(col("src"), col("dst"), col("cos_sim"))
+    val merged = Materialize.Local(edges.select(col("src"), col("dst"), col("cos_sim"))
       .unionAll(revEdges)
       .groupBy(col("src"), col("dst")).agg(max(col("cos_sim")).as("cos_sim"))
       .withColumn("rank", row_number().over(wSrc)).filter(col("rank") <= kNn)
@@ -3945,15 +3893,15 @@ object VectorOps {
     val staleSeeds = e.filter(col("vec_id").isin(cents.map(_._1): _*))
       .select(col("vec_id"), col("label"), col("v"), col("nrm"))
     val mergedHits = graphBeamWith(e, queries, merged, staleSeeds,
-        k, beam, hops, nProbe, mat, filtered = false)
+        k, beam, hops, nProbe, Materialize.Local, filtered = false)
       .select(col("q_id"), col("neighbor_id")).withColumn("hit_merged", lit(1))
     // the stale beam is the compact audit's session-shared relation —
     // the r17 double-run this action no longer pays
     val staleHits = staleBeamHits(spark, dir, nQueries, k, beam, hops, kNn,
-        kCentroids, mod, nProbe, mat)
+        kCentroids, mod, nProbe, Materialize.Local)
       .withColumn("hit_stale", lit(1))
     val full = annGraphBeam(spark, dir, nQueries, k, beam, hops, kNn,
-        kCentroids, nProbe, mat)
+        kCentroids, nProbe)
       .select(col("q_id"), col("neighbor_id")).withColumn("hit_full", lit(1))
     val exact = sharedKnnExact(spark, dir, nQueries, k)
     exact.join(full, Seq("q_id", "neighbor_id"), "left")
@@ -4076,26 +4024,23 @@ object VectorOps {
     */
   def annIvfPq(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
                kCentroids: Int = 16, nProbe: Int = 2, blocks: Int = 4,
-               k: Int = 16, mat: Materialize = Materialize.Local): DataFrame = (mat match {
-    case Materialize.Local =>
-      sharedAnnHits(spark, "ivfpq", dir,
-        s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k")(
-        annIvfPqBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k,
-          Materialize.Local))
-    case m => annIvfPqBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k, m)
-  }).orderBy(col("q_id"), col("rank"))
+               k: Int = 16): DataFrame =
+    sharedAnnHits(spark, "ivfpq", dir,
+      s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k")(
+      annIvfPqBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k))
+      .orderBy(col("q_id"), col("rank"))
 
   private[graft] def annIvfPqBuild(spark: SparkSession, dir: String, nQueries: Int,
                                    kNn: Int, kCentroids: Int, nProbe: Int,
-                                   blocks: Int, k: Int, mat: Materialize): DataFrame = {
+                                   blocks: Int, k: Int): DataFrame = {
     val e = prepared(spark, dir)
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, mat)
+    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
     // IVF half: shared probe-list builder; PQ half: shared ADC LUT
     val qProbes = queryProbes(e, nQueries, kCentroids, nProbe)
       .select(col("q_id"), col("q_cent"))
     val lut = broadcast(adcLut(e, nQueries, blocks, k))
     // candidates: code rows of vectors living in a probed inverted list
-    val cand = sharedPqCodes(spark, dir, blocks, k, mat)
+    val cand = sharedPqCodes(spark, dir, blocks, k)
       .withColumn("code", col("code").cast("long"))
       .join(assigned, "vec_id")
       .join(broadcast(qProbes), col("centroid_id") === col("q_cent"))
@@ -4192,23 +4137,17 @@ object VectorOps {
     */
   def annIvfPqRr(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
                  kCentroids: Int = 16, nProbe: Int = 2, blocks: Int = 4,
-                 k: Int = 16, mult: Int = 4,
-                 mat: Materialize = Materialize.Local): DataFrame = (mat match {
-    case Materialize.Local =>
-      sharedAnnHits(spark, "ivfpqrr", dir,
-        s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k|$mult")(
-        annIvfPqRrBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k,
-          mult, Materialize.Local))
-    case m =>
-      annIvfPqRrBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k, mult, m)
-  }).orderBy(col("q_id"), col("rank"))
+                 k: Int = 16, mult: Int = 4): DataFrame =
+    sharedAnnHits(spark, "ivfpqrr", dir,
+      s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k|$mult")(
+      annIvfPqRrBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k, mult))
+      .orderBy(col("q_id"), col("rank"))
 
   private[graft] def annIvfPqRrBuild(spark: SparkSession, dir: String, nQueries: Int,
                                      kNn: Int, kCentroids: Int, nProbe: Int,
-                                     blocks: Int, k: Int, mult: Int,
-                                     mat: Materialize): DataFrame = {
+                                     blocks: Int, k: Int, mult: Int): DataFrame = {
     require(mult >= 1, s"shortlist multiplier must be >= 1, got $mult")
-    val short = annIvfPq(spark, dir, nQueries, kNn * mult, kCentroids, nProbe, blocks, k, mat)
+    val short = annIvfPq(spark, dir, nQueries, kNn * mult, kCentroids, nProbe, blocks, k)
       .select(col("q_id"), col("neighbor_id"))
     val e = prepared(spark, dir)
     val qs = broadcast(e.filter(col("vec_id") < nQueries)
@@ -4271,24 +4210,21 @@ object VectorOps {
     */
   def annIvfPqRes(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
                   kCentroids: Int = 16, nProbe: Int = 2, blocks: Int = 4,
-                  k: Int = 16, mat: Materialize = Materialize.Local): DataFrame = (mat match {
-    case Materialize.Local =>
-      sharedAnnHits(spark, "ivfpqres", dir,
-        s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k")(
-        annIvfPqResBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k,
-          Materialize.Local))
-    case m => annIvfPqResBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k, m)
-  }).orderBy(col("q_id"), col("rank"))
+                  k: Int = 16): DataFrame =
+    sharedAnnHits(spark, "ivfpqres", dir,
+      s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k")(
+      annIvfPqResBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k))
+      .orderBy(col("q_id"), col("rank"))
 
   private[graft] def annIvfPqResBuild(spark: SparkSession, dir: String, nQueries: Int,
                                       kNn: Int, kCentroids: Int, nProbe: Int,
-                                      blocks: Int, k: Int, mat: Materialize): DataFrame = {
+                                      blocks: Int, k: Int): DataFrame = {
     val e = prepared(spark, dir)
     val cents = e.filter(col("vec_id") < kCentroids)
       .select(col("vec_id").as("centroid_id"), col("v").as("cv"))
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, mat)
+    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
     // residuals: row-local subtraction after a broadcast centroid join
-    val resid = mat(e.select(col("vec_id"), col("v"))
+    val resid = Materialize.Local(e.select(col("vec_id"), col("v"))
       .join(assigned, "vec_id")
       .join(broadcast(cents), "centroid_id")
       .select(col("vec_id"), col("centroid_id"),

@@ -1404,14 +1404,13 @@ object Multimodal {
     * machinery: one shuffle per round, lineage severed per round,
     * convergence counted by `Observation`, loud failure on non-convergence.
     */
-  def imageDupClusters(spark: SparkSession, dir: String, maxDist: Int = 6,
-                       mat: graft.Materialize = graft.Materialize.Local): DataFrame = {
+  def imageDupClusters(spark: SparkSession, dir: String, maxDist: Int = 6): DataFrame = {
     val hashes = sharedHashes(spark, dir)
-    val groups = mat(hashes.groupBy("dhash").agg(min("media_id").as("id")))
+    val groups = graft.Materialize.Local(hashes.groupBy("dhash").agg(min("media_id").as("id")))
     val pairs = hammingPairs(groups, maxDist).select("id_a", "id_b")
-    val edges = mat(pairs.union(
+    val edges = graft.Materialize.Local(pairs.union(
       pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b"))))
-    var labels = mat(groups.select(col("id"), col("id").as("label")))
+    var labels = graft.Materialize.Local(groups.select(col("id"), col("id").as("label")))
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 25) {
@@ -1424,7 +1423,7 @@ object Multimodal {
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"),
           (coalesce(col("nbr_min"), col("label")) < col("label")).cast("long").as("chg"))
       val obs = org.apache.spark.sql.Observation()
-      val next = mat(stepped.observe(obs, sum(col("chg")).as("changed")))
+      val next = graft.Materialize.Local(stepped.observe(obs, sum(col("chg")).as("changed")))
       changed = obs.get("changed").asInstanceOf[Long]
       labels = next.drop("chg")
       rounds += 1

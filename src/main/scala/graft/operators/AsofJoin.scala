@@ -69,17 +69,16 @@ object AsofJoin {
     * exactly on the first reading, so the fill is never null.
     */
   def resample(valid: DataFrame, step: String = "1 hour",
-               maxTicksPerUser: Long = 1000000L,
-               mat: graft.Materialize = graft.Materialize.Local): DataFrame = {
+               maxTicksPerUser: Long = 1000000L): DataFrame = {
     // right side unique per (key, time) — asofLast's contract. ALSO the
     // source of the per-user bounds: readings carries exactly valid's
     // (user, sec) set, so bounds re-aggregates the SMALL deduped relation.
-    // PINNED (`mat`): both the bounds branch and the asof union consume
+    // PINNED (local checkpoint): both the bounds branch and the asof union consume
     // readings, and column pruning specializes the two subplans (bounds
     // drops locf_cpm) so exchange reuse cannot deduplicate them — unpinned,
     // the big side's parse+validate+agg ran twice per query (the r8→r9
     // e_resample drift). One pass now feeds both.
-    val readings = mat(valid.groupBy(col("user_id"), col("sec"))
+    val readings = graft.Materialize.Local(valid.groupBy(col("user_id"), col("sec"))
       .agg(max(col("cpm")).as("locf_cpm")))
     val bounds = readings.groupBy(col("user_id"))
       .agg(min(col("sec")).as("mn"), max(col("sec")).as("mx"))

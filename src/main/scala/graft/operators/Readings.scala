@@ -193,15 +193,6 @@ object Readings {
   private lazy val jvmRunId: String =
     java.util.UUID.randomUUID.toString.take(8)
 
-  // ---- Routing (SURVEY §2.2 P11-P13; flink_process.py:327-351) ----
-
-  def routeNormal(v: DataFrame): DataFrame =
-    v.filter(col("status") === "valid" && !col("critical"))
-  def routeCritical(v: DataFrame): DataFrame =
-    v.filter(col("status") === "valid" && col("critical"))
-  def routeDirty(v: DataFrame): DataFrame =
-    v.filter(col("status") === "invalid")
-
   /** S8+P13, the relay CONSUMER's mechanism (backend/main.py:92-97): the
     * backend tags `data_priority` from the Kafka TOPIC a record arrives on,
     * never by re-evaluating the routing predicate. Reproduced faithfully:
@@ -218,7 +209,7 @@ object Readings {
     // reps, multiple consumers) measure the read, and the write cost lands
     // in the bench's shared_build row. TransportSpec still asserts the
     // full write+read path (first call in its fresh session writes).
-    val out = graft.SharedRel.once(spark, s"topics|$dir|$t") {
+    val out = graft.SharedRel.once(spark, s"topics|$dir|$t", graft.Materialize.Local) {
       // per-JVM-unique root: stable across calls in one session (idempotent
       // overwrite), but two concurrent JVMs over the same dataset can't
       // clobber each other's files between plan construction and execution

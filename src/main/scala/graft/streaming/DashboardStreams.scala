@@ -22,10 +22,8 @@ object DashboardStreams {
     * histogram, dangerous count (the browser's `useDatastats` reduce).
     */
   def statsStream(valid: DataFrame, window_ : String = "5 seconds",
-                  watermark: String = "5 seconds", setWatermark: Boolean = true): DataFrame = {
-    val marked =
-      if (setWatermark) valid.withWatermark("event_time", watermark) else valid
-    marked
+                  watermark: String = "5 seconds"): DataFrame =
+    valid.withWatermark("event_time", watermark)
       .groupBy(window(col("event_time"), window_))
       .agg(
         count(lit(1)).as("total_points"),
@@ -37,15 +35,12 @@ object DashboardStreams {
       .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
         col("total_points"), col("average_radiation"),
         col("n_low"), col("n_moderate"), col("n_high"), col("dangerous_points"))
-  }
 
   /** A4 streaming: per-window geo-grid max/count (the cluster `max_cpm`). */
   def geoGridStream(valid: DataFrame, cellDeg: Double = 0.5,
-                    window_ : String = "5 seconds", watermark: String = "5 seconds",
-                    setWatermark: Boolean = true): DataFrame = {
-    val marked =
-      if (setWatermark) valid.withWatermark("event_time", watermark) else valid
-    marked
+                    window_ : String = "5 seconds",
+                    watermark: String = "5 seconds"): DataFrame =
+    valid.withWatermark("event_time", watermark)
       .groupBy(
         window(col("event_time"), window_),
         floor(col("lat") / cellDeg).cast("long").as("cell_lat"),
@@ -53,7 +48,6 @@ object DashboardStreams {
       .agg(max(col("value")).as("max_cpm"), count(lit(1)).as("n_points"))
       .select(col("window.start").as("window_start"), col("cell_lat"), col("cell_lon"),
         col("max_cpm"), col("n_points"))
-  }
 
   /** Stream-STREAM interval join — the streaming twin of the batch
     * `e_interval` shape (equi-key + bounded time range): every critical
@@ -90,11 +84,9 @@ object DashboardStreams {
     * row per (window, zoom, cell), bounded by the pyramid × open windows).
     */
   def geoZoomStream(valid: DataFrame, baseDeg: Double = 4.0, maxZoom: Int = 4,
-                    window_ : String = "5 seconds", watermark: String = "5 seconds",
-                    setWatermark: Boolean = true): DataFrame = {
-    val marked =
-      if (setWatermark) valid.withWatermark("event_time", watermark) else valid
-    marked
+                    window_ : String = "5 seconds",
+                    watermark: String = "5 seconds"): DataFrame =
+    valid.withWatermark("event_time", watermark)
       .select(col("event_time"), col("lat"), col("lon"), col("value"),
         explode(array((0 to maxZoom).map(lit): _*)).as("zoom"))
       .withColumn("cell", lit(baseDeg) / expr("cast(shiftleft(1L, zoom) as double)"))
@@ -106,7 +98,6 @@ object DashboardStreams {
       .agg(max(col("value")).as("max_cpm"), count(lit(1)).as("n_points"))
       .select(col("window.start").as("window_start"), col("zoom"),
         col("cell_lat"), col("cell_lon"), col("max_cpm"), col("n_points"))
-  }
 
   /** Streaming sessionization: Spark's native merging session windows —
     * the streaming tier of [[graft.operators.Sessions]]. Emits one row per
@@ -114,10 +105,8 @@ object DashboardStreams {
     * session gap).
     */
   def sessionStream(valid: DataFrame, gap: String = "30 minutes",
-                    watermark: String = "5 seconds", setWatermark: Boolean = true): DataFrame = {
-    val marked =
-      if (setWatermark) valid.withWatermark("event_time", watermark) else valid
-    marked
+                    watermark: String = "5 seconds"): DataFrame =
+    valid.withWatermark("event_time", watermark)
       .groupBy(session_window(col("event_time"), gap), col("user_key"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_cpm"))
       .select(
@@ -125,7 +114,6 @@ object DashboardStreams {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"), col("sum_cpm"))
-  }
 
   /** D4 streaming: the client's rolling "last N points" buffer
     * (MapView.jsx:83-89) — streaming has no native keep-last-N

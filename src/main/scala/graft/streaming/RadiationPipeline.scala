@@ -126,6 +126,30 @@ object RadiationPipeline {
         col("captured_time"), col("unit")).as("dedup_key"))
   }
 
+  /** The one split both topologies build from: valid rows with a parseable
+    * event time go to watermark-bounded state; every other row — invalid
+    * records (W5, flink_process.py:318-320) and valid records whose
+    * timestamp fails [[normalizeTimestamp]] (W2) — takes the unbounded
+    * bypass. An invalid record never meets the watermark, so one with a
+    * parseable but late timestamp still reaches dirty-data instead of
+    * being dropped as late.
+    */
+  private def split(validated: DataFrame): (DataFrame, DataFrame) = {
+    val timed = col("status") === "valid" && col("event_time").isNotNull
+    (validated.filter(timed), validated.filter(!timed))
+  }
+
+  /** The timed side's dedup, one watermark definition feeding the dedup
+    * state and (in [[windowedPath]]) the cohort window — Spark 4 disallows
+    * redefining a watermark mid-plan.
+    */
+  private def dedupTimed(timed: DataFrame, watermark: String,
+                         bounded: Boolean): DataFrame = {
+    val marked = timed.withWatermark("event_time", watermark)
+    if (bounded) marked.dropDuplicatesWithinWatermark(Seq("dedup_key"))
+    else marked.dropDuplicates(Seq("dedup_key"))
+  }
+
   /** D1 streaming form. `bounded=true` uses watermark-bounded state (sane at
     * scale); `bounded=false` reproduces the reference's never-expiring
     * ValueState exactly (grows forever, like flink_process.py:265-277).
@@ -133,38 +157,28 @@ object RadiationPipeline {
     * Ordering note: the reference dedups BEFORE validation; validation here
     * is a stateless row-preserving projection and the key is built from the
     * same raw fields on both sides, so validate→dedup ≡ dedup→validate.
-    * Bounded mode delta: rows without a parseable event time (invalid
-    * records AND valid records whose timestamp fails [[normalizeTimestamp]])
-    * cannot use watermark-bounded state, so they dedup through unbounded
-    * `dropDuplicates` — reference-faithful (its ValueState never expires),
-    * with state limited to the malformed-timestamp slice of the stream.
+    * Bounded mode delta: the [[split]] bypass (invalid records and rows
+    * without a parseable event time) cannot use watermark-bounded state, so
+    * it dedups through unbounded `dropDuplicates` — reference-faithful (its
+    * ValueState never expires), with state limited to the dirty and
+    * malformed-timestamp slice of the stream.
     */
   def dedup(validated: DataFrame, watermark: String = "5 seconds",
             bounded: Boolean = true): DataFrame =
     if (bounded) {
-      val withEt = validated.filter(col("event_time").isNotNull)
-        .withWatermark("event_time", watermark)
-        .dropDuplicatesWithinWatermark(Seq("dedup_key"))
-      withEt.unionByName(
-        validated.filter(col("event_time").isNull)
-          .dropDuplicates(Seq("dedup_key")))
+      val (timed, bypass) = split(validated)
+      dedupTimed(timed, watermark, bounded)
+        .unionByName(bypass.dropDuplicates(Seq("dedup_key")))
     } else
       validated.dropDuplicates(Seq("dedup_key"))
 
-  /** The windowed path of [[run]]: valid rows with a parseable event time,
-    * one watermark definition feeding both the dedup state and the cohort
-    * window (Spark 4 disallows redefining a watermark mid-plan).
+  /** The windowed path of [[run]]: the [[split]]'s timed side, deduped and
+    * annotated with its cohort.
     */
   def windowedPath(validated: DataFrame, watermark: String = "5 seconds",
-                   bounded: Boolean = true, window_ : String = "1 second"): DataFrame = {
-    val base = validated
-      .filter(col("status") === "valid" && col("event_time").isNotNull)
-      .withWatermark("event_time", watermark)
-    val deduped =
-      if (bounded) base.dropDuplicatesWithinWatermark(Seq("dedup_key"))
-      else base.dropDuplicates(Seq("dedup_key"))
-    cohortAnnotate(deduped, window_ = window_, setWatermark = false)
-  }
+                   bounded: Boolean = true, window_ : String = "1 second"): DataFrame =
+    cohortAnnotate(dedupTimed(split(validated)._1, watermark, bounded),
+      window_ = window_, setWatermark = false)
 
   /** W3+W4 streaming form: 1 s tumbling event-time window over the valid
     * stream, each pane re-emitted with `temporal_batch_size` (cohort count),
@@ -191,15 +205,14 @@ object RadiationPipeline {
         lit("compliant").as("temporal_ordering")): _*)
   }
 
-  /** Valid path through the cohort window; the bypass (invalid records —
-    * W5, flink_process.py:318-320 — and valid records without a parseable
-    * event time, which the reference excludes from windowing via the None
-    * timestamp, W2) unions back un-annotated on the superset schema (W6).
+  /** Valid path through the cohort window; the [[split]] bypass unions
+    * back un-annotated on the superset schema (W6).
     *
     * The bypass is deduplicated too: the reference's keyed dedup runs on
     * EVERY record before validation, so duplicate malformed records reach
-    * dirty-data once, not twice. No event time on this branch ⇒ unbounded
-    * `dropDuplicates` (see the [[dedup]] bounded-mode note).
+    * dirty-data once, not twice. The bypass never meets the watermark ⇒
+    * unbounded `dropDuplicates` (see the [[dedup]] bounded-mode note).
+    * With `annotate = false` the same split feeds [[dedup]].
     */
   def withCohort(validated: DataFrame, watermark: String = "5 seconds",
                  bounded: Boolean = true, window_ : String = "1 second",
@@ -212,8 +225,7 @@ object RadiationPipeline {
         .withColumn("timestamp_key", lit(null: String))
         .withColumn("temporal_ordering", lit(null: String))
     val annotated = windowedPath(validated, watermark, bounded, window_)
-    val bypass = validated
-      .filter(col("status") === "invalid" || col("event_time").isNull)
+    val bypass = split(validated)._2
       .dropDuplicates(Seq("dedup_key"))
       .withColumn("temporal_batch_size", lit(null).cast("long"))
       .withColumn("timestamp_key", lit(null: String))
@@ -221,12 +233,16 @@ object RadiationPipeline {
     annotated.unionByName(bypass)
   }
 
-  /** P11-P13 routing predicates over the final stream. */
+  /** P11-P13 routing (flink_process.py:327-351) — the one definition, used
+    * by the stream's sinks and the batch tier's `e_route_*` queries alike.
+    * `status` is never null in either tier ([[validate]] and
+    * `Readings.enriched` both derive it from a `when/otherwise`).
+    */
   final case class Routed(normal: DataFrame, critical: DataFrame, dirty: DataFrame)
   def route(stream: DataFrame): Routed = Routed(
     normal = stream.filter(col("status") === "valid" && !col("critical")),
     critical = stream.filter(col("status") === "valid" && col("critical")),
-    dirty = stream.filter(coalesce(col("status") === "invalid", lit(true))))
+    dirty = stream.filter(col("status") === "invalid"))
 
   /** S5: streaming source of JSON strings for a [[Transport]].
     *

@@ -13,6 +13,14 @@ class MaterializeSpec extends SparkSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** `mat-*` subdirs a Table materialization wrote under `dir`: one per
+    * materialization point, so an exact count pins that `Table` reaches
+    * every point of the chain (a stage that silently fell back to `Local`
+    * would write one fewer).
+    */
+  private def matDirs(dir: String): Int =
+    new java.io.File(dir).listFiles().count(_.getName.startsWith("mat-"))
+
   test("Table materialization writes parquet rounds and preserves the relation") {
     val dir = Files.createTempDirectory("graft-mat").toString
     val mat = Materialize.Table(dir)
@@ -20,7 +28,7 @@ class MaterializeSpec extends SparkSuite {
     assert(rows(mat(df)) == rows(df))
     assert(rows(mat(df.selectExpr("id * 2 AS id"))) == rows(df.selectExpr("id * 2 AS id")))
     // one subdir per materialization — iterating consumers don't clobber
-    assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("mat-")) == 2)
+    assert(matDirs(dir) == 2)
   }
 
   test("dupClusters through the Table path matches the Local path") {
@@ -30,7 +38,9 @@ class MaterializeSpec extends SparkSuite {
     val local = TextOps.dupClusters(spark, sf())
     val table = TextOps.dupClusters(spark, sf(), mat = Materialize.Table(dir))
     assert(rows(table) == rows(local))
-    assert(new java.io.File(dir).listFiles().exists(_.getName.startsWith("mat-")))
+    // the cluster relation, its banded signatures, the incidence, the
+    // initial labels, and one per propagation round (5 on this fixture)
+    assert(matDirs(dir) == 9)
   }
 
   test("kmeansStep through the Table path matches the Local path") {
@@ -38,6 +48,7 @@ class MaterializeSpec extends SparkSuite {
     val local = VectorOps.kmeansStep(spark, sf())
     val table = VectorOps.kmeansStep(spark, sf(), mat = Materialize.Table(dir))
     assert(rows(table) == rows(local))
+    assert(matDirs(dir) == 1) // the shared IVF assignment
   }
 
   test("SharedRel memoizes per key for Local and never caches Table materializations") {
@@ -95,7 +106,9 @@ class MaterializeSpec extends SparkSuite {
         ta.size == tb.size &&
           ta.zip(tb).forall { case (a, b) => close(a, b) }
       }, s"trace diverged: $trTable vs $trLocal")
-    assert(new java.io.File(s"$dir/km").listFiles().exists(_.getName.startsWith("mat-")))
+    // the pinned corpus + one pinned assignment per round, for each trainer
+    assert(matDirs(s"$dir/km") == 3)
+    assert(matDirs(s"$dir/pq") == 3)
   }
 
   test("SharedRel key inventory matches the PLANS shared_build contract, and every call site's key is extractable") {

@@ -1323,7 +1323,7 @@ class OperatorsSpec extends SparkSuite {
     // is what licenses that): the ACTUAL candidate-set differences equal
     // the n_cand subtractions the query now reports
     val cands = Seq(1, 2, 4).map(nb => nb ->
-      TextOps.lshCandidatesAt(spark, sfDir, nb, graft.Materialize.Local)
+      TextOps.lshCandidatesAt(spark, sfDir, nb)
         .as[(Long, Long)].collect().toSet).toMap
     assert(cands(1).subsetOf(cands(2)) && cands(2).subsetOf(cands(4)),
       "candidate sets must be nested as the drift arithmetic assumes")
@@ -2554,7 +2554,7 @@ class OperatorsSpec extends SparkSuite {
     val nodes = (0L until n).toDF("vec_id")
     val fwd = (0L until n - 1).map(i => (i, i + 1))
     val edges = (fwd ++ fwd.map(_.swap)).toDF("src", "dst") // symmetric, like mutual kNN
-    val labels = functions.VectorOps.propagateMinLabels(nodes, edges, Materialize.Local)
+    val labels = functions.VectorOps.propagateMinLabels(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == n && labels.values.forall(_ == 0L),
       "one path component must collapse to the min label 0")
@@ -2568,7 +2568,7 @@ class OperatorsSpec extends SparkSuite {
     val fwd = (0L until n - 1).map(i => (i, i + 1))
     val edges = (fwd ++ fwd.map(_.swap)).toDF("src", "dst")
     val e = intercept[IllegalArgumentException] {
-      functions.VectorOps.propagateMinLabels(nodes, edges, Materialize.Local).collect()
+      functions.VectorOps.propagateMinLabels(nodes, edges).collect()
     }
     assert(e.getMessage.contains("did not converge"), s"wrong failure: ${e.getMessage}")
   }
@@ -2578,9 +2578,9 @@ class OperatorsSpec extends SparkSuite {
     val nodes = (0L until n).toDF("vec_id")
     val fwd = (0L until n - 1).map(i => (i, i + 1))
     val edges = (fwd ++ fwd.map(_.swap)).toDF("src", "dst")
-    val ml = functions.VectorOps.propagateMinLabels(nodes, edges, Materialize.Local)
+    val ml = functions.VectorOps.propagateMinLabels(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ls = functions.VectorOps.propagateLsLs(nodes, edges, Materialize.Local)
+    val ls = functions.VectorOps.propagateLsLs(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ls == ml, "the two component algorithms must label identically")
   }
@@ -2593,9 +2593,9 @@ class OperatorsSpec extends SparkSuite {
     val fwd = (0L until n - 1).map(i => (i, i + 1))
     val edges = (fwd ++ fwd.map(_.swap)).toDF("src", "dst")
     intercept[IllegalArgumentException] {
-      functions.VectorOps.propagateMinLabels(nodes, edges, Materialize.Local).collect()
+      functions.VectorOps.propagateMinLabels(nodes, edges).collect()
     }
-    val ls = functions.VectorOps.propagateLsLs(nodes, edges, Materialize.Local)
+    val ls = functions.VectorOps.propagateLsLs(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ls.size == n && ls.values.forall(_ == 0L),
       "lsls must collapse the over-cap chain to label 0")
@@ -2607,7 +2607,7 @@ class OperatorsSpec extends SparkSuite {
     val und = Seq((1L, 3L), (3L, 5L), (5L, 1L), // triangle+cycle: {1,3,5}
       (2L, 7L), (7L, 8L)) // chain: {2,7,8}
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val ls = functions.VectorOps.propagateLsLs(nodes, edges, Materialize.Local)
+    val ls = functions.VectorOps.propagateLsLs(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expect = Map(0L -> 0L, 1L -> 1L, 3L -> 1L, 5L -> 1L,
       2L -> 2L, 7L -> 2L, 8L -> 2L, 4L -> 4L, 6L -> 6L, 9L -> 9L)

@@ -100,8 +100,7 @@ class PlanAuditSpec extends SparkSuite {
   test("v_ann_ivfsq: probe lists broadcast onto the code scan") {
     // session-shared surface (`annhits`) — audit the build plan
     val plan = graft.functions.VectorOps.annIvfSqBuild(spark, sf("sf0.001"),
-      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2,
-      mat = graft.Materialize.Local).queryExecution.executedPlan.toString
+      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"probe lists must broadcast:\n$plan")
   }
@@ -269,7 +268,7 @@ class PlanAuditSpec extends SparkSuite {
     // same shared-index rule as the contamination audit: the memoized
     // d_decontam_spans handle is a checkpoint scan; audit the build
     val plan = graft.functions.TextOps
-      .decontamSpansBuild(spark, sf("sf0.001"), 10, graft.Materialize.Local)
+      .decontamSpansBuild(spark, sf("sf0.001"), 10)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"probe set must broadcast:\n$plan")
@@ -382,16 +381,14 @@ class PlanAuditSpec extends SparkSuite {
     // both search surfaces are session-shared (`annhits`) — audit the
     // BUILD plans (the d_dsir rule)
     val plan = graft.functions.VectorOps.annIvfFilteredBuild(spark, sf("sf0.001"),
-      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2,
-      mat = graft.Materialize.Local).queryExecution.executedPlan.toString
+      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2).queryExecution.executedPlan.toString
     // the label predicate rides the existing (centroid_id, label) probe
     // join condition: same BroadcastHashJoin as the unfiltered search, and
     // no extra hash exchange beyond the per-query top-k window
     assert(plan.contains("BroadcastHashJoin"),
       s"probe list must broadcast:\n$plan")
     val unfiltered = graft.functions.VectorOps.annIvfMultiBuild(spark, sf("sf0.001"),
-      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2,
-      mat = graft.Materialize.Local).queryExecution.executedPlan.toString
+      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2).queryExecution.executedPlan.toString
     assert(dataExchanges(plan) <= dataExchanges(unfiltered),
       s"filtering must not add exchanges (filtered ${dataExchanges(plan)} vs " +
         s"unfiltered ${dataExchanges(unfiltered)}):\n$plan")
@@ -716,7 +713,7 @@ class PlanAuditSpec extends SparkSuite {
     // (the 3-row S-curve feeds both the sweep query and d_lsh_retune's
     // pick), so the query's own explain is just the materialized scan
     val plan = graft.functions.TextOps
-      .lshSweepBuild(spark, sf("sf0.001"), 0.9, graft.Materialize.Local)
+      .lshSweepBuild(spark, sf("sf0.001"), 0.9)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"),
       s"band joins must never degenerate to a cartesian:\n$plan")

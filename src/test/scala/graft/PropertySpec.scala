@@ -410,7 +410,7 @@ class PropertySpec extends SparkSuite {
       val dir = java.nio.file.Files.createTempDirectory(s"prop_lsh$ci").toString
       docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val cands = Seq(1, 2, 4).map(nb => nb ->
-        TextOps.lshCandidatesAt(spark, dir, nb, Materialize.Local)
+        TextOps.lshCandidatesAt(spark, dir, nb)
           .as[(Long, Long)].collect()).toMap
       cands.foreach { case (nb, arr) =>
         assert(arr.length == arr.toSet.size,
@@ -838,9 +838,9 @@ class PropertySpec extends SparkSuite {
       val edges =
         if (sym.isEmpty) Seq((0L, 0L)).toDF("src", "dst").filter(col("src") =!= col("dst"))
         else sym.toDF("src", "dst")
-      val ml = VectorOps.propagateMinLabels(nodes, edges, Materialize.Local)
+      val ml = VectorOps.propagateMinLabels(nodes, edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val ls = VectorOps.propagateLsLs(nodes, edges, Materialize.Local)
+      val ls = VectorOps.propagateLsLs(nodes, edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(ls == ml, s"case $i (n=$n, m=${sym.size}): lsls disagrees with min-label")
     }

@@ -121,6 +121,26 @@ class StreamingSpec extends SparkSuite {
     assert(rows.count(_.getString(0) == "valid") == 1)
   }
 
+  test("late invalid record reaches dirty-data with the cohort window off (annotate = false)") {
+    // ENABLE_TEMPORAL_ORDERING=false: an invalid record whose timestamp
+    // parses but lies behind the watermark belongs in dirty-data — it must
+    // take the unbounded bypass, never the watermark-bounded dedup
+    val in = MemoryStream[String]
+    val out = RadiationPipeline.withCohort(
+      RadiationPipeline.validate(RadiationPipeline.parse(in.toDF())), annotate = false)
+    val q = out.writeStream.format("memory").queryName("late_dirty_t")
+      .outputMode("append").start()
+    in.addData(rec("2011-03-15 12:00:00"))
+    q.processAllAvailable()
+    in.addData(rec("2011-03-15 10:00:00", v = -5)) // 2 h behind the watermark
+    q.processAllAvailable()
+    val rows = spark.table("late_dirty_t").select("status", "timestamp").collect()
+    q.stop()
+    assert(rows.count(_.getString(0) == "valid") == 1)
+    assert(rows.filter(_.getString(0) == "invalid").map(_.getString(1)).toSeq ==
+      Seq("2011-03-15 10:00:00"), s"late invalid record lost: ${rows.toSeq}")
+  }
+
   test("cohort window annotates same-second batch size; late rows dropped") {
     val in = MemoryStream[String]
     val out = RadiationPipeline.cohortAnnotate(
@@ -838,7 +858,7 @@ class StreamingSpec extends SparkSuite {
     import graft.functions.{Retrieval, TextOps}
     val sfDir = sf("sf0.01")
     val batch = Retrieval.bm25IncrScored(spark, sfDir, probeMax = 10,
-        k1 = 1.2, b = 0.75, maxDfFrac = 0.9, deltaMod = 5, graft.Materialize.Local)
+        k1 = 1.2, b = 0.75, maxDfFrac = 0.9, deltaMod = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(batch.nonEmpty, "fixture must score at least one pair")
     // the batch corpus side: delta split — probe docs (doc_id < 10) are
