@@ -212,7 +212,7 @@ object RunDocPipeline {
       import graft.streaming.VectorDedupStream
       import graft.functions.VectorOps
       val vecIn = VectorOps.prepared(spark, sfDir)
-        .filter(VectorOps.incSplitE(5) === 0)
+        .filter(Exprs.arrivalSplit(col("vec_id"), 5) === 0)
         .select(col("vec_id"), col("v"), current_timestamp().as("ingest_ts"))
       vecIn.write.mode(SaveMode.Overwrite).parquet(s"$workDir/vec_in")
       val vecStream = spark.readStream
@@ -310,7 +310,7 @@ object RunDocPipeline {
       import graft.streaming.BloomStream
       val words = BloomStream.bitmapWords(spark, sfDir)
       val q11 = BloomStream.novelty(
-          docs.filter(graft.functions.TextOps.docSplitE(10) === 0)
+          docs.filter(Exprs.arrivalSplit(col("doc_id"), 10) === 0)
             .select("doc_id", "text", "source"), words)
         .writeStream.format("parquet")
         .option("path", s"$workDir/bloom_novelty")
@@ -360,7 +360,7 @@ object RunDocPipeline {
       // ARRIVALS only (the delta split): a base doc re-fed through the
       // gate would trivially self-match its own frozen shingles
       val q10 = DupSpanStream.appendStream(
-        docs.filter(graft.functions.TextOps.docSplitE(5) === 0), frozen,
+        docs.filter(Exprs.arrivalSplit(col("doc_id"), 5) === 0), frozen,
         s"$workDir/span_cut", s"$workDir/ckpt10")
       try { q10.processAllAvailable() } finally q10.stop()
       spark.read.parquet(s"$workDir/span_cut")

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Exprs
 
 /** BPE tokenizer training over the corpus vocabulary — the "train the
   * tokenizer" step of an LLM data pipeline (the reference pipelines ship
@@ -312,7 +313,7 @@ object Bpe {
                merges: Seq[(String, String)] = trainedMerges,
                deltaMod: Int = 5): DataFrame = {
     val freq = TextOps.prepared(spark, dir)
-      .select(col("source"), (TextOps.docSplitE(deltaMod) === 0).as("is_delta"),
+      .select(col("source"), (Exprs.arrivalSplit(col("doc_id"), deltaMod) === 0).as("is_delta"),
         explode(col("words")).as("w"))
       .groupBy("source", "is_delta", "w").agg(count(lit(1)).as("freq"))
     val toks = segmentCorpus(spark, dir, merges).select(col("w"), col("n_tokens"))
@@ -339,7 +340,7 @@ object Bpe {
                   deltaMod: Int = 5): String =
     s"""WITH freq AS (
        |  SELECT source, is_delta, w, count(*) AS freq FROM (
-       |    SELECT source, (${TextOps.docSplitSql(deltaMod)}) = 0 AS is_delta,
+       |    SELECT source, (${Exprs.arrivalSplitSql("doc_id", deltaMod)}) = 0 AS is_delta,
        |           unnest(words) AS w
        |    FROM (${TextOps.preparedSql}))
        |  GROUP BY source, is_delta, w),
@@ -388,7 +389,7 @@ object Bpe {
                 merges: Seq[(String, String)] = trainedMerges,
                 nExtra: Int = 3, deltaMod: Int = 5): DataFrame = {
     val freqSrc = TextOps.prepared(spark, dir)
-      .filter(TextOps.docSplitE(deltaMod) === 0)
+      .filter(Exprs.arrivalSplit(col("doc_id"), deltaMod) === 0)
       .select(col("source"), explode(col("words")).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("freq"))
     val freqW = freqSrc.groupBy("w").agg(sum(col("freq")).as("freq"))
@@ -464,7 +465,7 @@ object Bpe {
        |  SELECT source, w, count(*) AS freq FROM (
        |    SELECT source, unnest(words) AS w
        |    FROM (${TextOps.preparedSql})
-       |    WHERE (${TextOps.docSplitSql(deltaMod)}) = 0)
+       |    WHERE (${Exprs.arrivalSplitSql("doc_id", deltaMod)}) = 0)
        |  GROUP BY source, w),
        |freqw AS (SELECT w, CAST(sum(freq) AS BIGINT) AS freq
        |          FROM freqsrc GROUP BY w),

@@ -402,21 +402,7 @@ object MixOps {
     val h = Exprs.hex60(concat(lit("cap:"), col("doc_id").cast("string")))
     val base = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
       .withColumn("h", h)
-    val pre =
-      if (salts == 1) base
-      else {
-        val w1 = Window.partitionBy("source", "graft_salt")
-          .orderBy(col("h"), col("doc_id"))
-        base
-          .withColumn("graft_salt", pmod(hash(col("doc_id")), lit(salts)))
-          .withColumn("r1", row_number().over(w1))
-          .filter(col("r1") <= k)
-          .drop("graft_salt", "r1")
-      }
-    val w = Window.partitionBy("source").orderBy(col("h"), col("doc_id"))
-    pre
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    saltedTop(base, lit(k), salts)
       .select(col("doc_id"), col("source"), col("rnk"))
       .orderBy("doc_id")
   }
@@ -478,22 +464,22 @@ object MixOps {
     val h = Exprs.hex60(concat(lit("temp:"), col("doc_id").cast("string")))
     val base = docs.select(col("doc_id"), col("source"))
       .withColumn("h", h).join(targets, Seq("source"))
+    saltedTop(base, col("target"), salts)
+      .select(col("doc_id"), col("source"), col("rnk"), col("target"), col("n_src"))
+  }
+
+  /** Per-source top `bound` rows by (h, doc_id) as `rnk`, through the
+    * two-stage salted cut [[capPerSource]] describes (`salts` = 1: one
+    * per-source window).
+    */
+  private def saltedTop(base: DataFrame, bound: Column, salts: Int): DataFrame = {
+    val order = Seq(col("h"), col("doc_id"))
     val pre =
       if (salts == 1) base
-      else {
-        val w1 = Window.partitionBy("source", "graft_salt")
-          .orderBy(col("h"), col("doc_id"))
-        base
-          .withColumn("graft_salt", pmod(hash(col("doc_id")), lit(salts)))
-          .withColumn("r1", row_number().over(w1))
-          .filter(col("r1") <= col("target"))
-          .drop("graft_salt", "r1")
-      }
-    val w2 = Window.partitionBy("source").orderBy(col("h"), col("doc_id"))
-    pre
-      .withColumn("rnk", row_number().over(w2))
-      .filter(col("rnk") <= col("target"))
-      .select(col("doc_id"), col("source"), col("rnk"), col("target"), col("n_src"))
+      else Exprs.keepTop(base.withColumn("graft_salt", pmod(hash(col("doc_id")), lit(salts))),
+          Seq(col("source"), col("graft_salt")), order, bound, "r1")
+        .drop("graft_salt", "r1")
+    Exprs.keepTop(pre, Seq(col("source")), order, bound, "rnk")
   }
 
   def mixTemperatureSql(budget: Long = 300): String =
@@ -847,12 +833,6 @@ object MixOps {
     * appending is one prefix sum over the delta. Nothing rewrites a base
     * row, which is the entire point of the operator.
     */
-  /** Delta-split hash: salted so the split decorrelates from every data
-    * column (see [[manifestIncr]] doc).
-    */
-  private def deltaHashE(id: Column, deltaMod: Int): Column =
-    pmod(Exprs.hex60(concat(lit("inc:"), id.cast("string"))), lit(deltaMod))
-
   /** Documents + the per-doc gate columns both incremental chains read. */
   private def incrDocs(spark: SparkSession, dir: String, deltaMod: Int): DataFrame =
     TextOps.prepared(spark, dir)
@@ -861,7 +841,7 @@ object MixOps {
       .withColumn("quality_score", TextOps.qualityScoreE)
       .withColumn("hmd5", md5(col("norm").cast("binary")))
       .withColumn("tok_raw", size(col("words")).cast("long"))
-      .withColumn("is_delta", deltaHashE(col("doc_id"), deltaMod) === 0)
+      .withColumn("is_delta", Exprs.arrivalSplit(col("doc_id"), deltaMod) === 0)
       .select("doc_id", "lang", "source", "norm", "pred_lang",
         "quality_bucket", "quality_score", "hmd5", "tok_raw", "is_delta")
 
@@ -953,8 +933,8 @@ object MixOps {
       .join(repB, "hmd5").filter(col("doc_id") === col("rep_doc_id"))
       .select("doc_id")
     val dropB = pairs
-      .filter(deltaHashE(col("id_a"), deltaMod) =!= 0 &&
-        deltaHashE(col("id_b"), deltaMod) =!= 0)
+      .filter(Exprs.arrivalSplit(col("id_a"), deltaMod) =!= 0 &&
+        Exprs.arrivalSplit(col("id_b"), deltaMod) =!= 0)
       .select(col("id_b").as("doc_id")).distinct()
     val statsB = b.groupBy("source").agg(count(lit(1)).as("cnt"))
       .withColumn("w", weightE(col("source")))
@@ -994,8 +974,8 @@ object MixOps {
       .select("doc_id")
     // any pair whose id_b is delta drops id_b (partner is base OR a
     // smaller-id delta doc); a delta id_a paired with a base id_b drops too
-    val pA = deltaHashE(col("id_a"), deltaMod)
-    val pB = deltaHashE(col("id_b"), deltaMod)
+    val pA = Exprs.arrivalSplit(col("id_a"), deltaMod)
+    val pB = Exprs.arrivalSplit(col("id_b"), deltaMod)
     val dropD = pairs.filter(pB === 0).select(col("id_b").as("doc_id"))
       .union(pairs.filter(pA === 0 && pB =!= 0).select(col("id_a").as("doc_id")))
       .distinct()
@@ -1135,7 +1115,7 @@ object MixOps {
        |  SELECT prep.doc_id, prep.lang, prep.source, prep.norm,
        |    CAST(len(prep.words) AS BIGINT) AS tok_raw, md5(prep.norm) AS h,
        |    l.pred_lang, q.quality_bucket, q.quality_score,
-       |    ${Exprs.hex60Sql("'inc:' || prep.doc_id::VARCHAR")} % $deltaMod = 0 AS is_delta
+       |    ${Exprs.arrivalSplitSql("prep.doc_id", deltaMod)} = 0 AS is_delta
        |  FROM prep
        |  JOIN (${TextOps.langidSql}) l ON prep.doc_id = l.doc_id
        |  JOIN (${TextOps.qualitySql}) q ON prep.doc_id = q.doc_id),
@@ -1154,8 +1134,8 @@ object MixOps {
        |    AND COALESCE(cont.n_shared_shingles, 0) < $contamMin
        |    AND ${Exprs.hex60Sql("p.doc_id::VARCHAR")} % $sampleMod < $sampleKeep),
        |dropb AS (SELECT DISTINCT id_b AS doc_id FROM pairs
-       |          WHERE ${Exprs.hex60Sql("'inc:' || id_a::VARCHAR")} % $deltaMod <> 0
-       |            AND ${Exprs.hex60Sql("'inc:' || id_b::VARCHAR")} % $deltaMod <> 0),
+       |          WHERE ${Exprs.arrivalSplitSql("id_a", deltaMod)} <> 0
+       |            AND ${Exprs.arrivalSplitSql("id_b", deltaMod)} <> 0),
        |statsb AS (
        |  SELECT source, CAST(count(*) AS BIGINT) AS cnt,
        |    (regexp_extract(source, '([0-9]+)', 1)::BIGINT % 4) + 1 AS w
@@ -1212,11 +1192,11 @@ object MixOps {
        |dropd AS (
        |  SELECT DISTINCT doc_id FROM (
        |    SELECT id_b AS doc_id FROM pairs
-       |    WHERE ${Exprs.hex60Sql("'inc:' || id_b::VARCHAR")} % $deltaMod = 0
+       |    WHERE ${Exprs.arrivalSplitSql("id_b", deltaMod)} = 0
        |    UNION ALL
        |    SELECT id_a AS doc_id FROM pairs
-       |    WHERE ${Exprs.hex60Sql("'inc:' || id_a::VARCHAR")} % $deltaMod = 0
-       |      AND ${Exprs.hex60Sql("'inc:' || id_b::VARCHAR")} % $deltaMod <> 0)),
+       |    WHERE ${Exprs.arrivalSplitSql("id_a", deltaMod)} = 0
+       |      AND ${Exprs.arrivalSplitSql("id_b", deltaMod)} <> 0)),
        |mixd AS (
        |  SELECT doc_id FROM p JOIN statsb USING (source) CROSS JOIN totb
        |  WHERE is_delta

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Materialize
+import graft.{Exprs, Materialize}
 
 /** Retrieval tier over the corpus: BM25 lexical search and
   * reciprocal-rank-fusion hybrid search (lexical ∪ semantic), the query
@@ -43,13 +43,16 @@ object Retrieval {
            k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
            maxDfFrac: Double = 0.9): DataFrame = {
     val scored = bm25Scored(spark, dir, probeMax, k1, b, maxDfFrac)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("s_int").desc, col("doc_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("doc_id"),
-        (col("s_int") / 10000.0).as("score"))
+    topDocs(scored, k)
       .orderBy(col("q_id"), col("rank"))
   }
+
+  /** Per-query top-k over BM25 scores (ties by doc_id), the integer score
+    * scaled back to its 4-decimal value.
+    */
+  private def topDocs(scored: DataFrame, k: Int): DataFrame =
+    Exprs.keepTop(scored, Seq(col("q_id")), Seq(col("s_int").desc, col("doc_id")), k, "rank")
+      .select(col("q_id"), col("rank"), col("doc_id"), (col("s_int") / 10000.0).as("score"))
 
   /** The inverted index every BM25 entry point serves from, built ONCE:
     * the per-doc tokenized length base `withLen` (doc_id, ws, len) and the
@@ -152,7 +155,7 @@ object Retrieval {
   /** Standing-query BM25 over ARRIVALS with FROZEN statistics — the
     * incremental form retrieval serving actually runs: the index
     * statistics (df, N, Σlen) freeze at base-build time (the salted
-    * [[TextOps]] `docSplitE` split — same "base" as every text-tier
+    * [[TextOps]] `Exprs.arrivalSplit` split — same "base" as every text-tier
     * incremental), standing queries are the probe docs, and only the
     * DELTA documents are scored — the news-alerting / standing-retrieval
     * shape, O(delta) per day. Contract delta vs [[bm25]], stated: idf and
@@ -170,11 +173,7 @@ object Retrieval {
                maxDfFrac: Double = 0.9, deltaMod: Int = 5): DataFrame = {
     val scored = bm25IncrScored(spark, dir, probeMax, k1, b, maxDfFrac,
       deltaMod)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("s_int").desc, col("doc_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("doc_id"),
-        (col("s_int") / 10000.0).as("score"))
+    topDocs(scored, k)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -187,7 +186,7 @@ object Retrieval {
                                     maxDfFrac: Double, deltaMod: Int,
                                     freshStats: Boolean = false): DataFrame = {
     val (withLen, tf) = bm25Index(spark, dir)
-    val isBase = TextOps.docSplitE(deltaMod) =!= 0
+    val isBase = Exprs.arrivalSplit(col("doc_id"), deltaMod) =!= 0
     // FROZEN statistics: df / N / Σlen over the base split only —
     // unless `freshStats`, which scores the same delta candidates under
     // REFRESHED full-corpus statistics (the [[bm25Compact]] contrast side)
@@ -231,7 +230,7 @@ object Retrieval {
     val tf = withLen.select(col("doc_id"), col("len"), explode(col("ws")).as("w"))
       .groupBy(col("doc_id"), col("len"), col("w"))
       .agg(count(lit(1)).as("tf"))
-    val isBase = TextOps.docSplitE(deltaMod) =!= 0
+    val isBase = Exprs.arrivalSplit(col("doc_id"), deltaMod) =!= 0
     val df = tf.filter(isBase).groupBy(col("w")).agg(count(lit(1)).as("df"))
     val Array(nDocs, sumLen) = withLen.filter(isBase)
       .agg(count(lit(1)), sum(col("len"))).head()
@@ -255,7 +254,7 @@ object Retrieval {
        |  SELECT doc_id, list_filter(words, w -> w <> '') AS ws
        |  FROM (${TextOps.preparedSql})),
        |wl AS (SELECT doc_id, ws, len(ws) AS len,
-       |         ${TextOps.docSplitSql(deltaMod)} <> 0 AS is_base FROM d),
+       |         ${Exprs.arrivalSplitSql("doc_id", deltaMod)} <> 0 AS is_base FROM d),
        |tf AS (
        |  SELECT doc_id, len, is_base, w, count(*) AS tf
        |  FROM wl, unnest(ws) AS t(w)
@@ -406,7 +405,7 @@ object Retrieval {
        |  SELECT doc_id, list_filter(words, w -> w <> '') AS ws
        |  FROM (${TextOps.preparedSql})),
        |wl AS (SELECT doc_id, ws, len(ws) AS len,
-       |         ${TextOps.docSplitSql(deltaMod)} <> 0 AS is_base FROM d),
+       |         ${Exprs.arrivalSplitSql("doc_id", deltaMod)} <> 0 AS is_base FROM d),
        |tf AS (
        |  SELECT doc_id, len, is_base, w, count(*) AS tf
        |  FROM wl, unnest(ws) AS t(w)
@@ -613,9 +612,7 @@ object Retrieval {
       .withColumn("src",
         when(col("rank_lex").isNotNull && col("rank_sem").isNotNull, "both")
           .when(col("rank_lex").isNotNull, "lex").otherwise("sem"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("rrf_ppm").desc, col("doc_id"))
-    fused.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Exprs.keepTop(fused, Seq(col("q_id")), Seq(col("rrf_ppm").desc, col("doc_id")), k, "rank")
       .select(col("q_id"), col("rank"), col("doc_id"), col("rrf_ppm"), col("src"))
       .orderBy(col("q_id"), col("rank"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Exprs, Materialize, Tables}
+import graft.operators.Dedup
 import graft.plans.BloomJoin
 
 /** Text-analysis + document-dedup operators for a large-scale training-data
@@ -404,7 +405,7 @@ object TextOps {
     * watches WHERE the delta's embeddings sit, [[novelty]] its n-grams,
     * `v_dup_rate_incr` how much is already owned; this watches whether a
     * source's arrivals are getting WORSE): per source, the high-quality
-    * permille among base docs vs delta docs (the salted [[docSplitE]]
+    * permille among base docs vs delta docs (the salted [[Exprs.arrivalSplit]]
     * split, same arrival contract as every incremental operator) and the
     * signed drift. A source whose delta high-permille collapses is a
     * degraded scraper or a spam flood — caught before the docs enter the
@@ -423,7 +424,7 @@ object TextOps {
                        deltaMod: Int = 5): DataFrame = {
     val d = prepared(spark, dir).select(
       col("source"),
-      (docSplitE(deltaMod) === 0).as("is_delta"),
+      (Exprs.arrivalSplit(col("doc_id"), deltaMod) === 0).as("is_delta"),
       (qualityBucketE =!= "low").as("ok"))
     d.groupBy("source").agg(
       sum(when(!col("is_delta"), 1L).otherwise(0L)).as("n_base"),
@@ -447,7 +448,7 @@ object TextOps {
   def qualityDriftIncrSql(deltaMod: Int = 5): String =
     s"""WITH d AS (
        |  SELECT source,
-       |    (${docSplitSql(deltaMod)}) = 0 AS is_delta,
+       |    (${Exprs.arrivalSplitSql("doc_id", deltaMod)}) = 0 AS is_delta,
        |    quality_bucket <> 'low' AS ok
        |  FROM ($qualitySql) q
        |  JOIN (SELECT doc_id AS qid, source FROM documents) s ON s.qid = q.doc_id),
@@ -494,7 +495,7 @@ object TextOps {
                      deltaMod: Int = 5): DataFrame = {
     val d = prepared(spark, dir).select(
       col("doc_id"), col("source"),
-      (docSplitE(deltaMod) === 0).as("is_delta"),
+      (Exprs.arrivalSplit(col("doc_id"), deltaMod) === 0).as("is_delta"),
       qualityScoreE.as("score"))
     val agg0 = d.groupBy("source").agg(
       sum(when(!col("is_delta"), 1L).otherwise(0L)).as("n_base"),
@@ -534,7 +535,7 @@ object TextOps {
   def qualityRequotaSql(deltaMod: Int = 5): String =
     s"""WITH d AS (
        |  SELECT q.doc_id, s.source,
-       |    (${docSplitSql(deltaMod, "q.doc_id")}) = 0 AS is_delta,
+       |    (${Exprs.arrivalSplitSql("q.doc_id", deltaMod)}) = 0 AS is_delta,
        |    q.quality_score AS score
        |  FROM ($qualitySql) q
        |  JOIN (SELECT doc_id AS sid, source FROM documents) s ON s.sid = q.doc_id),
@@ -603,9 +604,7 @@ object TextOps {
         graft.Exprs.hex60(concat(lit("kmv:"), col("w"))).as("h"))
       .distinct()
     val exact = dw.groupBy("source").agg(count(lit(1)).as("n_exact"))
-    val wk = Window.partitionBy(col("source")).orderBy(col("h"))
-    val topk = dw.withColumn("rk", row_number().over(wk))
-      .filter(col("rk") <= k)
+    val topk = Exprs.keepTop(dw, Seq(col("source")), Seq(col("h")), k, "rk")
       .groupBy("source").agg(max(col("h")).as("h_k"), count(lit(1)).as("n_k"))
     exact.join(topk, "source")
       .select(col("source"), col("n_exact"), col("h_k"),
@@ -814,8 +813,7 @@ object TextOps {
       // exactly the two DISTINCT sets)
       val sides = Materialize.Local(
         shingles3(spark, dir).select(col("sh").as("shingle"),
-            (pmod(Exprs.hex60(concat(lit("inc:"), col("doc_id").cast("string"))),
-              lit(deltaMod.toLong)) === 0).as("is_delta"))
+            (Exprs.arrivalSplit(col("doc_id"), deltaMod) === 0).as("is_delta"))
           .distinct())
       (sides.filter(!col("is_delta")).select("shingle"),
        sides.filter(col("is_delta")).select("shingle"))
@@ -910,7 +908,7 @@ object TextOps {
   private def bloomCoreSql(m: Int, k: Int, deltaMod: Int): String =
     s"""spl AS (
        |  SELECT sh AS shingle,
-       |    ${Exprs.hex60Sql("'inc:' || doc_id::VARCHAR")} % $deltaMod = 0 AS is_delta
+       |    ${Exprs.arrivalSplitSql("doc_id", deltaMod)} = 0 AS is_delta
        |  FROM ($shingles3Sql)),
        |base AS (SELECT DISTINCT shingle FROM spl WHERE NOT is_delta),
        |probes AS (SELECT DISTINCT shingle FROM spl WHERE is_delta),
@@ -1029,7 +1027,7 @@ object TextOps {
     }.mkString("\nUNION ALL\n")
     s"""WITH spl AS (
        |  SELECT sh AS shingle,
-       |    ${Exprs.hex60Sql("'inc:' || doc_id::VARCHAR")} % $deltaMod = 0 AS is_delta
+       |    ${Exprs.arrivalSplitSql("doc_id", deltaMod)} = 0 AS is_delta
        |  FROM (${shingles3Sql})),
        |base AS (SELECT DISTINCT shingle FROM spl WHERE NOT is_delta),
        |probes AS (SELECT DISTINCT shingle FROM spl WHERE is_delta),
@@ -1182,8 +1180,8 @@ object TextOps {
     // same hash can reach the pool from two shards (a word is not
     // sharded — docs are): the merge dedups by hash, exactly the
     // streaming twin's set semantics
-    val mergedK = shardState.distinct()
-      .withColumn("rk", row_number().over(wSrc)).filter(col("rk") <= kKmv)
+    val mergedK = Exprs.keepTop(shardState.distinct(), Seq(col("source")), Seq(col("h")),
+        kKmv, "rk")
       .select("source", "h")
     val singleK = ranked.filter(col("rk_src") <= kKmv)
       .select("source", "h").distinct()
@@ -1265,8 +1263,8 @@ object TextOps {
       .withColumn("rk_sh", row_number().over(wQSh))
     val qShard = qRanked.filter(col("rk_sh") <= kKmv)
       .select("source", "doc_id", "h", "v")
-    val qMerged = qShard
-      .withColumn("rk", row_number().over(wQSrc)).filter(col("rk") <= kKmv)
+    val qMerged = Exprs.keepTop(qShard, Seq(col("source")), Seq(col("h"), col("doc_id")),
+        kKmv, "rk")
       .select("source", "doc_id", "h", "v")
     val qSingle = qRanked.filter(col("rk_src") <= kKmv)
       .select("source", "doc_id", "h", "v")
@@ -1444,9 +1442,8 @@ object TextOps {
       .join(probe, "sh")
       .groupBy(col("doc_id"), col("probe_id"))
       .agg(count(lit(1)).as("n_shared_shingles"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("n_shared_shingles").desc, col("probe_id"))
-    shared.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    Dedup.keepFirst(shared, Seq(col("doc_id")),
+        Seq(col("n_shared_shingles").desc, col("probe_id")), "rn")
       .select(col("doc_id"), col("probe_id").as("top_probe_id"),
         col("n_shared_shingles"))
   }
@@ -1699,7 +1696,7 @@ object TextOps {
       .select(col("doc_id"), col("i"), Exprs.hex60(col("sh")).as("sh"))
 
   /** O(delta) incremental form of [[dupSpans]] — the daily-increment cut:
-    * only DELTA documents (the salted [[docSplitE]] split) are span-cut,
+    * only DELTA documents (the salted [[Exprs.arrivalSplit]] split) are span-cut,
     * against (a) the FROZEN base shingle set — base owns every first
     * occurrence by contract, its own spans were cut at base-build time —
     * and (b) earlier occurrences WITHIN the increment (the batch keeper
@@ -1721,7 +1718,8 @@ object TextOps {
   private def incrPw(spark: SparkSession, dir: String, n: Int,
                      deltaMod: Int): DataFrame =
     prepared(spark, dir).filter(size(col("words")) >= n)
-      .select(col("doc_id"), col("words"), (docSplitE(deltaMod) === 0).as("is_delta"))
+      .select(col("doc_id"), col("words"),
+        (Exprs.arrivalSplit(col("doc_id"), deltaMod) === 0).as("is_delta"))
 
   /** The incremental cut positions: a delta doc's window is cut when it
     * hits the FROZEN base shingle set (base owns every first occurrence
@@ -1760,7 +1758,7 @@ object TextOps {
 
   def dupSpansIncrSql(n: Int = 5, deltaMod: Int = 5): String =
     s"""WITH pwa AS (
-       |  SELECT doc_id, words, (${docSplitSql(deltaMod)}) = 0 AS is_delta
+       |  SELECT doc_id, words, (${Exprs.arrivalSplitSql("doc_id", deltaMod)}) = 0 AS is_delta
        |  FROM ($preparedSql) WHERE len(words) >= $n),
        |pw AS (SELECT doc_id, words FROM pwa WHERE is_delta),
        |shd AS (
@@ -1915,7 +1913,7 @@ object TextOps {
 
   def dupRunsIncrSql(n: Int = 5, minRun: Int = 8, deltaMod: Int = 5): String =
     s"""WITH pwa AS (
-       |  SELECT doc_id, words, (${docSplitSql(deltaMod)}) = 0 AS is_delta
+       |  SELECT doc_id, words, (${Exprs.arrivalSplitSql("doc_id", deltaMod)}) = 0 AS is_delta
        |  FROM ($preparedSql) WHERE len(words) >= $n),
        |pw AS (SELECT doc_id, words FROM pwa WHERE is_delta),
        |shd AS (
@@ -2183,15 +2181,12 @@ object TextOps {
       .groupBy(col("doc_id"), col("n_words"), col("w"))
       .agg(count(lit(1)).as("n"))
     val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("w"))
-    tf.join(df, "w")
+    val scored = tf.join(df, "w")
       .crossJoin(broadcast(nDocs))
       .withColumn("score",
         col("n") / col("n_words").cast("double") *
           ((col("n_docs") + lit(1.0)) / (col("df") + lit(1)).cast("double")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Exprs.keepTop(scored, Seq(col("doc_id")), Seq(col("score").desc, col("w")), k, "rank")
       .select(col("doc_id"), col("rank"), col("w").as("term"), col("score"))
   }
 
@@ -2560,9 +2555,7 @@ object TextOps {
       .select(col("lang"), explode(bigrams).as("bigram"))
       .groupBy(col("lang"), col("bigram"))
       .agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("n").desc, col("bigram"))
-    counts.withColumn("rank_in_lang", row_number().over(w))
-      .filter(col("rank_in_lang") <= k)
+    Exprs.keepTop(counts, Seq(col("lang")), Seq(col("n").desc, col("bigram")), k, "rank_in_lang")
       .select("lang", "rank_in_lang", "bigram", "n")
       .orderBy(col("lang"), col("rank_in_lang"))
   }
@@ -2913,16 +2906,6 @@ object TextOps {
 
   // ---- incremental NEAR-dup (frozen MinHash band index) ----
 
-  /** Salted arrival split for the text tier — same construction as
-    * `VectorOps.incSplitE` (`hex60('inc:' || id) % mod`, residue 0 = delta)
-    * so delta membership is uncorrelated with doc_id order and approximates
-    * the corpus's source distribution.
-    */
-  private[graft] def docSplitE(mod: Int): Column =
-    pmod(Exprs.hex60(concat(lit("inc:"), col("doc_id").cast("string"))), lit(mod))
-  private[graft] def docSplitSql(mod: Int, idExpr: String = "doc_id"): String =
-    s"${Exprs.hex60Sql(s"'inc:' || $idExpr::VARCHAR")} % $mod"
-
   /** Incremental NEAR-dup for text — the fuzzy daily-arrival form that
     * [[dedupIncrement]] (exact md5) cannot provide: classify each DELTA
     * document against the FROZEN base MinHash band index and against
@@ -2959,7 +2942,7 @@ object TextOps {
   def nearDupIncr(spark: SparkSession, dir: String, deltaMod: Int = 5,
                   minAgree: Int = 7): DataFrame = {
     val sig = bandedSignatures(spark, dir)
-      .withColumn("is_delta", docSplitE(deltaMod) === 0)
+      .withColumn("is_delta", Exprs.arrivalSplit(col("doc_id"), deltaMod) === 0)
     val ms = (0 until 8).map(i => s"m$i")
     def side(suffix: String)(d: DataFrame): DataFrame =
       d.select(col("doc_id").as(s"id$suffix") +:
@@ -3005,7 +2988,7 @@ object TextOps {
        |  SELECT doc_id, m0, m1, m2, m3, m4, m5, m6, m7,
        |    m0 || ',' || m1 || ',' || m2 || ',' || m3 AS band1,
        |    m4 || ',' || m5 || ',' || m6 || ',' || m7 AS band2,
-       |    (${docSplitSql(deltaMod)}) = 0 AS is_delta
+       |    (${Exprs.arrivalSplitSql("doc_id", deltaMod)}) = 0 AS is_delta
        |  FROM sig),
        |base AS (SELECT * FROM banded WHERE NOT is_delta),
        |delta AS (SELECT * FROM banded WHERE is_delta),
@@ -3761,7 +3744,7 @@ object TextOps {
                deltaMod: Int = 5): DataFrame = {
     val d = prepared(spark, dir)
       .select(col("doc_id"), col("words"),
-        (docSplitE(deltaMod) =!= 0).as("is_member"))
+        (Exprs.arrivalSplit(col("doc_id"), deltaMod) =!= 0).as("is_member"))
     // r21: bigrams are a row-local positional array transform (the former
     // posexplode + doc-keyed lead window shuffled and sorted the whole
     // token mass); is_member rides the row, so the frozen-model filter is
@@ -3819,7 +3802,7 @@ object TextOps {
 
   def minKProbSql(kPm: Int = 200, deltaMod: Int = 5): String =
     s"""WITH d AS (
-       |  SELECT doc_id, words, (${docSplitSql(deltaMod)}) <> 0 AS is_member
+       |  SELECT doc_id, words, (${Exprs.arrivalSplitSql("doc_id", deltaMod)}) <> 0 AS is_member
        |  FROM ($preparedSql)),
        |toks AS (
        |  SELECT doc_id, is_member, i - 1 AS pos, words[i] AS w
@@ -3999,9 +3982,7 @@ object TextOps {
       .crossJoin(broadcast(nDocs))
       .withColumn("bits",
         col("tok_bits") + (flog2(col("n_docs")) - flog2(col("n_c"))).cast("long"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("bits"), col("cls"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    Dedup.keepFirst(scored, Seq(col("doc_id")), Seq(col("bits"), col("cls")), "rn")
       .select(col("doc_id"), col("cls").as("pred_bucket"), col("bits"))
       .join(lab.select(col("doc_id"), col("cls").as("quality_bucket")), "doc_id")
       .withColumn("correct", col("pred_bucket") === col("quality_bucket"))
@@ -4080,10 +4061,7 @@ object TextOps {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // length(bin(x)) for x >= 1, the nbClassify arithmetic on the driver
     def flog2(x: Long): Long = 64L - java.lang.Long.numberOfLeadingZeros(x)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cls")).orderBy(col("c").desc, col("w"))
-    val kept = tokc.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
+    val kept = Exprs.keepTop(tokc, Seq(col("cls")), Seq(col("c").desc, col("w")), topK, "rn")
       .select("cls", "w", "c").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     priors.keys.toSeq.sorted.map { cls =>
@@ -4427,8 +4405,7 @@ object TextOps {
       .crossJoin(broadcast(pdf))
       .filter(col("rk") === expr("((nn - 1) * p) div 1000 + 1"))
       .select(col("source"), col("p"), col("nn").as("n"), col("v").as("exact"))
-    val wh = Window.partitionBy(col("source")).orderBy(col("h"), col("doc_id"))
-    val samp = d.withColumn("hrk", row_number().over(wh)).filter(col("hrk") <= k)
+    val samp = Exprs.keepTop(d, Seq(col("source")), Seq(col("h"), col("doc_id")), k, "hrk")
     val mm = samp.groupBy("source").agg(count(lit(1)).as("mm"))
     val est = samp.withColumn("srk", row_number().over(wv))
       .join(broadcast(mm), "source")

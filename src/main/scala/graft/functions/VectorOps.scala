@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Exprs, Materialize, Tables}
+import graft.operators.Dedup
 
 /** Embedding similarity-search operators over the `embeddings` table
   * (builder brief: brute-force cosine top-k baseline + an LSH-bucketed
@@ -127,6 +128,29 @@ object VectorOps {
     s"""SELECT vec_id, label, CAST(len(v) AS INT) AS dim, round(nrm, 4) AS l2_norm
        |FROM ($preparedSql) ORDER BY vec_id""".stripMargin
 
+  /** The tail every ANN search ends in: per query, the `k` candidates with
+    * the highest `score` (ties by vec_id) as (q_id, rank, neighbor_id,
+    * score) — the hit shape [[recall]] and [[sharedAnnHits]] consume.
+    */
+  private def topHits(sims: DataFrame, score: String, k: Int): DataFrame =
+    Exprs.keepTop(sims, Seq(col("q_id")), Seq(col(score).desc, col("vec_id")), k, "rank")
+      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col(score))
+
+  /** IVF probe order for a vector row against a centroid row `(cv, cn)`:
+    * cosine, best first, ties by centroid id. Its top 1 is the vector's
+    * cell, its top nProbe the cells a query probes.
+    */
+  private[graft] def nearestCentroid: Seq[Column] =
+    Seq((dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).desc, col("centroid_id"))
+
+  /** PQ encoding: per (vector, block), the codeword `cid` with the highest
+    * `score` = ⟨sv, cv⟩ − ½‖cv‖² (the L2-nearest one), ties by cid.
+    */
+  private def nearestCodeword(sub: DataFrame, rankCol: String): DataFrame =
+    Dedup.keepFirst(sub.withColumn("score",
+        dot(col("sv"), col("cv")) - lit(0.5) * dot(col("cv"), col("cv"))),
+      Seq(col("vec_id"), col("block")), Seq(col("score").desc, col("cid")), rankCol)
+
   /** Brute-force cosine top-k: the first `nQueries` vectors (by id) against
     * the whole corpus. Query set is broadcast; corpus is scanned once.
     */
@@ -136,10 +160,7 @@ object VectorOps {
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")))
     val sims = all.join(q, col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_sim"))
+    topHits(sims, "cos_sim", k)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -481,7 +502,7 @@ object VectorOps {
   /** Incremental semantic dedup — the embedding twin of the image tier's
     * [[graft.multimodal.Multimodal.imageDedupIncr]] and the daily-arrival
     * form of [[graft.functions.MixOps.semanticDedup]]: classify each DELTA
-    * vector (salted [[incSplitE]] split, the unbiased-arrival contract)
+    * vector (salted [[Exprs.arrivalSplit]] split, the unbiased-arrival contract)
     * against the FROZEN base and against smaller-id delta vectors, using
     * the same sign-LSH buckets as [[nearDupLsh]] — `dup_of_base` (a base
     * vector in the same bucket has cosine ≥ threshold), `dup_in_increment`
@@ -497,9 +518,9 @@ object VectorOps {
   def semDedupIncr(spark: SparkSession, dir: String, deltaMod: Int = 5,
                    threshold: Double = 0.4, bits: Int = 4): DataFrame = {
     val e = prepared(spark, dir).withColumn("bkt", bucketExpr(col("v"), bits))
-    val base = e.filter(incSplitE(deltaMod) =!= 0)
+    val base = e.filter(Exprs.arrivalSplit(col("vec_id"), deltaMod) =!= 0)
       .select(col("bkt"), col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
-    val delta = e.filter(incSplitE(deltaMod) === 0)
+    val delta = e.filter(Exprs.arrivalSplit(col("vec_id"), deltaMod) === 0)
       .select(col("bkt"), col("vec_id").as("id"), col("v"), col("nrm"))
     val ofBase = delta.join(base, Seq("bkt"))
       .filter(dot(col("v"), col("vb")) / (col("nrm") * col("nb")) >= threshold)
@@ -522,7 +543,7 @@ object VectorOps {
 
   def semDedupIncrSql(deltaMod: Int = 5, threshold: Double = 0.4, bits: Int = 4): String =
     s"""WITH e AS (SELECT *, ${bucketSql(bits)} AS bkt FROM ($preparedSql)),
-       |tag AS (SELECT vec_id, v, nrm, bkt, ${incSplitSql(deltaMod)} = 0 AS is_delta FROM e),
+       |tag AS (SELECT vec_id, v, nrm, bkt, ${Exprs.arrivalSplitSql("vec_id", deltaMod)} = 0 AS is_delta FROM e),
        |base AS (SELECT * FROM tag WHERE NOT is_delta),
        |delta AS (SELECT * FROM tag WHERE is_delta),
        |ofbase AS (
@@ -573,7 +594,7 @@ object VectorOps {
                    threshold: Double = 0.4, bits: Int = 4): DataFrame = {
     val e = prepared(spark, dir).withColumn("bkt", bucketExpr(col("v"), bits))
       .select(col("vec_id"), col("v"), col("nrm"), col("bkt"),
-        (incSplitE(deltaMod) === 0).as("is_delta"))
+        (Exprs.arrivalSplit(col("vec_id"), deltaMod) === 0).as("is_delta"))
     def dupsOf(probe: DataFrame, pool: DataFrame): DataFrame =
       probe.join(pool
           .select(col("bkt"), col("vec_id").as("id_p"), col("v").as("vp"),
@@ -610,7 +631,7 @@ object VectorOps {
                       bits: Int = 4): String =
     s"""WITH e AS (
        |  SELECT vec_id, v, nrm, ${bucketSql(bits)} AS bkt,
-       |    ${incSplitSql(deltaMod)} = 0 AS is_delta
+       |    ${Exprs.arrivalSplitSql("vec_id", deltaMod)} = 0 AS is_delta
        |  FROM ($preparedSql)),
        |full_dups AS (
        |  SELECT DISTINCT a.vec_id FROM e a JOIN e p ON a.bkt = p.bkt
@@ -904,9 +925,7 @@ object VectorOps {
       val sims = a.join(b, Seq("centroid_id")).filter(col("src") =!= col("dst"))
         .withColumn("cos_sim",
           round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
-      val w = Window.partitionBy(col("src")).orderBy(col("cos_sim").desc, col("dst"))
-      sims.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= kNn)
+      Exprs.keepTop(sims, Seq(col("src")), Seq(col("cos_sim").desc, col("dst")), kNn, "rank")
         .select(col("src"), col("dst"), col("rank"), col("cos_sim"))
     }
 
@@ -949,7 +968,7 @@ object VectorOps {
 
   /** Incremental kNN-graph maintenance — the daily-arrival form of
     * [[knnGraph]], completing the graph-based-curation story's lifecycle:
-    * DELTA vectors (salted [[incSplitE]] split) get their top-`kNn` edges
+    * DELTA vectors (salted [[Exprs.arrivalSplit]] split) get their top-`kNn` edges
     * against everything in their frozen-centroid cell (base AND the rest
     * of the delta batch); base vectors' existing edge lists stay FROZEN
     * until the next full rebuild — the asymmetric-staleness contract every
@@ -971,7 +990,7 @@ object VectorOps {
     val centroidId = argmaxFold(centLit, c =>
       dot(col("v"), c.getField("_2")) / (col("nrm") * c.getField("_3")))
     val all = e.withColumn("centroid_id", centroidId)
-      .withColumn("is_base", incSplitE(mod) =!= 0)
+      .withColumn("is_base", Exprs.arrivalSplit(col("vec_id"), mod) =!= 0)
     val srcs = all.filter(!col("is_base")).select(col("centroid_id"),
       col("vec_id").as("src"), col("v").as("va"), col("nrm").as("na"))
     val dsts = all.select(col("centroid_id"), col("vec_id").as("dst"),
@@ -979,9 +998,7 @@ object VectorOps {
     val sims = srcs.join(dsts, Seq("centroid_id")).filter(col("src") =!= col("dst"))
       .withColumn("cos_sim",
         round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
-    val w = Window.partitionBy(col("src")).orderBy(col("cos_sim").desc, col("dst"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
+    Exprs.keepTop(sims, Seq(col("src")), Seq(col("cos_sim").desc, col("dst")), kNn, "rank")
       .select(col("src"), col("dst"), col("rank"), col("cos_sim"), col("dst_is_base"))
       .orderBy(col("src"), col("rank"))
   }
@@ -989,7 +1006,7 @@ object VectorOps {
   def knnGraphIncrSql(kNn: Int = 5, kCentroids: Int = 16, mod: Int = 5): String =
     s"""WITH e0 AS ($preparedSql),
        |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM e0
-       |      WHERE ${incSplitSql(mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids),
+       |      WHERE ${Exprs.arrivalSplitSql("vec_id", mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids),
        |assign AS (
        |  SELECT vec_id, cid AS centroid_id FROM (
        |    SELECT e0.vec_id, c.cid, ROW_NUMBER() OVER (
@@ -997,7 +1014,7 @@ object VectorOps {
        |      ORDER BY list_dot_product(e0.v, c.cv) / (e0.nrm * c.cn) DESC, c.cid) AS rn
        |    FROM e0, c) WHERE rn = 1),
        |alls AS (
-       |  SELECT e0.*, assign.centroid_id, (${incSplitSql(mod)}) <> 0 AS is_base
+       |  SELECT e0.*, assign.centroid_id, (${Exprs.arrivalSplitSql("vec_id", mod)}) <> 0 AS is_base
        |  FROM e0 JOIN assign USING (vec_id)),
        |sims AS (
        |  SELECT s.vec_id AS src, d.vec_id AS dst,
@@ -1351,8 +1368,7 @@ object VectorOps {
       .select(col("doc_id").as("vec_id"), col("source"))
     val tagged = prepared(spark, dir).join(src, "vec_id")
       .withColumn("is_delta",
-        pmod(graft.Exprs.hex60(concat(lit("inc:"), col("vec_id").cast("string"))),
-          lit(deltaMod)) === 0)
+        Exprs.arrivalSplit(col("vec_id"), deltaMod) === 0)
     val cent = tagged
       .select(col("source"), col("is_delta"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy("source", "is_delta", "dim").agg(avg("x").as("c"))
@@ -1374,7 +1390,7 @@ object VectorOps {
     s"""WITH e AS ($preparedSql),
        |tagged AS (
        |  SELECT d.source, e.vec_id, e.v,
-       |    ${graft.Exprs.hex60Sql("'inc:' || e.vec_id::VARCHAR")} % $deltaMod = 0 AS is_delta
+       |    ${Exprs.arrivalSplitSql("e.vec_id", deltaMod)} = 0 AS is_delta
        |  FROM e JOIN (SELECT doc_id AS vec_id, source FROM documents) d USING (vec_id)),
        |dims AS (
        |  SELECT source, is_delta, t.i - 1 AS dim, v[t.i] AS x
@@ -1447,8 +1463,7 @@ object VectorOps {
       .select(col("vec_id").as("centroid_id"), col("v").as("cv"), col("nrm").as("cn")))
     val sims = all.join(cents)
       .withColumn("c_sim", dot(col("v"), col("cv")) / (col("nrm") * col("cn")))
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("c_sim").desc, col("centroid_id"))
-    sims.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    Dedup.keepFirst(sims, Seq(col("vec_id")), Seq(col("c_sim").desc, col("centroid_id")))
       .select(col("vec_id"), col("centroid_id"), round(col("c_sim"), 4).as("c_sim"))
   }
 
@@ -1542,18 +1557,13 @@ object VectorOps {
       .withColumnRenamed("centroid_id", "parent")
       .join(broadcast(tgt), "parent")
       .select(col("parent"), col("vec_id"), col("v"), col("nrm"))
-    val sw = Window.partitionBy(col("parent")).orderBy(col("vec_id"))
-    val seeds = mem.withColumn("rn", row_number().over(sw))
-      .filter(col("rn") <= 2)
+    val seeds = Exprs.keepTop(mem, Seq(col("parent")), Seq(col("vec_id")), 2, "rn")
       .select(col("parent"), (col("rn") - 1).cast("long").as("sub"),
         col("v").as("sv"), col("nrm").as("sn"))
-    def argmaxSub(cents: DataFrame, cv: String, cn: String): DataFrame = {
-      val aw = Window.partitionBy(col("vec_id"))
-        .orderBy((dot(col("v"), col(cv)) / (col("nrm") * col(cn))).desc, col("sub"))
-      mem.join(broadcast(cents), "parent")
-        .withColumn("__rn", row_number().over(aw)).filter(col("__rn") === 1)
+    def argmaxSub(cents: DataFrame, cv: String, cn: String): DataFrame =
+      Dedup.keepFirst(mem.join(broadcast(cents), "parent"), Seq(col("vec_id")),
+          Seq((dot(col("v"), col(cv)) / (col("nrm") * col(cn))).desc, col("sub")))
         .select(col("vec_id"), col("parent"), col("sub"))
-    }
     val suba = argmaxSub(seeds, "sv", "sn")
     // quantized spherical means of the seed assignment = the two new
     // sub-centroids; built distributed (sorted per-dim collect_list), the
@@ -1759,10 +1769,7 @@ object VectorOps {
         col("v").as("qv"), col("nrm").as("qn")))
     val sims = e.join(q, col("centroid_id") === col("q_cent") && col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_sim"))
+    topHits(sims, "cos_sim", kNn)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -1808,10 +1815,8 @@ object VectorOps {
     val q0 = e.filter(col("vec_id") < nQueries)
     val cents = broadcast(e.filter(col("vec_id") < kCentroids)
       .select(col("vec_id").as("centroid_id"), col("v").as("cv"), col("nrm").as("cn")))
-    val pw = Window.partitionBy(col("vec_id"))
-      .orderBy((dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).desc, col("centroid_id"))
-    val ranked = q0.join(cents)
-      .withColumn("__rn", row_number().over(pw)).filter(col("__rn") <= nProbe)
+    val ranked = Exprs.keepTop(q0.join(cents), Seq(col("vec_id")), nearestCentroid, nProbe,
+      "__rn")
     // q_label is opt-in (filtered tiers only) so the unfiltered searches'
     // probe subplan stays byte-identical and the scan keeps pruning label
     val base = Seq(col("centroid_id").as("q_cent"), col("vec_id").as("q_id"),
@@ -1834,10 +1839,7 @@ object VectorOps {
     val sims = e.join(broadcast(qProbes),
         col("centroid_id") === col("q_cent") && col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_sim"))
+    topHits(sims, "cos_sim", kNn)
   }
 
   /** [[annIvfMulti]] generalized to an EXPLICIT centroid relation
@@ -1852,23 +1854,17 @@ object VectorOps {
       s"centroid relation must have columns (centroid_id, cv, cn); " +
       s"got (${centroids.columns.mkString(", ")})")
     val cents = broadcast(centroids)
-    val aw = Window.partitionBy(col("vec_id"))
-      .orderBy((dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).desc, col("centroid_id"))
-    val assigned = e.join(cents)
-      .withColumn("__rn", row_number().over(aw)).filter(col("__rn") === 1)
+    val assigned = Dedup.keepFirst(e.join(cents), Seq(col("vec_id")), nearestCentroid)
       .select(col("vec_id"), col("centroid_id"))
-    val qProbes = e.filter(col("vec_id") < nQueries).join(cents)
-      .withColumn("__rn", row_number().over(aw)).filter(col("__rn") <= nProbe)
+    val qProbes = Exprs.keepTop(e.filter(col("vec_id") < nQueries).join(cents),
+        Seq(col("vec_id")), nearestCentroid, nProbe, "__rn")
       .select(col("centroid_id").as("q_cent"), col("vec_id").as("q_id"),
         col("v").as("qv"), col("nrm").as("qn"))
     val sims = e.join(assigned, "vec_id")
       .join(broadcast(qProbes),
         col("centroid_id") === col("q_cent") && col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_sim"))
+    topHits(sims, "cos_sim", kNn)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -1907,11 +1903,9 @@ object VectorOps {
       }.toDF("centroid_id", "cv", "cn")
     for (_ <- 1 to iters) {
       val cDf = broadcast(centDf(cents))
-      val aw = Window.partitionBy(col("vec_id"))
-        .orderBy((dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).desc, col("centroid_id"))
-      val best = e.join(cDf)
-        .withColumn("c_sim", dot(col("v"), col("cv")) / (col("nrm") * col("cn")))
-        .withColumn("__rn", row_number().over(aw)).filter(col("__rn") === 1)
+      val best = Dedup.keepFirst(e.join(cDf)
+          .withColumn("c_sim", dot(col("v"), col("cv")) / (col("nrm") * col("cn"))),
+          Seq(col("vec_id")), nearestCentroid)
         .select(col("vec_id"), col("centroid_id"), col("c_sim"), col("v"), col("nrm"))
       val pinned = mat(best)
       objective += pinned.agg(sum(col("c_sim"))).head().getDouble(0)
@@ -1967,11 +1961,7 @@ object VectorOps {
       }.toDF("centroid_id", "cv", "cn")
     for (_ <- 1 to iters) {
       val cDf = broadcast(centDf(cents))
-      val aw = Window.partitionBy(col("vec_id"))
-        .orderBy((dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).desc,
-          col("centroid_id"))
-      val means = e.join(cDf)
-        .withColumn("__rn", row_number().over(aw)).filter(col("__rn") === 1)
+      val means = Dedup.keepFirst(e.join(cDf), Seq(col("vec_id")), nearestCentroid)
         .select(col("centroid_id"), col("nrm"),
           posexplode(col("v")).as(Seq("dim", "x")))
         // spherical update over UNIT vectors, quantized for portability
@@ -2115,12 +2105,7 @@ object VectorOps {
         .toDF("cid", "block", "cv")
     for (_ <- 1 to iters) {
       val cb = broadcast(bookDf(books))
-      val aw = Window.partitionBy(col("vec_id"), col("block"))
-        .orderBy(col("score").desc, col("cid"))
-      val best = sv.join(cb, "block")
-        .withColumn("score",
-          dot(col("sv"), col("cv")) - lit(0.5) * dot(col("cv"), col("cv")))
-        .withColumn("__rn", row_number().over(aw)).filter(col("__rn") === 1)
+      val best = nearestCodeword(sv.join(cb, "block"), "__rn")
         .select(col("block"), col("cid"), col("score"), col("sv"))
       val pinned = mat(best)
       pinned.groupBy(col("block")).agg(sum(col("score")).as("s"))
@@ -2150,12 +2135,7 @@ object VectorOps {
     requireCodebookBlocks(codebook, blocks)
     val cb = broadcast(codebook)
     val corpusSub = pqSubVectors(e, "vec_id", blocks)
-    val aw = Window.partitionBy(col("vec_id"), col("block"))
-      .orderBy(col("score").desc, col("cid"))
-    val codes = corpusSub.join(cb, "block")
-      .withColumn("score",
-        dot(col("sv"), col("cv")) - lit(0.5) * dot(col("cv"), col("cv")))
-      .withColumn("__rn", row_number().over(aw)).filter(col("__rn") === 1)
+    val codes = nearestCodeword(corpusSub.join(cb, "block"), "__rn")
       .select(col("vec_id"), col("block"), col("cid").cast("long").as("code"))
     val qs = pqSubVectors(e.filter(col("vec_id") < nQueries), "q_id", blocks)
     val lut = broadcast(qs.join(cb, "block")
@@ -2170,10 +2150,7 @@ object VectorOps {
           first(when(col("block") === b, col("s")), ignoreNulls = true).as(s"s$b")): _*)
       .withColumn("adc_score",
         round((0 until blocks).map(b => col(s"s$b")).reduce(_ + _), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc_score").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("adc_score"))
+    topHits(scored, "adc_score", kNn)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -2226,10 +2203,7 @@ object VectorOps {
     val sims = all.join(q,
         col("label") === col("q_label") && col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_sim"))
+    topHits(sims, "cos_sim", k)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -2273,10 +2247,7 @@ object VectorOps {
         col("centroid_id") === col("q_cent") && col("label") === col("q_label") &&
           col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_sim"))
+    topHits(sims, "cos_sim", kNn)
   }
 
   def annIvfFilteredSql(nQueries: Int = 20, kNn: Int = 5, kCentroids: Int = 16,
@@ -2328,9 +2299,8 @@ object VectorOps {
     val sims = e.join(broadcast(qProbes),
         col("centroid_id") === col("q_cent") && col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    sims.withColumn("rank0", row_number().over(w))
-      .filter(col("rank0") <= expand * kNn)          // the fetch budget
+    Exprs.keepTop(sims, Seq(col("q_id")), Seq(col("cos_sim").desc, col("vec_id")),
+        expand * kNn, "rank0")                      // the fetch budget
       .filter(col("label") === col("q_label"))       // then the predicate
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("rank0"))).cast("int"))
@@ -2488,7 +2458,7 @@ object VectorOps {
                       k: Int = 4, kCentroids: Int = 16,
                       minMargin: Double = 1.0, nProbe: Int = 4): DataFrame =
     marginCore(spark, dir,
-      pmod(col("label"), lit(2)) === 0 && incSplitE(deltaMod) === 0,
+      pmod(col("label"), lit(2)) === 0 && Exprs.arrivalSplit(col("vec_id"), deltaMod) === 0,
       k, kCentroids, minMargin, nProbe, Materialize.Local).orderBy(col("a_id"))
 
   private[graft] def marginCore(spark: SparkSession, dir: String, aFilter: Column,
@@ -2521,11 +2491,8 @@ object VectorOps {
       marginJoinScore(a, b, k, minMargin)
     } else {
       val assigned = sharedIvfAssign(spark, dir, kCentroids, mat)
-      val pw = Window.partitionBy(col("vec_id"))
-        .orderBy((dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).desc, col("centroid_id"))
-      val a = e.filter(aFilter)
-        .join(cents)
-        .withColumn("__rn", row_number().over(pw)).filter(col("__rn") <= nProbe)
+      val a = Exprs.keepTop(e.filter(aFilter).join(cents), Seq(col("vec_id")), nearestCentroid,
+          nProbe, "__rn")
         .select(col("centroid_id"), col("vec_id").as("a_id"),
           col("v").as("va"), col("nrm").as("na"))
       val b = e.join(assigned, "vec_id").filter(pmod(col("label"), lit(2)) === 1)
@@ -2581,7 +2548,7 @@ object VectorOps {
   def marginPairsIncrSql(deltaMod: Int = 5, k: Int = 4, kCentroids: Int = 16,
                          minMargin: Double = 1.0, nProbe: Int = 4): String =
     marginPairsSql(k, kCentroids, minMargin, nProbe,
-      aWhere = s"e0.label % 2 = 0 AND ${incSplitSql(deltaMod, "e0.vec_id")} = 0")
+      aWhere = s"e0.label % 2 = 0 AND ${Exprs.arrivalSplitSql("e0.vec_id", deltaMod)} = 0")
 
   /** `centCtes`/`centRel` inject a NON-SEED centroid relation (e.g. the
     * trained `ct` chain from [[kmeansTrainRoundedCtes]]) in place of the
@@ -2735,16 +2702,13 @@ object VectorOps {
     // identical across the curve
     def sides(cents0: DataFrame): (DataFrame, DataFrame) = {
       val cents = broadcast(cents0.select(col("centroid_id"), col("cv"), col("cn")))
-      val pw = Window.partitionBy(col("vec_id"))
-        .orderBy((dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).desc,
-          col("centroid_id"))
-      val a = Materialize.Local(e.filter(aF).join(cents)
-        .withColumn("__rn", row_number().over(pw))
-        .filter(col("__rn") <= probes.max)
+      val a = Materialize.Local(Exprs.keepTop(e.filter(aF).join(cents), Seq(col("vec_id")),
+          nearestCentroid, probes.max, "__rn")
         .select(col("centroid_id"), col("vec_id").as("a_id"),
           col("v").as("va"), col("nrm").as("na"), col("__rn")))
-      val b = Materialize.Local(e.filter(pmod(col("label"), lit(2)) === 1).join(cents)
-        .withColumn("__rn", row_number().over(pw)).filter(col("__rn") === 1)
+      val b = Materialize.Local(Dedup.keepFirst(
+          e.filter(pmod(col("label"), lit(2)) === 1).join(cents), Seq(col("vec_id")),
+          nearestCentroid)
         .select(col("centroid_id"), col("vec_id").as("b_id"),
           col("v").as("vb"), col("nrm").as("nb")))
       (a, b)
@@ -2910,11 +2874,7 @@ object VectorOps {
     val corpus = pqSubVectors(e, "vec_id", blocks)
     val code = broadcast(pqSubVectors(e.filter(col("vec_id") < k), "cid", blocks)
       .select(col("cid"), col("block"), col("sv").as("cv")))
-    val scored = corpus.join(code, "block")
-      .withColumn("score", dot(col("sv"), col("cv")) - lit(0.5) * dot(col("cv"), col("cv")))
-    val w = Window.partitionBy(col("vec_id"), col("block"))
-      .orderBy(col("score").desc, col("cid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    nearestCodeword(corpus.join(code, "block"), "rn")
       .select(col("vec_id"), col("block"), col("cid").cast("int").as("code"))
   }
 
@@ -2980,10 +2940,7 @@ object VectorOps {
           first(when(col("block") === b, col("s")), ignoreNulls = true).as(s"s$b")): _*)
       .withColumn("adc_score",
         round((0 until blocks).map(b => col(s"s$b")).reduce(_ + _), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc_score").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("adc_score"))
+    topHits(scored, "adc_score", kNn)
   }
 
   def annPqSql(nQueries: Int = 20, kNn: Int = 5, blocks: Int = 4, k: Int = 16): String = {
@@ -3085,10 +3042,7 @@ object VectorOps {
       .select(col("bkt"), col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")))
     val sims = e.join(q, Seq("bkt")).filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_sim"))
+    topHits(sims, "cos_sim", k)
   }
 
   def annLshSql(nQueries: Int = 20, k: Int = 5, bits: Int = 4): String =
@@ -3143,10 +3097,7 @@ object VectorOps {
       .withColumn("cos_sq",
         round(dot(col("qv"), col("codes"))
           / (col("qn") * sqrt(dot(col("codes"), col("codes")))), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sq").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_sq"))
+    topHits(sims, "cos_sq", k)
   }
 
   def annSqSql(nQueries: Int = 20, k: Int = 5): String =
@@ -3239,10 +3190,7 @@ object VectorOps {
     val sims = e.join(q, col("vec_id") =!= col("q_id"))
       .withColumn("cos_rp",
         round(dot(col("qv"), col("rv")) / (col("qn") * col("rn")), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_rp").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_rp"))
+    topHits(sims, "cos_rp", k)
   }
 
   def annRpSql(nQueries: Int = 20, k: Int = 5, kDim: Int = 32, d: Int = 64): String =
@@ -3282,13 +3230,10 @@ object VectorOps {
     val e = rpReduced(spark, dir, kDim, d)
     val q = broadcast(e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("rv").as("qv"), col("rn").as("qn")))
-    val wc = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_rp").desc, col("vec_id"))
-    val candidates = e.join(q, col("vec_id") =!= col("q_id"))
-      .withColumn("cos_rp",
-        round(dot(col("qv"), col("rv")) / (col("qn") * col("rn")), 4))
-      .withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= cand)
+    val candidates = Exprs.keepTop(e.join(q, col("vec_id") =!= col("q_id"))
+        .withColumn("cos_rp",
+          round(dot(col("qv"), col("rv")) / (col("qn") * col("rn")), 4)),
+        Seq(col("q_id")), Seq(col("cos_rp").desc, col("vec_id")), cand, "crank")
       .select(col("q_id"), col("vec_id"))
     val full = prepared(spark, dir)
     val rr = candidates
@@ -3298,10 +3243,7 @@ object VectorOps {
           col("nrm").as("fqn"))), "q_id")
       .withColumn("cos_sim",
         round(dot(col("fqv"), col("v")) / (col("fqn") * col("nrm")), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    rr.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_sim"))
+    topHits(rr, "cos_sim", k)
   }
 
   def annRpRrSql(nQueries: Int = 20, k: Int = 5, kDim: Int = 32,
@@ -3371,10 +3313,7 @@ object VectorOps {
       .withColumn("cos_sq",
         round(dot(col("qv"), col("codes"))
           / (col("qn") * sqrt(dot(col("codes"), col("codes")))), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sq").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_sq"))
+    topHits(sims, "cos_sq", kNn)
   }
 
   def annIvfSqSql(nQueries: Int = 20, kNn: Int = 5, kCentroids: Int = 16,
@@ -3516,14 +3455,14 @@ object VectorOps {
                             mat: Materialize, filtered: Boolean): DataFrame = {
     val cInt = floor(dot(col("qv"), col("v")) / (col("qn") * col("nrm"))
       * 10000 + 0.5).cast("long")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("c_int").desc, col("vec_id"))
+    def best(df: DataFrame, bound: Int, rankCol: String): DataFrame =
+      Exprs.keepTop(df, Seq(col("q_id")), Seq(col("c_int").desc, col("vec_id")), bound, rankCol)
     // routing layer: the seed nodes, top-nProbe per query
-    var visited = mat(queries
+    var visited = mat(best(queries
       .crossJoin(broadcast(seeds
         .select(col("vec_id"), col("label"), col("v"), col("nrm"))))
       .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
-        cInt.as("c_int"))
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") <= nProbe)
+        cInt.as("c_int")), nProbe, "__rn")
       .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
         col("c_int")))
     // harvest pool for the FILTERED search: traversal stays unfiltered
@@ -3550,10 +3489,9 @@ object VectorOps {
           cInt.as("c_int"))
       // re-scored revisits carry the identical quantized score — the
       // (q, vec) max-dedup is value-neutral
-      visited = mat(visited.unionAll(scored)
+      visited = mat(best(visited.unionAll(scored)
         .groupBy(col("q_id"), col("q_label"), col("vec_id"), col("label"))
-        .agg(max(col("c_int")).as("c_int"))
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") <= beam)
+        .agg(max(col("c_int")).as("c_int")), beam, "__rn")
         .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
           col("c_int")))
       if (filtered) pool = pool.unionAll(scored)
@@ -3562,9 +3500,7 @@ object VectorOps {
       mat(pool).filter(col("label") === col("q_label"))
         .groupBy(col("q_id"), col("vec_id")).agg(max(col("c_int")).as("c_int"))
     } else visited.select(col("q_id"), col("vec_id"), col("c_int"))
-    out.filter(col("vec_id") =!= col("q_id"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    best(out.filter(col("vec_id") =!= col("q_id")), k, "rank")
       .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"),
         (col("c_int") / 10000.0).as("cos_sim"))
       .orderBy(col("q_id"), col("rank"))
@@ -3708,18 +3644,16 @@ object VectorOps {
       val cents = frozenCentroids(e, kCentroids, mod)
       val centroidId = argmaxFold(typedLit(cents), c =>
         dot(col("v"), c.getField("_2")) / (col("nrm") * c.getField("_3")))
-      val base = e.filter(incSplitE(mod) =!= 0).withColumn("centroid_id", centroidId)
+      val base = splitBase(e, mod).withColumn("centroid_id", centroidId)
       val ba = base.select(col("centroid_id"), col("vec_id").as("src"),
         col("v").as("va"), col("nrm").as("na"))
       val bb = base.select(col("centroid_id"), col("vec_id").as("dst"),
         col("v").as("vb"), col("nrm").as("nb"))
-      val wSrc = Window.partitionBy(col("src"))
-        .orderBy(col("cos_sim").desc, col("dst"))
-      val baseEdges = ba.join(bb, Seq("centroid_id"))
-        .filter(col("src") =!= col("dst"))
-        .withColumn("cos_sim",
-          round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
-        .withColumn("rank", row_number().over(wSrc)).filter(col("rank") <= kNn)
+      val baseEdges = Exprs.keepTop(ba.join(bb, Seq("centroid_id"))
+          .filter(col("src") =!= col("dst"))
+          .withColumn("cos_sim",
+            round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4)),
+          Seq(col("src")), Seq(col("cos_sim").desc, col("dst")), kNn, "rank")
         .select(col("src"), col("dst"), col("cos_sim"),
           lit(false).as("is_delta_edge"))
       val deltaEdges = knnGraphIncr(spark, dir, kNn, kCentroids, mod)
@@ -3788,7 +3722,7 @@ object VectorOps {
                       mod: Int = 5, nProbe: Int = 2): String = {
     val staleEdgeCtes =
       s"""cfz AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM e0
-         |        WHERE ${incSplitSql(mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids),
+         |        WHERE ${Exprs.arrivalSplitSql("vec_id", mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids),
          |asg AS (
          |  SELECT vec_id, cid AS centroid_id FROM (
          |    SELECT e0.vec_id, c.cid, ROW_NUMBER() OVER (
@@ -3797,7 +3731,7 @@ object VectorOps {
          |    FROM e0, cfz c)
          |  WHERE rn = 1),
          |alls AS (
-         |  SELECT e0.*, asg.centroid_id, (${incSplitSql(mod)}) <> 0 AS is_base
+         |  SELECT e0.*, asg.centroid_id, (${Exprs.arrivalSplitSql("vec_id", mod)}) <> 0 AS is_base
          |  FROM e0 JOIN asg USING (vec_id)),
          |bedges AS (
          |  SELECT src, dst FROM (
@@ -3824,7 +3758,7 @@ object VectorOps {
          |edges AS (SELECT * FROM bedges UNION ALL SELECT * FROM dedges)""".stripMargin
     val staleSeeds =
       s"""SELECT vec_id, label, v, nrm FROM e0
-         |   WHERE ${incSplitSql(mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids""".stripMargin
+         |   WHERE ${Exprs.arrivalSplitSql("vec_id", mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids""".stripMargin
     val staleSearch = graphBeamSqlCore(nQueries, k, beam, hops, kNn,
       kCentroids, nProbe, filtered = false,
       edgesCtes = staleEdgeCtes, seedsSql = staleSeeds)
@@ -3883,12 +3817,11 @@ object VectorOps {
     // round identically, so the reverse edge carries the same cos_sim
     val revEdges = deltaEdges.select(col("dst").as("src"),
       col("src").as("dst"), col("cos_sim"))
-    val wSrc = Window.partitionBy(col("src"))
-      .orderBy(col("cos_sim").desc, col("dst"))
-    val merged = Materialize.Local(edges.select(col("src"), col("dst"), col("cos_sim"))
-      .unionAll(revEdges)
-      .groupBy(col("src"), col("dst")).agg(max(col("cos_sim")).as("cos_sim"))
-      .withColumn("rank", row_number().over(wSrc)).filter(col("rank") <= kNn)
+    val merged = Materialize.Local(Exprs.keepTop(
+        edges.select(col("src"), col("dst"), col("cos_sim"))
+          .unionAll(revEdges)
+          .groupBy(col("src"), col("dst")).agg(max(col("cos_sim")).as("cos_sim")),
+        Seq(col("src")), Seq(col("cos_sim").desc, col("dst")), kNn, "rank")
       .select(col("src"), col("dst")))
     val staleSeeds = e.filter(col("vec_id").isin(cents.map(_._1): _*))
       .select(col("vec_id"), col("label"), col("v"), col("nrm"))
@@ -3927,7 +3860,7 @@ object VectorOps {
     // keep only (src, dst) — the merge needs the scores to re-cap)
     val edgePrefix =
       s"""cfz AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM e0
-         |        WHERE ${incSplitSql(mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids),
+         |        WHERE ${Exprs.arrivalSplitSql("vec_id", mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids),
          |asg AS (
          |  SELECT vec_id, cid AS centroid_id FROM (
          |    SELECT e0.vec_id, c.cid, ROW_NUMBER() OVER (
@@ -3936,7 +3869,7 @@ object VectorOps {
          |    FROM e0, cfz c)
          |  WHERE rn = 1),
          |alls AS (
-         |  SELECT e0.*, asg.centroid_id, (${incSplitSql(mod)}) <> 0 AS is_base
+         |  SELECT e0.*, asg.centroid_id, (${Exprs.arrivalSplitSql("vec_id", mod)}) <> 0 AS is_base
          |  FROM e0 JOIN asg USING (vec_id)),
          |bedges AS (
          |  SELECT src, dst, cos_sim FROM (
@@ -3979,7 +3912,7 @@ object VectorOps {
          |          UNION ALL SELECT src, dst FROM dedges)""".stripMargin
     val staleSeeds =
       s"""SELECT vec_id, label, v, nrm FROM e0
-         |   WHERE ${incSplitSql(mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids""".stripMargin
+         |   WHERE ${Exprs.arrivalSplitSql("vec_id", mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids""".stripMargin
     val mergedSearch = graphBeamSqlCore(nQueries, k, beam, hops, kNn,
       kCentroids, nProbe, filtered = false,
       edgesCtes = mergedEdgeCtes, seedsSql = staleSeeds)
@@ -4053,10 +3986,7 @@ object VectorOps {
           first(when(col("block") === b, col("s")), ignoreNulls = true).as(s"s$b")): _*)
       .withColumn("adc_score",
         round((0 until blocks).map(b => col(s"s$b")).reduce(_ + _), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc_score").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("adc_score"))
+    topHits(scored, "adc_score", kNn)
   }
 
   def annIvfPqSql(nQueries: Int = 20, kNn: Int = 5, kCentroids: Int = 16,
@@ -4157,9 +4087,8 @@ object VectorOps {
       .join(broadcast(short), "neighbor_id")
       .join(qs, "q_id")
       .withColumn("cos_sim", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
+    Exprs.keepTop(scored, Seq(col("q_id")), Seq(col("cos_sim").desc, col("neighbor_id")),
+        kNn, "rank")
       .select(col("q_id"), col("rank"), col("neighbor_id"),
         round(col("cos_sim"), 4).as("cos_sim"))
   }
@@ -4243,11 +4172,7 @@ object VectorOps {
           .select(col("vec_id"), col("r").as("v")),
         "cid", blocks)
         .select(col("cid"), col("block"), col("sv").as("cv")))
-    val wAssign = Window.partitionBy(col("vec_id"), col("block"))
-      .orderBy(col("score").desc, col("cid"))
-    val codes = corpusSub.join(cw, "block")
-      .withColumn("score", dot(col("sv"), col("cv")) - lit(0.5) * dot(col("cv"), col("cv")))
-      .withColumn("rn", row_number().over(wAssign)).filter(col("rn") === 1)
+    val codes = nearestCodeword(corpusSub.join(cw, "block"), "rn")
       .select(col("vec_id"), col("block"), col("cid").cast("long").as("code"))
     // query side: raw query sub-vectors × residual codewords, plus the
     // exact ⟨q, centroid⟩ base term per probed cell
@@ -4278,10 +4203,7 @@ object VectorOps {
       .withColumn("adc_score",
         round((0 until blocks).map(b => col(s"s$b"))
           .foldLeft(col("sbase"))(_ + _), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc_score").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("adc_score"))
+    topHits(scored, "adc_score", kNn)
   }
 
   def annIvfPqResSql(nQueries: Int = 20, kNn: Int = 5, kCentroids: Int = 16,
@@ -4359,24 +4281,15 @@ object VectorOps {
   // ---- incremental index maintenance (new vectors vs a frozen index) ----
 
   /** Base/delta split — the stand-in for "the corpus as of the last index
-    * build" vs "embeddings that arrived since". SALTED hash residue (the
-    * same `inc:` salt as `MixOps.deltaHashE` and [[embeddingDrift]]), NOT
-    * a bare `vec_id % mod`: the testdata's `source` is a function of
-    * `doc_id % 20`, so an unsalted mod-5 residue selects exactly 4 of the
-    * 20 sources — a source-pure delta, the easiest possible case for
-    * frozen centroids and the least representative of real arrivals. The
-    * salted split's delta approximates the corpus's source distribution
-    * (spec-asserted in OperatorsSpec). Residue 0 = delta → 1/mod of the
-    * corpus (mod=5 → 20%).
+    * build" vs "embeddings that arrived since": the salted
+    * [[graft.Exprs.arrivalSplit]] on vec_id (its delta approximates the
+    * corpus's source distribution, spec-asserted in OperatorsSpec).
+    * Residue 0 = delta → 1/mod of the corpus (mod=5 → 20%).
     */
-  private[graft] def incSplitE(mod: Int): Column =
-    pmod(graft.Exprs.hex60(concat(lit("inc:"), col("vec_id").cast("string"))), lit(mod))
-  private def incSplitSql(mod: Int, idExpr: String = "vec_id"): String =
-    s"${graft.Exprs.hex60Sql(s"'inc:' || $idExpr::VARCHAR")} % $mod"
   private def splitBase(e: DataFrame, mod: Int): DataFrame =
-    e.filter(incSplitE(mod) =!= 0)
+    e.filter(Exprs.arrivalSplit(col("vec_id"), mod) =!= 0)
   private def splitDelta(e: DataFrame, mod: Int): DataFrame =
-    e.filter(incSplitE(mod) === 0)
+    e.filter(Exprs.arrivalSplit(col("vec_id"), mod) === 0)
 
   /** The frozen index structure: the `kCentroids` smallest-id BASE vectors
     * as (id, vector, norm) driver state — k×dim doubles, the same bounded
@@ -4451,9 +4364,9 @@ object VectorOps {
   def ivfIncrSql(kCentroids: Int = 16, blocks: Int = 4, mod: Int = 5): String = {
     val sub = 64 / blocks
     s"""WITH e0 AS ($preparedSql),
-       |delta AS (SELECT * FROM e0 WHERE ${incSplitSql(mod)} = 0),
+       |delta AS (SELECT * FROM e0 WHERE ${Exprs.arrivalSplitSql("vec_id", mod)} = 0),
        |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM e0
-       |      WHERE ${incSplitSql(mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids),
+       |      WHERE ${Exprs.arrivalSplitSql("vec_id", mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids),
        |assign AS (
        |  SELECT vec_id, cid AS centroid_id FROM (
        |    SELECT d.vec_id, c.cid, ROW_NUMBER() OVER (
@@ -4497,20 +4410,15 @@ object VectorOps {
     val assigned = foldAssign(splitBase(e, mod)).union(foldAssign(splitDelta(e, mod)))
     import spark.implicits._
     val centDf = broadcast(cents.toDF("centroid_id", "cv", "cn"))
-    val pw = Window.partitionBy(col("vec_id"))
-      .orderBy((dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).desc, col("centroid_id"))
-    val qProbes = e.filter(col("vec_id") < nQueries).join(centDf)
-      .withColumn("__rn", row_number().over(pw)).filter(col("__rn") <= nProbe)
+    val qProbes = Exprs.keepTop(e.filter(col("vec_id") < nQueries).join(centDf),
+        Seq(col("vec_id")), nearestCentroid, nProbe, "__rn")
       .select(col("centroid_id").as("q_cent"), col("vec_id").as("q_id"),
         col("v").as("qv"), col("nrm").as("qn"))
     val sims = e.join(assigned, "vec_id")
       .join(broadcast(qProbes),
         col("centroid_id") === col("q_cent") && col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos_sim"))
+    topHits(sims, "cos_sim", kNn)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -4518,7 +4426,7 @@ object VectorOps {
                                          nProbe: Int, mod: Int): String =
     s"""WITH e0 AS ($preparedSql),
        |c AS (SELECT vec_id AS centroid_id, v AS cv, nrm AS cn FROM e0
-       |      WHERE ${incSplitSql(mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids),
+       |      WHERE ${Exprs.arrivalSplitSql("vec_id", mod)} <> 0 ORDER BY vec_id LIMIT $kCentroids),
        |assign AS (
        |  SELECT vec_id, centroid_id FROM (
        |    SELECT e0.vec_id, c.centroid_id, ROW_NUMBER() OVER (

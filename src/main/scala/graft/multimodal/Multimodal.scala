@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Exprs, Tables}
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque `binary`
   * columns with typed metadata, plus batch feature extraction.
@@ -899,12 +899,19 @@ object Multimodal {
     * path, O(delta) per day.
     */
   def audioDedupIncr(spark: SparkSession, dir: String, deltaMod: Int = 3,
-                     maxDist: Int = 6): DataFrame = {
-    val isDelta = pmod(graft.Exprs.hex60(
-      concat(lit("inc:"), col("media_id").cast("string"))), lit(deltaMod)) === 0
-    val fps = sharedAudioFps(spark, dir)
-    val base = fps.filter(!isDelta).select(col("media_id").as("id"), col("afp").as("dhash"))
-    val delta = fps.filter(isDelta).select(col("media_id").as("id"), col("afp").as("dhash"))
+                     maxDist: Int = 6): DataFrame =
+    hashDedupIncr(sharedAudioFps(spark, dir), "afp", deltaMod, maxDist)
+
+  /** The incremental fold [[imageDedupIncr]] and [[audioDedupIncr]] share,
+    * over a (media_id, `hashCol`) 64-bit hash relation: salted arrival
+    * split, banded delta × base and delta × delta [[hammingJoin]]s, and the
+    * three-way `drop_reason` (`dup_of_base` > `dup_in_increment` > `kept`).
+    */
+  private def hashDedupIncr(hashes: DataFrame, hashCol: String, deltaMod: Int,
+                            maxDist: Int): DataFrame = {
+    val isDelta = Exprs.arrivalSplit(col("media_id"), deltaMod) === 0
+    val base = hashes.filter(!isDelta).select(col("media_id").as("id"), col(hashCol).as("dhash"))
+    val delta = hashes.filter(isDelta).select(col("media_id").as("id"), col(hashCol).as("dhash"))
     val ofBase = hammingJoin(delta, base, maxDist, (_, _) => lit(true))
       .select(col("id_a").as("id")).distinct().withColumn("ob", lit(1))
     val inDelta = hammingPairs(delta, maxDist)
@@ -912,12 +919,12 @@ object Multimodal {
     delta
       .join(ofBase, Seq("id"), "left")
       .join(inDelta, Seq("id"), "left")
-      .select(col("id").as("media_id"), col("dhash").as("afp"),
+      .select(col("id").as("media_id"), col("dhash").as(hashCol),
         when(col("ob") === 1, "dup_of_base")
           .when(col("od") === 1, "dup_in_increment")
           .otherwise("kept").as("drop_reason"))
       .withColumn("keep", col("drop_reason") === "kept")
-      .select("media_id", "afp", "keep", "drop_reason")
+      .select("media_id", hashCol, "keep", "drop_reason")
       .orderBy("media_id")
   }
 
@@ -928,7 +935,7 @@ object Multimodal {
     s"""$audioFpSql,
        |tag AS (
        |  SELECT media_id, afp,
-       |    ${graft.Exprs.hex60Sql("'inc:' || media_id::VARCHAR")} % $deltaMod = 0 AS is_delta
+       |    ${Exprs.arrivalSplitSql("media_id", deltaMod)} = 0 AS is_delta
        |  FROM afps),
        |base AS (SELECT * FROM tag WHERE NOT is_delta),
        |delta AS (SELECT * FROM tag WHERE is_delta),
@@ -1297,8 +1304,7 @@ object Multimodal {
     val hashes = sharedHashes(spark, dir)
       .join(sig.select(col("doc_id").as("media_id") +:
         ms.map(m => col(m)): _*), "media_id")
-      .withColumn("is_delta", pmod(graft.Exprs.hex60(
-        concat(lit("inc:"), col("media_id").cast("string"))), lit(deltaMod)) === 0)
+      .withColumn("is_delta", Exprs.arrivalSplit(col("media_id"), deltaMod) === 0)
     def side(suffix: String)(d: DataFrame): DataFrame =
       d.select(col("media_id").as(s"id$suffix") +: col("dhash").as(s"h$suffix") +:
         ms.map(m => col(m).as(s"$m$suffix")): _*)
@@ -1360,7 +1366,7 @@ object Multimodal {
        |  ${graft.functions.TextOps.minhashSigSqlInner}),
        |split AS (
        |  SELECT media_id,
-       |    (${graft.Exprs.hex60Sql("'inc:' || media_id::VARCHAR")} % $deltaMod) = 0
+       |    (${Exprs.arrivalSplitSql("media_id", deltaMod)}) = 0
        |      AS is_delta
        |  FROM imgs0),
        |delta AS (SELECT media_id FROM split WHERE is_delta),
@@ -1465,27 +1471,8 @@ object Multimodal {
     * banded [[hammingJoin]] — no all-pairs path.
     */
   def imageDedupIncr(spark: SparkSession, dir: String, deltaMod: Int = 3,
-                     maxDist: Int = 6): DataFrame = {
-    val isDelta = pmod(graft.Exprs.hex60(
-      concat(lit("inc:"), col("media_id").cast("string"))), lit(deltaMod)) === 0
-    val hashes = sharedHashes(spark, dir)
-    val base = hashes.filter(!isDelta).select(col("media_id").as("id"), col("dhash"))
-    val delta = hashes.filter(isDelta).select(col("media_id").as("id"), col("dhash"))
-    val ofBase = hammingJoin(delta, base, maxDist, (_, _) => lit(true))
-      .select(col("id_a").as("id")).distinct().withColumn("ob", lit(1))
-    val inDelta = hammingPairs(delta, maxDist)
-      .select(col("id_b").as("id")).distinct().withColumn("od", lit(1))
-    delta
-      .join(ofBase, Seq("id"), "left")
-      .join(inDelta, Seq("id"), "left")
-      .select(col("id").as("media_id"), col("dhash"),
-        when(col("ob") === 1, "dup_of_base")
-          .when(col("od") === 1, "dup_in_increment")
-          .otherwise("kept").as("drop_reason"))
-      .withColumn("keep", col("drop_reason") === "kept")
-      .select("media_id", "dhash", "keep", "drop_reason")
-      .orderBy("media_id")
-  }
+                     maxDist: Int = 6): DataFrame =
+    hashDedupIncr(sharedHashes(spark, dir), "dhash", deltaMod, maxDist)
 
   /** Per-frame perceptual hash of one video frame: texture token
     * `t = (video % 15) * 4 + frame` — families of 15 share frame
@@ -1504,6 +1491,14 @@ object Multimodal {
   /** (video_id, frame, dhash) — every frame of every video decoded and
     * hashed through the same real-codec pipeline as the image tier.
     */
+  /** [[videoFrameHashes]], session-shared (key `vframes`) — the one frame
+    * relation the batch containment, the incremental tier and the
+    * streaming admission index all read.
+    */
+  private[graft] def sharedFrames(spark: SparkSession, dir: String): DataFrame =
+    graft.SharedRel(spark, s"vframes|$dir", graft.Materialize.Local)(
+      videoFrameHashes(spark, dir))
+
   def videoFrameHashes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, dir).select(col("doc_id"))
@@ -1529,8 +1524,7 @@ object Multimodal {
     * (3 + id % 4), so no second scan or join fetches it.
     */
   def videoContainment(spark: SparkSession, dir: String, maxDist: Int = 6): DataFrame = {
-    val frames = graft.SharedRel(spark, s"vframes|$dir", graft.Materialize.Local)(
-      videoFrameHashes(spark, dir))
+    val frames = sharedFrames(spark, dir)
     // frame-level near matches BETWEEN videos (either direction of the
     // banded join, a<b ordering applied at the video level)
     val rel = frames.select(
@@ -1663,7 +1657,7 @@ object Multimodal {
        |  FROM bits GROUP BY media_id),
        |tag AS (
        |  SELECT media_id, dhash,
-       |    ${graft.Exprs.hex60Sql("'inc:' || media_id::VARCHAR")} % $deltaMod = 0 AS is_delta
+       |    ${Exprs.arrivalSplitSql("media_id", deltaMod)} = 0 AS is_delta
        |  FROM hs),
        |base AS (SELECT * FROM tag WHERE NOT is_delta),
        |delta AS (SELECT * FROM tag WHERE is_delta),
@@ -1790,10 +1784,8 @@ object Multimodal {
 
   def videoDedupIncr(spark: SparkSession, dir: String, deltaMod: Int = 3,
                      maxDist: Int = 6, contThreshold: Double = 0.5): DataFrame = {
-    val frames = graft.SharedRel(spark, s"vframes|$dir", graft.Materialize.Local)(
-      videoFrameHashes(spark, dir))
-    val isDelta = pmod(graft.Exprs.hex60(
-      concat(lit("inc:"), col("video_id").cast("string"))), lit(deltaMod)) === 0
+    val frames = sharedFrames(spark, dir)
+    val isDelta = Exprs.arrivalSplit(col("video_id"), deltaMod) === 0
     val base = frames.filter(!isDelta)
     val delta = frames.filter(isDelta)
     // frame matches → per (delta video, other video) distinct matched
@@ -1824,7 +1816,7 @@ object Multimodal {
     s"""$videoHashSql,
        |tag AS (
        |  SELECT video_id, frame, dhash,
-       |    ${graft.Exprs.hex60Sql("'inc:' || video_id::VARCHAR")} % $deltaMod = 0 AS is_delta
+       |    ${Exprs.arrivalSplitSql("video_id", deltaMod)} = 0 AS is_delta
        |  FROM vh),
        |vbase AS (SELECT * FROM tag WHERE NOT is_delta),
        |vdelta AS (SELECT * FROM tag WHERE is_delta),

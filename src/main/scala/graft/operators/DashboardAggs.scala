@@ -105,11 +105,9 @@ object DashboardAggs {
       .withColumn("severity", when(col("cpm") >= crit, "critical").otherwise("warning"))
       .withColumn("cooldown_bucket",
         floor(unix_timestamp(col("sec")) / cooldownSec).cast("long"))
-    val w = Window
-      .partitionBy(col("severity"), round(col("lat"), 3), round(col("lon"), 3),
-        col("cooldown_bucket"))
-      .orderBy(col("sec"), col("event_id"))
-    fired.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+    Dedup.keepFirst(fired,
+        Seq(col("severity"), round(col("lat"), 3), round(col("lon"), 3), col("cooldown_bucket")),
+        Seq(col("sec"), col("event_id")))
       .select("event_id", "sec", "lat", "lon", "cpm", "severity", "cooldown_bucket")
   }
 

@@ -1,7 +1,7 @@
 package graft.operators
 
+import graft.Exprs
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Keyed first-occurrence deduplication — the Spark form of the reference's
@@ -10,12 +10,18 @@ import org.apache.spark.sql.functions._
   *
   * Three tiers (SURVEY.md §2.3 D1):
   *  - [[keepFirst]]          — batch, fully deterministic (oracle-checkable):
-  *                             min-by-order row per key via row_number.
+  *                             the k = 1 case of the per-key top-k kernel
+  *                             [[graft.Exprs.keepTop]] (one `row_number`
+  *                             window per key), rank column dropped.
   *  - `df.dropDuplicates`    — batch, arbitrary survivor (what the reference
   *                             actually guarantees under races).
   *  - streaming              — `dropDuplicatesWithinWatermark` in
   *                             [[graft.streaming.RadiationPipeline]]; bounds
   *                             the reference's unbounded state (SURVEY §7.5).
+  *
+  * Every batch "best row per key" in the engine (nearest centroid, best
+  * codeword, top probe, first alert per cooldown bucket) is a keepFirst
+  * call; every "best k rows per key" is a [[graft.Exprs.keepTop]] call.
   *
   * Scale note: keepFirst is one hash-shuffle on the key (window partition);
   * at 100 TB the key must be high-cardinality (it is: a composite natural
@@ -25,12 +31,12 @@ object Dedup {
 
   /** Keep the first row per key, ordered by `order` (ties impossible when
     * `order` ends in a unique id). Equivalent oracle:
-    * `ROW_NUMBER() OVER (PARTITION BY key ORDER BY order) = 1`.
+    * `ROW_NUMBER() OVER (PARTITION BY key ORDER BY order) = 1` — the same
+    * rows as [[graft.Exprs.keepTop]] with bound 1, filtered as `rank = 1`.
     */
-  def keepFirst(df: DataFrame, key: Seq[Column], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(key: _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
+  def keepFirst(df: DataFrame, key: Seq[Column], order: Seq[Column],
+                rankCol: String = "__rn"): DataFrame =
+    Exprs.rankWithin(df, key, order, rankCol)
+      .filter(col(rankCol) === 1)
+      .drop(rankCol)
 }

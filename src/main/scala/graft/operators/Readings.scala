@@ -88,31 +88,49 @@ object Readings {
     * reference's stringly-typed union (py:320) becomes unnecessary.
     */
   def validated(df: DataFrame, t: Thresholds = Thresholds()): DataFrame = {
-    // try_cast: ANSI-safe against a value outside int range (which would
-    // otherwise throw CAST_OVERFLOW instead of routing invalid) — same
-    // guard as the streaming twin RadiationPipeline.validate
-    val cpm = expr("try_cast(round(value) AS INT)")
-    val err = when(col("k").isNull || col("sec").isNull || col("value").isNull, "Missing fields")
-      .when(cpm.isNull, "Value out of range")
-      .when(cpm <= 0, "Non-positive value")
-      .when(!col("lat").between(-90.0, 90.0), "Latitude out of range")
-      .when(!col("lon").between(-180.0, 180.0), "Longitude out of range")
-      .when(lower(col("unit")) =!= "cpm", "Invalid unit")
-    val valid = err.isNull
+    val c = Checks(col("k").isNull || col("sec").isNull || col("value").isNull,
+      "Missing fields", col("lat"), col("lon"), t)
     df.select(
       col("event_id"), col("user_id"), col("event_type"), col("sec"),
       col("lat"), col("lon"), col("k"),
-      cpm.as("cpm"),
+      c.cpm.as("cpm"),
       lower(col("unit")).as("unit_norm"),
-      when(valid, "valid").otherwise("invalid").as("status"),
-      err.as("error"),
-      when(!valid, lit(null: String))
-        .when(cpm < t.low, "low")
-        .when(cpm < t.moderate, "moderate")
-        .otherwise("high").as("level"),
-      when(!valid, lit(null).cast("boolean"))
-        .otherwise(cpm >= t.danger).as("critical")
+      when(c.valid, "valid").otherwise("invalid").as("status"),
+      c.error.as("error"),
+      c.level.as("level"),
+      c.critical.as("critical")
     )
+  }
+
+  /** The validation ladder and enrichment both tiers run — this batch
+    * view and the stream's [[graft.streaming.RadiationPipeline.validate]]
+    * — so they emit identical error labels on multi-violation records.
+    * The first failing rule names the error (null = valid), in the
+    * reference's order (py:113-135): required fields, value range,
+    * non-positive value, latitude, longitude, unit. Only the
+    * required-field predicate and its label differ between the tiers.
+    * `cpm` is `try_cast`: ANSI mode would otherwise throw CAST_OVERFLOW on
+    * a value like 3e9 instead of routing it invalid. Engine delta vs the
+    * reference: Python's int(round(v)) is arbitrary-precision, so a
+    * > 2^31 CPM is "valid" there and "Value out of range" here (no
+    * physical reading approaches either bound).
+    */
+  final case class Checks(missing: Column, missingLabel: String, lat: Column, lon: Column,
+                          t: Thresholds) {
+    val cpm: Column = expr("try_cast(round(value) AS INT)")
+    val error: Column = when(missing, missingLabel)
+      .when(cpm.isNull, "Value out of range")
+      .when(cpm <= 0, "Non-positive value")
+      .when(!lat.between(-90.0, 90.0), "Latitude out of range")
+      .when(!lon.between(-180.0, 180.0), "Longitude out of range")
+      .when(lower(col("unit")) =!= "cpm", "Invalid unit")
+    val valid: Column = error.isNull
+    val level: Column = when(!valid, lit(null: String))
+      .when(cpm < t.low, "low")
+      .when(cpm < t.moderate, "moderate")
+      .otherwise("high")
+    val critical: Column = when(!valid, lit(null).cast("boolean"))
+      .otherwise(cpm >= t.danger)
   }
 
   /** SQL mirror of [[validated]] over [[readingsSql]]. */

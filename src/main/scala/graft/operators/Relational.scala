@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Exprs, Tables}
 
 /** General relational capability over the star schema — the query surface a
   * user of the engine gets "for free" from the DataFrame API + Catalyst,
@@ -132,12 +132,8 @@ object Relational {
     * (ties broken by partkey → deterministic).
     */
   def topPartsPerBrand(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("p_brand"))
-      .orderBy(col("p_retailprice").desc, col("p_partkey"))
-    Tables.part(spark, dir)
-      .withColumn("rank_in_brand", row_number().over(w))
-      .filter(col("rank_in_brand") <= k)
+    Exprs.keepTop(Tables.part(spark, dir), Seq(col("p_brand")),
+        Seq(col("p_retailprice").desc, col("p_partkey")), k, "rank_in_brand")
       .select("p_brand", "rank_in_brand", "p_partkey", "p_name", "p_retailprice")
       .orderBy(col("p_brand"), col("rank_in_brand"))
   }

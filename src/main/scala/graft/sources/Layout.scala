@@ -111,8 +111,8 @@ object Layout {
     * partition, and a 100 TB table read through millions of KB-sized files
     * is metadata-bound before a single byte of data is scanned. Rewrites a
     * parquet directory into ~`targetBytes` files (count derived from the
-    * actual on-disk size), then atomically swaps via rename — the same
-    * crash-safe swap pattern as the streaming retention sink.
+    * actual on-disk size), then swaps it in with the crash-safe
+    * [[graft.LocalFs.swapIn]] the streaming retention sink also uses.
     */
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L * 1024 * 1024): Long = {
@@ -128,11 +128,7 @@ object Layout {
     spark.read.parquet(path)
       .repartition(nFiles.toInt)
       .write.mode(SaveMode.Overwrite).parquet(tmp)
-    val old = s"$path.__compact_old"
-    graft.LocalFs.rmrf(new java.io.File(old))
-    new java.io.File(path).renameTo(new java.io.File(old))
-    new java.io.File(tmp).renameTo(new java.io.File(path))
-    graft.LocalFs.rmrf(new java.io.File(old))
+    graft.LocalFs.swapIn(tmp, path)
     nFiles
   }
 }

@@ -180,14 +180,11 @@ object DashboardStreams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val dir = new java.io.File(outPath)
-        val old = new java.io.File(outPath + ".old")
-        // a crash between the two swap renames below leaves only `.old`:
-        // restore it before reading so the retained set is never lost
-        if (!dir.exists() && old.exists() && !old.renameTo(dir))
-          throw new java.io.IOException(s"retention recover failed: $old -> $outPath")
+        // a crash mid-swap leaves only `.old`: restore it before reading so
+        // the retained set is never lost
+        graft.LocalFs.restoreAside(outPath)
         val unioned =
-          if (dir.exists()) {
+          if (new java.io.File(outPath).exists()) {
             val e = spark.read.parquet(outPath)
             e.unionByName(batch.select(e.columns.map(col): _*))
           } else batch
@@ -198,18 +195,7 @@ object DashboardStreams {
           spark.sparkContext.parallelize(retained.toSeq, 1), next.schema)
         val tmp = outPath + ".tmp"
         out.write.mode("overwrite").parquet(tmp)
-        import graft.LocalFs.rmrf
-        // swap via rename-aside so no instant has zero copies on disk:
-        // dir -> dir.old, tmp -> dir, then drop dir.old. All three paths are
-        // siblings (same filesystem), so renameTo is atomic; we still throw
-        // on a false return rather than proceeding with a silent no-op.
-        if (old.exists()) rmrf(old)
-        if (dir.exists() && !dir.renameTo(old))
-          throw new java.io.IOException(s"retention swap failed: $outPath -> $old")
-        if (!new java.io.File(tmp).renameTo(dir))
-          throw new java.io.IOException(s"retention swap failed: $tmp -> $outPath")
-        if (old.exists()) rmrf(old)
-        ()
+        graft.LocalFs.swapIn(tmp, outPath)
       }
       .start()
 }

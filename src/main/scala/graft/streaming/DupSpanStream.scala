@@ -50,7 +50,7 @@ object DupSpanStream {
                      deltaMod: Int = 5): DataFrame =
     TextOps.posShingles(
       TextOps.prepared(spark, dir)
-        .filter(TextOps.docSplitE(deltaMod) =!= 0 && size(col("words")) >= n)
+        .filter(Exprs.arrivalSplit(col("doc_id"), deltaMod) =!= 0 && size(col("words")) >= n)
         .select(col("doc_id"), col("words")), n)
       .select("sh").distinct()
       .localCheckpoint(eager = true)

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Exprs
 import graft.functions.VectorOps
 
 /** Streaming margin-based pair mining — the alignment-mining member of the
@@ -74,11 +74,8 @@ object MarginStream {
     val prep = arrivals
       .withColumn("nrm", sqrt(VectorOps.dot(col("v"), col("v"))))
       .filter(col("nrm") > 0)
-    val pw = Window.partitionBy(col("vec_id"))
-      .orderBy((VectorOps.dot(col("v"), col("cv")) / (col("nrm") * col("cn"))).desc,
-        col("centroid_id"))
-    val a = prep.join(broadcast(cents))
-      .withColumn("__rn", row_number().over(pw)).filter(col("__rn") <= nProbe)
+    val a = Exprs.keepTop(prep.join(broadcast(cents)), Seq(col("vec_id")),
+        VectorOps.nearestCentroid, nProbe, "__rn")
       .select(col("centroid_id"), col("vec_id").as("a_id"),
         col("v").as("va"), col("nrm").as("na"))
     VectorOps.marginJoinScore(a, target, k, minMargin)

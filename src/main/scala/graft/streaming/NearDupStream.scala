@@ -46,13 +46,13 @@ object NearDupStream {
 
   /** The frozen admission index: base-split banded signatures — the
     * static right side of the stream's anti joins. Built from the same
-    * salted split ([[TextOps.docSplitE]]) and the same session-shared
+    * salted split ([[graft.Exprs.arrivalSplit]]) and the same session-shared
     * signature table as the batch [[TextOps.nearDupIncr]], so the tiers
     * cannot disagree about what "base" means.
     */
   def frozenBase(spark: SparkSession, dir: String, deltaMod: Int = 5): DataFrame =
     TextOps.bandedSignatures(spark, dir)
-      .filter(TextOps.docSplitE(deltaMod) =!= 0)
+      .filter(Exprs.arrivalSplit(col("doc_id"), deltaMod) =!= 0)
       .select(col("band1").as("b1") +: col("band2").as("b2") +:
         (0 until 8).map(i => col(s"m$i").as(s"m${i}_b")): _*)
 

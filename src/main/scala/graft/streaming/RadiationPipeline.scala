@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import graft.operators.Readings
 import graft.operators.Readings.Thresholds
 
 /** The reference's Flink job (`flink_process/flink_process.py:184-397`) as a
@@ -86,41 +87,22 @@ object RadiationPipeline {
     * valid record (py:151-160) and invalid record (py:169-176).
     */
   def validate(parsed: DataFrame, t: Thresholds = Thresholds()): DataFrame = {
-    // try_cast: ANSI mode would otherwise throw CAST_OVERFLOW on a value
-    // like 3e9 and kill the whole streaming query — exactly the malformed
-    // input this validator exists to route to dirty. Engine delta vs the
-    // reference (documented): Python's int(round(v)) is arbitrary-precision,
-    // so a > 2^31 CPM is "valid" there; here it is invalid "Value out of
-    // range" (no physical reading approaches either bound).
-    val cpm = expr("try_cast(round(value) AS INT)")
-    // same check ORDER as the batch twin (Readings.validated) and the
-    // reference (py:121-129 value rules before py:126-131 ranges), so both
-    // tiers emit identical error labels on multi-violation records
-    val err =
-      when(col("captured_time").isNull || col("latitude").isNull ||
-           col("longitude").isNull || col("value").isNull || col("unit").isNull,
-        "Missing or invalid fields")
-      .when(cpm.isNull, "Value out of range")
-      .when(cpm <= 0, "Non-positive value")
-      .when(!col("latitude").between(-90.0, 90.0), "Latitude out of range")
-      .when(!col("longitude").between(-180.0, 180.0), "Longitude out of range")
-      .when(lower(col("unit")) =!= "cpm", "Invalid unit")
-    val valid = err.isNull
+    // the batch twin's ladder (Readings.Checks); a malformed value routes
+    // to dirty instead of killing the query
+    val c = Readings.Checks(col("captured_time").isNull || col("latitude").isNull ||
+        col("longitude").isNull || col("value").isNull || col("unit").isNull,
+      "Missing or invalid fields", col("latitude"), col("longitude"), t)
     parsed.select(
       col("raw"),
-      when(valid, "valid").otherwise("invalid").as("status"),
-      err.as("error"),
+      when(c.valid, "valid").otherwise("invalid").as("status"),
+      c.error.as("error"),
       col("captured_time").as("timestamp"),
       round(col("latitude"), 5).as("lat"),
       round(col("longitude"), 5).as("lon"),
-      cpm.as("value"),
-      when(valid, "cpm").as("unit"),
-      when(!valid, lit(null: String))
-        .when(cpm < t.low, "low")
-        .when(cpm < t.moderate, "moderate")
-        .otherwise("high").as("level"),
-      when(!valid, lit(null).cast("boolean"))
-        .otherwise(cpm >= t.danger).as("critical"),
+      c.cpm.as("value"),
+      when(c.valid, "cpm").as("unit"),
+      c.level.as("level"),
+      c.critical.as("critical"),
       normalizeTimestamp(col("captured_time")).as("event_time"),
       compositeKey(col("latitude"), col("longitude"), col("value"),
         col("captured_time"), col("unit")).as("dedup_key"))

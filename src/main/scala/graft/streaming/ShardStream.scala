@@ -148,28 +148,17 @@ object ShardStream {
 
     // current-manifest convenience view, swap-renamed so no instant has
     // zero copies on disk (consumers that don't speak epochs read this)
-    val mDir = new java.io.File(s"$outPath/manifest")
-    val mOld = new java.io.File(s"$outPath/manifest.old")
     val mTmp = s"$outPath/manifest.tmp"
-    // crash between the swap renames leaves only `.old` — restore first
-    if (!mDir.exists() && mOld.exists() && !mOld.renameTo(mDir))
-      throw new java.io.IOException(s"manifest recover failed: $mOld -> $mDir")
     spark.read.schema(ManifestSchema).parquet(s"$outPath/state/epoch=$epochId")
       .coalesce(1).write.mode("overwrite").parquet(mTmp)
-    import graft.LocalFs.rmrf
-    if (mOld.exists()) rmrf(mOld)
-    if (mDir.exists() && !mDir.renameTo(mOld))
-      throw new java.io.IOException(s"manifest swap-aside failed: $mDir")
-    if (!new java.io.File(mTmp).renameTo(mDir))
-      throw new java.io.IOException(s"manifest swap-in failed: $mTmp -> $mDir")
-    rmrf(mOld)
+    graft.LocalFs.swapIn(mTmp, s"$outPath/manifest")
 
     // prune state snapshots older than the one this epoch read: a retry
     // of epoch N re-reads priorEpoch (kept), anything older is dead
     priorEpoch.foreach { m =>
       Option(stateRoot.listFiles()).getOrElse(Array.empty).foreach { f =>
         val e = f.getName.stripPrefix("epoch=").toLongOption
-        if (f.isDirectory && e.exists(_ < m)) rmrf(f)
+        if (f.isDirectory && e.exists(_ < m)) graft.LocalFs.rmrf(f)
       }
     }
   }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Exprs
 import graft.functions.VectorOps
 
 /** Streaming semantic admission — the embedding twin of
@@ -47,7 +48,7 @@ object VectorDedupStream {
   def frozenBase(spark: SparkSession, dir: String, deltaMod: Int = 5,
                  bits: Int = 4): DataFrame =
     VectorOps.prepared(spark, dir)
-      .filter(VectorOps.incSplitE(deltaMod) =!= 0)
+      .filter(Exprs.arrivalSplit(col("vec_id"), deltaMod) =!= 0)
       .select(VectorOps.bucketExpr(col("v"), bits).as("b_bkt"),
         col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
 

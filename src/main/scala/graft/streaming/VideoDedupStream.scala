@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Exprs
 import graft.multimodal.Multimodal
 
 /** Streaming video dedup — the temporal-media twin completing the
@@ -47,12 +48,9 @@ object VideoDedupStream {
     * batch incremental tier.
     */
   def frozenBaseFrames(spark: SparkSession, dir: String,
-                       deltaMod: Int = 3): DataFrame = {
-    val frames = graft.SharedRel(spark, s"vframes|$dir", graft.Materialize.Local)(
-      Multimodal.videoFrameHashes(spark, dir))
-    frames.filter(pmod(graft.Exprs.hex60(
-      concat(lit("inc:"), col("video_id").cast("string"))), lit(deltaMod)) =!= 0)
-  }
+                       deltaMod: Int = 3): DataFrame =
+    Multimodal.sharedFrames(spark, dir)
+      .filter(Exprs.arrivalSplit(col("video_id"), deltaMod) =!= 0)
 
   /** Row-local frame relation + signature for an arrival micro-batch. */
   private def withFrames(batch: DataFrame): (DataFrame, DataFrame) = {

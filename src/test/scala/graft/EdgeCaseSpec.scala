@@ -73,10 +73,10 @@ class EdgeCaseSpec extends SparkSuite {
 
   test("semDedupIncr: empty delta yields empty verdicts; all-dup delta classifies, zero-norm drops") {
     import graft.functions.VectorOps
-    // partition candidate ids by the operator's OWN salted split so the
+    // partition candidate ids by the engine's OWN salted split so the
     // fixture can't drift from the engine's residue definition
     val residues = spark.range(0, 100).select(col("id").as("vec_id"),
-        VectorOps.incSplitE(5).as("r"))
+        graft.Exprs.arrivalSplit(col("vec_id"), 5).as("r"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val baseIds = residues.collect { case (id, r) if r != 0 => id }.toSeq.sorted
     val deltaIds = residues.collect { case (id, r) if r == 0 => id }.toSeq.sorted

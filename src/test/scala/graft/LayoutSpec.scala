@@ -32,6 +32,21 @@ class LayoutSpec extends SparkSuite {
     assert(spark.read.parquet(out).count() == 10000)
   }
 
+  test("swapIn: a failed swap-in throws and the original stays readable at path") {
+    val root = java.nio.file.Files.createTempDirectory("swap").toString
+    val path = s"$root/t"
+    spark.range(5).toDF("id").write.parquet(path)
+    val e = intercept[java.io.IOException](LocalFs.swapIn(s"$root/missing.tmp", path))
+    assert(e.getMessage.contains("swap-in failed"))
+    assert(spark.read.parquet(path).count() == 5)
+    assert(!new java.io.File(s"$path.old").exists())
+    // a swap that succeeds replaces the contents and leaves neither side copy
+    spark.range(7).toDF("id").write.parquet(s"$root/t.tmp")
+    LocalFs.swapIn(s"$root/t.tmp", path)
+    assert(spark.read.parquet(path).count() == 7)
+    assert(!new java.io.File(s"$path.old").exists() && !new java.io.File(s"$root/t.tmp").exists())
+  }
+
   test("z-order clusters BOTH filter columns where a linear sort clusters one") {
     import org.apache.spark.sql.functions._
     val li = Tables.lineitem(spark, sf("sf0.01")).select("l_partkey", "l_suppkey")

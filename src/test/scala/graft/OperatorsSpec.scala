@@ -1036,7 +1036,7 @@ class OperatorsSpec extends SparkSuite {
   test("dupRunsIncr cuts only >= minRun runs against the frozen base; minRun=n degenerates to dupSpansIncr") {
     // derive split membership so the crafted corpus lands where intended
     val residues = spark.range(100).select(col("id").as("doc_id"))
-      .withColumn("r", TextOps.docSplitE(5))
+      .withColumn("r", graft.Exprs.arrivalSplit(col("doc_id"), 5))
       .as[(Long, Long)].collect().toMap
     val baseIds = (0L until 100L).filter(residues(_) != 0)
     val deltaIds = (0L until 100L).filter(residues(_) == 0)
@@ -1407,7 +1407,7 @@ class OperatorsSpec extends SparkSuite {
     // Split membership is the salted doc_id hash, so first recover which
     // ids land on each side, then assign texts by role.
     val splits = spark.range(0, 400).select(col("id").as("doc_id"))
-      .withColumn("s", TextOps.docSplitE(5))
+      .withColumn("s", graft.Exprs.arrivalSplit(col("doc_id"), 5))
       .as[(Long, Long)].collect()
     val memberIds = splits.filter(_._2 != 0).map(_._1).take(40)
     val nonMemberIds = splits.filter(_._2 == 0).map(_._1).take(20)
@@ -1638,7 +1638,7 @@ class OperatorsSpec extends SparkSuite {
   test("qualityRequota: retuned threshold restores the base keep-rate on the delta by exact rank") {
     // derive split membership so the crafted corpus lands where intended
     val residues = spark.range(100).select(col("id").as("doc_id"))
-      .withColumn("r", TextOps.docSplitE(5))
+      .withColumn("r", graft.Exprs.arrivalSplit(col("doc_id"), 5))
       .as[(Long, Long)].collect().toMap
     val baseIds = (0L until 100L).filter(residues(_) != 0)
     val deltaIds = (0L until 100L).filter(residues(_) == 0)
@@ -1819,7 +1819,7 @@ class OperatorsSpec extends SparkSuite {
     // the same frozen centroids, so "searchable at parity" is an identity,
     // not a tolerance
     val e = functions.VectorOps.prepared(spark, sf())
-    val isDelta = functions.VectorOps.incSplitE(5) === 0
+    val isDelta = graft.Exprs.arrivalSplit(col("vec_id"), 5) === 0
     val cents = e.filter(!isDelta).orderBy(col("vec_id")).limit(16)
       .select(col("vec_id").as("centroid_id"), col("v").as("cv"), col("nrm").as("cn"))
     val batch = functions.VectorOps.annIvfMultiWith(e, cents,
@@ -2377,7 +2377,7 @@ class OperatorsSpec extends SparkSuite {
     // within a wide band of the global delta rate.
     val src = Tables.documents(spark, sf()).select(col("doc_id").as("vec_id"), col("source"))
     val tagged = functions.VectorOps.prepared(spark, sf()).join(src, "vec_id")
-      .withColumn("is_delta", functions.VectorOps.incSplitE(5) === 0)
+      .withColumn("is_delta", graft.Exprs.arrivalSplit(col("vec_id"), 5) === 0)
     val per = tagged.groupBy("source").agg(
         count(lit(1)).as("n"),
         sum(when(col("is_delta"), 1L).otherwise(0L)).as("nd"))
@@ -2719,7 +2719,7 @@ class OperatorsSpec extends SparkSuite {
     // demotion on the base side, one promotion on the delta side.
     val ids = (0L until 20L)
     val split = ids.toDF("vec_id")
-      .withColumn("is_d", functions.VectorOps.incSplitE(5) === 0)
+      .withColumn("is_d", graft.Exprs.arrivalSplit(col("vec_id"), 5) === 0)
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     val d = ids.find(split(_)).get
     val b = ids.find(i => !split(i) && i > d).get
@@ -3549,7 +3549,7 @@ class OperatorsSpec extends SparkSuite {
     val offSplit = incr.join(
       VectorOps.prepared(spark, sf("sf0.01"))
         .filter(!(pmod(col("label"), lit(2)) === 0 &&
-          VectorOps.incSplitE(5) === 0))
+          graft.Exprs.arrivalSplit(col("vec_id"), 5) === 0))
         .select(col("vec_id").as("a_id")), "a_id")
     assert(offSplit.isEmpty, "an a_id outside the delta A split leaked in")
     assert(incr.groupBy("a_id").count().filter(col("count") > 1).isEmpty)

@@ -581,7 +581,7 @@ class StreamingSpec extends SparkSuite {
     val batch = graft.functions.VectorOps.semDedupIncr(spark, sfDir).collect()
       .map(r => r.getLong(0) -> r.getString(3)).toMap
     val deltaVecs = graft.functions.VectorOps.prepared(spark, sfDir)
-      .filter(graft.functions.VectorOps.incSplitE(5) === 0)
+      .filter(graft.Exprs.arrivalSplit(col("vec_id"), 5) === 0)
       .select("vec_id", "v").as[(Long, Seq[Double])].collect().sortBy(_._1)
     val in = MemoryStream[(Long, Seq[Double], Timestamp)]
     val tsv = Timestamp.valueOf("2026-01-01 10:00:00")
@@ -645,7 +645,7 @@ class StreamingSpec extends SparkSuite {
     val batch = TextOps.nearDupIncr(spark, sfDir).collect()
       .map(r => r.getLong(0) -> r.getString(2)).toMap
     val deltaDocs = TextOps.prepared(spark, sfDir)
-      .filter(TextOps.docSplitE(5) === 0)
+      .filter(graft.Exprs.arrivalSplit(col("doc_id"), 5) === 0)
       .select(col("doc_id"), col("norm")).as[(Long, String)].collect().sortBy(_._1)
     val raw = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).as[(Long, String)].collect().toMap
@@ -864,7 +864,7 @@ class StreamingSpec extends SparkSuite {
     // the batch corpus side: delta split — probe docs (doc_id < 10) are
     // DELIBERATELY left in the feed; the stream must drop them itself
     val feed = TextOps.prepared(spark, sfDir)
-      .filter(TextOps.docSplitE(5) === 0 || col("doc_id") < 10)
+      .filter(graft.Exprs.arrivalSplit(col("doc_id"), 5) === 0 || col("doc_id") < 10)
       .select(col("doc_id"))
       .join(graft.Tables.documents(spark, sfDir), "doc_id")
       .select(col("doc_id"), col("text")).as[(Long, String)].collect()
@@ -892,7 +892,7 @@ class StreamingSpec extends SparkSuite {
     import graft.functions.TextOps
     // derive split membership so the crafted corpus lands where intended
     val residues = spark.range(100).select(col("id").as("doc_id"))
-      .withColumn("r", TextOps.docSplitE(5))
+      .withColumn("r", graft.Exprs.arrivalSplit(col("doc_id"), 5))
       .as[(Long, Long)].collect().toMap
     val baseIds = (0L until 100L).filter(residues(_) != 0)
     val deltaIds = (0L until 100L).filter(residues(_) == 0)
@@ -1375,7 +1375,7 @@ class StreamingSpec extends SparkSuite {
     assert(batch.nonEmpty, "fixture must mine at least one pair")
     val delta = graft.functions.VectorOps.prepared(spark, sfDir)
       .filter(pmod(col("label"), lit(2)) === 0 &&
-        graft.functions.VectorOps.incSplitE(5) === 0)
+        graft.Exprs.arrivalSplit(col("vec_id"), 5) === 0)
       .select(col("vec_id"), col("v")).as[(Long, Seq[Double])].collect()
     val out = java.nio.file.Files.createTempDirectory("margin_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("margin_ckpt").toString
