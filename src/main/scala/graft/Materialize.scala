@@ -81,20 +81,9 @@ object SharedRel {
       _ => new java.util.concurrent.ConcurrentHashMap[String, Any]())
   }
 
-  /** Wall-clock seconds spent inside memo-miss `build`s, per session —
-    * lets Bench report shared first-builds as their own `shared_build`
-    * row instead of charging them to whichever query runs first.
-    */
-  private val buildSecs = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.atomic.DoubleAdder]())
-
-  def buildSeconds(spark: SparkSession): Double = buildSecs.synchronized {
-    Option(buildSecs.get(spark)).map(_.sum()).getOrElse(0.0)
-  }
-
   /** Per-key wall-clock of OUTERMOST memo-miss builds (inner nested builds
-    * fold into the triggering key, mirroring the [[buildSecs]] accounting)
-    * — the transparency view behind Bench's single `shared_build` row.
+    * fold into the triggering key) — the transparency view behind Bench's
+    * single `shared_build` row.
     */
   private val buildByKey = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
@@ -108,13 +97,20 @@ object SharedRel {
       }.getOrElse(Seq.empty)
     }
 
+  /** Wall-clock seconds spent inside memo-miss `build`s, per session: the
+    * sum of [[buildBreakdown]]. Lets Bench report shared first-builds as
+    * their own `shared_build` row instead of charging them to whichever
+    * query runs first.
+    */
+  def buildSeconds(spark: SparkSession): Double = buildBreakdown(spark).map(_._2).sum
+
   /** Build-nesting depth, per thread: a memo-miss build may itself trigger
     * further memo-miss builds (freezeBaseState's first call builds the
     * nearDupLsh scaffold, etc.), and the OUTER build's wall-clock already
     * contains the inner ones' — adding both would double-count, and Bench
     * would then subtract more than the true build time from the triggering
     * query (masked by its `.max(0.0)`), over-reporting `shared_build`.
-    * Only the outermost frame adds to [[buildSecs]].
+    * Only the outermost frame adds to [[buildBreakdown]].
     */
   private val buildDepth = new ThreadLocal[Integer] {
     override def initialValue(): Integer = 0
@@ -128,10 +124,6 @@ object SharedRel {
       val built = build
       if (depth == 0) {
         val secs = (System.nanoTime() - t0) / 1e9
-        buildSecs.synchronized {
-          buildSecs.computeIfAbsent(spark,
-            _ => new java.util.concurrent.atomic.DoubleAdder())
-        }.add(secs)
         buildByKey.synchronized {
           buildByKey.computeIfAbsent(spark,
             _ => new java.util.concurrent.ConcurrentHashMap[String, Double]())

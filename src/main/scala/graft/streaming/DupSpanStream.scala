@@ -28,9 +28,10 @@ import graft.functions.TextOps
   * state is a batch-shaped join, not per-key stream state. The spec pins
   * both the base-cut parity and this divergence explicitly.
   *
-  * Exactly-once: output is partitioned by epoch; a replayed micro-batch
-  * anti-joins ONLY its own epoch partition (the [[MarginStream]] replay
-  * contract — O(batch) however long the stream runs).
+  * Exactly-once: output is partitioned by epoch, and each epoch writes its
+  * own `batch_id=N` directory with overwrite (the [[MarginStream]] and
+  * [[RadiationPipeline.writeEpoch]] replay rule), so a replayed
+  * micro-batch replaces its partial output and touches no other epoch.
   *
   * 100 TB posture: the static side is one string per distinct base
   * shingle — the stored substring index a deployment keeps; refreshing it
@@ -55,16 +56,15 @@ object DupSpanStream {
       .select("sh").distinct()
       .localCheckpoint(eager = true)
 
-  /** Cut each arrival against the frozen index; survivors append to
+  /** Cut each arrival against the frozen index; survivors land in
     * `outDir` as (doc_id, n_words, n_dup, n_spans, text_clean),
-    * partitioned by epoch.
+    * partitioned by epoch (`batch_id`).
     */
   def appendStream(docs: DataFrame, frozen: DataFrame, outDir: String,
                    ckptDir: String, n: Int = 5): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", ckptDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         // same words construction as the batch tier's `prepared`
         val pw = batch
           .withColumn("norm", Exprs.normText(col("text")))
@@ -82,21 +82,8 @@ object DupSpanStream {
           .select(col("doc_id"), size(col("words")).cast("long").as("n_words"),
             lit(0L).as("n_dup"), lit(0L).as("n_spans"),
             array_join(col("words"), " ").as("text_clean"))
-        val cut = TextOps.spanFold(long, hits).unionAll(short)
-          .withColumn("batch_id", lit(batchId))
-        val epochPath = new org.apache.hadoop.fs.Path(
-          outDir, s"batch_id=$batchId")
-        val outFs = epochPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val out =
-          if (outFs.exists(epochPath) && outFs.listStatus(epochPath).nonEmpty) {
-            val prior = spark.read.parquet(outDir)
-              .filter(col("batch_id") === batchId)
-              .select(col("doc_id").as("p_id"))
-            cut.join(prior, col("doc_id") === col("p_id"), "left_anti")
-          } else cut
-        out.write.partitionBy("batch_id").mode(SaveMode.Append).parquet(outDir)
-        ()
+        TextOps.spanFold(long, hits).unionAll(short)
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch_id=$batchId")
       }
       .start()
 }

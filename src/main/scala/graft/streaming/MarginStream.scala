@@ -18,9 +18,10 @@ import graft.functions.VectorOps
   * (nProbe nearest frozen centroids per arrival, centroids broadcast) and
   * run the SAME candidate construction + mutual-top-1 + margin scoring as
   * the batch miners ([[VectorOps.marginJoinScore]], shared verbatim), then
-  * append the mined pairs. Zero streaming state: the target side and
-  * centroids are immutable snapshots (the frozen-index versioning posture
-  * of every admission stream), and the mined relation is append-only.
+  * write the mined pairs to the epoch's partition. Zero streaming state:
+  * the target side and centroids are immutable snapshots (the
+  * frozen-index versioning posture of every admission stream), and the
+  * mined relation only grows, one partition per epoch.
   *
   * Mutuality contract: rn_b (is this arrival the target's best partner) is
   * evaluated WITHIN the micro-batch's candidate relation — the same
@@ -82,17 +83,18 @@ object MarginStream {
   }
 
   /** `vecs` must carry (vec_id, v: array&lt;double&gt;, ingest_ts). Mined
-    * pairs append to `outDir` as (a_id, b_id, cos_sim, margin),
+    * pairs land in `outDir` as (a_id, b_id, cos_sim, margin),
     * partitioned by the epoch (`batch_id`).
     *
-    * Exactly-once contract: a REPLAYED micro-batch (crash between the
-    * parquet write and the checkpoint commit) is detected by its own
-    * epoch partition already existing, and the anti-join that completes
-    * it reads ONLY that partition — per-batch replay cost is O(batch),
-    * not O(accumulated output), however long the stream runs. Re-fed
-    * duplicate ARRIVALS in a later epoch are out of scope here (that is
-    * upstream admission dedup's job — DocStream and kin), exactly as in
-    * the batch miner, which scores whatever rows its delta split hands it.
+    * Exactly-once contract: each epoch writes its pairs to its own
+    * `batch_id=N` directory with overwrite, the replay rule of
+    * [[RadiationPipeline.writeEpoch]]'s Dir sink. A REPLAYED micro-batch
+    * (crash between the parquet write and the checkpoint commit) replaces
+    * whatever partial output its first attempt left, reads nothing back
+    * and leaves every other epoch untouched. Re-fed duplicate ARRIVALS in
+    * a later epoch are out of scope here (that is upstream admission
+    * dedup's job — DocStream and kin), exactly as in the batch miner,
+    * which scores whatever rows its delta split hands it.
     */
   def appendStream(vecs: DataFrame, frozen: (DataFrame, DataFrame),
                    outDir: String, ckptDir: String, k: Int = 4,
@@ -101,29 +103,9 @@ object MarginStream {
     vecs.writeStream
       .option("checkpointLocation", ckptDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val mined = mineBatch(batch.select(col("vec_id"), col("v")), cents,
-          target, k, minMargin, nProbe)
-          .withColumn("batch_id", lit(batchId))
-        // replay detection is scoped to THIS epoch: the partitioned
-        // layout makes the prior read a single-directory open. Fallback
-        // is ONLY the missing-partition (first-attempt) case; real read
-        // errors propagate.
-        val epochPath = new org.apache.hadoop.fs.Path(
-          outDir, s"batch_id=$batchId")
-        val outFs = epochPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val out =
-          if (outFs.exists(epochPath) && outFs.listStatus(epochPath).nonEmpty) {
-            val prior = spark.read.parquet(outDir)
-              .filter(col("batch_id") === batchId)
-              .select(col("a_id").as("p_a"), col("b_id").as("p_b"))
-            mined.join(prior,
-              col("a_id") === col("p_a") && col("b_id") === col("p_b"),
-              "left_anti")
-          } else mined
-        out.write.partitionBy("batch_id").mode(SaveMode.Append).parquet(outDir)
-        ()
+        mineBatch(batch.select(col("vec_id"), col("v")), cents, target, k,
+            minMargin, nProbe)
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch_id=$batchId")
       }
       .start()
   }

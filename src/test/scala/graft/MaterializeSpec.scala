@@ -72,6 +72,25 @@ class MaterializeSpec extends SparkSuite {
     assert(builds == 4, "Table materializations must never be memoized")
   }
 
+  test("SharedRel reports a nested memo-miss build once, under the outer key") {
+    // a fresh session starts with no builds on record
+    val s = spark.newSession()
+    val built = SharedRel.once(s, "outer|t", Materialize.Local) {
+      val inner = SharedRel.once(s, "inner|t", Materialize.Local) { Thread.sleep(200); 1 }
+      Thread.sleep(100)
+      inner + 1
+    }
+    assert(built == 2)
+    val breakdown = SharedRel.buildBreakdown(s)
+    assert(breakdown.map(_._1) == Seq("outer|t"), s"inner build reported on its own: $breakdown")
+    val outer = breakdown.head._2
+    assert(outer >= 0.3, s"the outer build's time must contain the inner one's: $outer")
+    assert(SharedRel.buildSeconds(s) == outer, "buildSeconds must count the outer build once")
+    // the inner result was memoized too: a second call neither builds nor adds time
+    assert(SharedRel.once[Int](s, "inner|t", Materialize.Local)(fail("rebuilt a memo hit")) == 1)
+    assert(SharedRel.buildSeconds(s) == outer)
+  }
+
   test("training loops run through the Table path: identical output, objective intact") {
     // the r7 carry-over: kmeansTrain / pqTrainCodebook hard-coded
     // localCheckpoint — on a cluster one lost executor killed a training

@@ -76,6 +76,15 @@ class OperatorsSpec extends SparkSuite {
       "allowlisted query grew an oracle — remove it from the allowlist")
   }
 
+  test("driver contract: a query name registered twice fails the registry, naming it") {
+    val q = SparkEntry.Query("q_twice", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.checked(Seq(q, q.copy(name = "q_once"), q.copy(oracle = "SELECT 2")))
+    }
+    assert(e.getMessage.contains("q_twice") && !e.getMessage.contains("q_once"), e.getMessage)
+    assert(SparkEntry.checked(Seq(q, q.copy(name = "q_once"))).size == 2)
+  }
+
   test("nearDupExact refuses an input larger than its maxRows contract") {
     val e = intercept[IllegalArgumentException] {
       VectorOps.nearDupExact(spark, sf(), maxRows = 10L).collect()

@@ -952,6 +952,55 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("dup-span stream: a replayed epoch overwrites its partial write exactly once") {
+    import graft.streaming.DupSpanStream
+    val residues = spark.range(100).select(col("id").as("doc_id"))
+      .withColumn("r", graft.Exprs.arrivalSplit(col("doc_id"), 5))
+      .as[(Long, Long)].collect().toMap
+    val baseId = (0L until 100L).find(residues(_) != 0).get
+    val Seq(d1, d2, d3) = (0L until 100L).filter(residues(_) == 0).take(3)
+    val docs = Seq(
+      (baseId, "alpha beta gamma delta epsilon zeta eta"),
+      (d1, "one two alpha beta gamma delta epsilon three four"), // cut
+      (d2, "purely unique words here nothing shared at all ok"), // untouched
+      (d3, "too short") // under n words: passes through
+    ).map { case (id, t) => (id, t, "en", "s", 1L) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val tmp = java.nio.file.Files.createTempDirectory("dss_replay").toString
+    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val out = java.nio.file.Files.createTempDirectory("dss_replay_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("dss_replay_ckpt").toString
+    val ts = Timestamp.valueOf("2026-01-01 10:00:00")
+    val feed = docs.filter(col("doc_id") =!= baseId).select("doc_id", "text")
+      .as[(Long, String)].collect().toSeq.map { case (id, t) => (id, t, ts) }
+    val in = MemoryStream[(Long, String, Timestamp)]
+    val q = DupSpanStream.appendStream(in.toDF().toDF("doc_id", "text", "ingest_ts"),
+      DupSpanStream.frozenShingles(spark, tmp), out, ckpt)
+    def epoch(id: Int) = spark.read.parquet(out).filter(col("batch_id") === id)
+      .select("doc_id", "n_words", "n_dup", "n_spans", "text_clean")
+      .as[(Long, Long, Long, Long, String)].collect()
+    try {
+      in.addData(feed)
+      q.processAllAvailable()
+      val epoch0 = epoch(0)
+      assert(epoch0.map(_._1).toSet == Set(d1, d2, d3) && epoch0.length == 3)
+      assert(epoch0.exists(r => r._1 == d1 && r._3 == 5), "fixture must cut d1")
+      // simulated crash replay: pre-seed the NEXT epoch's partition with a
+      // PARTIAL write (the crash-between-write-and-commit state), then feed
+      // the same arrivals — the replayed epoch must hold each row once and
+      // leave epoch 0 as it was
+      epoch0.take(2).toSeq.toDF("doc_id", "n_words", "n_dup", "n_spans", "text_clean")
+        .write.parquet(s"$out/batch_id=1")
+      in.addData(feed)
+      q.processAllAvailable()
+      val epoch1 = epoch(1)
+      assert(epoch1.toSet == epoch0.toSet && epoch1.length == epoch0.length,
+        "replayed epoch must complete exactly-once over its partial write")
+      assert(epoch(0).toSet == epoch0.toSet && epoch(0).length == epoch0.length,
+        "the replay must not touch epoch 0")
+    } finally q.stop()
+  }
+
   test("kmv stream: k-bounded state converges to the batch sketch; 2-batch feed equals 1-batch") {
     import graft.streaming.KmvStream
     import graft.functions.TextOps

@@ -182,4 +182,70 @@ class TransportSpec extends SparkSuite {
     }
     assert(cached == before, "the failed epoch's batch stayed cached")
   }
+
+  test("Dir transport: a restart from the checkpoint writes what one uninterrupted run writes") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.streaming.Trigger
+    def at(s: Int) = f"2011-03-15 10:00:$s%02d"
+    // first half: normal and critical readings 10:00:00-09, one dirty record
+    val firstHalf = Seq(
+      "a.jsonl" -> (0 until 6).map(i => rec(at(i), v = 40.0 + i, lat = 30.0 + i)),
+      "b.jsonl" -> ((6 until 10).map(i => rec(at(i), v = 450.0 + i, lat = 30.0 + i)) :+
+        rec(at(7), unit = "usv")))
+    val dup = rec(at(8), v = 458.0, lat = 38.0)
+    val dirtyDup = rec(at(7), unit = "usv")
+    assert(firstHalf.flatMap(_._2).count(Set(dup, dirtyDup)) == 2, "fixture: both dups repeat")
+    // second half: a reading in the still-open 10:00:09 window, a duplicate
+    // of a first-half reading and of the dirty record (both still inside
+    // the dedup state's horizon), then a sentinel past watermark + window
+    // that flushes every cohort pane before it
+    val secondHalf = Seq(
+      "c.jsonl" -> (Seq(rec(at(9), v = 60.0, lat = 50.0), dup, dirtyDup) ++
+        (10 until 14).map(i => rec(at(i), v = 70.0 + i, lat = 30.0 + i))),
+      "d.jsonl" -> Seq(rec("2011-03-15 10:01:00")))
+    def write(in: String, files: Seq[(String, Seq[String])]): Unit = files.foreach {
+      case (name, lines) => Files.writeString(java.nio.file.Path.of(in, name), lines.mkString("\n"))
+    }
+    def run(in: String, out: String, ckpt: String): Unit =
+      RadiationPipeline.run(spark, Transport.Dir(in, out), ckpt, SparkEntry.T,
+        bounded = true, Trigger.AvailableNow(), onEpoch = (_, _) => ()).awaitTermination()
+    def sink(out: String, topic: String) = spark.read.parquet(s"$out/$topic").drop("epoch")
+    def parts(out: String): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(java.nio.file.Path.of(out))
+      try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      finally walk.close()
+    }
+    val (inA, outA, ckptA) = (Files.createTempDirectory("graft-restart-in").toString,
+      Files.createTempDirectory("graft-restart-out").toString,
+      Files.createTempDirectory("graft-restart-ckpt").toString)
+    write(inA, firstHalf)
+    run(inA, outA, ckptA)
+    val firstParts = parts(outA)
+    write(inA, secondHalf)
+    run(inA, outA, ckptA) // the restart: same checkpoint, more input
+    // it resumes after the committed epochs instead of replaying them
+    assert(firstParts.subsetOf(parts(outA)), "the restart rewrote the first run's epochs")
+    assert(parts(outA).size > firstParts.size, "the restart wrote no new epoch")
+    val (inB, outB, ckptB) = (Files.createTempDirectory("graft-once-in").toString,
+      Files.createTempDirectory("graft-once-out").toString,
+      Files.createTempDirectory("graft-once-ckpt").toString)
+    write(inB, firstHalf ++ secondHalf)
+    run(inB, outB, ckptB)
+    for (topic <- Seq("normal-data", "critical-data", "dirty-data")) {
+      val (restarted, once) = (sink(outA, topic), sink(outB, topic))
+      assert(restarted.count() > 0, s"$topic: fixture must populate every sink")
+      assert(restarted.count() == once.count() && restarted.exceptAll(once).isEmpty &&
+        once.exceptAll(restarted).isEmpty, s"$topic: restarted run diverges from one run")
+    }
+    val all = Seq("normal-data", "critical-data", "dirty-data").map(sink(outA, _).select("raw"))
+      .reduce(_ union _)
+    assert(all.filter(col("raw") === dup).count() == 1,
+      "the duplicate reading reached a sink twice")
+    assert(all.filter(col("raw") === dirtyDup).count() == 1,
+      "the dirty duplicate reached dirty twice")
+    // the pane the restart straddles was counted across both runs
+    val pane = sink(outA, "critical-data").filter(col("raw") === rec(at(9), v = 459.0, lat = 39.0))
+    assert(pane.select("temporal_batch_size").head.getLong(0) == 2)
+  }
 }
