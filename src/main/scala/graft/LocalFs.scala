@@ -4,23 +4,23 @@ import java.io.{File, IOException}
 
 /** Local-filesystem helpers for the offline harness's file-based sinks
   * (one copy each: recursive delete, and the crash-safe directory swap
-  * the retention view, the shard manifest and layout compaction share).
+  * the shard manifest and layout compaction share).
   */
 object LocalFs {
 
   /** Replace directory `path` by directory `tmp` (a sibling, so each
     * rename is atomic) with no instant at which neither copy is on disk:
     * `path` → `path.old`, `tmp` → `path`, then `.old` is deleted. A crash
-    * between the two renames leaves only `.old`, which [[restoreAside]]
-    * moves back — and which this call restores first. Every rename is
-    * checked: a failed swap-aside throws with `path` untouched; a failed
-    * swap-in moves `.old` back to `path` before throwing, so the original
-    * stays readable.
+    * between the two renames leaves only `.old`, which the next call
+    * restores first. Every rename is checked: a failed swap-aside throws
+    * with `path` untouched; a failed swap-in moves `.old` back to `path`
+    * before throwing, so the original stays readable.
     */
   def swapIn(tmp: String, path: String): Unit = {
     val dir = new File(path)
     val old = aside(dir)
-    restoreAside(path)
+    // a crash between the two renames left only `.old`: restore it first
+    if (!dir.exists() && old.exists()) rename(old, dir)
     rmrf(old)
     if (dir.exists()) rename(dir, old)
     if (!new File(tmp).renameTo(dir)) {
@@ -28,15 +28,6 @@ object LocalFs {
       throw new IOException(s"swap-in failed: $tmp -> $path")
     }
     rmrf(old)
-  }
-
-  /** Crash recovery for [[swapIn]]: if only `path.old` is on disk, move it
-    * back to `path`. Readers of a swapped directory call this first.
-    */
-  def restoreAside(path: String): Unit = {
-    val dir = new File(path)
-    val old = aside(dir)
-    if (!dir.exists() && old.exists()) rename(old, dir)
   }
 
   private def aside(dir: File): File = new File(dir.getPath + ".old")

@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Readings
@@ -9,7 +10,7 @@ import graft.streaming.RadiationPipeline
   * reference's `flink_process.py:main` wired to its `data_provider`:
   * replay the events table as radiation-shaped JSON records through a file
   * stream, run the full parse → validate → dedup → cohort-window → route
-  * pipeline, and report the three sink counts.
+  * pipeline, and report the three sink counts and the served dashboard.
   *
   * Usage: runMain graft.RunPipeline [sfDir] [workDir]
   */
@@ -25,7 +26,15 @@ object RunPipeline {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try println(run(spark, sfDir, workDir)) finally spark.stop()
+  }
 
+  /** The demo on a running session: replay `sfDir`'s events through the
+    * pipeline under `workDir`, poll the served endpoints, and return the
+    * summary line. Fails with `sys.error` when a served round trip does
+    * not match what the sinks delivered.
+    */
+  def run(spark: SparkSession, sfDir: String, workDir: String): String = {
     // producer side: events → radiation-record JSON files (the offline
     // stand-in for the Kafka topic; Ingest.rateReplay is the paced variant)
     val readings = Readings.readings(spark, sfDir)
@@ -67,6 +76,7 @@ object RunPipeline {
       new String(c.getInputStream.readAllBytes(), "UTF-8")
     }
     val served = get(s"$base/api/snapshot")
+    val dashboard = get(s"$base/api/dashboard")
     val (nServed, cServed) = snap.counts
     // the reference's speed-control POST round-trips through the same server
     val post = java.net.URI.create(s"$base/api/playback_speed").toURL
@@ -77,19 +87,23 @@ object RunPipeline {
     server.stop(0)
 
     val counts = Seq("normal-data", "critical-data", "dirty-data").map { t =>
-      val n = try spark.read.parquet(s"$workDir/out/$t").count() catch { case _: Throwable => 0L }
-      s""""$t":$n"""
+      t -> (try spark.read.parquet(s"$workDir/out/$t").count() catch { case _: Throwable => 0L })
     }
-    println(s"""{"pipeline":"radiation","sf":"$sfDir",${counts.mkString(",")},""" +
-      s""""served-normal":$nServed,"served-critical":$cServed,""" +
-      s""""served-bytes":${served.length},"speed":${speed.get}}""")
-    // the demo EXISTS to prove this round trip, so the check must not be
+    val stats = new ObjectMapper().readTree(dashboard).get("stats")
+    val summary = s"""{"pipeline":"radiation","sf":"$sfDir",""" +
+      counts.map { case (t, n) => s""""$t":$n,""" }.mkString +
+      s""""served-normal":$nServed,"served-critical":$cServed,"served-bytes":${served.length},""" +
+      Seq("total_points", "average_radiation", "dangerous_points")
+        .map(f => s""""dashboard-$f":${stats.get(f)},""").mkString + s""""speed":${speed.get}}"""
+    // the demo EXISTS to prove these round trips, so the checks must not be
     // elidable (assert() vanishes under -Xdisable-assertions) and must
-    // compare the parsed value, not a substring
+    // compare parsed values, not substrings
     val echoed = """"playback_speed"\s*:\s*([-+0-9.eE]+)""".r
       .findFirstMatchIn(speedResp).map(_.group(1).toDouble)
     if (!echoed.contains(2.5) || speed.get.doubleValue != 2.5)
       sys.error(s"speed POST round trip failed: response=$speedResp shared=${speed.get}")
-    spark.stop()
+    if (stats.get("total_points").asLong != counts.take(2).map(_._2).sum)
+      sys.error(s"dashboard total_points differ from the delivered sink rows: $summary")
+    summary
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -51,10 +51,14 @@ object DashboardAggs {
     * cardinality is bounded by the grid (scale-safe at any data size).
     */
   def geoGrid(valid: DataFrame, cellDeg: Double = 0.5): DataFrame =
-    valid.groupBy(
-        floor(col("lat") / cellDeg).cast("long").as("cell_lat"),
-        floor(col("lon") / cellDeg).cast("long").as("cell_lon"))
+    valid.groupBy(gridCell(col("lat"), lit(cellDeg)).as("cell_lat"),
+        gridCell(col("lon"), lit(cellDeg)).as("cell_lon"))
       .agg(max(col("cpm")).as("max_cpm"), count(lit(1)).as("n_points"))
+
+  /** The grid cell of a coordinate, `floor(coord / size)` — the one
+    * definition behind [[geoGrid]], [[geoZoom]] and the served geo view.
+    */
+  def gridCell(coord: Column, size: Column): Column = floor(coord / size).cast("long")
 
   /** A4, the ZOOM half: the reference clusters with a zoom-dependent
     * radius (supercluster, MapView.jsx:173-208 — radius shrinks as 2^zoom
@@ -87,8 +91,8 @@ object DashboardAggs {
       // 2^zoom as an integer shift — exact, unlike float pow()
       .withColumn("cell", lit(baseDeg) / expr("cast(shiftleft(1L, zoom) as double)"))
       .groupBy(col("zoom"),
-        floor(col("lat") / col("cell")).cast("long").as("cell_lat"),
-        floor(col("lon") / col("cell")).cast("long").as("cell_lon"))
+        gridCell(col("lat"), col("cell")).as("cell_lat"),
+        gridCell(col("lon"), col("cell")).as("cell_lon"))
       .agg(max(col("cpm")).as("max_cpm"), count(lit(1)).as("n_points"))
   }
 
@@ -102,13 +106,37 @@ object DashboardAggs {
     */
   def alerts(valid: DataFrame, warn: Int = 50, crit: Int = 100, cooldownSec: Int = 30): DataFrame = {
     val fired = valid.filter(col("cpm") >= warn)
-      .withColumn("severity", when(col("cpm") >= crit, "critical").otherwise("warning"))
-      .withColumn("cooldown_bucket",
-        floor(unix_timestamp(col("sec")) / cooldownSec).cast("long"))
-    Dedup.keepFirst(fired,
-        Seq(col("severity"), round(col("lat"), 3), round(col("lon"), 3), col("cooldown_bucket")),
-        Seq(col("sec"), col("event_id")))
+      .withColumn("severity", severity(crit))
+      .withColumn("cooldown_bucket", cooldownBucket(cooldownSec))
+    Dedup.keepFirst(fired, alertKey, Seq(col("sec"), col("event_id")))
       .select("event_id", "sec", "lat", "lon", "cpm", "severity", "cooldown_bucket")
+  }
+
+  /** The alert rule's columns, one definition for [[alerts]] and
+    * [[viewKeys]]: the severity of a row at or above `warn`, its 30-second
+    * event-time bucket, and the cooldown key over both.
+    */
+  def severity(crit: Int): Column = when(col("cpm") >= crit, "critical").otherwise("warning")
+  def cooldownBucket(cooldownSec: Int): Column =
+    floor(unix_timestamp(col("sec")) / cooldownSec).cast("long")
+  val alertKey: Seq[Column] =
+    Seq(col("severity"), round(col("lat"), 3), round(col("lon"), 3), col("cooldown_bucket"))
+
+  /** Each valid row keyed for the served dashboard views, at the batch
+    * twins' default parameters: its 5-second `window_start` (epoch
+    * seconds), its [[geoGrid]] cell, and, when it fires, its [[alerts]]
+    * cooldown key (the `alert_*` columns, null below 50 cpm). One row is
+    * the partial of one reading, and every view merges partials
+    * associatively (counts add, maxima take the larger, a key keeps its
+    * earliest alert), so epochs fold into the views one at a time.
+    */
+  def viewKeys(valid: DataFrame): DataFrame = {
+    val keys = Seq("window_start" -> expr("unix_timestamp(sec) div 5 * 5"),
+      "cell_lat" -> gridCell(col("lat"), lit(0.5)), "cell_lon" -> gridCell(col("lon"), lit(0.5))) ++
+      Seq("alert_severity", "alert_lat", "alert_lon", "alert_bucket")
+        .zip(alertKey.map(when(col("cpm") >= 50, _)))
+    valid.withColumns(Map("severity" -> severity(100), "cooldown_bucket" -> cooldownBucket(30)))
+      .select(col("*") +: keys.map { case (name, c) => c.as(name) }: _*)
   }
 
   /** D4: keep-last-N retention (the client's rolling 2000-point buffer).

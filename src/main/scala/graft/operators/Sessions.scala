@@ -7,17 +7,13 @@ import org.apache.spark.sql.functions._
 /** Per-user sessionization — the gap-based grouping a user-activity stream
   * (the `events` table is exactly that) needs for dashboard analytics.
   *
-  * Two tiers:
-  *  - batch ([[sessionize]]): the classic gaps-and-islands formulation —
-  *    lag → new-session flag → running sum as session id → group. Fully
-  *    deterministic, exact DuckDB oracle.
-  *  - streaming: Spark's native `session_window(event_time, gap)` (see
-  *    [[graft.streaming.DashboardStreams.sessionStream]]) — merging
-  *    event-time windows with watermark-bounded state.
+  * [[sessionize]] is the classic gaps-and-islands formulation — lag →
+  * new-session flag → running sum as session id → group. Fully
+  * deterministic, exact DuckDB oracle. (No streaming tier: the served
+  * dashboard has no session view, so nothing would run one.)
   *
   * Scale: one hash-shuffle on user_id (window partition = the session key);
-  * session state per key is a single row of lag state in batch, and the
-  * open-window set bounded by the watermark in streaming.
+  * session state per key is a single row of lag state.
   */
 object Sessions {
 

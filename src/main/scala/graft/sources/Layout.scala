@@ -112,7 +112,7 @@ object Layout {
     * is metadata-bound before a single byte of data is scanned. Rewrites a
     * parquet directory into ~`targetBytes` files (count derived from the
     * actual on-disk size), then swaps it in with the crash-safe
-    * [[graft.LocalFs.swapIn]] the streaming retention sink also uses.
+    * [[graft.LocalFs.swapIn]] the shard manifest also uses.
     */
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L * 1024 * 1024): Long = {

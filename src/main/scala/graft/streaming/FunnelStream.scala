@@ -9,10 +9,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * ADVANCES a stage — the real-time "user just converted" signal a
   * dashboard consumes, where the batch funnel is the offline report.
   *
-  * Same keyed-state form as [[AlertCooldown]] (`flatMapGroupsWithState` +
-  * event-time timeout — the Spark analog of the reference's
-  * `KeyedProcessFunction`): state per user is the current stage index plus
-  * its completion time (two fields, constant size), and idle users' state
+  * Keyed state via `flatMapGroupsWithState` + event-time timeout (the
+  * Spark analog of the reference's `KeyedProcessFunction`): state per user
+  * is the current stage index plus its completion time (two fields,
+  * constant size), and idle users' state
   * expires once the watermark passes the inactivity horizon, so the state
   * store stays bounded by ACTIVE users at scale, not all users ever seen.
   *

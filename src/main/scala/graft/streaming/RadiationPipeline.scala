@@ -373,7 +373,7 @@ object RadiationPipeline {
           // served snapshot reflects exactly the delivered records — but a
           // dashboard-only hook must never fail sink delivery, so failures
           // log and the stream continues (the hook is idempotent per epoch,
-          // see Serve.Snapshot.beginEpoch, so a skipped/failed fold is a
+          // see Serve.Snapshot.fold, so a skipped/failed fold is a
           // stale snapshot, not corruption)
           try onEpoch(routed, epochId)
           catch { case scala.util.control.NonFatal(e) =>

@@ -51,4 +51,12 @@ class DotProductSpec extends SparkSuite {
     // row 2: clean → both 8.0
     assert(out.toSeq == Seq((None, None), (Some(8.0), Some(8.0))))
   }
+
+  test("GraftExtensions registers dot_product for SQL") {
+    // getOrCreate reuses the suite session, so exercise the live-session path
+    graft.plans.GraftExtensions.register(spark)
+    val r = spark.sql(
+      "SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head()
+    assert(r.getDouble(0) == 11.0)
+  }
 }

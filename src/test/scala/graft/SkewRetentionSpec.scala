@@ -1,13 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.operators.Skew
-import graft.streaming.{DashboardStreams, RadiationPipeline}
 
 class SkewRetentionSpec extends SparkSuite {
   import spark.implicits._
-  private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   test("salted join returns exactly the plain join result on skewed data") {
     // 90% of left rows share one hot key
@@ -22,40 +19,5 @@ class SkewRetentionSpec extends SparkSuite {
     // the shuffle must actually include the salt
     val plan = salted.queryExecution.executedPlan.toString
     assert(plan.contains("__salt"), s"salt must appear in the plan:\n$plan")
-  }
-
-  test("streaming last-N retention keeps the newest n rows across epochs") {
-    val dir = java.nio.file.Files.createTempDirectory("retention").toString
-    def rec(s: String, v: Double): String =
-      s"""{"captured_time": "2011-03-15 10:00:$s", "latitude": 1, "longitude": 2, "value": $v, "unit": "cpm", "ingestion_timestamp": 1}"""
-    val in = MemoryStream[String]
-    def runEpoch(): Unit = {
-      val valid = RadiationPipeline.validate(RadiationPipeline.parse(in.toDF()))
-        .filter(col("status") === "valid")
-        .select("event_time", "value")
-      val q = DashboardStreams.lastNRetention(valid, n = 3, s"$dir/out", s"$dir/ckpt",
-        orderCols = Seq("event_time", "value"))
-      q.awaitTermination(60000)
-    }
-    in.addData(rec("01", 1), rec("02", 2), rec("03", 3), rec("04", 4))
-    runEpoch()
-    val after1 = spark.read.parquet(s"$dir/out").select("value").as[Int].collect().sorted
-    assert(after1.toSeq == Seq(2, 3, 4), "keeps newest 3 of epoch 1")
-    in.addData(rec("05", 5), rec("00", 99)) // one newer, one older than cutoff
-    runEpoch()
-    val after2 = spark.read.parquet(s"$dir/out").select("value").as[Int].collect().sorted
-    assert(after2.toSeq == Seq(3, 4, 5), "newest 3 across epochs; stale row evicted")
-
-    // crash recovery: a failure between the two swap renames leaves only
-    // `.old` on disk — the next epoch must restore it before folding, so
-    // the retained set survives the crash
-    val out = new java.io.File(s"$dir/out")
-    val old = new java.io.File(s"$dir/out.old")
-    assert(out.renameTo(old), "simulate crash mid-swap")
-    in.addData(rec("06", 6))
-    runEpoch()
-    val after3 = spark.read.parquet(s"$dir/out").select("value").as[Int].collect().sorted
-    assert(after3.toSeq == Seq(4, 5, 6), "recovered .old set + new row, newest 3")
-    assert(!old.exists(), "recovery swap leaves no .old behind")
   }
 }

@@ -4,12 +4,12 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.{AlertCooldown, RadiationPipeline}
+import graft.streaming.RadiationPipeline
 import graft.operators.Readings.Thresholds
 
 /** Streaming-semantics tests (FIXTURES.md §A5 streaming rows): dedup within
   * watermark, same-second cohort annotation, late-data drop, 3-way routed
-  * end-to-end run, and the alert-cooldown stateful operator. MemoryStream +
+  * end-to-end run, and the keyed-state stream operators. MemoryStream +
   * processAllAvailable makes event-time progress deterministic.
   */
 class StreamingSpec extends SparkSuite {
@@ -197,63 +197,6 @@ class StreamingSpec extends SparkSuite {
     assert(dirty.where(col("temporal_batch_size").isNotNull).count() == 0)
   }
 
-  test("alert cooldown: one batch yields the golden emissions") {
-    def alert(ts: String, k: String = "warning|1.000|2.000") = AlertCooldown.Alert(
-      key = k, severity = "warning", lat = 1, lon = 2, value = 60,
-      event_time = java.sql.Timestamp.valueOf(ts))
-    val in = MemoryStream[AlertCooldown.Alert]
-    val q = AlertCooldown(in.toDS()).writeStream.format("memory")
-      .queryName("cd_golden_t").outputMode("append").start()
-    in.addData(
-      alert("2011-03-15 10:00:00"),
-      alert("2011-03-15 10:00:10"),                              // inside cooldown
-      alert("2011-03-15 10:00:31"),                              // ≥ 30 s → re-emits
-      alert("2011-03-15 10:00:05", k = "critical|1.000|2.000"),  // independent key
-      alert("2011-03-15 10:01:40"))                              // past the 2nd emit
-    q.processAllAvailable()
-    val rows = spark.table("cd_golden_t").as[AlertCooldown.Alert].collect()
-      .map(a => (a.key, a.event_time.toString)).sorted.toSeq
-    q.stop()
-    assert(rows == Seq(
-      ("critical|1.000|2.000", "2011-03-15 10:00:05.0"),
-      ("warning|1.000|2.000", "2011-03-15 10:00:00.0"),
-      ("warning|1.000|2.000", "2011-03-15 10:00:31.0"),
-      ("warning|1.000|2.000", "2011-03-15 10:01:40.0")))
-  }
-
-  test("alert cooldown state expires via event-time timeout after the horizon") {
-    val in = MemoryStream[AlertCooldown.Alert]
-    def alert(ts: String) = AlertCooldown.Alert(
-      key = "warning|1.000|2.000", severity = "warning", lat = 1, lon = 2,
-      value = 60, event_time = java.sql.Timestamp.valueOf(ts))
-    val out = AlertCooldown(in.toDS(), cooldownSec = 30)
-    val q = out.writeStream.format("memory").queryName("cooldown_to_t")
-      .outputMode("append").start()
-    // state rows per executed batch (progress events of idle triggers
-    // carry no state operators)
-    def stateHistory = q.recentProgress.flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
-    def stateRows = stateHistory.last
-    in.addData(alert("2011-03-15 10:00:00"))
-    q.processAllAvailable()
-    assert(stateRows == 1)
-    // advance the watermark far past the 2× cooldown horizon → state removed
-    in.addData(AlertCooldown.Alert("other", "warning", 9, 9, 60,
-      java.sql.Timestamp.valueOf("2011-03-15 11:00:00")))
-    q.processAllAvailable()
-    // both keys were held while the pusher's batch ran; the no-data batch
-    // that follows the watermark advance times the first key out
-    assert(stateHistory.max == 2)
-    assert(stateRows == 1, "the key past its horizon must leave the state store")
-    // same key again: with state expired this emits even though a live
-    // cooldown window from 10:00:00 would not have mattered anyway —
-    // documents the bounded-state tradeoff of the timeout
-    in.addData(alert("2011-03-15 11:00:05"))
-    q.processAllAvailable()
-    val n = spark.table("cooldown_to_t").where(col("key") === "warning|1.000|2.000").count()
-    q.stop()
-    assert(n == 2, "both alerts emit; expired state cannot suppress")
-  }
-
   test("stream-stream interval join correlates two event streams on key and time") {
     val left = MemoryStream[String]
     val right = MemoryStream[String]
@@ -295,22 +238,6 @@ class StreamingSpec extends SparkSuite {
       .as[(Int, Option[String])].collect().sortBy(_._1)
     q.stop()
     assert(rows.toSeq == Seq((7, None), (42, Some("sensor-A"))))
-  }
-
-  test("alert cooldown: repeats within 30s suppressed, emitted after") {
-    val in = MemoryStream[AlertCooldown.Alert]
-    def alert(s: String, offsetSec: Int) = AlertCooldown.Alert(
-      key = s"warning|35.600|139.700", severity = "warning", lat = 35.6, lon = 139.7,
-      value = 60, event_time = Timestamp.valueOf(s"2011-03-15 10:00:$s"))
-    val out = AlertCooldown(in.toDS(), cooldownSec = 30)
-    val q = out.writeStream.format("memory").queryName("cooldown_t").outputMode("append").start()
-    in.addData(alert("00", 0), alert("10", 10), alert("35", 35))
-    q.processAllAvailable()
-    val times = spark.table("cooldown_t").as[AlertCooldown.Alert]
-      .collect().map(_.event_time.toString).sorted
-    q.stop()
-    // first emits; +10s suppressed; +35s emits (>= 30s after the first)
-    assert(times.toSeq == Seq("2011-03-15 10:00:00.0", "2011-03-15 10:00:35.0"))
   }
 
   test("streaming funnel: stage machine advances across batches, stays ordered") {
@@ -1442,9 +1369,9 @@ class StreamingSpec extends SparkSuite {
         s"stream/batch divergence: stream-only=${got -- batch}, batch-only=${batch -- got}")
       // simulated crash replay: pre-seed the NEXT epoch's partition with
       // a PARTIAL write (the crash-between-write-and-commit state), then
-      // feed the same arrivals — the epoch-scoped anti-join must complete
-      // the partition without duplicating the partial rows, and must not
-      // touch epoch 0 (per-batch replay cost stays O(batch))
+      // feed the same arrivals — the epoch overwrites its own batch_id=1
+      // directory, so the partial rows are replaced rather than duplicated,
+      // and epoch 0 is left untouched (per-batch replay cost stays O(batch))
       val partial = batch.take(batch.size / 2 max 1).toSeq
       partial.toDF("a_id", "b_id", "cos_sim", "margin")
         .write.parquet(s"$out/batch_id=1")

@@ -123,6 +123,50 @@ class TransportSpec extends SparkSuite {
       "kafka batch sink re-sends on retry (at-least-once), replays share the record key")
   }
 
+  test("Kafka transport: a query killed mid-epoch and restarted delivers what one run delivers") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+    def at(s: Int) = f"2011-03-15 10:00:$s%02d"
+    // each half fills all three topics; the second repeats a first-half
+    // reading still inside the dedup horizon, then a sentinel past
+    // watermark + window flushes every cohort pane before it
+    val first = (0 until 10).map(i => rec(at(i), v = 40.0 + i, lat = 30.0 + i)) ++
+      Seq(rec(at(2), v = 5000), rec(at(4), unit = "bq"))
+    val second = (10 until 16).map(i => rec(at(i), v = 40.0 + i, lat = 30.0 + i)) ++
+      Seq(rec(at(8), v = 48.0, lat = 38.0), rec(at(12), v = 5000), rec(at(13), unit = "bq"),
+        rec("2011-03-15 10:01:00"))
+    def run(ckpt: String): Unit =
+      RadiationPipeline.run(spark, kafka, ckpt, graft.operators.Readings.Thresholds(),
+        bounded = true, Trigger.AvailableNow(), onEpoch = (_, _) => ()).awaitTermination()
+    FakeKafka.reset()
+    FakeKafka.seed("radiation-data", first ++ second: _*)
+    run(Files.createTempDirectory("graft-kafka-once").toString)
+    val once = FakeKafka.sentByTopic
+
+    FakeKafka.reset()
+    val ckpt = Files.createTempDirectory("graft-kafka-killed").toString
+    FakeKafka.seed("radiation-data", first: _*)
+    run(ckpt) // stop after part of the input
+    FakeKafka.seed("radiation-data", second: _*)
+    val beforeKill = FakeKafka.sent.size
+    // the epoch that flushes the panes dies after its normal-data send
+    FakeKafka.outageOn("critical-data")
+    intercept[StreamingQueryException](run(ckpt))
+    val killedRun = FakeKafka.sent.asScala.toSeq.drop(beforeKill)
+    run(ckpt) // restart: the killed epoch runs again
+    val restarted = FakeKafka.sentByTopic
+    for (topic <- Seq("normal-data", "critical-data", "dirty-data")) {
+      assert(once(topic).nonEmpty && once(topic).distinct == once(topic),
+        s"$topic: the uninterrupted run must fill the topic once")
+      assert(restarted(topic).toSet == once(topic).toSet, s"$topic: restarted run diverges")
+    }
+    // the only repeats are what the killed epoch sent before the outage
+    // (at-least-once): part of what the killed run sent
+    val all = FakeKafka.sent.asScala.toSeq
+    val repeats = all.diff(all.distinct)
+    assert(repeats.nonEmpty && repeats.toSet.subsetOf(killedRun.toSet), s"repeats: $repeats")
+  }
+
   test("priorityFromTopics: full write+read relay path, then a session-scaffolded reuse") {
     import graft.operators.Readings
     // SparkEntry's thresholds: danger=400 yields critical rows at sf0.01

@@ -52,7 +52,13 @@ object FakeKafka {
   def seed(topic: String, values: String*): Unit =
     values.foreach(v => sourceRecords.add((topic, v)))
 
-  def reset(): Unit = { sourceRecords.clear(); sent.clear() }
+  /** A topic whose next non-empty send fails once, as a broker outage in
+    * the middle of an epoch would.
+    */
+  @volatile private[testkit] var outageTopic: Option[String] = None
+  def outageOn(topic: String): Unit = outageTopic = Some(topic)
+
+  def reset(): Unit = { sourceRecords.clear(); sent.clear(); outageTopic = None }
 
   def sentByTopic: Map[String, Seq[(String, String)]] =
     sent.asScala.toSeq.groupBy(_._1).map { case (t, xs) => t -> xs.map(x => (x._2, x._3)) }
@@ -89,6 +95,10 @@ class FakeKafkaProvider extends TableProvider with CreatableRelationProvider
                               parameters: Map[String, String],
                               data: DataFrame): BaseRelation = {
     val topic = parameters.getOrElse("topic", "")
+    if (FakeKafka.outageTopic.contains(topic) && !data.isEmpty) {
+      FakeKafka.outageTopic = None
+      throw new java.io.IOException("fake broker outage")
+    }
     data.selectExpr("CAST(key AS STRING)", "CAST(value AS STRING)").collect()
       .foreach(r => FakeKafka.sent.add((topic, r.getString(0), r.getString(1))))
     val ctx = sqlContext
