@@ -4,7 +4,7 @@ import java.io.{File, IOException}
 
 /** Local-filesystem helpers for the offline harness's file-based sinks
   * (one copy each: recursive delete, and the crash-safe directory swap
-  * the shard manifest and layout compaction share).
+  * the shard manifest uses).
   */
 object LocalFs {
 

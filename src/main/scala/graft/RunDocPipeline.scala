@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.DocStream
@@ -61,6 +61,20 @@ object RunDocPipeline {
         sys.error(s"$stage stream did not drain within ${ms / 1000} s")
     } finally q.stop()
 
+  /** One parquet stage: run `df` as an AvailableNow query into `path`
+    * (checkpoint `ckpt`), [[drain]] it, and read back what landed.
+    */
+  private def landed(df: DataFrame, path: String, ckpt: String, stage: String): DataFrame = {
+    val q = df.writeStream.format("parquet")
+      .option("path", path)
+      .option("checkpointLocation", ckpt)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    drain(q, stage)
+    df.sparkSession.read.parquet(path)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val workDir = args.lift(1).getOrElse(
@@ -88,14 +102,10 @@ object RunDocPipeline {
       "doc_id BIGINT, text STRING, source STRING, ingest_ts TIMESTAMP")
     val docs = raw.select(from_json(col("value"), docSchema).as("d"))
       .select("d.*")
-    val q = DocStream.curateStream(docs)
-      .writeStream.format("parquet")
-      .option("path", s"$workDir/out")
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    guarded("curate_stream", ())(drain(q, "curate_stream"))
+    guarded("curate_stream", ()) {
+      landed(DocStream.curateStream(docs), s"$workDir/out", s"$workDir/ckpt", "curate_stream")
+      ()
+    }
 
     // second hop (the reference chains jobs through topics the same way):
     // curated stream → per-source token-quota admission → decision log.
@@ -110,14 +120,12 @@ object RunDocPipeline {
       .parquet(s"$workDir/out")
       .select(col("doc_id"), col("source"), col("n_tokens").as("tok"), col("ingest_ts"))
       .as[QDoc]
-    val q2 = QuotaStream(curated, quota = sys.env.getOrElse("GRAFT_QUOTA", "600").toLong)(spark)
-      .writeStream.format("parquet")
-      .option("path", s"$workDir/decisions")
-      .option("checkpointLocation", s"$workDir/ckpt2")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    guarded("quota_stream", ())(drain(q2, "quota_stream"))
+    val quota = sys.env.getOrElse("GRAFT_QUOTA", "600").toLong
+    guarded("quota_stream", ()) {
+      landed(QuotaStream(curated, quota)(spark).toDF(), s"$workDir/decisions", s"$workDir/ckpt2",
+        "quota_stream")
+      ()
+    }
 
     // streaming tail: admitted docs walk into token-budgeted shards via
     // the epoch-fold append (ShardStream) — the streaming counterpart of
@@ -160,15 +168,8 @@ object RunDocPipeline {
       val mediaStream = spark.readStream
         .schema("media_id BIGINT, ingest_ts TIMESTAMP")
         .parquet(s"$workDir/media_in")
-      val q4 = ImageDedupStream(mediaStream)
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/media_kept")
-        .option("checkpointLocation", s"$workDir/ckpt4")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      drain(q4, "image_dedup")
-      spark.read.parquet(s"$workDir/media_kept").count()
+      landed(ImageDedupStream(mediaStream), s"$workDir/media_kept", s"$workDir/ckpt4",
+        "image_dedup").count()
     }
 
     // caption-consistency gate over the image tier: media whose caption
@@ -218,16 +219,8 @@ object RunDocPipeline {
       val vecStream = spark.readStream
         .schema("vec_id BIGINT, v ARRAY<DOUBLE>, ingest_ts TIMESTAMP")
         .parquet(s"$workDir/vec_in")
-      val q5 = VectorDedupStream(vecStream,
-          VectorDedupStream.frozenBase(spark, sfDir))
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/vec_admitted")
-        .option("checkpointLocation", s"$workDir/ckpt5")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      drain(q5, "vector_dedup")
-      spark.read.parquet(s"$workDir/vec_admitted").count()
+      landed(VectorDedupStream(vecStream, VectorDedupStream.frozenBase(spark, sfDir)),
+        s"$workDir/vec_admitted", s"$workDir/ckpt5", "vector_dedup").count()
     }
 
     // alignment-mining tier of the same ingest: the source-parity slice of
@@ -269,15 +262,7 @@ object RunDocPipeline {
       val vecStream = spark.readStream
         .schema("vec_id BIGINT, v ARRAY<DOUBLE>, ingest_ts TIMESTAMP")
         .parquet(s"$workDir/vec_in")
-      val q13 = DirGateStream(vecStream, u)
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/dir_gate")
-        .option("checkpointLocation", s"$workDir/ckpt13")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      drain(q13, "dir_gate")
-      spark.read.parquet(s"$workDir/dir_gate")
+      landed(DirGateStream(vecStream, u), s"$workDir/dir_gate", s"$workDir/ckpt13", "dir_gate")
         .filter(col("boilerplate")).count()
     }
 
@@ -288,16 +273,8 @@ object RunDocPipeline {
     val contaminated = guarded("contam_gate", 0L) {
       import graft.streaming.ContamStream
       val probes = ContamStream.frozenProbes(spark, sfDir)
-      val q9 = ContamStream(docs, probes)
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/contam_tags")
-        .option("checkpointLocation", s"$workDir/ckpt9")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      drain(q9, "contam_gate")
-      spark.read.parquet(s"$workDir/contam_tags")
-        .filter(col("contaminated")).count()
+      landed(ContamStream(docs, probes), s"$workDir/contam_tags", s"$workDir/ckpt9",
+        "contam_gate").filter(col("contaminated")).count()
     }
 
     // novelty screen of the same ingest, zero-state form: the base
@@ -309,21 +286,10 @@ object RunDocPipeline {
     val novelDocs = guarded("bloom_gate", 0L) {
       import graft.streaming.BloomStream
       val words = BloomStream.bitmapWords(spark, sfDir)
-      val q11 = BloomStream.novelty(
-          docs.filter(Exprs.arrivalSplit(col("doc_id"), 10) === 0)
-            .select("doc_id", "text", "source"), words)
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/bloom_novelty")
-        .option("checkpointLocation", s"$workDir/ckpt11")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      // check the timeout result and always stop (the q8 pairs_mined
-      // pattern): a silent timeout would count a partial novelty dir
-      // while the query keeps writing
-      drain(q11, "bloom_gate")
-      spark.read.parquet(s"$workDir/bloom_novelty")
-        .filter(col("novel_pm") >= 500).count()
+      val delta = docs.filter(Exprs.arrivalSplit(col("doc_id"), 10) === 0)
+        .select("doc_id", "text", "source")
+      landed(BloomStream.novelty(delta, words), s"$workDir/bloom_novelty", s"$workDir/ckpt11",
+        "bloom_gate").filter(col("novel_pm") >= 500).count()
     }
 
     // length-admission tier of the same ingest: the batch quantile
@@ -337,17 +303,8 @@ object RunDocPipeline {
     val lenGated = guarded("len_gate", 0L) {
       import graft.streaming.QuantileStream
       val thr = QuantileStream.frozenThresholds(spark, sfDir)
-      val q12 = QuantileStream.lenGate(
-          docs.select("doc_id", "text", "source"), thr)
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/len_gate")
-        .option("checkpointLocation", s"$workDir/ckpt12")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      drain(q12, "len_gate")
-      spark.read.parquet(s"$workDir/len_gate")
-        .filter(col("over_cap")).count()
+      landed(QuantileStream.lenGate(docs.select("doc_id", "text", "source"), thr),
+        s"$workDir/len_gate", s"$workDir/ckpt12", "len_gate").filter(col("over_cap")).count()
     }
 
     // memorization-risk tier of the same ingest: every raw arrival has
@@ -375,15 +332,8 @@ object RunDocPipeline {
     val (nbScored, nbTopBucket, nbTopCount) = guarded("nb_scoring", (0L, "none", 0L)) {
       import graft.streaming.NbStream
       val model = graft.functions.TextOps.nbFrozenModel(spark, sfDir)
-      val q6 = NbStream(docs, model)
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/nb_scored")
-        .option("checkpointLocation", s"$workDir/ckpt6")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      drain(q6, "nb_scoring")
-      val scored = spark.read.parquet(s"$workDir/nb_scored")
+      val scored = landed(NbStream(docs, model), s"$workDir/nb_scored", s"$workDir/ckpt6",
+        "nb_scoring")
       val hist = scored.groupBy("pred_bucket").count()
         .orderBy(col("count").desc, col("pred_bucket")).collect()
       (scored.count(), hist.head.getString(0), hist.head.getLong(1))

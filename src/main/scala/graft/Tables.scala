@@ -25,7 +25,7 @@ object Tables {
     * to TimestampType — MICROS currently). Reading it with an explicit
     * LongType schema always succeeds and yields the raw integer in the
     * file's unit; [[events]] normalizes to epoch-NANOS so every downstream
-    * consumer ([[graft.operators.Readings]], [[graft.sources.Layout]]) keeps
+    * consumer ([[graft.operators.Readings]]) keeps
     * one integer-arithmetic contract (`ts DIV 1e9` = epoch seconds),
     * independent of session timezone conf (works under any driver session).
     */

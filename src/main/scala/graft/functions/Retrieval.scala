@@ -177,14 +177,13 @@ object Retrieval {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** The pre-top-k (q_id, doc_id, s_int) score relation of [[bm25Incr]] —
-    * exposed so the streaming twin's parity spec can compare the full
-    * per-pair scores, not just the per-query winners.
+  /** The pre-top-k (q_id, doc_id, s_int) score relation of [[bm25Incr]],
+    * which [[bm25Compact]] also scores under refreshed statistics.
     */
-  private[graft] def bm25IncrScored(spark: SparkSession, dir: String,
-                                    probeMax: Long, k1: Double, b: Double,
-                                    maxDfFrac: Double, deltaMod: Int,
-                                    freshStats: Boolean = false): DataFrame = {
+  private def bm25IncrScored(spark: SparkSession, dir: String,
+                             probeMax: Long, k1: Double, b: Double,
+                             maxDfFrac: Double, deltaMod: Int,
+                             freshStats: Boolean = false): DataFrame = {
     val (withLen, tf) = bm25Index(spark, dir)
     val isBase = Exprs.arrivalSplit(col("doc_id"), deltaMod) =!= 0
     // FROZEN statistics: df / N / Σlen over the base split only —
@@ -212,39 +211,6 @@ object Retrieval {
           * 10000 + 0.5).cast("long"))
     cands.groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("c_int")).as("s_int"))
-  }
-
-  /** The frozen standing-query index [[Bm25Stream]] compiles into its
-    * per-arrival expressions: per query, the df-capped terms with their
-    * BASE-split df, plus the frozen (N, Σlen) scalars and the probe-id
-    * cutoff (so the stream can exclude probe self-matches itself).
-    */
-  def frozenQueries(spark: SparkSession, dir: String, probeMax: Long = 10,
-                    maxDfFrac: Double = 0.9, deltaMod: Int = 5):
-      (Seq[(Long, Seq[(String, Long)])], Long, Long, Long) = {
-    import spark.implicits._
-    val withLen = TextOps.prepared(spark, dir).select(
-      col("doc_id"),
-      filter(col("words"), w => w =!= "").as("ws"))
-      .select(col("doc_id"), col("ws"), size(col("ws")).as("len"))
-    val tf = withLen.select(col("doc_id"), col("len"), explode(col("ws")).as("w"))
-      .groupBy(col("doc_id"), col("len"), col("w"))
-      .agg(count(lit(1)).as("tf"))
-    val isBase = Exprs.arrivalSplit(col("doc_id"), deltaMod) =!= 0
-    val df = tf.filter(isBase).groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val Array(nDocs, sumLen) = withLen.filter(isBase)
-      .agg(count(lit(1)), sum(col("len"))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    val terms = tf.filter(col("doc_id") < probeMax)
-      .select(col("doc_id").as("q_id"), col("w"))
-      .join(df, "w")
-      .filter(col("df").cast("double") <= lit(maxDfFrac) * lit(nDocs.toDouble))
-      .select(col("q_id"), col("w"), col("df"))
-      .as[(Long, String, Long)].collect()
-    val byQ = terms.groupBy(_._1).map { case (q, ts) =>
-      q -> ts.map(t => (t._2, t._3)).sortBy(_._1).toSeq
-    }.toSeq.sortBy(_._1)
-    (byQ, nDocs, sumLen, probeMax)
   }
 
   def bm25IncrSql(probeMax: Long = 10, k: Int = 10, k1: Double = 1.2,

@@ -1125,9 +1125,8 @@ object TextOps {
     * the shard states (KMV: union of the k-min sets re-cut to bottom-k;
     * CMS: element-wise counter sum; Bloom: bitmap OR = position-set
     * union), and show the merged state is CELL-IDENTICAL to the
-    * single-pass sketch over the whole corpus. The streaming twins
-    * ([[graft.streaming.KmvStream]] / [[graft.streaming.CmsStream]] /
-    * [[graft.streaming.BloomStream]]) prove the same semilattice algebra
+    * single-pass sketch over the whole corpus. The streaming Bloom gate
+    * ([[graft.streaming.BloomStream]]) serves the same bitmap
     * batch-by-batch; this is the across-executor form, oracle-checked
     * (same [[graft.Exprs.hex60]] contract, no RNG — a shard is a pure
     * hash residue both engines compute).
@@ -2444,17 +2443,6 @@ object TextOps {
   // ---- MinHash signatures + LSH band candidate pairs ----
 
   private def wordHash: Column = pmod(Exprs.hex60(col("w")), lit(P))
-
-  /** Per-ROW minhash expression over the `words` array — the
-    * streaming-capable formulation of [[minhashSignatures]] (identical
-    * hashes: same [[Exprs.hex60]] word hash, same A/B/P), computed as
-    * `array_distinct → transform → array_min` so a micro-batch row needs
-    * no explode/shuffle. Spec-pinned equal to the batch relation on
-    * testdata so the tiers cannot drift.
-    */
-  private[graft] def sigArrayE(i: Int): Column =
-    array_min(transform(array_distinct(col("words")),
-      w => pmod(pmod(Exprs.hex60(w), lit(P)) * A(i) + B(i), lit(P))))
 
   /** 8-hash MinHash signature per document over the distinct word set.
     * Shared-hash construction keeps this oracle-checkable (Exprs.hex60).

@@ -6,8 +6,8 @@ package graft.multimodal
   * that needs no native codec: pixels are raw BGR triples in 4-byte-padded
   * rows, bottom-up by default (top-down when the header height is
   * negative). That makes a full decode→resample→stats pipeline runnable —
-  * and differentially testable — in any environment, where JPEG/PNG pixel
-  * decode stays behind [[Multimodal.StubDecoder]].
+  * and differentially testable — in any environment, without the entropy
+  * decoding [[Png]] and [[Jpeg]] add.
   *
   * In-memory representation: top-down row-major RGB triples
   * (`rgb[(y * width + x) * 3]` = R, then G, then B) — the conventional

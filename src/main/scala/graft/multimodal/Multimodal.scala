@@ -7,16 +7,15 @@ import graft.{Exprs, Tables}
 /** Multimodal-column plumbing: image/audio/video payloads as opaque `binary`
   * columns with typed metadata, plus batch feature extraction.
   *
-  * Decode comes in two tiers. [[HeaderDecoder]] and the pixel codecs
-  * ([[Bmp]], [[Png]], [[Jpeg]] — including full baseline JPEG entropy
-  * decode) are REAL: pure-JVM parsing of actual bytes, no native bindings.
-  * Audio/video SAMPLE decode (MP3/H.264) would need bindings this
-  * container lacks, so that step is a clearly-marked deterministic stub
-  * (MP3 frame HEADERS are real — [[Mp3]])
-  * ([[StubDecoder]]). Both run through the same Spark-side shape —
-  * binary+metadata schema, partition-wise batch UDF (`mapPartitions` over
-  * a typed Dataset — the Scala analog of `mapInPandas`), and a
-  * column-level metadata path that stays inside whole-stage codegen.
+  * Decode is REAL: [[HeaderDecoder]] and the pixel codecs ([[Bmp]],
+  * [[Png]], [[Jpeg]] — including full baseline JPEG entropy decode) parse
+  * actual bytes in pure JVM code, no native bindings. Audio/video SAMPLE
+  * decode (MP3/H.264) would need native codec bindings and is not offered
+  * (MP3 frame HEADERS are real — [[Mp3]]). Decode runs through
+  * one Spark-side shape — binary+metadata schema, partition-wise batch UDF
+  * (`mapPartitions` over a typed Dataset — the Scala analog of
+  * `mapInPandas`) — beside a column-level metadata path that stays inside
+  * whole-stage codegen.
   *
   * There is no binary table in the testdata, so payloads are synthesized
   * deterministically from `documents.text` (UTF-8 bytes) — the plumbing is
@@ -31,10 +30,6 @@ object Multimodal {
       media_id: Long, kind: String, payload: Array[Byte],
       declared_w: Int, declared_h: Int)
 
-  final case class MediaFeatures(
-      media_id: Long, kind: String, byte_len: Int,
-      width: Int, height: Int, n_frames: Int, checksum: Long)
-
   /** documents → synthetic media table (binary payload column). */
   def mediaTable(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(
@@ -46,30 +41,6 @@ object Multimodal {
       (col("doc_id") % 640 + 1).cast("int").as("declared_w"),
       (col("doc_id") % 480 + 1).cast("int").as("declared_h"))
 
-  /** The decode stub for the formats still lacking a pure-JVM codec here
-    * (MP3 / H.264 — images are fully real via [[Bmp]]/[[Png]]/[[Jpeg]]):
-    * in production this calls ffmpeg-style bindings per batch; here it
-    * derives deterministic fake features from the bytes so tests can
-    * assert exact values. Marked loudly so no one mistakes it for a real
-    * decoder.
-    */
-  object StubDecoder {
-    /** STUB — stands in for real image/audio decode (no codecs in env). */
-    def decode(r: MediaRecord): MediaFeatures = {
-      val bytes = r.payload
-      var checksum = 0L
-      var i = 0
-      while (i < bytes.length) { checksum = checksum * 31 + (bytes(i) & 0xff); i += 1 }
-      MediaFeatures(
-        media_id = r.media_id, kind = r.kind, byte_len = bytes.length,
-        width = r.declared_w, height = r.declared_h,
-        // ceil(len/1000) via positive-operand integer math: 0 frames for an
-        // empty payload ((len-1)/1000+1 would claim 1 phantom frame)
-        n_frames = if (r.kind == "video") (bytes.length + 999) / 1000 else 1,
-        checksum = checksum)
-    }
-  }
-
   /** What a REAL decode extracts from container headers: pixel dims for
     * images, sample rate / channels / bit depth for audio. `format` is the
     * detected container ("bmp", "wav", "unknown"), independent of the
@@ -79,15 +50,14 @@ object Multimodal {
       media_id: Long, format: String, width: Int, height: Int,
       sample_rate: Int, channels: Int, bits_per_sample: Int)
 
-  /** A real (non-stub) decoder for the container formats that need no
+  /** A real decoder for the container formats that need no
     * native codec: BMP (BITMAPINFOHEADER pixel dims), PNG (IHDR), canonical
     * RIFF/WAVE (`fmt ` chunk walk → sample rate, channels, bit depth), and
     * JPEG pixel DIMENSIONS (marker walk to the first SOF segment — frame
     * size lives in the entropy-free header, so no codec is needed to read
     * it). Pure-JVM byte parsing, so the `mapPartitions` batch-decode path
-    * runs against REAL media bytes in any environment; pixel/sample DECODE
-    * of compressed formats (JPEG/MP3/H.264) still requires the codec
-    * bindings [[StubDecoder]] stands in for.
+    * runs against REAL media bytes in any environment; sample DECODE of
+    * compressed audio/video (MP3/H.264) still requires codec bindings.
     */
   object HeaderDecoder {
     private def u16(b: Array[Byte], i: Int): Int =
@@ -157,30 +127,16 @@ object Multimodal {
     }
   }
 
-  /** Real header decode over a media Dataset — identical plan shape to
-    * [[extractFeatures]] (partition-wise batch, one decoder per partition),
-    * but [[HeaderDecoder]] parses actual bytes.
+  /** Real header decode over a media Dataset — the Scala analog of a
+    * Pandas `mapInPandas` UDF: partition-wise batch, records streamed
+    * through one [[HeaderDecoder]] per partition, which parses actual bytes.
     */
   def decodeHeaders(media: Dataset[MediaRecord]): Dataset[DecodedMedia] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.map(HeaderDecoder.decode))
   }
 
-  /** Partition-wise batch feature extraction — the Scala analog of a Pandas
-    * `mapInPandas` UDF: one decoder instance per partition, records streamed
-    * through it. This is the pattern a real decode (model inference, codec
-    * calls) plugs into without changing the plan shape.
-    */
-  def extractFeatures(spark: SparkSession, dir: String): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    mediaTable(spark, dir).as[MediaRecord]
-      .mapPartitions { it =>
-        // per-partition setup (a real decoder would init codecs here, once)
-        it.map(StubDecoder.decode)
-      }
-  }
-
-  /** Pure-column metadata extraction (no stub involved): byte length, md5
+  /** Pure-column metadata extraction (no decoder involved): byte length, md5
     * content hash, frame-sampling plan. Oracle-checkable in DuckDB because
     * the payload bytes are the UTF-8 text bytes on both sides.
     */
@@ -200,7 +156,7 @@ object Multimodal {
 
   /** Frame-sampling plan for video payloads: one row per sampled frame with
     * its byte offset — the deterministic "which frames would we decode"
-    * stage that precedes the (stubbed) decode itself. Pure columns
+    * stage that precedes the frame decode itself. Pure columns
     * (explode over a sequence), oracle-checkable.
     */
   def frameSample(spark: SparkSession, dir: String, frameBytes: Int = 1000): DataFrame =
@@ -225,7 +181,7 @@ object Multimodal {
 
   /** Resize plan for image payloads: fit into a target box preserving
     * aspect ratio — the deterministic geometry stage of a resize pipeline
-    * (the pixel resample itself lives behind the decode stub). Integer
+    * (the pixel resample itself is [[pixelStats]]' job). Integer
     * inputs → double scale → floor'd output dims: bit-identical across
     * engines.
     */

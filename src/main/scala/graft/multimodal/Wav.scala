@@ -2,10 +2,9 @@ package graft.multimodal
 
 /** Pure-JVM canonical RIFF/WAVE PCM codec — the audio analog of
   * [[Bmp]]/[[Png]]/[[Jpeg]]: real bytes, real container walk, no native
-  * binding needed because PCM is uncompressed. Retires the decode stub for
-  * the uncompressed audio container; MP3 sample decode stays stubbed
-  * (frame headers are real — [[Mp3]])
-  * ([[Multimodal.StubDecoder]]).
+  * binding needed because PCM is uncompressed. MP3 sample decode would
+  * need codec bindings and is not offered (frame headers are real —
+  * [[Mp3]]).
   *
   * Decoder: chunk walk (2-byte aligned, `fmt ` anywhere before `data`),
   * PCM format tag 1 only, 8-bit unsigned / 16-bit signed little-endian,

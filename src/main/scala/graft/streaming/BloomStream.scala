@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * the plan — 8 KB at the default m=65536 — so the probe is a row-local
   * codegen'd expression chain: no join, no shuffle, no watermark and ZERO
   * keyed state (the strongest member of the streaming admission matrix's
-  * frozen-index family; Bm25Stream/ContamStream at least carry a
+  * frozen-index family; QuantileStream's length gate at least carries a
   * broadcast relation — here the index fits in the expression tree).
   *
   * Per arrival it emits the doc's distinct-3-shingle count, how many the

@@ -33,7 +33,7 @@ import graft.Exprs
   * refreshing the benchmark set is a restart with new literals (frozen-
   * index versioning). A benchmark set too large to compile into literals
   * is the signal to switch to the stream-static join form (the
-  * [[NearDupStream]] machinery); the contract stays identical.
+  * [[DupSpanStream]] machinery); the contract stays identical.
   *
   * `docs` must carry (doc_id, text, ingest_ts).
   */

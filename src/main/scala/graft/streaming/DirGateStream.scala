@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 
 /** In-stream anisotropy guard — the VECTOR member of the frozen-artifact
-  * gate family ([[Bm25Stream]] frozen stats, [[NbStream]] frozen model,
-  * [[BloomStream]] frozen bitmap, [[QuantileStream.lenGate]] frozen
-  * percentiles): the batch power-iteration top direction
+  * gate family ([[NbStream]] frozen model, [[BloomStream]] frozen bitmap,
+  * [[QuantileStream.lenGate]] frozen percentiles): the batch
+  * power-iteration top direction
   * ([[graft.functions.VectorOps.powerIterTop]], the `v_anisotropy`
   * monitor's direction) is FROZEN into a broadcast literal and every
   * arriving vector gets a row-local boilerplate-direction score —

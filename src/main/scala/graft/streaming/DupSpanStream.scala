@@ -15,13 +15,13 @@ import graft.functions.TextOps
   *
   * Mechanism: the frozen index is corpus-sized (every distinct base
   * shingle), far past the [[ContamStream]] literal-compilation budget, so
-  * this is the stream-STATIC join form ([[NearDupStream]]'s machinery) run
-  * inside `foreachBatch`: per micro-batch, positioned shingles of the
+  * this is the stream-STATIC join form ([[VectorDedupStream]]'s machinery)
+  * run inside `foreachBatch`: per micro-batch, positioned shingles of the
   * arrivals equi-join the frozen shingle relation, cut positions span-merge
   * with the batch tier's own [[TextOps.spanFold]] — the tiers share the
   * actual code, so they cannot drift.
   *
-  * Scope split, deliberately mirroring [[NearDupStream]]: the stream cuts
+  * Scope split, deliberately mirroring [[VectorDedupStream]]: the stream cuts
   * against the FROZEN base only; runs duplicated WITHIN the increment
   * (two arrivals sharing a new run) are the batch compaction's job
   * ([[TextOps.dupSpansIncr]]'s within-delta class) — cross-arrival shingle

@@ -25,7 +25,7 @@ import graft.functions.TextOps
   * scoring against a broadcast-sized model is strictly better.)
   *
   * Tokenization is the shared `normText → split` construction
-  * ([[TextOps.prepared]]'s columns, the NearDupStream pattern), so the
+  * ([[TextOps.prepared]]'s columns, the ContamStream pattern), so the
   * tiers cannot drift; with a lossless model (topK ≥ |V|) the stream's
   * predictions are spec-pinned identical to the batch classifier.
   *

@@ -40,7 +40,7 @@ object QuantileStream {
     * estimate per source, COLLECTED to a |sources|-row local relation —
     * the quantile member of the family's freeze convention
     * ([[DirGateStream.frozenDirection]], [[BloomStream.bitmapWords]],
-    * [[ContamStream.frozenProbes]], the [[Bm25Stream]] frozen tuple).
+    * [[ContamStream.frozenProbes]]).
     * The collect matters, not just the semantics: a LAZY sketch
     * DataFrame passed into the stream-static join re-executes the
     * ENTIRE sketch build chain (per-source windows + their shuffles over
@@ -62,8 +62,8 @@ object QuantileStream {
 
   /** The sketch's ADMISSION action, in-stream — the streaming twin of
     * [[graft.functions.TextOps.lenCap]] and the quantile member of the
-    * frozen-artifact gate family ([[Bm25Stream]] frozen stats,
-    * [[NbStream]] frozen model, [[BloomStream]] frozen bitmap): the batch
+    * frozen-artifact gate family ([[NbStream]] frozen model,
+    * [[BloomStream]] frozen bitmap): the batch
     * sketch's p990 estimate per source is FROZEN into a static
     * (source, thr) relation ([[frozenThresholds]] — pass that, not a
     * lazy sketch DataFrame, or every micro-batch re-runs the sketch

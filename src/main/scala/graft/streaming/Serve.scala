@@ -26,11 +26,12 @@ import graft.operators.DashboardAggs
   *    inside the pipeline's own `foreachBatch` epoch (same records, same
   *    tagging);
   *  - a JDK `com.sun.net.httpserver` endpoint serves the snapshot to
-  *    polling clients and accepts the playback-speed POST, feeding the
-  *    SAME `AtomicReference` the S4 dynamic replay reads
-  *    ([[graft.sources.Ingest.dynamicRateReplay]]) — so the reference's
-  *    full control loop (client → backend → config → producer pace) is
-  *    runnable end to end;
+  *    polling clients and accepts the playback-speed POST into an
+  *    `AtomicReference` of the kind the S4 dynamic replay reads
+  *    ([[graft.sources.Ingest.dynamicRateReplay]]). No shipped main wires
+  *    the two together: each half of the reference's control loop (client
+  *    → backend → config → producer pace) has its own spec, and the whole
+  *    loop is not run end to end;
   *  - the same epoch folds the analytics the reference's browser computes
   *    (stats, geo-cluster max, cooldown alerts) into [[Views]], served at
   *    `/api/dashboard`: each is its `DashboardAggs` batch twin over the
@@ -112,11 +113,12 @@ object Serve {
         while (windows.size > cap) windows.remove(windows.firstKey)
         // the cohort window delivers rows in event-time order behind the
         // pipeline's watermark: once a newer bucket fired, no later epoch
-        // reaches an older one, whose keys stay only while served
+        // reaches an older one, whose keys stay only while served. A key
+        // without a bucket (its reading's time did not parse) bypasses the
+        // watermark and has no bucket order, so it too stays only while served
         val served = newest(alerts.values).toSet
-        alerts.values.flatMap(_.bucket).maxOption.foreach { b =>
-          alerts.filterInPlace { case (_, a) => a.bucket.forall(_ >= b) || served(a) }
-        }
+        val last = alerts.values.flatMap(_.bucket).maxOption
+        alerts.filterInPlace { case (_, a) => a.bucket.exists(last.contains) || served(a) }
       }
     }
 

@@ -106,23 +106,6 @@ class GatePlanSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("bm25 scorer: literal standing queries, zero state, zero exchange") {
-    import graft.streaming.Bm25Stream
-    import graft.functions.Retrieval
-    val frozen = Retrieval.frozenQueries(spark, sf("sf0.01"))
-    val in = MemoryStream[(Long, String, java.sql.Timestamp)]
-    in.addData(Seq((100L, "a b c", java.sql.Timestamp.valueOf("2026-01-01 10:00:00"))))
-    val out = Bm25Stream(in.toDF().toDF("doc_id", "text", "ingest_ts"), frozen)
-    val q = out.writeStream.format("memory").queryName("gp_bm25")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val (plan, nState) = lastPlan(q)
-      assertStateless(plan, nState, "bm25 scorer")
-      assert(!plan.contains("Exchange"), s"bm25 scorer must be exchange-free:\n$plan")
-    } finally q.stop()
-  }
-
   test("frozen static sides are materialized at the freeze point — no build chain left in their plans") {
     // The convention the round-20 fixes restored: a gate's "frozen"
     // relation must be a snapshot READ (LocalTableScan, checkpointed
@@ -141,13 +124,12 @@ class GatePlanSpec extends SparkSuite {
         assert(plan.contains("Scan ExistingRDD") || plan.contains("LocalTableScan"),
           s"$name must read materialized state:\n$plan")
     }
-    import graft.streaming.{DupSpanStream, MarginStream, NearDupStream,
-      QuantileStream, VectorDedupStream}
+    import graft.streaming.{DupSpanStream, MarginStream, QuantileStream,
+      VectorDedupStream}
     assertSnapshot(DupSpanStream.frozenShingles(spark, sf()), "frozenShingles")
     val (cents, target) = MarginStream.frozenTarget(spark, sf())
     assertSnapshot(cents, "frozenTarget centroids")
     assertSnapshot(target, "frozenTarget side")
-    assertSnapshot(NearDupStream.frozenBase(spark, sf()), "NearDup frozenBase")
     assertSnapshot(QuantileStream.frozenThresholds(spark, sf()), "frozenThresholds")
     // VectorDedupStream's base is scan + row-local projection BY DESIGN
     // (the snapshot-read posture without a copy) — still must hold no
@@ -228,8 +210,8 @@ object GatePlanSpec {
     */
   val snapshotAuditedFrozen: Set[String] = Set(
     "DupSpanStream.frozenShingles", "MarginStream.frozenTarget",
-    "NearDupStream.frozenBase", "QuantileStream.frozenThresholds",
-    "VectorDedupStream.frozenBase", "VideoDedupStream.frozenBaseFrames")
+    "QuantileStream.frozenThresholds", "VectorDedupStream.frozenBase",
+    "VideoDedupStream.frozenBaseFrames")
   val literalFrozen: Set[String] = Set(
     "ContamStream.frozenProbes", "DirGateStream.frozenDirection")
 }

@@ -615,20 +615,6 @@ class OperatorsSpec extends SparkSuite {
     assert(rows.exists(_.getLong(3) > 0))
   }
 
-  test("multimodal stub decode: deterministic features via mapPartitions") {
-    val feats = Multimodal.extractFeatures(spark, sf()).collect()
-    assert(feats.nonEmpty)
-    val byId = feats.map(f => f.media_id -> f).toMap
-    // video kind gets frame sampling (ceil(len/1000), 0 for empty); others single-frame
-    assert(feats.filter(_.kind == "video").forall(f => f.n_frames == (f.byte_len + 999) / 1000))
-    assert(feats.filter(_.kind != "video").forall(_.n_frames == 1))
-    // checksum is the polynomial byte hash — recompute one exactly
-    val doc0 = spark.read.parquet(s"${sf()}/documents.parquet")
-      .where(col("doc_id") === 0).head().getAs[String]("text")
-    val expect = doc0.getBytes("UTF-8").foldLeft(0L)((a, b) => a * 31 + (b & 0xff))
-    assert(byId(0L).checksum == expect)
-  }
-
   test("dupClusters unions overlapping minhash cliques to one representative") {
     // docs 1-2 share a full word set, 2-3 share one band's worth of hashes
     // only if the sets are identical — so craft: 1≡2 exact, 3≡4 exact,
@@ -2257,17 +2243,6 @@ class OperatorsSpec extends SparkSuite {
       s"sourceA drift wrong: ${got("sourceA")}")
     assert(got("sourceB") == ((2L, 0L, 500L, -1L, None)),
       s"sourceB sentinel wrong: ${got("sourceB")}")
-  }
-
-  test("per-row minhash expression equals the batch explode/groupBy signatures") {
-    import functions.TextOps
-    val batch = TextOps.minhashSignatures(spark, sf()).collect()
-      .map(r => r.getLong(0) -> (1 to 8).map(r.getLong)).toMap
-    val perRow = (0 until 8).foldLeft(TextOps.prepared(spark, sf()))(
-      (d, i) => d.withColumn(s"m$i", TextOps.sigArrayE(i)))
-      .select(col("doc_id") +: (0 until 8).map(i => col(s"m$i")): _*)
-      .collect().map(r => r.getLong(0) -> (1 to 8).map(r.getLong)).toMap
-    assert(perRow == batch, "streaming-capable signature formulation drifted from batch")
   }
 
   test("IVF+SQ composed search: equals brute-force probe restriction + SQ ranking") {

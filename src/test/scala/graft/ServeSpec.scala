@@ -191,6 +191,18 @@ class ServeSpec extends SparkSuite {
       "cooldown keys of older buckets must leave the fold's state")
   }
 
+  test("alerts of readings whose time does not parse stay within cap") {
+    // valid readings without a parseable captured_time fire with no
+    // cooldown bucket; twelve distinct locations over three epochs
+    val epochs = (0 until 12).map(i => rec("not-a-time", 60 + i, lat = 30 + i * 0.01))
+      .grouped(4).toSeq
+    val snap = new Serve.Snapshot(cap = 3)
+    epochs.zipWithIndex.foreach { case (lines, id) => Serve.foldEpoch(routed(lines), snap, id) }
+    val v = snap.views
+    assert(v.totals.n == 12 && v.alerts.size == 3 && v.alerts.forall(_.bucket.isEmpty), s"$v")
+    assert(snap.residentAlerts <= 3, s"${snap.residentAlerts} cooldown keys resident")
+  }
+
   test("a restart from the checkpoint with the same Snapshot serves what one run serves") {
     def run(in: String, out: String, ckpt: String, snap: Serve.Snapshot): Unit =
       RadiationPipeline.run(spark, Transport.Dir(in, out), ckpt, Thresholds(), bounded = true,

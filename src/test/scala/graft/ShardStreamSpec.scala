@@ -213,4 +213,19 @@ class ShardStreamSpec extends SparkSuite {
     assert(totals(arbitrary) == totals(batchManifest),
       "corpus-level totals diverge under an arbitrary epoch split")
   }
+
+  test("swapIn: a failed swap-in throws and the original stays readable at path") {
+    val root = java.nio.file.Files.createTempDirectory("swap").toString
+    val path = s"$root/t"
+    spark.range(5).toDF("id").write.parquet(path)
+    val e = intercept[java.io.IOException](LocalFs.swapIn(s"$root/missing.tmp", path))
+    assert(e.getMessage.contains("swap-in failed"))
+    assert(spark.read.parquet(path).count() == 5)
+    assert(!new java.io.File(s"$path.old").exists())
+    // a swap that succeeds replaces the contents and leaves neither side copy
+    spark.range(7).toDF("id").write.parquet(s"$root/t.tmp")
+    LocalFs.swapIn(s"$root/t.tmp", path)
+    assert(spark.read.parquet(path).count() == 7)
+    assert(!new java.io.File(s"$path.old").exists() && !new java.io.File(s"$root/t.tmp").exists())
+  }
 }
