@@ -1,16 +1,21 @@
 #!/usr/bin/env python3
-"""List the src/main files that no other program code reaches.
+"""List the src/main files and members that no other program code reaches.
 
 A file is unreached when none of its top-level names (object, class,
 trait, case class) is mentioned, outside comments, in any other
 src/main file or in perfbench/src. Files that define a `main` are entry
-points and are skipped. Mentions in tests do not count: code that only a
-spec calls is not run by the program.
+points and are skipped. A member is unreached when a non-`override`
+`def`/`val`/`var` of an object or class (nested ones included; `main`
+and `apply` excepted) is mentioned nowhere outside its own definition:
+not elsewhere in its file, not in another src/main file, not in
+perfbench/src. Mentions in tests do not count: code that only a spec
+calls is not run by the program.
 
 Usage: python3 scripts/unreached.py [repo_root]
 
-Prints each unreached file (relative to src/main/scala/graft) and exits 1
-unless that list equals ALLOWED below, where each kept file states why.
+Prints each unreached file (relative to src/main/scala/graft) and member
+(`file: Owner.name`) and exits 1 unless those lists equal ALLOWED and
+ALLOWED_MEMBERS below, where each kept entry states why.
 """
 import pathlib
 import re
@@ -23,10 +28,48 @@ ALLOWED = {
         "speed-controlled replay); the demos replay files in its place",
 }
 
+_REFERENCE = "reference implementation a spec compares the production form against"
+_INGEST = "member of sources/Ingest.scala, the allowlisted producer above"
+# "file: Owner.name" -> why it stays although nothing in the program uses it
+ALLOWED_MEMBERS = {
+    "functions/VectorOps.scala: VectorOps.dotBuiltin": _REFERENCE,
+    "functions/Bpe.scala: Bpe.segmentWordsNested": _REFERENCE,
+    "functions/Bpe.scala: Bpe.trainBatched":
+        "batched-merge BPE trainer; specs hold it to the per-merge `train`",
+    "functions/MixOps.scala: MixOps.qualityTiersWindowed": _REFERENCE,
+    "functions/TextOps.scala: TextOps.compressRatio":
+        "zlib ratio that specs cross-foot against the oracle-checked compressBytes",
+    "functions/TextOps.scala: TextOps.compressRatioExpr": "compressRatio's column",
+    "multimodal/Multimodal.scala: Multimodal.decodeHeaders":
+        "header decoder the codec specs cross-check the production decoders with",
+    "functions/VectorOps.scala: VectorOps.kmeansTrain":
+        "Table-path trainer MaterializeSpec pins (fault-tolerant materialization)",
+    "functions/VectorOps.scala: VectorOps.pqTrainCodebook":
+        "Table-path trainer MaterializeSpec pins (fault-tolerant materialization)",
+    "functions/VectorOps.scala: VectorOps.annPqWith":
+        "external-codebook PQ search; MaterializeSpec pins its codebook check",
+    "SparkEntry.scala: SparkEntry.entry":
+        "the flagship parse-validate-cohort query in one plan (SURVEY 7.3); OperatorsSpec runs it",
+    "operators/Skew.scala: Skew.saltedJoin":
+        "salted skew join (README skew row); SkewRetentionSpec holds it to the plain join",
+    "sources/Ingest.scala: Ingest.readCsv": _INGEST,
+    "sources/Ingest.scala: Ingest.writeKeyed": _INGEST,
+    "sources/Ingest.scala: Ingest.rateReplay": _INGEST,
+    "sources/Ingest.scala: Ingest.speedListener": _INGEST,
+    "streaming/Serve.scala: Serve.Snapshot.residentAlerts":
+        "test hook: ServeSpec reads the resident alert count against the cap",
+}
+
 TOP_LEVEL = re.compile(
     r"^(?:(?:final|sealed|abstract|case|implicit|private(?:\[\w+\])?)\s+)*"
     r"(?:object|class|trait)\s+(\w+)", re.M)
 MAIN = re.compile(r"\bdef\s+main\s*\(")
+OWNER = re.compile(
+    r"^(\s*)(?:(?:final|sealed|abstract|case|implicit|private(?:\[\w+\])?)\s+)*"
+    r"(?:object|class|trait)\s+(\w+)")
+MEMBER = re.compile(
+    r"^(\s+)(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|implicit\s+|lazy\s+)*"
+    r"(?:def|val|var)\s+(\w+)")
 
 
 def strip_comments(src):
@@ -68,6 +111,40 @@ def code(paths):
     return {p: strip_comments(p.read_text(encoding="utf-8")) for p in paths}
 
 
+def members(text):
+    """(owner path, name, first line, end line) of each direct member of an
+    object or class: a def/val/var indented two past its owner's line. Its
+    definition runs until the next line indented no deeper than itself that
+    is not a closing bracket or a continued call chain."""
+    lines = text.split("\n")
+    owners = []  # (indent, name) of the enclosing objects and classes
+    for i, line in enumerate(lines):
+        if not line.strip():
+            continue
+        indent = len(line) - len(line.lstrip())
+        while owners and owners[-1][0] >= indent and not line.lstrip().startswith(("}", ")")):
+            owners.pop()
+        o = OWNER.match(line)
+        if o:
+            owners.append((len(o.group(1)), o.group(2)))
+            continue
+        m = MEMBER.match(line)
+        if not m or not owners or len(m.group(1)) != owners[-1][0] + 2:
+            continue
+        if m.group(2) in ("main", "apply"):
+            continue
+        end = i + 1
+        while end < len(lines):
+            rest = lines[end]
+            if rest.strip():
+                depth = len(rest) - len(rest.lstrip())
+                if depth < len(m.group(1)) or (depth == len(m.group(1)) and
+                        not rest.lstrip().startswith(("}", ")", "."))):
+                    break
+            end += 1
+        yield ".".join(n for _, n in owners), m.group(2), i, end
+
+
 def main():
     root = pathlib.Path(sys.argv[1] if len(sys.argv) > 1 else ".")
     base = root / "src/main/scala/graft"
@@ -81,12 +158,25 @@ def main():
         others = [t for p, t in program.items() if p != path] + list(bench.values())
         if not any(re.search(rf"\b{re.escape(n)}\b", t) for n in names for t in others):
             unreached.append(path.relative_to(base).as_posix())
+    unused = []
+    for path, text in program.items():
+        rel = path.relative_to(base).as_posix()
+        lines = text.split("\n")
+        others = [t for p, t in program.items() if p != path] + list(bench.values())
+        for owner, name, first, end in members(text):
+            outside = "\n".join(lines[:first] + lines[end:])
+            pat = re.compile(rf"\b{re.escape(name)}\b")
+            if not any(pat.search(t) for t in [outside] + others):
+                unused.append(f"{rel}: {owner}.{name}")
     for f in unreached:
         print(f"{f}: {ALLOWED.get(f, 'UNREACHED (not in the allowlist)')}")
-    stale = sorted(set(ALLOWED) - set(unreached))
+    for m in unused:
+        print(f"{m}: {ALLOWED_MEMBERS.get(m, 'UNREACHED (not in the allowlist)')}")
+    stale = sorted((set(ALLOWED) - set(unreached)) | (set(ALLOWED_MEMBERS) - set(unused)))
     for f in stale:
         print(f"{f}: in the allowlist but reached (or gone); drop its entry")
-    return 0 if set(unreached) == set(ALLOWED) else 1
+    ok = set(unreached) == set(ALLOWED) and set(unused) == set(ALLOWED_MEMBERS)
+    return 0 if ok else 1
 
 
 if __name__ == "__main__":

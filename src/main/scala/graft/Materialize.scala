@@ -15,19 +15,15 @@ object Materialize {
   /** `localCheckpoint(eager = true)`: executor-local blocks. Fastest, and
     * right for single-node and verification runs — but NOT fault-tolerant:
     * on a cluster, losing an executor loses its blocks and fails the query
-    * instead of recomputing them.
+    * instead of recomputing them. Inside a [[SharedRel.capture]] the plan
+    * the checkpoint ran is recorded.
     */
   case object Local extends Materialize {
-    def apply(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
-  }
-
-  /** No-op: keep the full lineage live. NOT for production iteration
-    * (lineage grows per round) — exists so plan audits can explain the
-    * per-round shape that `Local`/`Table` would otherwise hide behind a
-    * checkpoint scan.
-    */
-  case object Passthrough extends Materialize {
-    def apply(df: DataFrame): DataFrame = df
+    def apply(df: DataFrame): DataFrame = {
+      val out = df.localCheckpoint(eager = true)
+      SharedRel.record(df)
+      out
+    }
   }
 
   /** Write to a parquet dir under `dir` (one subdir per materialization)
@@ -51,14 +47,16 @@ object Materialize {
   * from them; recomputing + re-materializing the identical deterministic
   * relation inside each query is pure waste, and reuse is value-neutral.
   *
-  * [[once]] is the ONE place the memo policy lives (and [[apply]] goes
-  * through it): only `Materialize.Local` memoizes — a `Table(...)`
-  * materialization is an explicit caller-owned location, not a query
-  * cache, and `Passthrough` keeps the lineage live for plan audits.
-  * Operators take a `mat` parameter only on the chains a non-`Local`
-  * caller reaches (the fault-tolerant `Table` path, the plan audits);
-  * everywhere else they pass `Materialize.Local`. Assumes `dir`
-  * contents are immutable within a session (the testdata contract).
+  * [[apply]] is the ONE place the memo policy lives: only
+  * `Materialize.Local` memoizes — a `Table(...)` materialization is an
+  * explicit caller-owned location, not a query cache. Operators take a
+  * `mat` parameter only on the chains the fault-tolerant `Table` path
+  * reaches; everywhere else they pass `Materialize.Local`. [[once]]
+  * memoizes any other per-key result (a tuple of relations, a side-effect
+  * scaffold). [[capture]] reads back the plans the `Local` builds actually
+  * ran, which is how plan audits see a shared build behind its checkpoint
+  * scan. Assumes `dir` contents are immutable within a session (the
+  * testdata contract).
   * Entries are keyed on the session OBJECT through a WeakHashMap (an
   * identityHashCode string key could collide a new session with a stopped
   * one and hand back a DataFrame bound to a dead block manager). NOTE the
@@ -71,6 +69,7 @@ object Materialize {
   */
 object SharedRel {
   import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.SparkPlan
 
   private val memo = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
@@ -104,25 +103,26 @@ object SharedRel {
     */
   def buildSeconds(spark: SparkSession): Double = buildBreakdown(spark).map(_._2).sum
 
-  /** Build-nesting depth, per thread: a memo-miss build may itself trigger
-    * further memo-miss builds (freezeBaseState's first call builds the
-    * nearDupLsh scaffold, etc.), and the OUTER build's wall-clock already
-    * contains the inner ones' — adding both would double-count, and Bench
-    * would then subtract more than the true build time from the triggering
-    * query (masked by its `.max(0.0)`), over-reporting `shared_build`.
-    * Only the outermost frame adds to [[buildBreakdown]].
+  /** Enclosing memo-miss build keys, innermost first, per thread: a build
+    * may itself trigger further memo-miss builds (freezeBaseState's first
+    * call builds the nearDupLsh scaffold, etc.), and the OUTER build's
+    * wall-clock already contains the inner ones' — adding both would
+    * double-count, and Bench would then subtract more than the true build
+    * time from the triggering query (masked by its `.max(0.0)`),
+    * over-reporting `shared_build`. Only the outermost frame adds to
+    * [[buildBreakdown]]; the innermost labels what [[capture]] records.
     */
-  private val buildDepth = new ThreadLocal[Integer] {
-    override def initialValue(): Integer = 0
+  private val building = new ThreadLocal[List[String]] {
+    override def initialValue(): List[String] = Nil
   }
 
   private def timed[A](spark: SparkSession, key: String)(build: => A): A = {
-    val depth = buildDepth.get()
-    buildDepth.set(depth + 1)
+    val outer = building.get()
+    building.set(key :: outer)
     val t0 = System.nanoTime()
     try {
       val built = build
-      if (depth == 0) {
+      if (outer.isEmpty) {
         val secs = (System.nanoTime() - t0) / 1e9
         buildByKey.synchronized {
           buildByKey.computeIfAbsent(spark,
@@ -130,10 +130,55 @@ object SharedRel {
         }.merge(key, secs, (a, b) => a + b)
       }
       built
-    } finally buildDepth.set(depth)
+    } finally building.set(outer)
   }
 
-  /** Memoize-or-build with a get/putIfAbsent double-check instead of
+  /** The open [[capture]] on this thread: its session and what it has
+    * recorded so far; null outside a capture, so nothing is kept then.
+    */
+  private val capturing =
+    new ThreadLocal[(SparkSession, collection.mutable.ArrayBuffer[(String, SparkPlan)])]
+
+  /** Called by `Materialize.Local` after its eager checkpoint ran `df`. */
+  private[graft] def record(df: DataFrame): Unit = {
+    val open = capturing.get()
+    if (open != null && (df.sparkSession eq open._1))
+      open._2 += (building.get().headOption.getOrElse("") ->
+        df.queryExecution.executedPlan)
+  }
+
+  /** Runs `body` and returns its result with the executed plan of every
+    * `Materialize.Local` materialization it ran on this thread over
+    * `spark`, in run order, each labelled with the innermost enclosing
+    * memo-miss key ("" for a checkpoint outside any shared build, e.g. a
+    * per-round one). Shared builds and per-round checkpoints run eagerly
+    * while a query is constructed, so this adds no Spark job; a memo hit
+    * runs nothing and records nothing. On a fresh `spark.newSession()`
+    * the memo is empty, so every shared build a call needs shows up here.
+    */
+  def capture[A](spark: SparkSession)(body: => A): (A, Seq[(String, SparkPlan)]) = {
+    val outer = capturing.get()
+    val runs = collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
+    capturing.set((spark, runs))
+    try (body, runs.toSeq)
+    finally capturing.set(outer)
+  }
+
+  /** The relation `build` materialized by `mat`, memoized under `key`
+    * when `mat` is `Local` (see [[once]]).
+    */
+  def apply(spark: SparkSession, key: String,
+            mat: Materialize)(build: => DataFrame): DataFrame =
+    if (mat == Materialize.Local) once(spark, key)(mat(build)) else mat(build)
+
+  /** Once-per-session result, any type — a relation, a tuple of relations,
+    * or a SIDE-EFFECT scaffold (e.g. writing a topic dir a query then
+    * reads back): `build` runs on the first call for `key`, its result is
+    * memoized, and its cost lands in [[buildSeconds]] so Bench charges it
+    * to the `shared_build` row — the query's own timed window then
+    * measures the mechanism the query is about, not setup I/O.
+    *
+    * Memoize-or-build with a get/putIfAbsent double-check instead of
     * computeIfAbsent: a build may itself populate OTHER SharedRel keys
     * (freezeBaseState builds the contamination index, etc.), and a
     * reentrant computeIfAbsent on one ConcurrentHashMap throws "Recursive
@@ -141,7 +186,7 @@ object SharedRel {
     * landmine. The cost is a possible duplicate build under a concurrent
     * race (one result discarded — value-neutral, both deterministic).
     */
-  private def getOrBuild[A](spark: SparkSession, key: String)(build: => A): A = {
+  def once[A](spark: SparkSession, key: String)(build: => A): A = {
     val m = forSession(spark)
     val existing = m.get(key)
     if (existing != null) existing.asInstanceOf[A]
@@ -151,23 +196,4 @@ object SharedRel {
       (if (prev != null) prev else built).asInstanceOf[A]
     }
   }
-
-  /** The relation `build` materialized by `mat`, memoized under `key`
-    * when `mat` is `Local` (see [[once]]).
-    */
-  def apply(spark: SparkSession, key: String,
-            mat: Materialize)(build: => DataFrame): DataFrame =
-    once(spark, key, mat)(mat(build))
-
-  /** Once-per-session result, any type — a relation, a tuple of relations,
-    * or a SIDE-EFFECT scaffold (e.g. writing a topic dir a query then
-    * reads back): under `Local`, `build` runs on the first call for `key`,
-    * its result is memoized, and its cost lands in [[buildSeconds]] so
-    * Bench charges it to the `shared_build` row — the query's own timed
-    * window then measures the mechanism the query is about, not setup
-    * I/O. Any other `mat` runs `build` on every call.
-    */
-  def once[A](spark: SparkSession, key: String,
-              mat: Materialize)(build: => A): A =
-    if (mat == Materialize.Local) getOrBuild(spark, key)(build) else build
 }

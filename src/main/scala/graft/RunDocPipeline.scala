@@ -15,12 +15,6 @@ import graft.streaming.DocStream
   */
 object RunDocPipeline {
 
-  /** Demo-stage guard: a failed stage reports its sentinel so the JSON
-    * line still prints, but NEVER silently — the exception class + message
-    * go to stderr first, so `images_kept: 0` from a broken stage is
-    * distinguishable from an empty corpus (the `Tables.scala` timestamp-
-    * probe rule: make the fallback visible).
-    */
   /** Stages that reported a sentinel this run — surfaced as the JSON
     * line's `degraded_stages` field so a consumer of the artifact knows
     * which readouts are placeholders WITHOUT scraping stderr (a curate
@@ -31,6 +25,12 @@ object RunDocPipeline {
   private val degradedStages =
     java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
 
+  /** Demo-stage guard: a failed stage reports its sentinel so the JSON
+    * line still prints, but NEVER silently — the exception class + message
+    * go to stderr first, so `images_kept: 0` from a broken stage is
+    * distinguishable from an empty corpus (the `Tables.scala` timestamp-
+    * probe rule: make the fallback visible).
+    */
   private[graft] def guarded[T](stage: String, sentinel: => T)(body: => T): T =
     try body catch {
       case scala.util.control.NonFatal(e) =>

@@ -636,7 +636,7 @@ object SparkEntry {
     // row-identical to d_manifest_incr (spec-asserted), so it faces the
     // same oracle.
     Query("d_manifest_delta", (s, dir) => {
-      val state = SharedRel.once(s, s"incrstate|$dir", Materialize.Local) {
+      val state = SharedRel.once(s, s"incrstate|$dir") {
         val p = java.nio.file.Files.createTempDirectory("graft-incr-state").toString
         MixOps.freezeBaseState(s, dir, p)
         p

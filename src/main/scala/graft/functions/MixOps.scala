@@ -905,8 +905,7 @@ object MixOps {
   private def incrBaseState(
       spark: SparkSession, dir: String, buckets: Int, budget: Long,
       deltaMod: Int, keepLang: String, probeMax: Long, contamMin: Long,
-      sampleMod: Int, sampleKeep: Int, mixMod: Int,
-      mat: graft.Materialize): FrozenBase =
+      sampleMod: Int, sampleKeep: Int, mixMod: Int): FrozenBase =
     // "Yesterday's build" is one deterministic relation with two in-session
     // consumers (the freeze scaffold and the single-query d_manifest_incr
     // proof) — unmemoized, each re-ran the full base gate chain (measured
@@ -914,44 +913,36 @@ object MixOps {
     // DataFrame, so it memoizes through SharedRel.once.
     graft.SharedRel.once(spark,
       s"incrbase|$dir|$buckets|$budget|$deltaMod|$keepLang|$probeMax|" +
-        s"$contamMin|$sampleMod|$sampleKeep|$mixMod", mat)(
-      incrBaseStateBuild(spark, dir, buckets, budget, deltaMod, keepLang,
-        probeMax, contamMin, sampleMod, sampleKeep, mixMod, mat))
-
-  private def incrBaseStateBuild(
-      spark: SparkSession, dir: String, buckets: Int, budget: Long,
-      deltaMod: Int, keepLang: String, probeMax: Long, contamMin: Long,
-      sampleMod: Int, sampleKeep: Int, mixMod: Int,
-      mat: graft.Materialize): FrozenBase = {
-    val cont = contRel(spark, dir, probeMax)
-    val clean = cleanRel(spark, dir, probeMax)
-    // nearDupLsh is session-shared (SharedRel) — no second pin here
-    val pairs = VectorOps.nearDupLsh(spark, dir).select("id_a", "id_b")
-    val b = mat(incrDocs(spark, dir, deltaMod).filter(!col("is_delta")))
-    val repB = b.groupBy("hmd5").agg(min("doc_id").as("rep_doc_id"))
-    val curB = rowGatesF(b, cont, keepLang, probeMax, contamMin, sampleMod, sampleKeep)
-      .join(repB, "hmd5").filter(col("doc_id") === col("rep_doc_id"))
-      .select("doc_id")
-    val dropB = pairs
-      .filter(Exprs.arrivalSplit(col("id_a"), deltaMod) =!= 0 &&
-        Exprs.arrivalSplit(col("id_b"), deltaMod) =!= 0)
-      .select(col("id_b").as("doc_id")).distinct()
-    val statsB = b.groupBy("source").agg(count(lit(1)).as("cnt"))
-      .withColumn("w", weightE(col("source")))
-    val totB = statsB.agg(sum("cnt").as("total"), sum("w").as("sumw"))
-    val tiersB = mat(qualityTiersOf(spark,
-      b.select(col("doc_id"), col("lang"), col("quality_score")))
-      .select("doc_id", "lang", "quality_score", "tier"))
-    val survB = mat(survivorsF(b, curB, dropB, tiersB, clean, statsB, totB, mixMod))
-    val walkB = walkOffsets(survB, buckets)
-      .withColumn("shard_id", expr(s"off div ${budget}L"))
-      .withColumn("from_delta", lit(false))
-    val cuts = tiersB.groupBy("lang").agg(
-      min(when(col("tier") === "head", col("quality_score"))).as("head_cut"),
-      min(when(col("tier") === "middle", col("quality_score"))).as("mid_cut"))
-    val baseTok = survB.agg(coalesce(sum("tok"), lit(0L)).as("base_tok"))
-    FrozenBase(walkB, b.select("hmd5").distinct(), statsB, totB, cuts, baseTok)
-  }
+        s"$contamMin|$sampleMod|$sampleKeep|$mixMod") {
+      val cont = contRel(spark, dir, probeMax)
+      val clean = cleanRel(spark, dir, probeMax)
+      // nearDupLsh is session-shared (SharedRel) — no second pin here
+      val pairs = VectorOps.nearDupLsh(spark, dir).select("id_a", "id_b")
+      val b = graft.Materialize.Local(incrDocs(spark, dir, deltaMod).filter(!col("is_delta")))
+      val repB = b.groupBy("hmd5").agg(min("doc_id").as("rep_doc_id"))
+      val curB = rowGatesF(b, cont, keepLang, probeMax, contamMin, sampleMod, sampleKeep)
+        .join(repB, "hmd5").filter(col("doc_id") === col("rep_doc_id"))
+        .select("doc_id")
+      val dropB = pairs
+        .filter(Exprs.arrivalSplit(col("id_a"), deltaMod) =!= 0 &&
+          Exprs.arrivalSplit(col("id_b"), deltaMod) =!= 0)
+        .select(col("id_b").as("doc_id")).distinct()
+      val statsB = b.groupBy("source").agg(count(lit(1)).as("cnt"))
+        .withColumn("w", weightE(col("source")))
+      val totB = statsB.agg(sum("cnt").as("total"), sum("w").as("sumw"))
+      val tiersB = graft.Materialize.Local(qualityTiersOf(spark,
+        b.select(col("doc_id"), col("lang"), col("quality_score")))
+        .select("doc_id", "lang", "quality_score", "tier"))
+      val survB = graft.Materialize.Local(survivorsF(b, curB, dropB, tiersB, clean, statsB, totB, mixMod))
+      val walkB = walkOffsets(survB, buckets)
+        .withColumn("shard_id", expr(s"off div ${budget}L"))
+        .withColumn("from_delta", lit(false))
+      val cuts = tiersB.groupBy("lang").agg(
+        min(when(col("tier") === "head", col("quality_score"))).as("head_cut"),
+        min(when(col("tier") === "middle", col("quality_score"))).as("mid_cut"))
+      val baseTok = survB.agg(coalesce(sum("tok"), lit(0L)).as("base_tok"))
+      FrozenBase(walkB, b.select("hmd5").distinct(), statsB, totB, cuts, baseTok)
+    }
 
   /** Today's increment: the full gate chain over the delta split against a
     * [[FrozenBase]] — the ONLY code path for delta semantics, whether the
@@ -961,12 +952,11 @@ object MixOps {
   private def incrDeltaWalk(
       spark: SparkSession, dir: String, frozen: FrozenBase, buckets: Int,
       budget: Long, deltaMod: Int, keepLang: String, probeMax: Long,
-      contamMin: Long, sampleMod: Int, sampleKeep: Int, mixMod: Int,
-      mat: graft.Materialize): DataFrame = {
+      contamMin: Long, sampleMod: Int, sampleKeep: Int, mixMod: Int): DataFrame = {
     val cont = contRel(spark, dir, probeMax)
     val clean = cleanRel(spark, dir, probeMax)
     val pairs = VectorOps.nearDupLsh(spark, dir).select("id_a", "id_b")
-    val d = mat(incrDocs(spark, dir, deltaMod).filter(col("is_delta")))
+    val d = graft.Materialize.Local(incrDocs(spark, dir, deltaMod).filter(col("is_delta")))
     val repD = d.groupBy("hmd5").agg(min("doc_id").as("rep_doc_id"))
     val curD = rowGatesF(d, cont, keepLang, probeMax, contamMin, sampleMod, sampleKeep)
       .join(repD, "hmd5").filter(col("doc_id") === col("rep_doc_id"))
@@ -1001,12 +991,11 @@ object MixOps {
       spark: SparkSession, dir: String, buckets: Int = 8, budget: Long = 500L,
       deltaMod: Int = 10, keepLang: String = "en", probeMax: Long = 10,
       contamMin: Long = 5, sampleMod: Int = 10, sampleKeep: Int = 8,
-      mixMod: Int = 1000,
-      mat: graft.Materialize = graft.Materialize.Local): DataFrame = {
+      mixMod: Int = 1000): DataFrame = {
     val frozen = incrBaseState(spark, dir, buckets, budget, deltaMod, keepLang,
-      probeMax, contamMin, sampleMod, sampleKeep, mixMod, mat)
+      probeMax, contamMin, sampleMod, sampleKeep, mixMod)
     val walkD = incrDeltaWalk(spark, dir, frozen, buckets, budget, deltaMod,
-      keepLang, probeMax, contamMin, sampleMod, sampleKeep, mixMod, mat)
+      keepLang, probeMax, contamMin, sampleMod, sampleKeep, mixMod)
     frozen.walkB.select(IncrCols.map(col): _*)
       .unionByName(walkD.select(IncrCols.map(col): _*))
   }
@@ -1047,7 +1036,7 @@ object MixOps {
                       deltaMod: Int = 10): Unit = {
     val frozen = incrBaseState(spark, dir, buckets, budget, deltaMod,
       keepLang = "en", probeMax = 10, contamMin = 5, sampleMod = 10,
-      sampleKeep = 8, mixMod = 1000, mat = graft.Materialize.Local)
+      sampleKeep = 8, mixMod = 1000)
     // Writes are coalesced: every frozen relation except the assignments is
     // a handful of rows (stats/cuts/manifest) or one narrow hash column —
     // 32 task-files apiece is pure commit-protocol overhead at any scale;
@@ -1081,7 +1070,7 @@ object MixOps {
       baseTok = spark.read.parquet(s"$stateDir/high_water"))
     val walkD = incrDeltaWalk(spark, dir, frozen, buckets, budget, deltaMod,
       keepLang = "en", probeMax = 10, contamMin = 5, sampleMod = 10,
-      sampleKeep = 8, mixMod = 1000, mat = graft.Materialize.Local)
+      sampleKeep = 8, mixMod = 1000)
     val deltaM = manifestAgg(walkD.select(IncrCols.map(col): _*))
       .select(col("shard_id"), col("n_docs").as("d_docs"),
         col("n_tokens").as("d_toks"), col("checksum").as("d_ck"),
@@ -1264,49 +1253,45 @@ object MixOps {
                   buckets: Int = 64): DataFrame =
     // session-shared: the verdict relation feeds its own driver query AND
     // the per-source mix monitor
-    graft.SharedRel(spark, s"dsir|$dir|$probeMax|$buckets", graft.Materialize.Local)(
-      dsirWeightsBuild(spark, dir, probeMax, buckets))
-
-  private[graft] def dsirWeightsBuild(spark: SparkSession, dir: String,
-                                      probeMax: Long = 10, buckets: Int = 64): DataFrame = {
-    val d = TextOps.prepared(spark, dir).select(
-      col("doc_id"), filter(col("words"), w => w =!= "").as("ws"))
-    // r21: unigram + bigram features explode from ONE row-local array —
-    // the former posexplode + doc-keyed lead window paired adjacent words
-    // through a full shuffle+sort of the token mass, then unioned a second
-    // explode pass for the unigrams; adjacency is a property of the row's
-    // own array (slice-guarded index list, safe for 0/1-word docs)
-    val feats = graft.Materialize.Local(d.select(col("doc_id"), explode(concat(col("ws"), expr(
-        """transform(slice(sequence(0, greatest(size(ws) - 1, 0)),
-          |          1, greatest(size(ws) - 1, 0)),
-          |  i -> concat(ws[i], ' ', ws[i + 1]))""".stripMargin))).as("f"))
-      .withColumn("cell", pmod(Exprs.hex60(col("f")), lit(buckets.toLong))))
-    val tCnt = feats.filter(col("doc_id") < probeMax)
-      .groupBy(col("cell")).agg(count(lit(1)).as("tc"))
-    val rCnt = feats.groupBy(col("cell")).agg(count(lit(1)).as("rc"))
-    val tTot = feats.filter(col("doc_id") < probeMax)
-      .agg(count(lit(1)).as("tt"))
-    val rTot = feats.agg(count(lit(1)).as("rt"))
-    val frame = spark.range(buckets).select(col("id").as("cell"))
-    val ratio = frame
-      .join(tCnt, Seq("cell"), "left").join(rCnt, Seq("cell"), "left")
-      .crossJoin(broadcast(tTot)).crossJoin(broadcast(rTot))
-      .select(col("cell"),
-        floor((log((coalesce(col("tc"), lit(0L)) + lit(1.0)) /
-                   (col("tt") + lit(buckets.toDouble))) -
-               log((coalesce(col("rc"), lit(0L)) + lit(1.0)) /
-                   (col("rt") + lit(buckets.toDouble))))
-          * 10000 + 0.5).cast("long").as("r_int"))
-    val perDoc = feats.join(broadcast(ratio), "cell")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_feats"), sum(col("r_int")).as("logw_q"))
-    d.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_feats"), lit(0L)).as("n_feats"),
-        coalesce(col("logw_q"), lit(0L)).as("logw_q"))
-      .withColumn("keep", col("logw_q") > 0)
-      .orderBy("doc_id")
-  }
+    graft.SharedRel(spark, s"dsir|$dir|$probeMax|$buckets", graft.Materialize.Local) {
+      val d = TextOps.prepared(spark, dir).select(
+        col("doc_id"), filter(col("words"), w => w =!= "").as("ws"))
+      // r21: unigram + bigram features explode from ONE row-local array —
+      // the former posexplode + doc-keyed lead window paired adjacent words
+      // through a full shuffle+sort of the token mass, then unioned a second
+      // explode pass for the unigrams; adjacency is a property of the row's
+      // own array (slice-guarded index list, safe for 0/1-word docs)
+      val feats = graft.Materialize.Local(d.select(col("doc_id"), explode(concat(col("ws"), expr(
+          """transform(slice(sequence(0, greatest(size(ws) - 1, 0)),
+            |          1, greatest(size(ws) - 1, 0)),
+            |  i -> concat(ws[i], ' ', ws[i + 1]))""".stripMargin))).as("f"))
+        .withColumn("cell", pmod(Exprs.hex60(col("f")), lit(buckets.toLong))))
+      val tCnt = feats.filter(col("doc_id") < probeMax)
+        .groupBy(col("cell")).agg(count(lit(1)).as("tc"))
+      val rCnt = feats.groupBy(col("cell")).agg(count(lit(1)).as("rc"))
+      val tTot = feats.filter(col("doc_id") < probeMax)
+        .agg(count(lit(1)).as("tt"))
+      val rTot = feats.agg(count(lit(1)).as("rt"))
+      val frame = spark.range(buckets).select(col("id").as("cell"))
+      val ratio = frame
+        .join(tCnt, Seq("cell"), "left").join(rCnt, Seq("cell"), "left")
+        .crossJoin(broadcast(tTot)).crossJoin(broadcast(rTot))
+        .select(col("cell"),
+          floor((log((coalesce(col("tc"), lit(0L)) + lit(1.0)) /
+                     (col("tt") + lit(buckets.toDouble))) -
+                 log((coalesce(col("rc"), lit(0L)) + lit(1.0)) /
+                     (col("rt") + lit(buckets.toDouble))))
+            * 10000 + 0.5).cast("long").as("r_int"))
+      val perDoc = feats.join(broadcast(ratio), "cell")
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_feats"), sum(col("r_int")).as("logw_q"))
+      d.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("n_feats"), lit(0L)).as("n_feats"),
+          coalesce(col("logw_q"), lit(0L)).as("logw_q"))
+        .withColumn("keep", col("logw_q") > 0)
+        .orderBy("doc_id")
+    }
 
   /** Per-source DSIR keep rates — the monitor row the mixture owner reads:
     * which sources look target-like under the importance weights (the

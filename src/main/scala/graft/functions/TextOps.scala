@@ -44,17 +44,12 @@ object TextOps {
     * table this shape re-reads from memory anyway.
     */
   def prepared(spark: SparkSession, dir: String): DataFrame =
-    graft.SharedRel(spark, s"prepared|$dir", Materialize.Local)(
-      preparedBuild(spark, dir))
-
-  /** The live-lineage form of [[prepared]] — for plan audits that assert
-    * scan-level properties of the normalize+split itself.
-    */
-  private[graft] def preparedBuild(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(
-      col("doc_id"), col("lang"), col("source"), col("n_chars"),
-      Exprs.normText(col("text")).as("norm"))
-      .withColumn("words", split(col("norm"), " "))
+    graft.SharedRel(spark, s"prepared|$dir", Materialize.Local) {
+      Tables.documents(spark, dir).select(
+        col("doc_id"), col("lang"), col("source"), col("n_chars"),
+        Exprs.normText(col("text")).as("norm"))
+        .withColumn("words", split(col("norm"), " "))
+    }
 
   val preparedSql: String =
     s"""SELECT doc_id, lang, source, n_chars,
@@ -805,7 +800,7 @@ object TextOps {
     */
   private def bloomSplit(spark: SparkSession, dir: String,
                          deltaMod: Int): (DataFrame, DataFrame) =
-    graft.SharedRel.once(spark, s"bloomsplit|$dir|$deltaMod", Materialize.Local) {
+    graft.SharedRel.once(spark, s"bloomsplit|$dir|$deltaMod") {
       // ONE distinct over (shingle, side) — base and probes are then
       // projections of the same checkpointed relation (two separate
       // explode+distinct passes measured 6.5 s vs 4.1 s at sf0.1; a
@@ -847,14 +842,7 @@ object TextOps {
     */
   private def bloomProbe(spark: SparkSession, dir: String, m: Int, k: Int,
                          deltaMod: Int): DataFrame =
-    graft.SharedRel(spark, s"bloomprobe|$dir|$deltaMod|$m|$k", Materialize.Local)(
-      bloomProbeBuild(spark, dir, m, k, deltaMod))
-
-  /** The unmemoized build — PlanAuditSpec audits THIS plan (the memoized
-    * handle is a checkpoint scan with no joins left to audit).
-    */
-  private[graft] def bloomProbeBuild(spark: SparkSession, dir: String, m: Int,
-                                     k: Int, deltaMod: Int): DataFrame = {
+    graft.SharedRel(spark, s"bloomprobe|$dir|$deltaMod|$m|$k", Materialize.Local) {
       val (base, probes) = bloomSplit(spark, dir, deltaMod)
       val bits = bloomBits(spark, dir, m, k, deltaMod)
       val pp = probes.select(col("shingle"),
@@ -877,7 +865,7 @@ object TextOps {
             .when(col("bloom_seen") && !col("exact_seen"), "fp")
             .when(!col("bloom_seen") && !col("exact_seen"), "tn")
             .otherwise("fn"))
-  }
+    }
 
   /** Bounded-memory set membership — the Bloom filter, fourth member of
     * the sketch family ([[distinctKmv]] distinct / [[heavyHitters]]
@@ -1425,27 +1413,20 @@ object TextOps {
     // session-shared: the contamination index is consumed by d_contamination,
     // curate (d_curate + both corpus builds) and the incremental delta pass —
     // a production pipeline persists this relation once per benchmark set
-    graft.SharedRel(spark, s"contam|$dir|$probeMax", graft.Materialize.Local)(
-      contaminationBuild(spark, dir, probeMax))
-
-  /** The unmemoized build — PlanAuditSpec audits THIS plan (the memoized
-    * handle is a checkpoint scan with no joins left to audit).
-    */
-  private[graft] def contaminationBuild(spark: SparkSession, dir: String,
-                                        probeMax: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ex = shingles3(spark, dir)
-    val probe = ex.filter(col("doc_id") < probeMax)
-      .select(col("doc_id").as("probe_id"), col("sh"))
-    val shared = ex.filter(col("doc_id") >= probeMax)
-      .join(probe, "sh")
-      .groupBy(col("doc_id"), col("probe_id"))
-      .agg(count(lit(1)).as("n_shared_shingles"))
-    Dedup.keepFirst(shared, Seq(col("doc_id")),
-        Seq(col("n_shared_shingles").desc, col("probe_id")), "rn")
-      .select(col("doc_id"), col("probe_id").as("top_probe_id"),
-        col("n_shared_shingles"))
-  }
+    graft.SharedRel(spark, s"contam|$dir|$probeMax", graft.Materialize.Local) {
+      import org.apache.spark.sql.expressions.Window
+      val ex = shingles3(spark, dir)
+      val probe = ex.filter(col("doc_id") < probeMax)
+        .select(col("doc_id").as("probe_id"), col("sh"))
+      val shared = ex.filter(col("doc_id") >= probeMax)
+        .join(probe, "sh")
+        .groupBy(col("doc_id"), col("probe_id"))
+        .agg(count(lit(1)).as("n_shared_shingles"))
+      Dedup.keepFirst(shared, Seq(col("doc_id")),
+          Seq(col("n_shared_shingles").desc, col("probe_id")), "rn")
+        .select(col("doc_id"), col("probe_id").as("top_probe_id"),
+          col("n_shared_shingles"))
+    }
 
   def contaminationSql(probeMax: Long = 10): String =
     s"""WITH ex AS (
@@ -1482,31 +1463,27 @@ object TextOps {
   def decontamSpans(spark: SparkSession, dir: String, probeMax: Long = 10): DataFrame =
     // session-shared: the span-cleaned relation feeds d_decontam_spans AND
     // both corpus builds
-    graft.SharedRel(spark, s"decontam|$dir|$probeMax", Materialize.Local)(
-      decontamSpansBuild(spark, dir, probeMax))
-
-  private[graft] def decontamSpansBuild(spark: SparkSession, dir: String,
-                                        probeMax: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val probe = shingles3(spark, dir).filter(col("doc_id") < probeMax)
-      .select("sh").distinct()
-    // materialized once: the normalization+split feeds THREE consumers
-    // (positioned shingles, word re-assembly, final counts); norm itself is
-    // not needed past this point (≥3-word docs never take the whole-norm
-    // shingle fallback), so the checkpoint carries only (doc_id, words)
-    val pw = Materialize.Local(prepared(spark, dir)
-      .filter(col("doc_id") >= probeMax && size(col("words")) >= 3)
-      .select(col("doc_id"), col("words")))
-    val sh = pw.select(col("doc_id"), posexplode(expr(
-      "transform(sequence(0, size(words)-3), i -> concat(words[i], ' ', words[i+1], ' ', words[i+2]))"))
-      .as(Seq("i", "sh")))
-    // same one-exchange span fold as the substring-dedup family
-    // ([[spanFold]]): the contaminated positions collect into a sorted
-    // per-doc array and the span stats + re-assembly are row-local
-    val hits = sh.join(broadcast(probe), "sh")
-      .select(col("doc_id"), explode(expr("sequence(i, i + 2)")).as("p"))
-    spanFold(pw, hits).withColumnRenamed("n_dup", "n_contam")
-  }
+    graft.SharedRel(spark, s"decontam|$dir|$probeMax", Materialize.Local) {
+      import org.apache.spark.sql.expressions.Window
+      val probe = shingles3(spark, dir).filter(col("doc_id") < probeMax)
+        .select("sh").distinct()
+      // materialized once: the normalization+split feeds THREE consumers
+      // (positioned shingles, word re-assembly, final counts); norm itself is
+      // not needed past this point (≥3-word docs never take the whole-norm
+      // shingle fallback), so the checkpoint carries only (doc_id, words)
+      val pw = Materialize.Local(prepared(spark, dir)
+        .filter(col("doc_id") >= probeMax && size(col("words")) >= 3)
+        .select(col("doc_id"), col("words")))
+      val sh = pw.select(col("doc_id"), posexplode(expr(
+        "transform(sequence(0, size(words)-3), i -> concat(words[i], ' ', words[i+1], ' ', words[i+2]))"))
+        .as(Seq("i", "sh")))
+      // same one-exchange span fold as the substring-dedup family
+      // ([[spanFold]]): the contaminated positions collect into a sorted
+      // per-doc array and the span stats + re-assembly are row-local
+      val hits = sh.join(broadcast(probe), "sh")
+        .select(col("doc_id"), explode(expr("sequence(i, i + 2)")).as("p"))
+      spanFold(pw, hits).withColumnRenamed("n_dup", "n_contam")
+    }
 
   def decontamSpansSql(probeMax: Long = 10): String =
     s"""WITH probe AS (
@@ -1573,19 +1550,15 @@ object TextOps {
     * bound every LSH band join in this file carries; AQE splits the join
     * side at 100 TB.
     */
-  def dupSpans(spark: SparkSession, dir: String, n: Int = 5,
-               mat: Materialize = Materialize.Local): DataFrame =
-    // session-shared under the default materialization: the relation
-    // feeds its own verdict query and the optional [[curate]] gate
-    graft.SharedRel(spark, s"dupspans|$dir|$n", mat)(dupSpansBuild(spark, dir, n, mat))
-
-  private[graft] def dupSpansBuild(spark: SparkSession, dir: String, n: Int,
-                                   mat: Materialize): DataFrame = {
-    val pw = mat(prepared(spark, dir).filter(size(col("words")) >= n)
-      .select(col("doc_id"), col("words")))
-    spanFoldArr(pw, sortedCutArrays(spark, dir, n, mat)
-      .withColumnRenamed("all_cuts", "cuts"))
-  }
+  def dupSpans(spark: SparkSession, dir: String, n: Int = 5): DataFrame =
+    // session-shared: the relation feeds its own verdict query and the
+    // optional [[curate]] gate
+    graft.SharedRel(spark, s"dupspans|$dir|$n", Materialize.Local) {
+      val pw = Materialize.Local(prepared(spark, dir).filter(size(col("words")) >= n)
+        .select(col("doc_id"), col("words")))
+      spanFoldArr(pw, sortedCutArrays(spark, dir, n)
+        .withColumnRenamed("all_cuts", "cuts"))
+    }
 
   /** Cut positions (doc_id, p): every position covered by a duplicated
     * n-window occurrence except the globally FIRST (min (doc_id, i)) per
@@ -1623,16 +1596,11 @@ object TextOps {
     * incremental twin ([[dupSpansIncr]] / [[dupRunsIncr]], whose frozen
     * base-set + in-increment-keeper chain is likewise identical pairwise).
     */
-  private def sortedCutArrays(spark: SparkSession, dir: String, n: Int,
-                              mat: Materialize): DataFrame =
-    graft.SharedRel(spark, s"spancuts|$dir|$n", mat)(
-      sortedCutArraysBuild(spark, dir, n))
-
-  private[graft] def sortedCutArraysBuild(spark: SparkSession, dir: String,
-                                          n: Int): DataFrame =
-    cutArraysOf(firstOccCutHits(
-      prepared(spark, dir).filter(size(col("words")) >= n)
-        .select(col("doc_id"), col("words")), n))
+  private def sortedCutArrays(spark: SparkSession, dir: String, n: Int): DataFrame =
+    graft.SharedRel(spark, s"spancuts|$dir|$n", Materialize.Local)(
+      cutArraysOf(firstOccCutHits(
+        prepared(spark, dir).filter(size(col("words")) >= n)
+          .select(col("doc_id"), col("words")), n)))
 
   /** The span-merge + re-assembly tail shared by the substring-dedup
     * family: given (doc_id, words) docs and the cut positions (doc_id, p)
@@ -1867,7 +1835,7 @@ object TextOps {
       .select(col("doc_id"), col("words")))
     // the cut chain is the session-shared spancuts relation — only the
     // row-local minRun floor differs between dupSpans/dupRuns variants
-    spanFoldArr(pw, minRunFloor(sortedCutArrays(spark, dir, n, Materialize.Local), minRun))
+    spanFoldArr(pw, minRunFloor(sortedCutArrays(spark, dir, n), minRun))
   }
 
   /** Fold the cut positions into sorted per-doc arrays and keep only
@@ -2276,7 +2244,7 @@ object TextOps {
     *
     * Session-shared ([[graft.SharedRel]], key `jacpairs`): the relation is
     * the exact-pair oracle THREE consumers run in full — its own
-    * `d_jaccard_pairs` query, the [[lshSweepBuild]] S-curve (which prices
+    * `d_jaccard_pairs` query, the [[lshSweep]] S-curve (which prices
     * every banding against it), and the [[lshRecall]] harness. Each
     * previously re-ran candidate generation + verify from scratch
     * (~2 s/pass at sf0.1 in the r20 min artifact, 3× per session). A
@@ -2285,39 +2253,35 @@ object TextOps {
     */
   def jaccardPairs(spark: SparkSession, dir: String, threshold: Double = 0.9,
                    dfCap: Int = 100): DataFrame =
-    graft.SharedRel(spark, s"jacpairs|$dir|$threshold|$dfCap", Materialize.Local)(
-      jaccardPairsBuild(spark, dir, threshold, dfCap))
-
-  private[graft] def jaccardPairsBuild(spark: SparkSession, dir: String,
-                                       threshold: Double, dfCap: Int): DataFrame = {
-    // materialized once: normText + split + array_distinct feed three
-    // consumers (candidate explode + both exact-verify sides) and dominate
-    // the per-doc cost
-    val d = Materialize.Local(prepared(spark, dir).select(
-      col("doc_id"), col("lang"), expr("n_chars DIV 100").as("bkt"),
-      array_distinct(col("words")).as("ws")))
-    val ex = d.select(col("doc_id"), col("lang"), col("bkt"), explode(col("ws")).as("w"))
-    // the hot-word list is tiny (only tokens in > dfCap docs of one block),
-    // so df filtering is a map-side-combined groupBy + broadcast anti-join —
-    // no window sort over the full exploded relation
-    val hot = ex.groupBy("lang", "bkt", "w").agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap).drop("df")
-    val rare = ex.join(broadcast(hot), Seq("lang", "bkt", "w"), "left_anti")
-    val cands = rare.as("a").join(rare.as("b"),
-        col("a.lang") === col("b.lang") && col("a.bkt") === col("b.bkt") &&
-        col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    cands
-      .join(d.select(col("doc_id").as("doc_a"), col("ws").as("ws_a")), "doc_a")
-      .join(d.select(col("doc_id").as("doc_b"), col("ws").as("ws_b")), "doc_b")
-      .withColumn("n_shared", size(array_intersect(col("ws_a"), col("ws_b"))).cast("long"))
-      .withColumn("n_union",
-        (size(col("ws_a")) + size(col("ws_b"))).cast("long") - col("n_shared"))
-      .withColumn("jaccard", round(col("n_shared") / col("n_union").cast("double"), 4))
-      .filter(col("n_shared") / col("n_union").cast("double") >= threshold)
-      .select("doc_a", "doc_b", "n_shared", "n_union", "jaccard")
-  }
+    graft.SharedRel(spark, s"jacpairs|$dir|$threshold|$dfCap", Materialize.Local) {
+      // materialized once: normText + split + array_distinct feed three
+      // consumers (candidate explode + both exact-verify sides) and dominate
+      // the per-doc cost
+      val d = Materialize.Local(prepared(spark, dir).select(
+        col("doc_id"), col("lang"), expr("n_chars DIV 100").as("bkt"),
+        array_distinct(col("words")).as("ws")))
+      val ex = d.select(col("doc_id"), col("lang"), col("bkt"), explode(col("ws")).as("w"))
+      // the hot-word list is tiny (only tokens in > dfCap docs of one block),
+      // so df filtering is a map-side-combined groupBy + broadcast anti-join —
+      // no window sort over the full exploded relation
+      val hot = ex.groupBy("lang", "bkt", "w").agg(count(lit(1)).as("df"))
+        .filter(col("df") > dfCap).drop("df")
+      val rare = ex.join(broadcast(hot), Seq("lang", "bkt", "w"), "left_anti")
+      val cands = rare.as("a").join(rare.as("b"),
+          col("a.lang") === col("b.lang") && col("a.bkt") === col("b.bkt") &&
+          col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .distinct()
+      cands
+        .join(d.select(col("doc_id").as("doc_a"), col("ws").as("ws_a")), "doc_a")
+        .join(d.select(col("doc_id").as("doc_b"), col("ws").as("ws_b")), "doc_b")
+        .withColumn("n_shared", size(array_intersect(col("ws_a"), col("ws_b"))).cast("long"))
+        .withColumn("n_union",
+          (size(col("ws_a")) + size(col("ws_b"))).cast("long") - col("n_shared"))
+        .withColumn("jaccard", round(col("n_shared") / col("n_union").cast("double"), 4))
+        .filter(col("n_shared") / col("n_union").cast("double") >= threshold)
+        .select("doc_a", "doc_b", "n_shared", "n_union", "jaccard")
+    }
 
   def jaccardPairsSql(threshold: Double = 0.9, dfCap: Int = 100): String =
     s"""WITH d AS (
@@ -2493,23 +2457,20 @@ object TextOps {
     * analog of storing the candidate index a dedup pipeline probes.
     */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.SharedRel(spark, s"minhashpairs|$dir", Materialize.Local)(
-      minhashPairsBuild(spark, dir))
-
-  private[graft] def minhashPairsBuild(spark: SparkSession, dir: String): DataFrame = {
-    val sig = bandedSignatures(spark, dir)
-    // A pair can only appear in both joins when BOTH bands match, so the
-    // band2 join emits only pairs whose band1 differs — exact dedup with a
-    // per-row filter instead of a global 5M-row DISTINCT shuffle.
-    val j1 = sig.as("a").join(sig.as("b"),
-        col("a.band1") === col("b.band1") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val j2 = sig.as("a").join(sig.as("b"),
-        col("a.band2") === col("b.band2") && col("a.band1") =!= col("b.band1") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    j1.union(j2)
-  }
+    graft.SharedRel(spark, s"minhashpairs|$dir", Materialize.Local) {
+      val sig = bandedSignatures(spark, dir)
+      // A pair can only appear in both joins when BOTH bands match, so the
+      // band2 join emits only pairs whose band1 differs — exact dedup with a
+      // per-row filter instead of a global 5M-row DISTINCT shuffle.
+      val j1 = sig.as("a").join(sig.as("b"),
+          col("a.band1") === col("b.band1") && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      val j2 = sig.as("a").join(sig.as("b"),
+          col("a.band2") === col("b.band2") && col("a.band1") =!= col("b.band1") &&
+          col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      j1.union(j2)
+    }
 
   val minhashPairsSql: String =
     s"""WITH sig AS (
@@ -2585,54 +2546,51 @@ object TextOps {
     */
   def dupClusters(spark: SparkSession, dir: String,
                   mat: Materialize = Materialize.Local): DataFrame =
-    graft.SharedRel(spark, s"dupcc|$dir", mat)(dupClustersBuild(spark, dir, mat))
-
-  private def dupClustersBuild(spark: SparkSession, dir: String,
-                               mat: Materialize): DataFrame = {
-    // Propagate over the bipartite doc ↔ band-bucket incidence graph (2 rows
-    // per doc), NOT the pairwise candidate graph: a bucket holding b docs
-    // contributes b incidence rows instead of b·(b-1)/2 edges, so a
-    // degenerate hot bucket costs O(b) per round rather than O(b²) — the
-    // difference between 65 s and ~2 s on the synthetic corpus, and between
-    // feasible and quadratic blow-up at 100 TB. Components are identical:
-    // two docs share a band value iff they are connected through its bucket
-    // node.
-    val banded = bandedSignatures(spark, dir, mat)
-    val inc = mat(
-      banded.select(col("doc_id"), concat(lit("1:"), col("band1")).as("bkt"))
-        .union(banded.select(col("doc_id"), concat(lit("2:"), col("band2")).as("bkt"))))
-    var labels = mat(banded.select(col("doc_id")).withColumn("label", col("doc_id")))
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 25) {
-      // bucket label = min over members; doc label = min over its buckets.
-      // The convergence count rides along as an Observation on the job that
-      // materializes the round — one Spark job per round, no second pass.
-      val bmin = inc.join(labels, "doc_id")
-        .groupBy(col("bkt")).agg(min(col("label")).as("bmin"))
-      val stepped = inc.join(bmin, "bkt")
-        .groupBy(col("doc_id")).agg(min(col("bmin")).as("nbr_min"))
-        .join(labels, "doc_id")
-        .select(col("doc_id"), least(col("label"), col("nbr_min")).as("label"),
-          (col("nbr_min") < col("label")).cast("long").as("chg"))
-      val obs = org.apache.spark.sql.Observation()
-      // sever lineage: each round is one shuffle, not a growing chain
-      val next = mat(stepped.observe(obs, sum(col("chg")).as("changed")))
-      changed = obs.get("changed").asInstanceOf[Long]
-      labels = next.drop("chg")
-      rounds += 1
+    graft.SharedRel(spark, s"dupcc|$dir", mat) {
+      // Propagate over the bipartite doc ↔ band-bucket incidence graph (2 rows
+      // per doc), NOT the pairwise candidate graph: a bucket holding b docs
+      // contributes b incidence rows instead of b·(b-1)/2 edges, so a
+      // degenerate hot bucket costs O(b) per round rather than O(b²) — the
+      // difference between 65 s and ~2 s on the synthetic corpus, and between
+      // feasible and quadratic blow-up at 100 TB. Components are identical:
+      // two docs share a band value iff they are connected through its bucket
+      // node.
+      val banded = bandedSignatures(spark, dir, mat)
+      val inc = mat(
+        banded.select(col("doc_id"), concat(lit("1:"), col("band1")).as("bkt"))
+          .union(banded.select(col("doc_id"), concat(lit("2:"), col("band2")).as("bkt"))))
+      var labels = mat(banded.select(col("doc_id")).withColumn("label", col("doc_id")))
+      var changed = 1L
+      var rounds = 0
+      while (changed > 0 && rounds < 25) {
+        // bucket label = min over members; doc label = min over its buckets.
+        // The convergence count rides along as an Observation on the job that
+        // materializes the round — one Spark job per round, no second pass.
+        val bmin = inc.join(labels, "doc_id")
+          .groupBy(col("bkt")).agg(min(col("label")).as("bmin"))
+        val stepped = inc.join(bmin, "bkt")
+          .groupBy(col("doc_id")).agg(min(col("bmin")).as("nbr_min"))
+          .join(labels, "doc_id")
+          .select(col("doc_id"), least(col("label"), col("nbr_min")).as("label"),
+            (col("nbr_min") < col("label")).cast("long").as("chg"))
+        val obs = org.apache.spark.sql.Observation()
+        // sever lineage: each round is one shuffle, not a growing chain
+        val next = mat(stepped.observe(obs, sum(col("chg")).as("changed")))
+        changed = obs.get("changed").asInstanceOf[Long]
+        labels = next.drop("chg")
+        rounds += 1
+      }
+      System.err.println(s"[dupClusters] converged in $rounds rounds (last delta $changed)")
+      // fail loudly rather than return partially-propagated labels: a
+      // diameter > cap graph would otherwise ship silently wrong clusters
+      require(changed == 0,
+        s"dupClusters did not converge within $rounds rounds ($changed labels still moving)")
+      labels
+        .withColumn("cluster_size", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("label"))))
+        .select(col("doc_id"), col("label").as("cluster_rep"), col("cluster_size"))
+        .orderBy(col("doc_id"))
     }
-    System.err.println(s"[dupClusters] converged in $rounds rounds (last delta $changed)")
-    // fail loudly rather than return partially-propagated labels: a
-    // diameter > cap graph would otherwise ship silently wrong clusters
-    require(changed == 0,
-      s"dupClusters did not converge within $rounds rounds ($changed labels still moving)")
-    labels
-      .withColumn("cluster_size", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("label"))))
-      .select(col("doc_id"), col("label").as("cluster_rep"), col("cluster_size"))
-      .orderBy(col("doc_id"))
-  }
 
   /** Oracle: transitive min via recursive CTE (a genuinely different
     * algorithm — fixpoint closure vs label propagation).
@@ -3252,9 +3210,30 @@ object TextOps {
     // the dupClusters argument
     graft.SharedRel(spark,
       s"curate|$dir|$keepLang|$probeMax|$contamMin|$sampleMod|$sampleKeep|$dupTokenMax",
-      Materialize.Local)(
-      curateBuild(spark, dir, keepLang, probeMax, contamMin, sampleMod,
-        sampleKeep, dupTokenMax))
+      Materialize.Local) {
+      val base = curatePrefix(spark, dir, probeMax)
+      val dupCond: Column =
+        if (dupTokenMax >= 0) coalesce(col("n_dup"), lit(0L)) > dupTokenMax
+        else lit(false)
+      val reason = when(col("pred_lang") =!= keepLang, "lang")
+        .when(col("quality_bucket") === "low", "quality")
+        .when(col("doc_id") =!= col("rep_doc_id"), "duplicate")
+        .when(col("doc_id") < probeMax, "benchmark")
+        .when(coalesce(col("n_shared_shingles"), lit(0L)) >= contamMin, "contaminated")
+        .when(dupCond, "dup_span")
+        .when(pmod(Exprs.hex60(col("doc_id").cast("string")), lit(sampleMod)) >= sampleKeep,
+          "sampled_out")
+        .otherwise("kept")
+      val withDup = if (dupTokenMax >= 0)
+        base.join(dupSpans(spark, dir).select(col("doc_id"), col("n_dup")),
+          Seq("doc_id"), "left")
+      else base
+      withDup
+        .withColumn("drop_reason", reason)
+        .select(col("doc_id"), col("source"), col("pred_lang"),
+          col("quality_bucket"), (col("drop_reason") === "kept").as("keep"),
+          col("drop_reason"))
+    }
 
   /** The gate-independent curate prefix — language/quality annotation,
     * exact-hash representative, contamination join — shared across
@@ -3280,34 +3259,6 @@ object TextOps {
         .select(col("doc_id"), col("source"), col("pred_lang"),
           col("quality_bucket"), col("rep_doc_id"), col("n_shared_shingles"))
     }
-  }
-
-  private def curateBuild(spark: SparkSession, dir: String, keepLang: String,
-                          probeMax: Long, contamMin: Long,
-                          sampleMod: Int, sampleKeep: Int,
-                          dupTokenMax: Long = -1L): DataFrame = {
-    val base = curatePrefix(spark, dir, probeMax)
-    val dupCond: Column =
-      if (dupTokenMax >= 0) coalesce(col("n_dup"), lit(0L)) > dupTokenMax
-      else lit(false)
-    val reason = when(col("pred_lang") =!= keepLang, "lang")
-      .when(col("quality_bucket") === "low", "quality")
-      .when(col("doc_id") =!= col("rep_doc_id"), "duplicate")
-      .when(col("doc_id") < probeMax, "benchmark")
-      .when(coalesce(col("n_shared_shingles"), lit(0L)) >= contamMin, "contaminated")
-      .when(dupCond, "dup_span")
-      .when(pmod(Exprs.hex60(col("doc_id").cast("string")), lit(sampleMod)) >= sampleKeep,
-        "sampled_out")
-      .otherwise("kept")
-    val withDup = if (dupTokenMax >= 0)
-      base.join(dupSpans(spark, dir).select(col("doc_id"), col("n_dup")),
-        Seq("doc_id"), "left")
-    else base
-    withDup
-      .withColumn("drop_reason", reason)
-      .select(col("doc_id"), col("source"), col("pred_lang"),
-        col("quality_bucket"), (col("drop_reason") === "kept").as("keep"),
-        col("drop_reason"))
   }
 
   /** The curation FUNNEL report — per-gate drop counts in pipeline order
@@ -3638,47 +3589,44 @@ object TextOps {
   def lm2Bits(spark: SparkSession, dir: String): DataFrame =
     // session-shared: the relation feeds its own driver query AND the
     // ensemble gate; the bigram model build is the expensive half
-    graft.SharedRel(spark, s"lm2|$dir", graft.Materialize.Local)(
-      lm2BitsBuild(spark, dir))
-
-  private[graft] def lm2BitsBuild(spark: SparkSession, dir: String): DataFrame = {
-    val d = prepared(spark, dir).select(col("doc_id"), col("words"))
-    val toks = d.select(col("doc_id"), explode(col("words")).as("w"))
-    // r21: adjacent-word pairs are a row-local array transform (the former
-    // posexplode + doc-keyed lead window shuffled and sorted the whole
-    // token mass just to look one element ahead); slice-guarded index list
-    // is safe for 0/1-word docs
-    val bi = d.select(col("doc_id"), explode(expr(
-        """transform(slice(sequence(0, greatest(size(words) - 1, 0)),
-          |          1, greatest(size(words) - 1, 0)),
-          |  i -> named_struct('w1', words[i], 'w2', words[i + 1]))""".stripMargin))
-        .as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-    val uniCnt = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-    val biCnt = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-    val ctxCnt = bi.groupBy(col("w1")).agg(count(lit(1)).as("ctx"))
-    val stats = uniCnt.agg(sum(col("cnt")).as("n_total"),
-      count(lit(1)).as("v_size"))
-    // the first token is just words[0] — no positional explode needed
-    val firstBits = d.filter(size(col("words")) > 0)
-      .select(col("doc_id"), col("words").getItem(0).as("w"))
-      .join(uniCnt, "w").crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (length(bin(col("n_total") + col("v_size"))) -
-          length(bin(col("cnt") + 1))).cast("long").as("bits"))
-    val nextBits = bi
-      .join(biCnt, Seq("w1", "w2")).join(ctxCnt, "w1")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (length(bin(col("ctx") + col("v_size"))) -
-          length(bin(col("c2") + 1))).cast("long").as("bits"))
-    firstBits.unionAll(nextBits)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"), sum(col("bits")).as("sum_bits"))
-      .withColumn("bits_per_token",
-        col("sum_bits") / col("n_tokens").cast("double"))
-      .orderBy(col("doc_id"))
-  }
+    graft.SharedRel(spark, s"lm2|$dir", graft.Materialize.Local) {
+      val d = prepared(spark, dir).select(col("doc_id"), col("words"))
+      val toks = d.select(col("doc_id"), explode(col("words")).as("w"))
+      // r21: adjacent-word pairs are a row-local array transform (the former
+      // posexplode + doc-keyed lead window shuffled and sorted the whole
+      // token mass just to look one element ahead); slice-guarded index list
+      // is safe for 0/1-word docs
+      val bi = d.select(col("doc_id"), explode(expr(
+          """transform(slice(sequence(0, greatest(size(words) - 1, 0)),
+            |          1, greatest(size(words) - 1, 0)),
+            |  i -> named_struct('w1', words[i], 'w2', words[i + 1]))""".stripMargin))
+          .as("b"))
+        .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
+      val uniCnt = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
+      val biCnt = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
+      val ctxCnt = bi.groupBy(col("w1")).agg(count(lit(1)).as("ctx"))
+      val stats = uniCnt.agg(sum(col("cnt")).as("n_total"),
+        count(lit(1)).as("v_size"))
+      // the first token is just words[0] — no positional explode needed
+      val firstBits = d.filter(size(col("words")) > 0)
+        .select(col("doc_id"), col("words").getItem(0).as("w"))
+        .join(uniCnt, "w").crossJoin(broadcast(stats))
+        .select(col("doc_id"),
+          (length(bin(col("n_total") + col("v_size"))) -
+            length(bin(col("cnt") + 1))).cast("long").as("bits"))
+      val nextBits = bi
+        .join(biCnt, Seq("w1", "w2")).join(ctxCnt, "w1")
+        .crossJoin(broadcast(stats))
+        .select(col("doc_id"),
+          (length(bin(col("ctx") + col("v_size"))) -
+            length(bin(col("c2") + 1))).cast("long").as("bits"))
+      firstBits.unionAll(nextBits)
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_tokens"), sum(col("bits")).as("sum_bits"))
+        .withColumn("bits_per_token",
+          col("sum_bits") / col("n_tokens").cast("double"))
+        .orderBy(col("doc_id"))
+    }
 
   val lm2BitsSql: String =
     s"""WITH d AS (SELECT doc_id, words FROM ($preparedSql)),
@@ -3939,44 +3887,39 @@ object TextOps {
     * scoring pass is the expensive half of the classifier.
     */
   def nbClassify(spark: SparkSession, dir: String): DataFrame =
-    graft.SharedRel(spark, s"nbpred|$dir", Materialize.Local)(
-      nbClassifyBuild(spark, dir))
-
-  // private[graft]: PlanAuditSpec pins the SCORING plan, which the
-  // memoized SharedRel surface hides behind a checkpoint scan
-  private[graft] def nbClassifyBuild(spark: SparkSession, dir: String): DataFrame = {
-    val p = prepared(spark, dir)
-    val lab = p.select(col("doc_id"), qualityBucketE.as("cls"))
-    val tokens = p.select(col("doc_id"), explode(col("words")).as("w"))
-    val tokc = tokens.join(lab, "doc_id")
-      .groupBy(col("cls"), col("w")).agg(count(lit(1)).as("c"))
-    val totals = tokc.groupBy(col("cls")).agg(sum(col("c")).as("tot"))
-    val vocab = tokens.agg(countDistinct(col("w")).as("vocab"))
-    val classes = lab.select(col("cls")).distinct()
-    val nDocs = lab.agg(count(lit(1)).as("n_docs"))
-    val priors = lab.groupBy(col("cls")).agg(count(lit(1)).as("n_c"))
-    def flog2(c: Column): Column = length(bin(c))
-    val scored = tokens
-      .crossJoin(broadcast(classes))
-      .join(tokc, Seq("cls", "w"), "left")
-      .join(broadcast(totals), "cls")
-      .crossJoin(broadcast(vocab))
-      .select(col("doc_id"), col("cls"),
-        (flog2(col("tot") + col("vocab")) -
-          flog2(coalesce(col("c"), lit(0L)) + lit(1L))).cast("long").as("tb"))
-      .groupBy(col("doc_id"), col("cls"))
-      .agg(sum(col("tb")).as("tok_bits"))
-      .join(broadcast(priors), "cls")
-      .crossJoin(broadcast(nDocs))
-      .withColumn("bits",
-        col("tok_bits") + (flog2(col("n_docs")) - flog2(col("n_c"))).cast("long"))
-    Dedup.keepFirst(scored, Seq(col("doc_id")), Seq(col("bits"), col("cls")), "rn")
-      .select(col("doc_id"), col("cls").as("pred_bucket"), col("bits"))
-      .join(lab.select(col("doc_id"), col("cls").as("quality_bucket")), "doc_id")
-      .withColumn("correct", col("pred_bucket") === col("quality_bucket"))
-      .select("doc_id", "pred_bucket", "bits", "quality_bucket", "correct")
-      .orderBy("doc_id")
-  }
+    graft.SharedRel(spark, s"nbpred|$dir", Materialize.Local) {
+      val p = prepared(spark, dir)
+      val lab = p.select(col("doc_id"), qualityBucketE.as("cls"))
+      val tokens = p.select(col("doc_id"), explode(col("words")).as("w"))
+      val tokc = tokens.join(lab, "doc_id")
+        .groupBy(col("cls"), col("w")).agg(count(lit(1)).as("c"))
+      val totals = tokc.groupBy(col("cls")).agg(sum(col("c")).as("tot"))
+      val vocab = tokens.agg(countDistinct(col("w")).as("vocab"))
+      val classes = lab.select(col("cls")).distinct()
+      val nDocs = lab.agg(count(lit(1)).as("n_docs"))
+      val priors = lab.groupBy(col("cls")).agg(count(lit(1)).as("n_c"))
+      def flog2(c: Column): Column = length(bin(c))
+      val scored = tokens
+        .crossJoin(broadcast(classes))
+        .join(tokc, Seq("cls", "w"), "left")
+        .join(broadcast(totals), "cls")
+        .crossJoin(broadcast(vocab))
+        .select(col("doc_id"), col("cls"),
+          (flog2(col("tot") + col("vocab")) -
+            flog2(coalesce(col("c"), lit(0L)) + lit(1L))).cast("long").as("tb"))
+        .groupBy(col("doc_id"), col("cls"))
+        .agg(sum(col("tb")).as("tok_bits"))
+        .join(broadcast(priors), "cls")
+        .crossJoin(broadcast(nDocs))
+        .withColumn("bits",
+          col("tok_bits") + (flog2(col("n_docs")) - flog2(col("n_c"))).cast("long"))
+      Dedup.keepFirst(scored, Seq(col("doc_id")), Seq(col("bits"), col("cls")), "rn")
+        .select(col("doc_id"), col("cls").as("pred_bucket"), col("bits"))
+        .join(lab.select(col("doc_id"), col("cls").as("quality_bucket")), "doc_id")
+        .withColumn("correct", col("pred_bucket") === col("quality_bucket"))
+        .select("doc_id", "pred_bucket", "bits", "quality_bucket", "correct")
+        .orderBy("doc_id")
+    }
 
   val nbClassifySql: String =
     s"""WITH p AS ($preparedSql),
@@ -4101,28 +4044,25 @@ object TextOps {
   private def shinglePairCounts(spark: SparkSession, dir: String, dfCap: Int): DataFrame =
     // the candidate scaffold is itself a derived relation two operators
     // score differently — computed once per (session, dir, dfCap)
-    graft.SharedRel(spark, s"shingle-pairs|$dir|$dfCap", Materialize.Local)(
-      shinglePairCountsBuild(spark, dir, dfCap))
-
-  private def shinglePairCountsBuild(spark: SparkSession, dir: String, dfCap: Int): DataFrame = {
-    // materialized once: the shingle explode feeds FOUR consumers (df
-    // counts, both self-join sides, per-doc sizes) and dominates per-doc
-    // cost — same shape as [[jaccardPairs]]'s materialization point
-    val ex = Materialize.Local(shingles3(spark, dir))
-    // the hot list is tiny (shingles in > dfCap docs) → broadcast anti-join,
-    // never a shuffle join against the full per-shingle df relation
-    val hot = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap).drop("df")
-    val capped = ex.join(broadcast(hot), Seq("sh"), "left_anti")
-    val sizes = capped.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    capped.as("a")
-      .join(capped.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      .join(sizes.select(col("doc_id").as("a_id"), col("n_sh").as("n_a")), "a_id")
-      .join(sizes.select(col("doc_id").as("b_id"), col("n_sh").as("n_b")), "b_id")
-  }
+    graft.SharedRel(spark, s"shingle-pairs|$dir|$dfCap", Materialize.Local) {
+      // materialized once: the shingle explode feeds FOUR consumers (df
+      // counts, both self-join sides, per-doc sizes) and dominates per-doc
+      // cost — same shape as [[jaccardPairs]]'s materialization point
+      val ex = Materialize.Local(shingles3(spark, dir))
+      // the hot list is tiny (shingles in > dfCap docs) → broadcast anti-join,
+      // never a shuffle join against the full per-shingle df relation
+      val hot = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+        .filter(col("df") > dfCap).drop("df")
+      val capped = ex.join(broadcast(hot), Seq("sh"), "left_anti")
+      val sizes = capped.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+      capped.as("a")
+        .join(capped.as("b"),
+          col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+        .agg(count(lit(1)).as("n_shared"))
+        .join(sizes.select(col("doc_id").as("a_id"), col("n_sh").as("n_a")), "a_id")
+        .join(sizes.select(col("doc_id").as("b_id"), col("n_sh").as("n_b")), "b_id")
+    }
 
   def containmentPairs(spark: SparkSession, dir: String, threshold: Double = 0.3,
                        dfCap: Int = 50): DataFrame =
@@ -4370,8 +4310,8 @@ object TextOps {
     *
     * Scale shape: the serving state is `k` (hash, value) pairs per
     * source — a bottom-k-by-hash semilattice (order/batching/replay
-    * insensitive, the [[graft.streaming.QuantileStream]] twin holds
-    * exactly this state) — versus the full per-source sort the exact
+    * insensitive; [[graft.streaming.QuantileStream]] gates arrivals on
+    * its frozen p990) — versus the full per-source sort the exact
     * column needs. At 100 TB the exact side is the verification harness
     * this report prices, same posture as the KMV/CMS tiers; the
     * percentile probe is a 3-row broadcast literal, never a shuffle.
@@ -4538,7 +4478,7 @@ object TextOps {
   }
 
   /** The candidate relation at one banding. NOT a SharedRel key (r19):
-    * its only production consumer is [[lshSweepBuild]] — itself memoized
+    * its only production consumer is [[lshSweep]] — itself memoized
     * under `lshsweep` — so a key here would violate the shared_build
     * contract's ≥2-consumers rule (PLANS.md) and merely relabel the same
     * one-time cost. (It WAS shared in r18, when the retune consumed the
@@ -4553,30 +4493,26 @@ object TextOps {
   def lshSweep(spark: SparkSession, dir: String, threshold: Double = 0.9): DataFrame =
     // session-shared: the 3-row S-curve feeds its own query AND the retune
     // action's pick
-    graft.SharedRel(spark, s"lshsweep|$dir|$threshold", Materialize.Local)(
-      lshSweepBuild(spark, dir, threshold))
-
-  private[graft] def lshSweepBuild(spark: SparkSession, dir: String,
-                                   threshold: Double): DataFrame = {
-    val exact = jaccardPairs(spark, dir, threshold)
-      .select(col("doc_a"), col("doc_b"))
-    val nTrue = exact.agg(count(lit(1)).as("n_true"))
-    val perConfig = lshGroupsOf.keys.toSeq.sorted.map { nb =>
-      val cand = lshCandidatesAt(spark, dir, nb)
-      cand.join(exact.withColumn("istrue", lit(1L)), Seq("doc_a", "doc_b"), "left")
-        .agg(count(lit(1)).as("n_cand"),
-          // sum over an empty (zero-candidate) config is null, not 0
-          coalesce(sum(coalesce(col("istrue"), lit(0L))), lit(0L)).as("n_hit"))
-        .select(lit(nb).as("bands"), lit(8 / nb).as("rows_per_band"),
-          col("n_cand"), col("n_hit"))
-    }.reduce(_ unionByName _)
-    perConfig.crossJoin(broadcast(nTrue))
-      .select(col("bands"), col("rows_per_band"), col("n_cand"),
-        col("n_true"), col("n_hit"),
-        expr("n_hit * 1000 div greatest(n_true, 1)").as("recall_pm"),
-        expr("n_hit * 1000 div greatest(n_cand, 1)").as("precision_pm"))
-      .orderBy("bands")
-  }
+    graft.SharedRel(spark, s"lshsweep|$dir|$threshold", Materialize.Local) {
+      val exact = jaccardPairs(spark, dir, threshold)
+        .select(col("doc_a"), col("doc_b"))
+      val nTrue = exact.agg(count(lit(1)).as("n_true"))
+      val perConfig = lshGroupsOf.keys.toSeq.sorted.map { nb =>
+        val cand = lshCandidatesAt(spark, dir, nb)
+        cand.join(exact.withColumn("istrue", lit(1L)), Seq("doc_a", "doc_b"), "left")
+          .agg(count(lit(1)).as("n_cand"),
+            // sum over an empty (zero-candidate) config is null, not 0
+            coalesce(sum(coalesce(col("istrue"), lit(0L))), lit(0L)).as("n_hit"))
+          .select(lit(nb).as("bands"), lit(8 / nb).as("rows_per_band"),
+            col("n_cand"), col("n_hit"))
+      }.reduce(_ unionByName _)
+      perConfig.crossJoin(broadcast(nTrue))
+        .select(col("bands"), col("rows_per_band"), col("n_cand"),
+          col("n_true"), col("n_hit"),
+          expr("n_hit * 1000 div greatest(n_true, 1)").as("recall_pm"),
+          expr("n_hit * 1000 div greatest(n_cand, 1)").as("precision_pm"))
+        .orderBy("bands")
+    }
 
   /** The sweep's CTE chain (sig → banded → candidate sets → exact pairs →
     * per-config stats), shared between [[lshSweepSql]] and

@@ -272,34 +272,29 @@ object VectorOps {
     // session-shared (SharedRel.once): the direction feeds BOTH the
     // monitor (v_anisotropy) and its action (v_abtt) — the deployment
     // computes it once per corpus snapshot
-    graft.SharedRel.once(spark, s"powertop|$dir|$iters", Materialize.Local) {
-      powerIterTopBuild(spark, dir, iters)
-    }
-
-  private def powerIterTopBuild(spark: SparkSession, dir: String,
-                                iters: Int): Seq[Double] = {
-    import spark.implicits._
-    val e = prepared(spark, dir)
-    var x: Seq[Double] = e.orderBy("vec_id").limit(1)
-      .select(col("nrm"), posexplode(col("v")).as(Seq("dim", "comp")))
-      .select(col("dim"), round(col("comp") / col("nrm"), 4).as("x"))
-      .orderBy("dim").as[(Int, Double)].collect().map(_._2).toSeq
-    // loud refusal, not an IndexOutOfBounds: the monitor is undefined on
-    // an empty cloud (and a 0-row oracle could not be compared anyway)
-    require(x.nonEmpty, s"anisotropy needs a non-empty embedding relation: $dir")
-    for (_ <- 1 to iters) {
-      val xl = typedlit(x)
-      val y = e.withColumn("dp", dot(col("v"), xl) / col("nrm"))
-        .select(col("nrm"), col("dp"), posexplode(col("v")).as(Seq("dim", "comp")))
-        .groupBy("dim")
-        .agg(round(avg(col("comp") / col("nrm") * col("dp")), 4).as("y"))
-      val nY = y.agg(greatest(sqrt(sum(col("y") * col("y"))), lit(1e-12)).as("n"))
-      x = y.crossJoin(broadcast(nY))
-        .select(col("dim"), round(col("y") / col("n"), 4).as("x"))
+    graft.SharedRel.once(spark, s"powertop|$dir|$iters") {
+      import spark.implicits._
+      val e = prepared(spark, dir)
+      var x: Seq[Double] = e.orderBy("vec_id").limit(1)
+        .select(col("nrm"), posexplode(col("v")).as(Seq("dim", "comp")))
+        .select(col("dim"), round(col("comp") / col("nrm"), 4).as("x"))
         .orderBy("dim").as[(Int, Double)].collect().map(_._2).toSeq
+      // loud refusal, not an IndexOutOfBounds: the monitor is undefined on
+      // an empty cloud (and a 0-row oracle could not be compared anyway)
+      require(x.nonEmpty, s"anisotropy needs a non-empty embedding relation: $dir")
+      for (_ <- 1 to iters) {
+        val xl = typedlit(x)
+        val y = e.withColumn("dp", dot(col("v"), xl) / col("nrm"))
+          .select(col("nrm"), col("dp"), posexplode(col("v")).as(Seq("dim", "comp")))
+          .groupBy("dim")
+          .agg(round(avg(col("comp") / col("nrm") * col("dp")), 4).as("y"))
+        val nY = y.agg(greatest(sqrt(sum(col("y") * col("y"))), lit(1e-12)).as("n"))
+        x = y.crossJoin(broadcast(nY))
+          .select(col("dim"), round(col("y") / col("n"), 4).as("x"))
+          .orderBy("dim").as[(Int, Double)].collect().map(_._2).toSeq
+      }
+      x
     }
-    x
-  }
 
   /** The power rounds unrolled as DuckDB CTEs, ending in `xl$iters`
     * (a 1-row relation holding the final direction as a list) — shared
@@ -914,9 +909,9 @@ object VectorOps {
     * rather than re-scoring candidates per consumer.
     */
   private def sharedKnnEdges(spark: SparkSession, dir: String, kNn: Int,
-                             kCentroids: Int, mat: Materialize): DataFrame =
-    graft.SharedRel(spark, s"knng|$dir|$kNn|$kCentroids", mat) {
-      val assigned = sharedIvfAssign(spark, dir, kCentroids, mat)
+                             kCentroids: Int): DataFrame =
+    graft.SharedRel(spark, s"knng|$dir|$kNn|$kCentroids", Materialize.Local) {
+      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
       val e = prepared(spark, dir).join(assigned, "vec_id")
       val a = e.select(col("centroid_id"), col("vec_id").as("src"),
         col("v").as("va"), col("nrm").as("na"))
@@ -930,9 +925,8 @@ object VectorOps {
     }
 
   def knnGraph(spark: SparkSession, dir: String, kNn: Int = 5,
-               kCentroids: Int = 16,
-               mat: Materialize = Materialize.Local): DataFrame = {
-    val edges = sharedKnnEdges(spark, dir, kNn, kCentroids, mat)
+               kCentroids: Int = 16): DataFrame = {
+    val edges = sharedKnnEdges(spark, dir, kNn, kCentroids)
     val back = edges.select(col("src").as("b_dst"), col("dst").as("b_src"))
     edges.join(back,
         col("src") === col("b_src") && col("dst") === col("b_dst"), "left")
@@ -1051,21 +1045,17 @@ object VectorOps {
     */
   def semClusters(spark: SparkSession, dir: String, threshold: Double = 0.4,
                   kNn: Int = 5, kCentroids: Int = 16): DataFrame =
-    graft.SharedRel(spark, s"semcc|$dir|$threshold|$kNn|$kCentroids", Materialize.Local)(
-      semClustersBuild(spark, dir, threshold, kNn, kCentroids))
-
-  private def semClustersBuild(spark: SparkSession, dir: String, threshold: Double,
-                               kNn: Int, kCentroids: Int): DataFrame = {
-    val edges = Materialize.Local(knnGraph(spark, dir, kNn, kCentroids)
-      .filter(col("mutual") && col("cos_sim") >= threshold)
-      .select(col("src"), col("dst")))
-    val nodes = prepared(spark, dir).select(col("vec_id"))
-    propagateMinLabels(nodes, edges)
-      .withColumn("cluster_size", count(lit(1)).over(
-        Window.partitionBy(col("label"))))
-      .select(col("vec_id"), col("label").as("cluster_rep"), col("cluster_size"))
-      .orderBy("vec_id")
-  }
+    graft.SharedRel(spark, s"semcc|$dir|$threshold|$kNn|$kCentroids", Materialize.Local) {
+      val edges = Materialize.Local(knnGraph(spark, dir, kNn, kCentroids)
+        .filter(col("mutual") && col("cos_sim") >= threshold)
+        .select(col("src"), col("dst")))
+      val nodes = prepared(spark, dir).select(col("vec_id"))
+      propagateMinLabels(nodes, edges)
+        .withColumn("cluster_size", count(lit(1)).over(
+          Window.partitionBy(col("label"))))
+        .select(col("vec_id"), col("label").as("cluster_rep"), col("cluster_size"))
+        .orderBy("vec_id")
+    }
 
   /** The min-label propagation core of [[semClusters]], factored out so its
     * convergence edge (round count = component diameter, hard `maxRounds`
@@ -1258,21 +1248,19 @@ object VectorOps {
     */
   def graphRank(spark: SparkSession, dir: String, threshold: Double = 0.4,
                 kNn: Int = 5, kCentroids: Int = 16, iters: Int = 3,
-                damp: Int = 85,
-                mat: Materialize = Materialize.Local): DataFrame = {
-    val edges = mat(knnGraph(spark, dir, kNn, kCentroids, mat)
+                damp: Int = 85): DataFrame = {
+    val edges = Materialize.Local(knnGraph(spark, dir, kNn, kCentroids)
       .filter(col("mutual") && col("cos_sim") >= threshold)
       .select(col("src"), col("dst")))
     val nodes = prepared(spark, dir).select(col("vec_id"))
-    graphRankCore(nodes, edges, iters, damp, mat).orderBy(col("vec_id"))
+    graphRankCore(nodes, edges, iters, damp).orderBy(col("vec_id"))
   }
 
   /** The power-iteration core of [[graphRank]], factored out so crafted
     * graph fixtures drive it directly. `edges` must be symmetric.
     */
   private[graft] def graphRankCore(nodes: DataFrame, edges: DataFrame,
-                                   iters: Int, damp: Int,
-                                   mat: Materialize): DataFrame = {
+                                   iters: Int, damp: Int): DataFrame = {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     var scores = nodes.withColumn("score", lit(1000000L))
     for (_ <- 1 to iters) {
@@ -1281,7 +1269,7 @@ object VectorOps {
         .join(deg, "src")
         .select(col("dst"), expr("score div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("in_c"))
-      scores = mat(nodes
+      scores = Materialize.Local(nodes
         .join(contrib.withColumnRenamed("dst", "vec_id"), Seq("vec_id"), "left")
         .select(col("vec_id"),
           (lit((100L - damp) * 10000L) +
@@ -1827,20 +1815,16 @@ object VectorOps {
 
   def annIvfMulti(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
                   kCentroids: Int = 16, nProbe: Int = 2): DataFrame =
-    sharedAnnHits(spark, "ivfmulti", dir, s"$nQueries|$kNn|$kCentroids|$nProbe")(
-      annIvfMultiBuild(spark, dir, nQueries, kNn, kCentroids, nProbe))
+    sharedAnnHits(spark, "ivfmulti", dir, s"$nQueries|$kNn|$kCentroids|$nProbe") {
+      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+      val e = prepared(spark, dir).join(assigned, "vec_id")
+      val qProbes = queryProbes(prepared(spark, dir), nQueries, kCentroids, nProbe)
+      val sims = e.join(broadcast(qProbes),
+          col("centroid_id") === col("q_cent") && col("vec_id") =!= col("q_id"))
+        .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
+      topHits(sims, "cos_sim", kNn)
+    }
       .orderBy(col("q_id"), col("rank"))
-
-  private[graft] def annIvfMultiBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                      kNn: Int, kCentroids: Int, nProbe: Int): DataFrame = {
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
-    val e = prepared(spark, dir).join(assigned, "vec_id")
-    val qProbes = queryProbes(prepared(spark, dir), nQueries, kCentroids, nProbe)
-    val sims = e.join(broadcast(qProbes),
-        col("centroid_id") === col("q_cent") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    topHits(sims, "cos_sim", kNn)
-  }
 
   /** [[annIvfMulti]] generalized to an EXPLICIT centroid relation
     * (centroid_id, cv, cn) — the form a TRAINED quantizer plugs into. The
@@ -2234,21 +2218,17 @@ object VectorOps {
     */
   def annIvfFiltered(spark: SparkSession, dir: String, nQueries: Int = 20,
                      kNn: Int = 5, kCentroids: Int = 16, nProbe: Int = 2): DataFrame =
-    sharedAnnHits(spark, "ivff", dir, s"$nQueries|$kNn|$kCentroids|$nProbe")(
-      annIvfFilteredBuild(spark, dir, nQueries, kNn, kCentroids, nProbe))
+    sharedAnnHits(spark, "ivff", dir, s"$nQueries|$kNn|$kCentroids|$nProbe") {
+      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+      val e = prepared(spark, dir).join(assigned, "vec_id")
+      val qProbes = queryProbes(prepared(spark, dir), nQueries, kCentroids, nProbe, withLabel = true)
+      val sims = e.join(broadcast(qProbes),
+          col("centroid_id") === col("q_cent") && col("label") === col("q_label") &&
+            col("vec_id") =!= col("q_id"))
+        .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
+      topHits(sims, "cos_sim", kNn)
+    }
       .orderBy(col("q_id"), col("rank"))
-
-  private[graft] def annIvfFilteredBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                         kNn: Int, kCentroids: Int, nProbe: Int): DataFrame = {
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
-    val e = prepared(spark, dir).join(assigned, "vec_id")
-    val qProbes = queryProbes(prepared(spark, dir), nQueries, kCentroids, nProbe, withLabel = true)
-    val sims = e.join(broadcast(qProbes),
-        col("centroid_id") === col("q_cent") && col("label") === col("q_label") &&
-          col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    topHits(sims, "cos_sim", kNn)
-  }
 
   def annIvfFilteredSql(nQueries: Int = 20, kNn: Int = 5, kCentroids: Int = 16,
                         nProbe: Int = 2): String =
@@ -2439,7 +2419,7 @@ object VectorOps {
     graft.SharedRel(spark, s"margpairs|$dir|$k|$kCentroids|$minMargin|$nProbe",
       Materialize.Local)(
       marginCore(spark, dir, pmod(col("label"), lit(2)) === 0,
-        k, kCentroids, minMargin, nProbe, Materialize.Local)).orderBy(col("a_id"))
+        k, kCentroids, minMargin, nProbe)).orderBy(col("a_id"))
 
   /** The DAILY-ARRIVAL form of [[marginPairs]] — new source-side vectors
     * (the salted delta split of the A parity) mined against the full
@@ -2459,11 +2439,11 @@ object VectorOps {
                       minMargin: Double = 1.0, nProbe: Int = 4): DataFrame =
     marginCore(spark, dir,
       pmod(col("label"), lit(2)) === 0 && Exprs.arrivalSplit(col("vec_id"), deltaMod) === 0,
-      k, kCentroids, minMargin, nProbe, Materialize.Local).orderBy(col("a_id"))
+      k, kCentroids, minMargin, nProbe).orderBy(col("a_id"))
 
   private[graft] def marginCore(spark: SparkSession, dir: String, aFilter: Column,
                          k: Int, kCentroids: Int, minMargin: Double,
-                         nProbe: Int, mat: Materialize): DataFrame = {
+                         nProbe: Int): DataFrame = {
     // the kCentroids == 1 branch below skips the probe cap, so a probe
     // count below 1 would mine the full A side instead of nothing
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
@@ -2490,7 +2470,7 @@ object VectorOps {
           col("v").as("vb"), col("nrm").as("nb"))
       marginJoinScore(a, b, k, minMargin)
     } else {
-      val assigned = sharedIvfAssign(spark, dir, kCentroids, mat)
+      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
       val a = Exprs.keepTop(e.filter(aFilter).join(cents), Seq(col("vec_id")), nearestCentroid,
           nProbe, "__rn")
         .select(col("centroid_id"), col("vec_id").as("a_id"),
@@ -2629,7 +2609,7 @@ object VectorOps {
       // marginPairs surface — a nested one-consumer `margpairs|…|1` entry
       // would just duplicate this checkpoint)
       marginCore(spark, dir, pmod(col("label"), lit(2)) === 0,
-        k, 1, minMargin, nProbe = 4, mat = Materialize.Local)
+        k, 1, minMargin, nProbe = 4)
         .select(col("a_id"), col("b_id")))
 
   def marginRecall(spark: SparkSession, dir: String, k: Int = 4,
@@ -2922,26 +2902,22 @@ object VectorOps {
 
   def annPq(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
             blocks: Int = 4, k: Int = 16): DataFrame =
-    sharedAnnHits(spark, "pq", dir, s"$nQueries|$kNn|$blocks|$k")(
-      annPqBuild(spark, dir, nQueries, kNn, blocks, k))
-
-  private[graft] def annPqBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                kNn: Int, blocks: Int, k: Int): DataFrame = {
-    val e = prepared(spark, dir)
-    val codes = sharedPqCodes(spark, dir, blocks, k)
-    val lut = broadcast(adcLut(e, nQueries, blocks, k))
-    val scored = codes.withColumn("code", col("code").cast("long"))
-      .join(lut, Seq("block", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(
-        first(when(col("block") === 0, col("s")), ignoreNulls = true).as("s0"),
-        (1 until blocks).map(b =>
-          first(when(col("block") === b, col("s")), ignoreNulls = true).as(s"s$b")): _*)
-      .withColumn("adc_score",
-        round((0 until blocks).map(b => col(s"s$b")).reduce(_ + _), 4))
-    topHits(scored, "adc_score", kNn)
-  }
+    sharedAnnHits(spark, "pq", dir, s"$nQueries|$kNn|$blocks|$k") {
+      val e = prepared(spark, dir)
+      val codes = sharedPqCodes(spark, dir, blocks, k)
+      val lut = broadcast(adcLut(e, nQueries, blocks, k))
+      val scored = codes.withColumn("code", col("code").cast("long"))
+        .join(lut, Seq("block", "code"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .groupBy(col("q_id"), col("vec_id"))
+        .agg(
+          first(when(col("block") === 0, col("s")), ignoreNulls = true).as("s0"),
+          (1 until blocks).map(b =>
+            first(when(col("block") === b, col("s")), ignoreNulls = true).as(s"s$b")): _*)
+        .withColumn("adc_score",
+          round((0 until blocks).map(b => col(s"s$b")).reduce(_ + _), 4))
+      topHits(scored, "adc_score", kNn)
+    }
 
   def annPqSql(nQueries: Int = 20, kNn: Int = 5, blocks: Int = 4, k: Int = 16): String = {
     val sub = 64 / blocks
@@ -3031,19 +3007,15 @@ object VectorOps {
     * (single-probe). Recall vs [[knn]] is the standard IVF/LSH tradeoff.
     */
   def annLsh(spark: SparkSession, dir: String, nQueries: Int = 20, k: Int = 5, bits: Int = 4): DataFrame =
-    sharedAnnHits(spark, "lsh", dir, s"$nQueries|$k|$bits")(
-      annLshBuild(spark, dir, nQueries, k, bits))
+    sharedAnnHits(spark, "lsh", dir, s"$nQueries|$k|$bits") {
+      val e = prepared(spark, dir).withColumn("bkt", bucketExpr(col("v"), bits))
+      val q = broadcast(e.filter(col("vec_id") < nQueries)
+        .select(col("bkt"), col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")))
+      val sims = e.join(q, Seq("bkt")).filter(col("vec_id") =!= col("q_id"))
+        .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
+      topHits(sims, "cos_sim", k)
+    }
       .orderBy(col("q_id"), col("rank"))
-
-  private[graft] def annLshBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                 k: Int, bits: Int): DataFrame = {
-    val e = prepared(spark, dir).withColumn("bkt", bucketExpr(col("v"), bits))
-    val q = broadcast(e.filter(col("vec_id") < nQueries)
-      .select(col("bkt"), col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")))
-    val sims = e.join(q, Seq("bkt")).filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-    topHits(sims, "cos_sim", k)
-  }
 
   def annLshSql(nQueries: Int = 20, k: Int = 5, bits: Int = 4): String =
     s"""WITH e AS (SELECT *, ${bucketSql(bits)} AS bkt FROM ($preparedSql)),
@@ -3076,29 +3048,25 @@ object VectorOps {
     * scan reads the 8×-smaller code table, which is the entire point.
     */
   def annSq(spark: SparkSession, dir: String, nQueries: Int = 20, k: Int = 5): DataFrame =
-    sharedAnnHits(spark, "sq", dir, s"$nQueries|$k")(
-      annSqBuild(spark, dir, nQueries, k))
+    sharedAnnHits(spark, "sq", dir, s"$nQueries|$k") {
+      val e = prepared(spark, dir)
+      val sq = e
+        .withColumn("max_abs",
+          expr("aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> greatest(acc, abs(x)))"))
+        .withColumn("scale", col("max_abs") / 127.0)
+        .select(col("vec_id"),
+          // Spark `floor` yields BIGINT (DuckDB's yields DOUBLE) — cast so
+          // the code array is array<double> for the native dot product
+          expr("transform(v, x -> CAST(floor(x / scale + 0.5d) AS DOUBLE))").as("codes"))
+      val q = broadcast(e.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")))
+      val sims = sq.join(q, col("vec_id") =!= col("q_id"))
+        .withColumn("cos_sq",
+          round(dot(col("qv"), col("codes"))
+            / (col("qn") * sqrt(dot(col("codes"), col("codes")))), 4))
+      topHits(sims, "cos_sq", k)
+    }
       .orderBy(col("q_id"), col("rank"))
-
-  private[graft] def annSqBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                k: Int): DataFrame = {
-    val e = prepared(spark, dir)
-    val sq = e
-      .withColumn("max_abs",
-        expr("aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> greatest(acc, abs(x)))"))
-      .withColumn("scale", col("max_abs") / 127.0)
-      .select(col("vec_id"),
-        // Spark `floor` yields BIGINT (DuckDB's yields DOUBLE) — cast so
-        // the code array is array<double> for the native dot product
-        expr("transform(v, x -> CAST(floor(x / scale + 0.5d) AS DOUBLE))").as("codes"))
-    val q = broadcast(e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")))
-    val sims = sq.join(q, col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sq",
-        round(dot(col("qv"), col("codes"))
-          / (col("qn") * sqrt(dot(col("codes"), col("codes")))), 4))
-    topHits(sims, "cos_sq", k)
-  }
 
   def annSqSql(nQueries: Int = 20, k: Int = 5): String =
     s"""WITH e AS ($preparedSql),
@@ -3178,20 +3146,16 @@ object VectorOps {
 
   def annRp(spark: SparkSession, dir: String, nQueries: Int = 20, k: Int = 5,
             kDim: Int = 32, d: Int = 64): DataFrame =
-    sharedAnnHits(spark, "rp", dir, s"$nQueries|$k|$kDim|$d")(
-      annRpBuild(spark, dir, nQueries, k, kDim, d))
+    sharedAnnHits(spark, "rp", dir, s"$nQueries|$k|$kDim|$d") {
+      val e = rpReduced(spark, dir, kDim, d)
+      val q = broadcast(e.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("q_id"), col("rv").as("qv"), col("rn").as("qn")))
+      val sims = e.join(q, col("vec_id") =!= col("q_id"))
+        .withColumn("cos_rp",
+          round(dot(col("qv"), col("rv")) / (col("qn") * col("rn")), 4))
+      topHits(sims, "cos_rp", k)
+    }
       .orderBy(col("q_id"), col("rank"))
-
-  private[graft] def annRpBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                k: Int, kDim: Int, d: Int): DataFrame = {
-    val e = rpReduced(spark, dir, kDim, d)
-    val q = broadcast(e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("rv").as("qv"), col("rn").as("qn")))
-    val sims = e.join(q, col("vec_id") =!= col("q_id"))
-      .withColumn("cos_rp",
-        round(dot(col("qv"), col("rv")) / (col("qn") * col("rn")), 4))
-    topHits(sims, "cos_rp", k)
-  }
 
   def annRpSql(nQueries: Int = 20, k: Int = 5, kDim: Int = 32, d: Int = 64): String =
     s"""WITH e AS (${rpReducedSql(kDim, d)}),
@@ -3221,30 +3185,26 @@ object VectorOps {
     */
   def annRpRr(spark: SparkSession, dir: String, nQueries: Int = 20, k: Int = 5,
               kDim: Int = 32, cand: Int = 100, d: Int = 64): DataFrame =
-    sharedAnnHits(spark, "rprr", dir, s"$nQueries|$k|$kDim|$cand|$d")(
-      annRpRrBuild(spark, dir, nQueries, k, kDim, cand, d))
+    sharedAnnHits(spark, "rprr", dir, s"$nQueries|$k|$kDim|$cand|$d") {
+      val e = rpReduced(spark, dir, kDim, d)
+      val q = broadcast(e.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("q_id"), col("rv").as("qv"), col("rn").as("qn")))
+      val candidates = Exprs.keepTop(e.join(q, col("vec_id") =!= col("q_id"))
+          .withColumn("cos_rp",
+            round(dot(col("qv"), col("rv")) / (col("qn") * col("rn")), 4)),
+          Seq(col("q_id")), Seq(col("cos_rp").desc, col("vec_id")), cand, "crank")
+        .select(col("q_id"), col("vec_id"))
+      val full = prepared(spark, dir)
+      val rr = candidates
+        .join(full.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
+        .join(broadcast(full.filter(col("vec_id") < nQueries)
+          .select(col("vec_id").as("q_id"), col("v").as("fqv"),
+            col("nrm").as("fqn"))), "q_id")
+        .withColumn("cos_sim",
+          round(dot(col("fqv"), col("v")) / (col("fqn") * col("nrm")), 4))
+      topHits(rr, "cos_sim", k)
+    }
       .orderBy(col("q_id"), col("rank"))
-
-  private[graft] def annRpRrBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                  k: Int, kDim: Int, cand: Int, d: Int): DataFrame = {
-    val e = rpReduced(spark, dir, kDim, d)
-    val q = broadcast(e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("rv").as("qv"), col("rn").as("qn")))
-    val candidates = Exprs.keepTop(e.join(q, col("vec_id") =!= col("q_id"))
-        .withColumn("cos_rp",
-          round(dot(col("qv"), col("rv")) / (col("qn") * col("rn")), 4)),
-        Seq(col("q_id")), Seq(col("cos_rp").desc, col("vec_id")), cand, "crank")
-      .select(col("q_id"), col("vec_id"))
-    val full = prepared(spark, dir)
-    val rr = candidates
-      .join(full.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
-      .join(broadcast(full.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("q_id"), col("v").as("fqv"),
-          col("nrm").as("fqn"))), "q_id")
-      .withColumn("cos_sim",
-        round(dot(col("fqv"), col("v")) / (col("fqn") * col("nrm")), 4))
-    topHits(rr, "cos_sim", k)
-  }
 
   def annRpRrSql(nQueries: Int = 20, k: Int = 5, kDim: Int = 32,
                  cand: Int = 100, d: Int = 64): String =
@@ -3292,29 +3252,25 @@ object VectorOps {
     */
   def annIvfSq(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
                kCentroids: Int = 16, nProbe: Int = 2): DataFrame =
-    sharedAnnHits(spark, "ivfsq", dir, s"$nQueries|$kNn|$kCentroids|$nProbe")(
-      annIvfSqBuild(spark, dir, nQueries, kNn, kCentroids, nProbe))
+    sharedAnnHits(spark, "ivfsq", dir, s"$nQueries|$kNn|$kCentroids|$nProbe") {
+      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+      val e = prepared(spark, dir)
+      val sq = e
+        .withColumn("max_abs",
+          expr("aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> greatest(acc, abs(x)))"))
+        .withColumn("scale", col("max_abs") / 127.0)
+        .select(col("vec_id"),
+          expr("transform(v, x -> CAST(floor(x / scale + 0.5d) AS DOUBLE))").as("codes"))
+        .join(assigned, "vec_id")
+      val qProbes = queryProbes(e, nQueries, kCentroids, nProbe)
+      val sims = sq.join(broadcast(qProbes),
+          col("centroid_id") === col("q_cent") && col("vec_id") =!= col("q_id"))
+        .withColumn("cos_sq",
+          round(dot(col("qv"), col("codes"))
+            / (col("qn") * sqrt(dot(col("codes"), col("codes")))), 4))
+      topHits(sims, "cos_sq", kNn)
+    }
       .orderBy(col("q_id"), col("rank"))
-
-  private[graft] def annIvfSqBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                   kNn: Int, kCentroids: Int, nProbe: Int): DataFrame = {
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
-    val e = prepared(spark, dir)
-    val sq = e
-      .withColumn("max_abs",
-        expr("aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> greatest(acc, abs(x)))"))
-      .withColumn("scale", col("max_abs") / 127.0)
-      .select(col("vec_id"),
-        expr("transform(v, x -> CAST(floor(x / scale + 0.5d) AS DOUBLE))").as("codes"))
-      .join(assigned, "vec_id")
-    val qProbes = queryProbes(e, nQueries, kCentroids, nProbe)
-    val sims = sq.join(broadcast(qProbes),
-        col("centroid_id") === col("q_cent") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sq",
-        round(dot(col("qv"), col("codes"))
-          / (col("qn") * sqrt(dot(col("codes"), col("codes")))), 4))
-    topHits(sims, "cos_sq", kNn)
-  }
 
   def annIvfSqSql(nQueries: Int = 20, kNn: Int = 5, kCentroids: Int = 16,
                   nProbe: Int = 2): String =
@@ -3417,31 +3373,30 @@ object VectorOps {
     */
   def annGraphBeam(spark: SparkSession, dir: String, nQueries: Int = 20,
                    k: Int = 5, beam: Int = 8, hops: Int = 3, kNn: Int = 5,
-                   kCentroids: Int = 16, nProbe: Int = 2,
-                   mat: Materialize = Materialize.Local): DataFrame =
-    // session-shared under the default materialization: the search result
-    // feeds its own query AND the recall row (deterministic relation)
+                   kCentroids: Int = 16, nProbe: Int = 2): DataFrame =
+    // session-shared: the search result feeds its own query AND the
+    // recall row (deterministic relation)
     graft.SharedRel(spark,
       s"anngraph|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$nProbe",
-      mat)(
+      Materialize.Local)(
       annGraphBeamBuild(spark, dir, nQueries, k, beam, hops, kNn,
-        kCentroids, nProbe, mat))
+        kCentroids, nProbe))
 
-  private[graft] def annGraphBeamBuild(
+  private def annGraphBeamBuild(
       spark: SparkSession, dir: String, nQueries: Int,
       k: Int, beam: Int, hops: Int, kNn: Int,
-      kCentroids: Int, nProbe: Int, mat: Materialize,
+      kCentroids: Int, nProbe: Int,
       filtered: Boolean = false): DataFrame = {
     val e = prepared(spark, dir)
     val queries = broadcast(e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("v").as("qv"), col("nrm").as("qn")))
     graphBeamWith(e, queries,
-      sharedKnnEdges(spark, dir, kNn, kCentroids, mat)
+      sharedKnnEdges(spark, dir, kNn, kCentroids)
         .select(col("src"), col("dst")),
       e.filter(col("vec_id") < kCentroids)
         .select(col("vec_id"), col("label"), col("v"), col("nrm")),
-      k, beam, hops, nProbe, mat, filtered)
+      k, beam, hops, nProbe, filtered)
   }
 
   /** The beam core over an EXPLICIT serving graph — `edges` (src, dst)
@@ -3452,13 +3407,13 @@ object VectorOps {
   private def graphBeamWith(e: DataFrame, queries: DataFrame,
                             edges: DataFrame, seeds: DataFrame,
                             k: Int, beam: Int, hops: Int, nProbe: Int,
-                            mat: Materialize, filtered: Boolean): DataFrame = {
+                            filtered: Boolean): DataFrame = {
     val cInt = floor(dot(col("qv"), col("v")) / (col("qn") * col("nrm"))
       * 10000 + 0.5).cast("long")
     def best(df: DataFrame, bound: Int, rankCol: String): DataFrame =
       Exprs.keepTop(df, Seq(col("q_id")), Seq(col("c_int").desc, col("vec_id")), bound, rankCol)
     // routing layer: the seed nodes, top-nProbe per query
-    var visited = mat(best(queries
+    var visited = Materialize.Local(best(queries
       .crossJoin(broadcast(seeds
         .select(col("vec_id"), col("label"), col("v"), col("nrm"))))
       .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
@@ -3489,7 +3444,7 @@ object VectorOps {
           cInt.as("c_int"))
       // re-scored revisits carry the identical quantized score — the
       // (q, vec) max-dedup is value-neutral
-      visited = mat(best(visited.unionAll(scored)
+      visited = Materialize.Local(best(visited.unionAll(scored)
         .groupBy(col("q_id"), col("q_label"), col("vec_id"), col("label"))
         .agg(max(col("c_int")).as("c_int")), beam, "__rn")
         .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
@@ -3497,7 +3452,7 @@ object VectorOps {
       if (filtered) pool = pool.unionAll(scored)
     }
     val out = if (filtered) {
-      mat(pool).filter(col("label") === col("q_label"))
+      Materialize.Local(pool).filter(col("label") === col("q_label"))
         .groupBy(col("q_id"), col("vec_id")).agg(max(col("c_int")).as("c_int"))
     } else visited.select(col("q_id"), col("vec_id"), col("c_int"))
     best(out.filter(col("vec_id") =!= col("q_id")), k, "rank")
@@ -3522,7 +3477,7 @@ object VectorOps {
       s"anngraphf|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$nProbe",
       Materialize.Local)(
       annGraphBeamBuild(spark, dir, nQueries, k, beam, hops, kNn,
-        kCentroids, nProbe, Materialize.Local, filtered = true))
+        kCentroids, nProbe, filtered = true))
 
   def annGraphBeamSql(nQueries: Int = 20, k: Int = 5, beam: Int = 8,
                       hops: Int = 3, kNn: Int = 5,
@@ -3637,9 +3592,8 @@ object VectorOps {
     * pair edge relation (r17 VERDICT prescription #7).
     */
   private def staleGraphEdges(spark: SparkSession, dir: String, kNn: Int,
-                              kCentroids: Int, mod: Int,
-                              mat: Materialize): DataFrame =
-    graft.SharedRel(spark, s"staleedges|$dir|$kNn|$kCentroids|$mod", mat) {
+                              kCentroids: Int, mod: Int): DataFrame =
+    graft.SharedRel(spark, s"staleedges|$dir|$kNn|$kCentroids|$mod", Materialize.Local) {
       val e = prepared(spark, dir)
       val cents = frozenCentroids(e, kCentroids, mod)
       val centroidId = argmaxFold(typedLit(cents), c =>
@@ -3668,18 +3622,10 @@ object VectorOps {
     */
   private def staleBeamHits(spark: SparkSession, dir: String, nQueries: Int,
                             k: Int, beam: Int, hops: Int, kNn: Int,
-                            kCentroids: Int, mod: Int, nProbe: Int,
-                            mat: Materialize): DataFrame =
+                            kCentroids: Int, mod: Int, nProbe: Int): DataFrame =
     graft.SharedRel(spark,
       s"stalehits|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$mod|$nProbe",
-      mat)(staleBeamHitsBuild(spark, dir, nQueries, k, beam, hops, kNn,
-      kCentroids, mod, nProbe, mat))
-
-  private[graft] def staleBeamHitsBuild(spark: SparkSession, dir: String,
-                                        nQueries: Int, k: Int, beam: Int,
-                                        hops: Int, kNn: Int, kCentroids: Int,
-                                        mod: Int, nProbe: Int,
-                                        mat: Materialize): DataFrame = {
+      Materialize.Local) {
       val e = prepared(spark, dir)
       val queries = broadcast(e.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -3687,22 +3633,21 @@ object VectorOps {
       val cents = frozenCentroids(e, kCentroids, mod)
       val staleSeeds = e.filter(col("vec_id").isin(cents.map(_._1): _*))
         .select(col("vec_id"), col("label"), col("v"), col("nrm"))
-      val staleEdges = staleGraphEdges(spark, dir, kNn, kCentroids, mod, mat)
+      val staleEdges = staleGraphEdges(spark, dir, kNn, kCentroids, mod)
         .select(col("src"), col("dst"))
       graphBeamWith(e, queries, staleEdges, staleSeeds,
-        k, beam, hops, nProbe, mat, filtered = false)
+        k, beam, hops, nProbe, filtered = false)
         .select(col("q_id"), col("neighbor_id"))
-  }
+    }
 
   def graphCompact(spark: SparkSession, dir: String, nQueries: Int = 20,
                    k: Int = 5, beam: Int = 8, hops: Int = 3, kNn: Int = 5,
-                   kCentroids: Int = 16, mod: Int = 5, nProbe: Int = 2,
-                   mat: Materialize = Materialize.Local): DataFrame = {
+                   kCentroids: Int = 16, mod: Int = 5, nProbe: Int = 2): DataFrame = {
     val stale = staleBeamHits(spark, dir, nQueries, k, beam, hops, kNn,
-        kCentroids, mod, nProbe, mat)
+        kCentroids, mod, nProbe)
       .withColumn("hit_stale", lit(1))
     val full = annGraphBeam(spark, dir, nQueries, k, beam, hops, kNn,
-        kCentroids, nProbe, mat)
+        kCentroids, nProbe)
       .select(col("q_id"), col("neighbor_id")).withColumn("hit_full", lit(1))
     val exact = sharedKnnExact(spark, dir, nQueries, k)
     exact.join(full, Seq("q_id", "neighbor_id"), "left")
@@ -3810,7 +3755,7 @@ object VectorOps {
     val cents = frozenCentroids(e, kCentroids, mod)
     // the session-shared stale graph ([[staleGraphEdges]]) — the SAME
     // relation the compact audit prices, never rebuilt here
-    val edges = staleGraphEdges(spark, dir, kNn, kCentroids, mod, Materialize.Local)
+    val edges = staleGraphEdges(spark, dir, kNn, kCentroids, mod)
     val deltaEdges = edges.filter(col("is_delta_edge"))
       .select(col("src"), col("dst"), col("cos_sim"))
     // the reverse proposals: cosine is symmetric and both directions
@@ -3826,12 +3771,12 @@ object VectorOps {
     val staleSeeds = e.filter(col("vec_id").isin(cents.map(_._1): _*))
       .select(col("vec_id"), col("label"), col("v"), col("nrm"))
     val mergedHits = graphBeamWith(e, queries, merged, staleSeeds,
-        k, beam, hops, nProbe, Materialize.Local, filtered = false)
+        k, beam, hops, nProbe, filtered = false)
       .select(col("q_id"), col("neighbor_id")).withColumn("hit_merged", lit(1))
     // the stale beam is the compact audit's session-shared relation —
     // the r17 double-run this action no longer pays
     val staleHits = staleBeamHits(spark, dir, nQueries, k, beam, hops, kNn,
-        kCentroids, mod, nProbe, Materialize.Local)
+        kCentroids, mod, nProbe)
       .withColumn("hit_stale", lit(1))
     val full = annGraphBeam(spark, dir, nQueries, k, beam, hops, kNn,
         kCentroids, nProbe)
@@ -3959,35 +3904,30 @@ object VectorOps {
                kCentroids: Int = 16, nProbe: Int = 2, blocks: Int = 4,
                k: Int = 16): DataFrame =
     sharedAnnHits(spark, "ivfpq", dir,
-      s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k")(
-      annIvfPqBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k))
+      s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k") {
+      val e = prepared(spark, dir)
+      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+      // IVF half: shared probe-list builder; PQ half: shared ADC LUT
+      val qProbes = queryProbes(e, nQueries, kCentroids, nProbe)
+        .select(col("q_id"), col("q_cent"))
+      val lut = broadcast(adcLut(e, nQueries, blocks, k))
+      // candidates: code rows of vectors living in a probed inverted list
+      val cand = sharedPqCodes(spark, dir, blocks, k)
+        .withColumn("code", col("code").cast("long"))
+        .join(assigned, "vec_id")
+        .join(broadcast(qProbes), col("centroid_id") === col("q_cent"))
+        .filter(col("vec_id") =!= col("q_id"))
+      val scored = cand.join(lut, Seq("q_id", "block", "code"))
+        .groupBy(col("q_id"), col("vec_id"))
+        .agg(
+          first(when(col("block") === 0, col("s")), ignoreNulls = true).as("s0"),
+          (1 until blocks).map(b =>
+            first(when(col("block") === b, col("s")), ignoreNulls = true).as(s"s$b")): _*)
+        .withColumn("adc_score",
+          round((0 until blocks).map(b => col(s"s$b")).reduce(_ + _), 4))
+      topHits(scored, "adc_score", kNn)
+    }
       .orderBy(col("q_id"), col("rank"))
-
-  private[graft] def annIvfPqBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                   kNn: Int, kCentroids: Int, nProbe: Int,
-                                   blocks: Int, k: Int): DataFrame = {
-    val e = prepared(spark, dir)
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
-    // IVF half: shared probe-list builder; PQ half: shared ADC LUT
-    val qProbes = queryProbes(e, nQueries, kCentroids, nProbe)
-      .select(col("q_id"), col("q_cent"))
-    val lut = broadcast(adcLut(e, nQueries, blocks, k))
-    // candidates: code rows of vectors living in a probed inverted list
-    val cand = sharedPqCodes(spark, dir, blocks, k)
-      .withColumn("code", col("code").cast("long"))
-      .join(assigned, "vec_id")
-      .join(broadcast(qProbes), col("centroid_id") === col("q_cent"))
-      .filter(col("vec_id") =!= col("q_id"))
-    val scored = cand.join(lut, Seq("q_id", "block", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(
-        first(when(col("block") === 0, col("s")), ignoreNulls = true).as("s0"),
-        (1 until blocks).map(b =>
-          first(when(col("block") === b, col("s")), ignoreNulls = true).as(s"s$b")): _*)
-      .withColumn("adc_score",
-        round((0 until blocks).map(b => col(s"s$b")).reduce(_ + _), 4))
-    topHits(scored, "adc_score", kNn)
-  }
 
   def annIvfPqSql(nQueries: Int = 20, kNn: Int = 5, kCentroids: Int = 16,
                   nProbe: Int = 2, blocks: Int = 4, k: Int = 16): String = {
@@ -4069,29 +4009,24 @@ object VectorOps {
                  kCentroids: Int = 16, nProbe: Int = 2, blocks: Int = 4,
                  k: Int = 16, mult: Int = 4): DataFrame =
     sharedAnnHits(spark, "ivfpqrr", dir,
-      s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k|$mult")(
-      annIvfPqRrBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k, mult))
+      s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k|$mult") {
+      require(mult >= 1, s"shortlist multiplier must be >= 1, got $mult")
+      val short = annIvfPq(spark, dir, nQueries, kNn * mult, kCentroids, nProbe, blocks, k)
+        .select(col("q_id"), col("neighbor_id"))
+      val e = prepared(spark, dir)
+      val qs = broadcast(e.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")))
+      val scored = e
+        .select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"))
+        .join(broadcast(short), "neighbor_id")
+        .join(qs, "q_id")
+        .withColumn("cos_sim", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
+      Exprs.keepTop(scored, Seq(col("q_id")), Seq(col("cos_sim").desc, col("neighbor_id")),
+          kNn, "rank")
+        .select(col("q_id"), col("rank"), col("neighbor_id"),
+          round(col("cos_sim"), 4).as("cos_sim"))
+    }
       .orderBy(col("q_id"), col("rank"))
-
-  private[graft] def annIvfPqRrBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                     kNn: Int, kCentroids: Int, nProbe: Int,
-                                     blocks: Int, k: Int, mult: Int): DataFrame = {
-    require(mult >= 1, s"shortlist multiplier must be >= 1, got $mult")
-    val short = annIvfPq(spark, dir, nQueries, kNn * mult, kCentroids, nProbe, blocks, k)
-      .select(col("q_id"), col("neighbor_id"))
-    val e = prepared(spark, dir)
-    val qs = broadcast(e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")))
-    val scored = e
-      .select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"))
-      .join(broadcast(short), "neighbor_id")
-      .join(qs, "q_id")
-      .withColumn("cos_sim", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    Exprs.keepTop(scored, Seq(col("q_id")), Seq(col("cos_sim").desc, col("neighbor_id")),
-        kNn, "rank")
-      .select(col("q_id"), col("rank"), col("neighbor_id"),
-        round(col("cos_sim"), 4).as("cos_sim"))
-  }
 
   def annIvfPqRrSql(nQueries: Int = 20, kNn: Int = 5, kCentroids: Int = 16,
                     nProbe: Int = 2, blocks: Int = 4, k: Int = 16,
@@ -4141,70 +4076,65 @@ object VectorOps {
                   kCentroids: Int = 16, nProbe: Int = 2, blocks: Int = 4,
                   k: Int = 16): DataFrame =
     sharedAnnHits(spark, "ivfpqres", dir,
-      s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k")(
-      annIvfPqResBuild(spark, dir, nQueries, kNn, kCentroids, nProbe, blocks, k))
+      s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k") {
+      val e = prepared(spark, dir)
+      val cents = e.filter(col("vec_id") < kCentroids)
+        .select(col("vec_id").as("centroid_id"), col("v").as("cv"))
+      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+      // residuals: row-local subtraction after a broadcast centroid join
+      val resid = Materialize.Local(e.select(col("vec_id"), col("v"))
+        .join(assigned, "vec_id")
+        .join(broadcast(cents), "centroid_id")
+        .select(col("vec_id"), col("centroid_id"),
+          zip_with(col("v"), col("cv"), (a, b) => a - b).as("r")))
+      val corpusSub = pqSubVectors(resid.select(col("vec_id"), col("r").as("v")),
+        "vec_id", blocks)
+      // residual codebook: residuals of the first k NON-CENTROID vectors
+      // (deterministic, oracle-checkable; a trained codebook swaps in without
+      // a plan change). The first kCentroids vectors must be excluded: each
+      // IS its own nearest centroid, so its residual is the zero vector — a
+      // codebook of them would be degenerate (measured: recall@5 collapsed
+      // 0.30 → 0.13 before this exclusion)
+      val cw = broadcast(
+        pqSubVectors(resid
+            .filter(col("vec_id") >= kCentroids && col("vec_id") < kCentroids + k)
+            .select(col("vec_id"), col("r").as("v")),
+          "cid", blocks)
+          .select(col("cid"), col("block"), col("sv").as("cv")))
+      val codes = nearestCodeword(corpusSub.join(cw, "block"), "rn")
+        .select(col("vec_id"), col("block"), col("cid").cast("long").as("code"))
+      // query side: raw query sub-vectors × residual codewords, plus the
+      // exact ⟨q, centroid⟩ base term per probed cell
+      val qs = pqSubVectors(e.filter(col("vec_id") < nQueries), "q_id", blocks)
+      val lut = broadcast(qs.join(cw, "block")
+        .select(col("q_id"), col("block"), col("cid").cast("long").as("code"),
+          dot(col("sv"), col("cv")).as("s")))
+      val base = broadcast(e.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("q_id"), col("v").as("qv"))
+        // nQueries × k rows; broadcast the CENTROID side explicitly so the
+        // cross product is plan-stable (BroadcastNestedLoop) without AQE
+        .crossJoin(broadcast(cents))
+        .select(col("q_id"), col("centroid_id"), dot(col("qv"), col("cv")).as("sbase")))
+      val qProbes = queryProbes(e, nQueries, kCentroids, nProbe)
+        .select(col("q_id"), col("q_cent"))
+      val cand = codes
+        .join(assigned, "vec_id")
+        .join(broadcast(qProbes), col("centroid_id") === col("q_cent"))
+        .filter(col("vec_id") =!= col("q_id"))
+      val scored = cand.join(lut, Seq("q_id", "block", "code"))
+        .groupBy(col("q_id"), col("vec_id"), col("centroid_id"))
+        .agg(
+          first(when(col("block") === 0, col("s")), ignoreNulls = true).as("s0"),
+          (1 until blocks).map(b =>
+            first(when(col("block") === b, col("s")), ignoreNulls = true).as(s"s$b")): _*)
+        .join(base, Seq("q_id", "centroid_id"))
+        // FIXED summation order (base, then blocks) — mirrored in the oracle
+        .withColumn("adc_score",
+          round((0 until blocks).map(b => col(s"s$b"))
+            .foldLeft(col("sbase"))(_ + _), 4))
+      topHits(scored, "adc_score", kNn)
+    }
       .orderBy(col("q_id"), col("rank"))
-
-  private[graft] def annIvfPqResBuild(spark: SparkSession, dir: String, nQueries: Int,
-                                      kNn: Int, kCentroids: Int, nProbe: Int,
-                                      blocks: Int, k: Int): DataFrame = {
-    val e = prepared(spark, dir)
-    val cents = e.filter(col("vec_id") < kCentroids)
-      .select(col("vec_id").as("centroid_id"), col("v").as("cv"))
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
-    // residuals: row-local subtraction after a broadcast centroid join
-    val resid = Materialize.Local(e.select(col("vec_id"), col("v"))
-      .join(assigned, "vec_id")
-      .join(broadcast(cents), "centroid_id")
-      .select(col("vec_id"), col("centroid_id"),
-        zip_with(col("v"), col("cv"), (a, b) => a - b).as("r")))
-    val corpusSub = pqSubVectors(resid.select(col("vec_id"), col("r").as("v")),
-      "vec_id", blocks)
-    // residual codebook: residuals of the first k NON-CENTROID vectors
-    // (deterministic, oracle-checkable; a trained codebook swaps in without
-    // a plan change). The first kCentroids vectors must be excluded: each
-    // IS its own nearest centroid, so its residual is the zero vector — a
-    // codebook of them would be degenerate (measured: recall@5 collapsed
-    // 0.30 → 0.13 before this exclusion)
-    val cw = broadcast(
-      pqSubVectors(resid
-          .filter(col("vec_id") >= kCentroids && col("vec_id") < kCentroids + k)
-          .select(col("vec_id"), col("r").as("v")),
-        "cid", blocks)
-        .select(col("cid"), col("block"), col("sv").as("cv")))
-    val codes = nearestCodeword(corpusSub.join(cw, "block"), "rn")
-      .select(col("vec_id"), col("block"), col("cid").cast("long").as("code"))
-    // query side: raw query sub-vectors × residual codewords, plus the
-    // exact ⟨q, centroid⟩ base term per probed cell
-    val qs = pqSubVectors(e.filter(col("vec_id") < nQueries), "q_id", blocks)
-    val lut = broadcast(qs.join(cw, "block")
-      .select(col("q_id"), col("block"), col("cid").cast("long").as("code"),
-        dot(col("sv"), col("cv")).as("s")))
-    val base = broadcast(e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      // nQueries × k rows; broadcast the CENTROID side explicitly so the
-      // cross product is plan-stable (BroadcastNestedLoop) without AQE
-      .crossJoin(broadcast(cents))
-      .select(col("q_id"), col("centroid_id"), dot(col("qv"), col("cv")).as("sbase")))
-    val qProbes = queryProbes(e, nQueries, kCentroids, nProbe)
-      .select(col("q_id"), col("q_cent"))
-    val cand = codes
-      .join(assigned, "vec_id")
-      .join(broadcast(qProbes), col("centroid_id") === col("q_cent"))
-      .filter(col("vec_id") =!= col("q_id"))
-    val scored = cand.join(lut, Seq("q_id", "block", "code"))
-      .groupBy(col("q_id"), col("vec_id"), col("centroid_id"))
-      .agg(
-        first(when(col("block") === 0, col("s")), ignoreNulls = true).as("s0"),
-        (1 until blocks).map(b =>
-          first(when(col("block") === b, col("s")), ignoreNulls = true).as(s"s$b")): _*)
-      .join(base, Seq("q_id", "centroid_id"))
-      // FIXED summation order (base, then blocks) — mirrored in the oracle
-      .withColumn("adc_score",
-        round((0 until blocks).map(b => col(s"s$b"))
-          .foldLeft(col("sbase"))(_ + _), 4))
-    topHits(scored, "adc_score", kNn)
-  }
 
   def annIvfPqResSql(nQueries: Int = 20, kNn: Int = 5, kCentroids: Int = 16,
                      nProbe: Int = 2, blocks: Int = 4, k: Int = 16): String = {

@@ -227,7 +227,7 @@ object Readings {
     // reps, multiple consumers) measure the read, and the write cost lands
     // in the bench's shared_build row. TransportSpec still asserts the
     // full write+read path (first call in its fresh session writes).
-    val out = graft.SharedRel.once(spark, s"topics|$dir|$t", graft.Materialize.Local) {
+    val out = graft.SharedRel.once(spark, s"topics|$dir|$t") {
       // per-JVM-unique root: stable across calls in one session (idempotent
       // overwrite), but two concurrent JVMs over the same dataset can't
       // clobber each other's files between plan construction and execution

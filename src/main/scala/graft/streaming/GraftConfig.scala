@@ -13,14 +13,17 @@ import graft.operators.Readings.Thresholds
   * `TEMPORAL_WINDOW_SECONDS` (flink_process.py:211-212) — so the file's
   * tuning silently never applies there. Here BOTH spellings are accepted,
   * the file's spelling winning when both are present.
+  *
+  * `GLOBAL_PARALLELISM` and `IDLE_TIMEOUT_MINUTES` are accepted and
+  * ignored: Spark sets parallelism per session (the master's cores and
+  * `spark.sql.shuffle.partitions`), not per job config.
   */
 final case class GraftConfig(
     transport: Transport.Kafka,
     thresholds: Thresholds,
     watermarkSeconds: Int,
     temporalWindowSeconds: Int,
-    temporalOrdering: Boolean,
-    parallelism: Int) {
+    temporalOrdering: Boolean) {
   def watermark: String = s"$watermarkSeconds seconds"
   def temporalWindow: String = s"$temporalWindowSeconds seconds"
 }
@@ -67,8 +70,7 @@ object GraftConfig {
       temporalWindowSeconds = first(
         Seq("TEMPORAL_WINDOW_SIZE_SECONDS", "TEMPORAL_WINDOW_SECONDS"), 1),
       temporalOrdering =
-        str("ENABLE_TEMPORAL_ORDERING", "true").toLowerCase == "true",
-      parallelism = int("GLOBAL_PARALLELISM", 4))
+        str("ENABLE_TEMPORAL_ORDERING", "true").toLowerCase == "true")
   }
 
   def load(path: String): GraftConfig =

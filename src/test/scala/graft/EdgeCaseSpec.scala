@@ -276,7 +276,7 @@ class EdgeCaseSpec extends SparkSuite {
   test("marginCore refuses a probe count below 1 instead of mining the full A side") {
     val e = intercept[IllegalArgumentException] {
       VectorOps.marginCore(spark, sf(), lit(true), k = 2, kCentroids = 1,
-        minMargin = 1.0, nProbe = 0, mat = Materialize.Passthrough)
+        minMargin = 1.0, nProbe = 0)
     }
     assert(e.getMessage.contains("nProbe"))
   }
@@ -326,7 +326,7 @@ class EdgeCaseSpec extends SparkSuite {
     val nodes = (0L until 5L).toDF("vec_id")
     val edges = Seq((0L, 0L)).toDF("src", "dst").filter(col("src") =!= col("dst"))
     val got = graft.functions.VectorOps.graphRankCore(nodes, edges,
-      iters = 3, damp = 85, mat = Materialize.Local)
+      iters = 3, damp = 85)
       .collect().map(r => r.getLong(1)).toSet
     assert(got == Set(150000L), "every node must hold the teleport floor")
   }

@@ -41,7 +41,6 @@ class GraftConfigSpec extends SparkSuite {
     // (the job reads WATERMARK_OUT_OF_ORDERNESS_SECONDS, default 5)
     assert(cfg.watermarkSeconds == 10)
     assert(cfg.temporalWindowSeconds == 1 && cfg.temporalOrdering)
-    assert(cfg.parallelism == 4)
   }
 
   test("defaults mirror the job's defaults; the job's key spelling also works") {

@@ -75,8 +75,8 @@ class MaterializeSpec extends SparkSuite {
   test("SharedRel reports a nested memo-miss build once, under the outer key") {
     // a fresh session starts with no builds on record
     val s = spark.newSession()
-    val built = SharedRel.once(s, "outer|t", Materialize.Local) {
-      val inner = SharedRel.once(s, "inner|t", Materialize.Local) { Thread.sleep(200); 1 }
+    val built = SharedRel.once(s, "outer|t") {
+      val inner = SharedRel.once(s, "inner|t") { Thread.sleep(200); 1 }
       Thread.sleep(100)
       inner + 1
     }
@@ -87,8 +87,41 @@ class MaterializeSpec extends SparkSuite {
     assert(outer >= 0.3, s"the outer build's time must contain the inner one's: $outer")
     assert(SharedRel.buildSeconds(s) == outer, "buildSeconds must count the outer build once")
     // the inner result was memoized too: a second call neither builds nor adds time
-    assert(SharedRel.once[Int](s, "inner|t", Materialize.Local)(fail("rebuilt a memo hit")) == 1)
+    assert(SharedRel.once[Int](s, "inner|t")(fail("rebuilt a memo hit")) == 1)
     assert(SharedRel.buildSeconds(s) == outer)
+  }
+
+  test("SharedRel.capture labels each build with its own key, nested builds with theirs") {
+    // a fresh session: the memo is empty, so lm2Bits builds the shared
+    // token relation inside its own build
+    val s = spark.newSession()
+    val dir = sf()
+    val (out, runs) = SharedRel.capture(s)(TextOps.lm2Bits(s, dir))
+    assert(runs.map(_._1) == Seq(s"prepared|$dir", s"lm2|$dir"))
+    // the outer build's plan is the one that ran: it reads the nested
+    // build's checkpoint, and its output is the memoized relation
+    assert(runs(1)._2.toString.contains("ExistingRDD"), runs(1)._2.toString)
+    assert(out.count() > 0)
+    // a memo hit runs nothing and records nothing
+    val (_, again) = SharedRel.capture(s)(TextOps.lm2Bits(s, dir))
+    assert(again.isEmpty, s"a memo hit recorded: ${again.map(_._1)}")
+  }
+
+  test("SharedRel.capture records one plan per round of a per-round operator, and nothing outside") {
+    val s = spark.newSession()
+    val nodes = s.range(4).toDF("vec_id")
+    val edges = s.createDataFrame(Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L)))
+      .toDF("src", "dst")
+    val (_, runs) = SharedRel.capture(s)(
+      VectorOps.graphRankCore(nodes, edges, iters = 3, damp = 85))
+    assert(runs.map(_._1) == Seq("", "", ""), s"rounds: ${runs.map(_._1)}")
+    assert(runs.forall(_._2.toString.contains("HashAggregate")))
+    // a checkpoint on another session inside a capture, and one outside
+    // any capture, are never recorded
+    val (_, other) = SharedRel.capture(s)(Materialize.Local(spark.range(3).toDF()))
+    assert(other.isEmpty)
+    Materialize.Local(s.range(3).toDF())
+    assert(SharedRel.capture(s)(())._2.isEmpty, "a checkpoint outside capture was kept")
   }
 
   test("training loops run through the Table path: identical output, objective intact") {

@@ -2799,7 +2799,7 @@ class OperatorsSpec extends SparkSuite {
     val und = (1L to 5L).map(i => (0L, i))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
     val got = functions.VectorOps.graphRankCore(nodes, edges, iters = 3,
-      damp = 85, mat = Materialize.Local)
+      damp = 85)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got(9L) == 150000L, "isolated node must hold the teleport floor")
     assert((1L to 5L).map(got).distinct.size == 1, "leaves are symmetric")

@@ -7,9 +7,15 @@ package graft
   * surfacing as a 100 TB regression.
   *
   * Assertions target structural operators (join strategy, exchange count,
-  * scan metadata), not fragile full-plan strings.
+  * scan metadata), not fragile full-plan strings. A session-shared build
+  * or a per-round checkpoint hides behind a checkpoint scan in the query's
+  * own plan; its pin reads the plan the build actually ran through
+  * [[SharedRel.capture]] on a fresh session ([[builds]] / [[builtPlan]]).
   */
 class PlanAuditSpec extends SparkSuite {
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+  import graft.functions.{MixOps, TextOps, VectorOps}
 
   private def executedPlan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf("sf0.001"))
@@ -26,8 +32,33 @@ class PlanAuditSpec extends SparkSuite {
       !Seq("Join", "HashAggregate", "ObjectHashAggregate", "SortAggregate",
         "Scan parquet", "Generate").exists(plan.contains)
     assert(!bare,
-      s"$name explains as a bare materialized scan — point this pin at the build function, not the shared query surface:\n$plan")
+      s"$name explains as a bare materialized scan — read the shared build's executed plan through builtPlan (SharedRel.capture on a fresh session), not the shared query surface:\n$plan")
     plan
+  }
+
+  /** Every `Materialize.Local` materialization `body` runs on a fresh
+    * session (empty memo, so every shared build it needs runs), in run
+    * order: (innermost SharedRel key or "" outside one, the plan the
+    * planner gave it). That is AQE's initial plan, the one an unexecuted
+    * `executedPlan` shows; AQE's runtime rewrites (a join turned broadcast
+    * from tiny runtime stats) do not count toward a pin.
+    */
+  private def builds(body: SparkSession => Any): Seq[(String, String)] = {
+    val fresh = spark.newSession()
+    SharedRel.capture(fresh)(body(fresh))._2.map {
+      case (k, p: AdaptiveSparkPlanExec) => k -> p.initialPlan.toString
+      case (k, p) => k -> p.toString
+    }
+  }
+
+  /** The executed plan of the shared build whose key starts with
+    * `prefix|`: the last materialization under that key is the build's
+    * own (checkpoints inside the build run before it).
+    */
+  private def builtPlan(prefix: String)(body: SparkSession => Any): String = {
+    val plans = builds(body).collect { case (k, p) if k.startsWith(prefix + "|") => p }
+    assert(plans.nonEmpty, s"no `$prefix` build ran")
+    plans.last
   }
 
   /** Count exchanges, excluding the final presentation orderBy's — the
@@ -75,8 +106,7 @@ class PlanAuditSpec extends SparkSuite {
     // d_curate consumes the SESSION-SHARED contamination index (a
     // checkpoint scan in its own plan) — the join to audit lives in the
     // index's BUILD plan
-    val plan = graft.functions.TextOps.contaminationBuild(spark, sf("sf0.001"), 10)
-      .queryExecution.executedPlan.toString
+    val plan = builtPlan("contam")(TextOps.contamination(_, sf("sf0.001"), 10))
     assert(plan.contains("BroadcastHashJoin"),
       s"benchmark probe set must broadcast into the shingle join:\n$plan")
   }
@@ -91,16 +121,16 @@ class PlanAuditSpec extends SparkSuite {
     // the search result is session-shared (SharedRel `annhits` — the
     // v_recall_sq harness grades the same run), so the pin audits the
     // BUILD plan (the d_dsir rule)
-    val plan = graft.functions.VectorOps.annSqBuild(spark, sf("sf0.001"),
-      nQueries = 20, k = 5).queryExecution.executedPlan.toString
+    val plan = builtPlan("annhits|sq")(VectorOps.annSq(_, sf("sf0.001"),
+      nQueries = 20, k = 5))
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
       s"query set must broadcast:\n$plan")
   }
 
   test("v_ann_ivfsq: probe lists broadcast onto the code scan") {
     // session-shared surface (`annhits`) — audit the build plan
-    val plan = graft.functions.VectorOps.annIvfSqBuild(spark, sf("sf0.001"),
-      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2).queryExecution.executedPlan.toString
+    val plan = builtPlan("annhits|ivfsq")(VectorOps.annIvfSq(_, sf("sf0.001"),
+      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2))
     assert(plan.contains("BroadcastHashJoin"),
       s"probe lists must broadcast:\n$plan")
   }
@@ -267,23 +297,22 @@ class PlanAuditSpec extends SparkSuite {
   test("decontam-spans build: probe shingle set broadcasts into the positioned join") {
     // same shared-index rule as the contamination audit: the memoized
     // d_decontam_spans handle is a checkpoint scan; audit the build
-    val plan = graft.functions.TextOps
-      .decontamSpansBuild(spark, sf("sf0.001"), 10)
-      .queryExecution.executedPlan.toString
+    val plan = builtPlan("decontam")(TextOps.decontamSpans(_, sf("sf0.001"), 10))
     assert(plan.contains("BroadcastHashJoin"),
       s"probe set must broadcast:\n$plan")
   }
 
   test("dup-spans build: shingle-keyed equi-join, never cartesian") {
-    // the memoized d_dup_spans handle is a checkpoint scan, and under
-    // Local the cut chain itself is the shared spancuts relation — audit
-    // the fully-live Passthrough build
-    val plan = graft.functions.TextOps
-      .dupSpansBuild(spark, sf("sf0.001"), 5, graft.Materialize.Passthrough)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"),
-      s"cut join must stay keyed on the shingle:\n$plan")
+    // the memoized d_dup_spans handle is a checkpoint scan, and the cut
+    // chain itself is the shared spancuts relation — audit every build
+    // the call runs (spancuts' cut join, the dupspans fold)
+    val plans = builds(TextOps.dupSpans(_, sf("sf0.001"), 5))
+    assert(plans.exists(_._1.startsWith("spancuts|")), s"no spancuts build ran: $plans")
+    plans.foreach { case (_, plan) =>
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoopJoin"),
+        s"cut join must stay keyed on the shingle:\n$plan")
+    }
   }
 
   test("mm_neardup: candidates only from band buckets — no all-pairs path in the plan") {
@@ -380,15 +409,15 @@ class PlanAuditSpec extends SparkSuite {
   test("v_ann_filtered: probes broadcast into the cell join — filter adds no exchange") {
     // both search surfaces are session-shared (`annhits`) — audit the
     // BUILD plans (the d_dsir rule)
-    val plan = graft.functions.VectorOps.annIvfFilteredBuild(spark, sf("sf0.001"),
-      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2).queryExecution.executedPlan.toString
+    val plan = builtPlan("annhits|ivff")(VectorOps.annIvfFiltered(_, sf("sf0.001"),
+      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2))
     // the label predicate rides the existing (centroid_id, label) probe
     // join condition: same BroadcastHashJoin as the unfiltered search, and
     // no extra hash exchange beyond the per-query top-k window
     assert(plan.contains("BroadcastHashJoin"),
       s"probe list must broadcast:\n$plan")
-    val unfiltered = graft.functions.VectorOps.annIvfMultiBuild(spark, sf("sf0.001"),
-      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2).queryExecution.executedPlan.toString
+    val unfiltered = builtPlan("annhits|ivfmulti")(VectorOps.annIvfMulti(_, sf("sf0.001"),
+      nQueries = 20, kNn = 5, kCentroids = 16, nProbe = 2))
     assert(dataExchanges(plan) <= dataExchanges(unfiltered),
       s"filtering must not add exchanges (filtered ${dataExchanges(plan)} vs " +
         s"unfiltered ${dataExchanges(unfiltered)}):\n$plan")
@@ -396,24 +425,32 @@ class PlanAuditSpec extends SparkSuite {
 
   test("v_ann_graph: frontier expansion stays src-keyed; no corpus cartesian") {
     // per-round materialization ends the public plan on a checkpoint scan
-    // — audit the LIVE per-round shape via Passthrough (the v_graph_rank
-    // rule). The routing-seed crossJoin is a broadcast of kCentroids rows
-    // (fine); a partition-wise cartesian means frontier×corpus blew up.
-    val plan = graft.functions.VectorOps.annGraphBeam(spark, sf("sf0.001"),
-      mat = graft.Materialize.Passthrough)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"),
-      s"graph beam search must never plan a partition-wise cartesian:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"frontier/eligibility joins must broadcast:\n$plan")
+    // — audit each hop round's executed plan (the v_graph_rank rule). The
+    // anngraph build materializes the routing layer, then one round per
+    // hop, then its result. The routing-seed crossJoin is a broadcast of
+    // kCentroids rows (fine); a partition-wise cartesian means
+    // frontier×corpus blew up.
+    val rounds = builds(VectorOps.annGraphBeam(_, sf("sf0.001"), hops = 3))
+      .collect { case (k, p) if k.startsWith("anngraph|") => p }.slice(1, 4)
+    assert(rounds.size == 3, s"expected 3 hop rounds, got ${rounds.size}")
+    rounds.foreach { plan =>
+      assert(!plan.contains("CartesianProduct"),
+        s"graph beam search must never plan a partition-wise cartesian:\n$plan")
+      assert(plan.contains("BroadcastHashJoin"),
+        s"frontier/eligibility joins must broadcast:\n$plan")
+    }
   }
 
   test("v_graph_compact: both serving graphs cell-keyed; audit never cartesian") {
-    val plan = graft.functions.VectorOps.graphCompact(spark, sf("sf0.001"),
-      mat = graft.Materialize.Passthrough)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"),
-      s"staleness audit must never plan a partition-wise cartesian:\n$plan")
+    // both beams' rounds and the graphs they search are checkpoints:
+    // audit every plan the call ran, then the audit join itself
+    var out: org.apache.spark.sql.DataFrame = null
+    val plans = builds { s => out = VectorOps.graphCompact(s, sf("sf0.001")) }
+    assert(plans.exists(_._1.startsWith("stalehits|")), s"no stalehits build ran: $plans")
+    (plans.map(_._2) :+ out.queryExecution.executedPlan.toString).foreach { plan =>
+      assert(!plan.contains("CartesianProduct"),
+        s"staleness audit must never plan a partition-wise cartesian:\n$plan")
+    }
   }
 
   test("v_ivf_split: split work is member-bounded — no corpus cartesian") {
@@ -448,8 +485,7 @@ class PlanAuditSpec extends SparkSuite {
       org.apache.spark.sql.functions.pmod(
         org.apache.spark.sql.functions.col("label"),
         org.apache.spark.sql.functions.lit(2)) === 0,
-      k = 4, kCentroids = 16, minMargin = 1.0, nProbe = 4,
-      mat = graft.Materialize.Local).queryExecution.executedPlan.toString
+      k = 4, kCentroids = 16, minMargin = 1.0, nProbe = 4).queryExecution.executedPlan.toString
     // the A×B candidate join must be keyed on centroid_id; an all-pairs
     // plan here is the n_A×n_B blow-up the IVF cells exist to prevent
     assert(!plan.contains("CartesianProduct") &&
@@ -488,8 +524,7 @@ class PlanAuditSpec extends SparkSuite {
     // audit the BUILD plan directly: the public surface is session-shared
     // (SharedRel — the verdicts feed both d_dsir and d_dsir_mix), so the
     // query's own explain is just the materialized scan
-    val plan = graft.functions.MixOps.dsirWeightsBuild(spark, sf("sf0.001"))
-      .queryExecution.executedPlan.toString
+    val plan = builtPlan("dsir")(MixOps.dsirWeights(_, sf("sf0.001")))
     assert(!plan.contains("CartesianProduct"),
       s"dsir must never plan a cartesian:\n$plan")
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
@@ -499,8 +534,7 @@ class PlanAuditSpec extends SparkSuite {
   test("d_lm2_bits / d_quality_ensemble: no cartesian; ensemble histogram window domain-bounded") {
     // d_lm2_bits' public surface is session-shared (feeds the ensemble
     // gate too) — audit the build relation directly
-    val lmPlan = graft.functions.TextOps.lm2BitsBuild(spark, sf("sf0.001"))
-      .queryExecution.executedPlan.toString
+    val lmPlan = builtPlan("lm2")(TextOps.lm2Bits(_, sf("sf0.001")))
     assert(!lmPlan.contains("CartesianProduct"),
       s"d_lm2_bits plans a cartesian:\n$lmPlan")
     val plan = executedPlan("d_quality_ensemble")
@@ -509,15 +543,18 @@ class PlanAuditSpec extends SparkSuite {
 
   test("v_graph_rank / d_coreset_central: per-round aggs keyed, never cartesian") {
     // v_graph_rank's public surface ends on the last round's materialized
-    // scan — audit the LIVE per-round plan via the pass-through
-    // materialization instead (the d_dsir build-side rule)
-    val rankPlan = graft.functions.VectorOps.graphRank(spark, sf("sf0.001"),
-      mat = graft.Materialize.Passthrough)
-      .queryExecution.executedPlan.toString
-    assert(!rankPlan.contains("CartesianProduct"),
-      s"v_graph_rank plans a cartesian:\n$rankPlan")
-    assert(rankPlan.contains("HashAggregate"),
-      s"per-round contributions must be keyed aggs:\n$rankPlan")
+    // scan — audit each round's executed plan instead (the d_dsir
+    // build-side rule). graphRank shares no key of its own: its unkeyed
+    // checkpoints are the mutual-edge relation, then one per round.
+    val rounds = builds(VectorOps.graphRank(_, sf("sf0.001"), iters = 3))
+      .collect { case ("", p) => p }.drop(1)
+    assert(rounds.size == 3, s"expected 3 rounds, got ${rounds.size}")
+    rounds.foreach { rankPlan =>
+      assert(!rankPlan.contains("CartesianProduct"),
+        s"v_graph_rank plans a cartesian:\n$rankPlan")
+      assert(rankPlan.contains("HashAggregate"),
+        s"per-round contributions must be keyed aggs:\n$rankPlan")
+    }
     val plan = executedPlan("d_coreset_central")
     assert(!plan.contains("CartesianProduct"), s"d_coreset_central plans a cartesian:\n$plan")
   }
@@ -574,8 +611,7 @@ class PlanAuditSpec extends SparkSuite {
     // audit the BUILD plan directly: the query surface memoizes the scored
     // relation (SharedRel), so a second call in the suite would show only
     // the checkpoint scan
-    val plan = graft.functions.TextOps.nbClassifyBuild(spark, sf("sf0.001"))
-      .queryExecution.executedPlan.toString
+    val plan = builtPlan("nbpred")(TextOps.nbClassify(_, sf("sf0.001")))
     // classes (|C| rows), totals, vocab and priors are all broadcast; the
     // only non-broadcast join key is the token itself
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
@@ -618,9 +654,8 @@ class PlanAuditSpec extends SparkSuite {
     // v_ann_sq); the exact re-rank must then join candidates by key, and
     // nothing may plan a partition-wise cartesian
     // session-shared surface (`annhits`) — audit the build plan
-    val plan = graft.functions.VectorOps.annRpRrBuild(spark, sf("sf0.001"),
-      nQueries = 20, k = 5, kDim = 32, cand = 100, d = 64)
-      .queryExecution.executedPlan.toString
+    val plan = builtPlan("annhits|rprr")(VectorOps.annRpRr(_, sf("sf0.001"),
+      nQueries = 20, k = 5, kDim = 32, cand = 100, d = 64))
     assert(!plan.contains("CartesianProduct"),
       s"rp re-rank must never plan a partition-wise cartesian:\n$plan")
     assert(plan.contains("BroadcastHashJoin"),
@@ -657,9 +692,8 @@ class PlanAuditSpec extends SparkSuite {
   test("bloom probe build: bitmap side broadcasts; no cartesian") {
     // d_bloom_shingles consumes the SESSION-SHARED probe-verdict relation;
     // the joins to audit live in its build plan
-    val plan = graft.functions.TextOps
-      .bloomProbeBuild(spark, sf("sf0.001"), 65536, 3, 10)
-      .queryExecution.executedPlan.toString
+    val plan = builtPlan("bloomprobe")(TextOps.bloomShingles(_, sf("sf0.001"),
+      m = 65536, k = 3, deltaMod = 10))
     assert(plan.contains("BroadcastHashJoin"),
       s"the m-bit bitmap stand-in must broadcast into the probe join:\n$plan")
     assert(!plan.contains("CartesianProduct") &&
@@ -712,9 +746,7 @@ class PlanAuditSpec extends SparkSuite {
     // audit the BUILD plan directly: the public surface is session-shared
     // (the 3-row S-curve feeds both the sweep query and d_lsh_retune's
     // pick), so the query's own explain is just the materialized scan
-    val plan = graft.functions.TextOps
-      .lshSweepBuild(spark, sf("sf0.001"), 0.9)
-      .queryExecution.executedPlan.toString
+    val plan = builtPlan("lshsweep")(TextOps.lshSweep(_, sf("sf0.001"), 0.9))
     assert(!plan.contains("CartesianProduct"),
       s"band joins must never degenerate to a cartesian:\n$plan")
     // true-pair probe joins over the shared candidate relations stay hashed

@@ -559,7 +559,7 @@ class PropertySpec extends SparkSuite {
       }
       // the degenerate identity: every island is >= n wide by
       // construction, so minRun = n must reproduce dupSpans exactly
-      val spans = TextOps.dupSpans(spark, dir, n, Materialize.Passthrough)
+      val spans = TextOps.dupSpans(spark, dir, n)
         .select("doc_id", "n_words", "n_dup", "n_spans", "text_clean")
         .as[(Long, Long, Long, Long, String)].collect().toSet
       val runs = TextOps.dupRuns(spark, dir, n, minRun = n)

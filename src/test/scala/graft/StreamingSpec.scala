@@ -808,49 +808,6 @@ class StreamingSpec extends SparkSuite {
       "stateless probe must be batching-insensitive")
   }
 
-  test("quantile stream: k-bounded sample state converges to the batch sketch; 2-batch feed equals 1-batch") {
-    import graft.streaming.QuantileStream
-    import graft.functions.TextOps
-    val sfDir = sf()
-    val batch = TextOps.quantileSketch(spark, sfDir, QuantileStream.K, Seq(500, 990))
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(4)).toMap
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .as[(Long, String, String)].collect().toSeq
-    def run(batches: Seq[Seq[(Long, String, String)]], name: String)
-      : Map[String, (Int, Long, Long)] = {
-      val in = MemoryStream[(Long, String, String)]
-      val out = QuantileStream.estimates(in.toDF().toDF("doc_id", "text", "source"))
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        batches.foreach { b => in.addData(b); q.processAllAvailable() }
-        // the estimate is NOT monotone as the sample shifts — the row with
-        // the max per-source ver counter is the convergent final state
-        val rows = spark.table(name)
-          .as[(String, Long, Int, Long, Long)].collect()
-        rows.groupBy(_._1).map { case (src, rs) =>
-          val last = rs.maxBy(_._2)
-          src -> ((last._3, last._4, last._5))
-        }
-      } finally q.stop()
-    }
-    val (a, b) = docs.splitAt(docs.size / 2)
-    val twoBatch = run(Seq(a, b), "q_stream_2b")
-    val oneBatch = run(Seq(docs), "q_stream_1b")
-    assert(twoBatch == oneBatch,
-      s"bottom-k-by-hash merge must be batching-insensitive: ${
-        (twoBatch.toSet diff oneBatch.toSet).take(3)}")
-    val fromStream = twoBatch.flatMap { case (src, (_, e500, e990)) =>
-      Seq((src, 500) -> e500, (src, 990) -> e990)
-    }
-    assert(fromStream == batch,
-      s"stream sketch must converge to the batch estimate: stream-only=${
-        (fromStream.toSet diff batch.toSet).take(3)} batch-only=${
-        (batch.toSet diff fromStream.toSet).take(3)}")
-  }
-
   test("quantile len gate: frozen p990 threshold gates arrivals in-stream, verdicts equal the batch lenCap rule on a 2-batch feed") {
     import graft.streaming.QuantileStream
     import graft.functions.TextOps
@@ -1062,30 +1019,6 @@ class StreamingSpec extends SparkSuite {
             (anchor.toSet diff got.toSet).take(3)}")
       } finally q.stop()
     }
-  }
-
-  test("quantile stream: a re-fed doc with a changed token count keeps ONE pair per hash (min value), not two") {
-    import graft.streaming.QuantileStream
-    // three docs; doc 2 is re-fed in batch 2 with a LONGER text — the
-    // state must dedup by hash (min v wins), so the sample size stays 3
-    // and the estimates come from the ORIGINAL 2-token value, not 6
-    val b1 = Seq((1L, "a b c", "s"), (2L, "x y", "s"), (3L, "p q r t", "s"))
-    val b2 = Seq((2L, "x y now much longer text", "s"))
-    val in = MemoryStream[(Long, String, String)]
-    val out = QuantileStream.estimates(in.toDF().toDF("doc_id", "text", "source"))
-    val q = out.writeStream.format("memory").queryName("q_stream_refed")
-      .outputMode("append").start()
-    try {
-      in.addData(b1); q.processAllAvailable()
-      in.addData(b2); q.processAllAvailable()
-      val last = spark.table("q_stream_refed")
-        .as[(String, Long, Int, Long, Long)].collect().maxBy(_._2)
-      assert(last._3 == 3, s"re-fed doc must not grow the sample: m=${last._3}")
-      // values in state are {3, 2, 4} (min of 2 and 6 for doc 2): both
-      // p500 and p990 index ((m-1)*p)/1000 = 1 into sorted {2,3,4} = 3
-      assert((last._4, last._5) == ((3L, 3L)),
-        s"estimates must come from the min-v dedup: (${last._4}, ${last._5})")
-    } finally q.stop()
   }
 
   test("margin stream: one-batch feed mines pair-for-pair what marginPairsIncr mines") {
