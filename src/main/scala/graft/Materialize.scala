@@ -65,7 +65,10 @@ object Materialize {
   * (`Dataset.sparkSession`), so the value reaches the key and pins the
   * entry for the JVM lifetime. Growth is therefore bounded by distinct
   * parameterizations per session × sessions per JVM — one session in
-  * every shipped main, a handful in the test JVM — not by GC.
+  * every shipped main; in the test JVM a handful of shared sessions plus
+  * one fresh session per capture pin (PlanAuditSpec's `builds`, whose
+  * builds and their checkpoint blocks stay resident too) — not by GC.
+  * `SharedRel.release` (ROADMAP item 4, open) is what would free them.
   */
 object SharedRel {
   import org.apache.spark.sql.SparkSession

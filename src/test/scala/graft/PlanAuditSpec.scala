@@ -425,17 +425,21 @@ class PlanAuditSpec extends SparkSuite {
 
   test("v_ann_graph: frontier expansion stays src-keyed; no corpus cartesian") {
     // per-round materialization ends the public plan on a checkpoint scan
-    // — audit each hop round's executed plan (the v_graph_rank rule). The
-    // anngraph build materializes the routing layer, then one round per
-    // hop, then its result. The routing-seed crossJoin is a broadcast of
-    // kCentroids rows (fine); a partition-wise cartesian means
-    // frontier×corpus blew up.
-    val rounds = builds(VectorOps.annGraphBeam(_, sf("sf0.001"), hops = 3))
-      .collect { case (k, p) if k.startsWith("anngraph|") => p }.slice(1, 4)
-    assert(rounds.size == 3, s"expected 3 hop rounds, got ${rounds.size}")
-    rounds.foreach { plan =>
+    // — audit every plan the call ran (IVF assignment, kNN graph, routing
+    // layer, hop rounds, result) and the public top-k (the v_graph_rank
+    // rule). The routing-seed crossJoin is a broadcast of kCentroids rows
+    // (fine); a partition-wise cartesian means frontier×corpus blew up.
+    // The anngraph build materializes the routing layer, then one round
+    // per hop, then its result: the hop rounds must broadcast.
+    var out: org.apache.spark.sql.DataFrame = null
+    val plans = builds { s => out = VectorOps.annGraphBeam(s, sf("sf0.001"), hops = 3) }
+    (plans.map(_._2) :+ out.queryExecution.executedPlan.toString).foreach { plan =>
       assert(!plan.contains("CartesianProduct"),
         s"graph beam search must never plan a partition-wise cartesian:\n$plan")
+    }
+    val rounds = plans.collect { case (k, p) if k.startsWith("anngraph|") => p }.slice(1, 4)
+    assert(rounds.size == 3, s"expected 3 hop rounds, got ${rounds.size}")
+    rounds.foreach { plan =>
       assert(plan.contains("BroadcastHashJoin"),
         s"frontier/eligibility joins must broadcast:\n$plan")
     }
@@ -543,15 +547,19 @@ class PlanAuditSpec extends SparkSuite {
 
   test("v_graph_rank / d_coreset_central: per-round aggs keyed, never cartesian") {
     // v_graph_rank's public surface ends on the last round's materialized
-    // scan — audit each round's executed plan instead (the d_dsir
+    // scan — audit every plan the call ran (IVF assignment, kNN graph,
+    // mutual edges, rounds) and the public top-k instead (the d_dsir
     // build-side rule). graphRank shares no key of its own: its unkeyed
     // checkpoints are the mutual-edge relation, then one per round.
-    val rounds = builds(VectorOps.graphRank(_, sf("sf0.001"), iters = 3))
-      .collect { case ("", p) => p }.drop(1)
-    assert(rounds.size == 3, s"expected 3 rounds, got ${rounds.size}")
-    rounds.foreach { rankPlan =>
+    var out: org.apache.spark.sql.DataFrame = null
+    val plans = builds { s => out = VectorOps.graphRank(s, sf("sf0.001"), iters = 3) }
+    (plans.map(_._2) :+ out.queryExecution.executedPlan.toString).foreach { rankPlan =>
       assert(!rankPlan.contains("CartesianProduct"),
         s"v_graph_rank plans a cartesian:\n$rankPlan")
+    }
+    val rounds = plans.collect { case ("", p) => p }.drop(1)
+    assert(rounds.size == 3, s"expected 3 rounds, got ${rounds.size}")
+    rounds.foreach { rankPlan =>
       assert(rankPlan.contains("HashAggregate"),
         s"per-round contributions must be keyed aggs:\n$rankPlan")
     }
