@@ -4,12 +4,12 @@ import java.io.{File, IOException}
 
 /** Local-filesystem helpers for the offline harness's file-based sinks
   * (one copy each: recursive delete, and the crash-safe directory swap
-  * the shard manifest uses).
+  * the shard manifest and the radiation `Dir` sink use).
   */
 object LocalFs {
 
-  /** Replace directory `path` by directory `tmp` (a sibling, so each
-    * rename is atomic) with no instant at which neither copy is on disk:
+  /** Replace directory `path` by directory `tmp` (on the same file system,
+    * so each rename is atomic) with no instant at which neither copy is on disk:
     * `path` → `path.old`, `tmp` → `path`, then `.old` is deleted. A crash
     * between the two renames leaves only `.old`, which the next call
     * restores first. Every rename is checked: a failed swap-aside throws

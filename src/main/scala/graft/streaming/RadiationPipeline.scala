@@ -1,9 +1,12 @@
 package graft.streaming
 
+import java.io.File
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import graft.LocalFs
 import graft.operators.Readings
 import graft.operators.Readings.Thresholds
 
@@ -27,8 +30,9 @@ import graft.operators.Readings.Thresholds
   *  - invalid bypass + union (py:318-320)          → [[withCohort]]
   *  - 3-way routing (py:327-351)                   → [[Routed]]
   *  - 3 transactional sinks (py:354-390)           → one `foreachBatch`
-  *    writing three outputs per epoch (Spark's cross-sink atomicity delta is
-  *    documented in SURVEY §7.5)
+  *    that writes the three outputs of an epoch in one Spark job, each row
+  *    tagged with its topic by [[topicOf]] (Spark's cross-sink atomicity
+  *    delta is documented in SURVEY §7.5)
   *
   * Spark's watermark has no per-partition idleness (reference's 30 s
   * idleness, py:242) — moot under AvailableNow/file sources, noted for Kafka.
@@ -216,15 +220,29 @@ object RadiationPipeline {
   }
 
   /** P11-P13 routing (flink_process.py:327-351) — the one definition, used
-    * by the stream's sinks and the batch tier's `e_route_*` queries alike.
-    * `status` is never null in either tier ([[validate]] and
-    * `Readings.enriched` both derive it from a `when/otherwise`).
+    * by the stream's sinks ([[topicOf]]) and the batch tier's `e_route_*`
+    * queries ([[route]]) alike: the (normal, critical, dirty) predicates.
+    * They are disjoint and every row meets one: `status` is never null in
+    * either tier ([[validate]] and `Readings.enriched` both derive it from a
+    * `when/otherwise`), and `critical` is non-null on every valid row.
     */
+  private def routes: (Column, Column, Column) = (
+    col("status") === "valid" && !col("critical"),
+    col("status") === "valid" && col("critical"),
+    col("status") === "invalid")
+
   final case class Routed(normal: DataFrame, critical: DataFrame, dirty: DataFrame)
-  def route(stream: DataFrame): Routed = Routed(
-    normal = stream.filter(col("status") === "valid" && !col("critical")),
-    critical = stream.filter(col("status") === "valid" && col("critical")),
-    dirty = stream.filter(col("status") === "invalid"))
+  def route(stream: DataFrame): Routed = {
+    val (normal, critical, dirty) = routes
+    Routed(stream.filter(normal), stream.filter(critical), stream.filter(dirty))
+  }
+
+  /** Each row's sink topic on transport `t`, by [[route]]'s rule. */
+  private def topicOf(t: Transport): Column = {
+    val (normal, critical, dirty) = routes
+    val (normalT, criticalT, dirtyT) = Transport.topicNames(t)
+    when(normal, normalT).when(critical, criticalT).when(dirty, dirtyT)
+  }
 
   /** S5: streaming source of JSON strings for a [[Transport]].
     *
@@ -249,33 +267,47 @@ object RadiationPipeline {
       spark.readStream.format("text").load(d.inPath).select(col("value"))
   }
 
-  /** S6: write one routed epoch to the three sink "topics" of a transport.
+  /** S6: write one epoch's batch to the three sink "topics" of a transport
+    * in one Spark job: each row is tagged with its topic by [[topicOf]] and
+    * the batch is written once. Cache `batch` when it is read again
+    * afterwards, as [[runRouted]]'s serving fold does.
     *
-    *  - [[Transport.Kafka]]: each branch serialized as (key = dedup key,
-    *    value = JSON of the enriched record minus `raw`) and sent with the
-    *    kafka batch writer (reference sinks flink_process.py:354-390; the
-    *    at-least-once retry delta is documented on [[Transport.Kafka]]).
-    *  - [[Transport.Dir]]: epoch-partitioned parquet with overwrite, so a
-    *    retried epoch clobbers its own partial output — idempotent.
+    *  - [[Transport.Kafka]]: one send of (key = dedup key, value = JSON of
+    *    the enriched record minus `raw`, topic = the tag); the kafka batch
+    *    writer routes each record by its `topic` column (reference sinks
+    *    flink_process.py:354-390; the at-least-once retry delta is
+    *    documented on [[Transport.Kafka]]).
+    *  - [[Transport.Dir]]: one parquet write partitioned by the tag into
+    *    `<out>/_staging/epoch=N` (hidden from readers of `<out>` by its `_`),
+    *    then each topic's part replaces `<out>/<topic>/epoch=N` through
+    *    [[LocalFs.swapIn]]; a topic without rows gets an empty `epoch=N`.
+    *    Every topic's epoch directory is replaced, so a retried epoch
+    *    clobbers its own partial output — idempotent.
     */
-  def writeEpoch(r: Routed, epochId: Long, t: Transport): Unit = {
-    val (normalT, criticalT, dirtyT) = Transport.topicNames(t)
+  def writeEpoch(batch: DataFrame, epochId: Long, t: Transport): Unit = {
+    val tagged = batch.withColumn("topic", topicOf(t))
     t match {
       case k: Transport.Kafka =>
-        def send(df: DataFrame, topic: String): Unit =
-          df.select(
-              col("dedup_key").cast("string").as("key"),
-              to_json(struct(df.columns.filterNot(_ == "raw").map(col): _*)).as("value"))
-            .write.format("kafka")
-            .options(Transport.kafkaSinkOptions(k, topic))
-            .save()
-        send(r.normal, normalT)
-        send(r.critical, criticalT)
-        send(r.dirty, dirtyT)
+        tagged.select(
+            col("dedup_key").cast("string").as("key"),
+            to_json(struct(batch.columns.filterNot(_ == "raw").map(col): _*)).as("value"),
+            col("topic"))
+          .write.format("kafka")
+          .options(Transport.kafkaSinkOptions(k))
+          .save()
       case d: Transport.Dir =>
-        r.normal.write.mode("overwrite").parquet(s"${d.outPath}/$normalT/epoch=$epochId")
-        r.critical.write.mode("overwrite").parquet(s"${d.outPath}/$criticalT/epoch=$epochId")
-        r.dirty.write.mode("overwrite").parquet(s"${d.outPath}/$dirtyT/epoch=$epochId")
+        val staging = new File(s"${d.outPath}/_staging/epoch=$epochId")
+        val (normalT, criticalT, dirtyT) = Transport.topicNames(d)
+        try {
+          tagged.write.mode("overwrite").partitionBy("topic").parquet(staging.getPath)
+          for (topic <- Seq(normalT, criticalT, dirtyT)) {
+            val part = new File(staging, s"topic=$topic")
+            part.mkdirs() // none if the epoch has no rows for the topic
+            val dest = new File(s"${d.outPath}/$topic/epoch=$epochId")
+            dest.getParentFile.mkdirs()
+            LocalFs.swapIn(part.getPath, dest.getPath)
+          }
+        } finally LocalFs.rmrf(staging)
     }
   }
 
@@ -366,16 +398,16 @@ object RadiationPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val routed = route(batch.cache())
+        val cached = batch.cache()
         try {
-          writeEpoch(routed, epochId, t)
+          writeEpoch(cached, epochId, t)
           // serving fold (S9): runs in the SAME epoch as the sinks, so a
           // served snapshot reflects exactly the delivered records — but a
           // dashboard-only hook must never fail sink delivery, so failures
           // log and the stream continues (the hook is idempotent per epoch,
           // see Serve.Snapshot.fold, so a skipped/failed fold is a
           // stale snapshot, not corruption)
-          try onEpoch(routed, epochId)
+          try onEpoch(route(cached), epochId)
           catch { case scala.util.control.NonFatal(e) =>
             System.err.println(s"[serve] epoch $epochId fold failed (snapshot stale): $e")
           }

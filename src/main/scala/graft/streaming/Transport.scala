@@ -39,7 +39,9 @@ object Transport {
 
   /** Offline stand-in (SURVEY §2.1 S3/S6 mapping): a directory of
     * JSON-lines files as the source topic; three epoch-partitioned parquet
-    * dirs as the sink topics (idempotent under epoch retry).
+    * dirs as the sink topics (idempotent under epoch retry). `outPath` is
+    * a local file-system path: the sink moves its epoch directories with
+    * [[graft.LocalFs.swapIn]].
     */
   final case class Dir(inPath: String, outPath: String) extends Transport
 
@@ -51,10 +53,11 @@ object Transport {
     "subscribe" -> k.subscribe,
     "startingOffsets" -> k.startingOffsets)
 
-  /** `write.format("kafka")` options for a [[Kafka]] sink topic. */
-  def kafkaSinkOptions(k: Kafka, topic: String): Map[String, String] = Map(
-    "kafka.bootstrap.servers" -> k.bootstrapServers,
-    "topic" -> topic)
+  /** `write.format("kafka")` options for a [[Kafka]] sink. No `topic`
+    * option: each record goes to the topic in its own `topic` column.
+    */
+  def kafkaSinkOptions(k: Kafka): Map[String, String] = Map(
+    "kafka.bootstrap.servers" -> k.bootstrapServers)
 
   /** (normal, critical, dirty) sink topic names for a transport. */
   def topicNames(t: Transport): (String, String, String) = t match {

@@ -227,33 +227,8 @@ class ServeSpec extends SparkSuite {
   }
 
   test("one fold runs one Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val r = routed(files.head._2)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        e.properties.getProperty("spark.jobGroup.id") match {
-          case "fold" => jobs.incrementAndGet()
-          case "marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("fold", "one fold")
-      Serve.foldEpoch(r, new Serve.Snapshot(cap = 10), 0L)
-      // listener events arrive in order: once the marker job shows, every
-      // fold job has been counted
-      sc.setJobGroup("marker", "after the fold")
-      sc.parallelize(Seq(1)).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get == 1, s"${jobs.get} jobs")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    assert(jobsRun(Serve.foldEpoch(r, new Serve.Snapshot(cap = 10), 0L)) == 1)
   }
 
   test("RunPipeline serves dashboard totals equal to the delivered sink rows") {

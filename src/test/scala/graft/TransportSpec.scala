@@ -104,23 +104,72 @@ class TransportSpec extends SparkSuite {
     val batch = spark.read.json(
       spark.createDataset(Seq(rec("2011-03-15 10:00:00")))(
         org.apache.spark.sql.Encoders.STRING))
-    val routed = RadiationPipeline.route(
+    val cached =
       RadiationPipeline.validate(RadiationPipeline.parse(
         batch.selectExpr("to_json(struct(*)) AS value")))
         .withColumn("temporal_batch_size", org.apache.spark.sql.functions.lit(1L))
         .withColumn("timestamp_key", org.apache.spark.sql.functions.lit("k"))
-        .withColumn("temporal_ordering", org.apache.spark.sql.functions.lit("compliant")))
+        .withColumn("temporal_ordering", org.apache.spark.sql.functions.lit("compliant")).cache()
     // the same epoch written twice = a foreachBatch retry
-    RadiationPipeline.writeEpoch(routed, 7L, Transport.Dir("", out))
-    RadiationPipeline.writeEpoch(routed, 7L, Transport.Dir("", out))
+    RadiationPipeline.writeEpoch(cached, 7L, Transport.Dir("", out))
+    RadiationPipeline.writeEpoch(cached, 7L, Transport.Dir("", out))
     assert(spark.read.parquet(s"$out/normal-data").count() == 1,
       "epoch-partitioned overwrite absorbs the replay")
     FakeKafka.reset()
-    RadiationPipeline.writeEpoch(routed, 7L, kafka)
-    RadiationPipeline.writeEpoch(routed, 7L, kafka)
+    RadiationPipeline.writeEpoch(cached, 7L, kafka)
+    RadiationPipeline.writeEpoch(cached, 7L, kafka)
     val dups = FakeKafka.sentByTopic("normal-data")
     assert(dups.size == 2 && dups.map(_._1).distinct.size == 1,
       "kafka batch sink re-sends on retry (at-least-once), replays share the record key")
+  }
+
+  /** A cached epoch batch in the stream's superset schema, from JSON lines. */
+  private def epochBatch(lines: String*): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    RadiationPipeline.validate(RadiationPipeline.parse(
+        spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING).toDF("value")))
+      .withColumn("temporal_batch_size", lit(1L))
+      .withColumn("timestamp_key", lit("k"))
+      .withColumn("temporal_ordering", lit("compliant"))
+      .cache()
+  }
+
+  test("one Dir sink pass is one Spark job: each topic's epoch holds its route's rows") {
+    val out = Files.createTempDirectory("graft-sink-pass").toString
+    val dir = Transport.Dir("", out)
+    val all = epochBatch(rec("2011-03-15 10:00:00"), rec("2011-03-15 10:00:01", lat = 36.0),
+      rec("2011-03-15 10:00:02", v = 5000), rec("2011-03-15 10:00:03", unit = "bq"), "{not json")
+    assert(jobsRun(RadiationPipeline.writeEpoch(all, 1L, dir)) == 1)
+    // an empty epoch directory has no file to infer a schema from
+    def epoch(topic: String, n: Long) = spark.read.schema(all.schema).parquet(s"$out/$topic/epoch=$n")
+    val r = RadiationPipeline.route(all)
+    for ((topic, rows, n) <- Seq(("normal-data", r.normal, 2), ("critical-data", r.critical, 1),
+        ("dirty-data", r.dirty, 2))) {
+      val got = spark.read.parquet(s"$out/$topic/epoch=1")
+      assert(got.schema.map(f => (f.name, f.dataType)) == all.schema.map(f => (f.name, f.dataType)),
+        s"$topic: file schema ${got.schema}")
+      assert(got.count() == n && got.exceptAll(rows).isEmpty && rows.exceptAll(got).isEmpty,
+        s"$topic: epoch 1 holds other rows than the route")
+    }
+    // a replayed epoch 1 without critical rows replaces the critical part
+    // written before with an empty one
+    RadiationPipeline.writeEpoch(epochBatch(rec("2011-03-15 10:00:00"),
+      rec("2011-03-15 10:00:03", unit = "bq")), 1L, dir)
+    assert(new java.io.File(s"$out/critical-data/epoch=1").isDirectory)
+    assert(epoch("critical-data", 1L).count() == 0, "the replay left the earlier critical rows")
+    assert(epoch("normal-data", 1L).count() == 1 && epoch("dirty-data", 1L).count() == 1)
+    assert(Option(new java.io.File(s"$out/_staging").list()).forall(_.isEmpty),
+      "the staging directory kept files")
+  }
+
+  test("RunPipeline's sink count: an all-empty topic has 0 rows, an unreadable one fails") {
+    val out = Files.createTempDirectory("graft-sink-rows").toString
+    RadiationPipeline.writeEpoch(epochBatch(rec("2011-03-15 10:00:00")), 0L, Transport.Dir("", out))
+    assert(RunPipeline.sinkRows(spark, s"$out/normal-data") == 1)
+    assert(RunPipeline.sinkRows(spark, s"$out/critical-data") == 0)
+    Files.writeString(java.nio.file.Path.of(out, "critical-data", "epoch=0", "part-0.parquet"),
+      "not parquet")
+    intercept[Exception](RunPipeline.sinkRows(spark, s"$out/critical-data"))
   }
 
   test("Kafka transport: a query killed mid-epoch and restarted delivers what one run delivers") {

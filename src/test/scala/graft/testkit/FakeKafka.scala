@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -29,7 +30,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Sink: the real connector's batch write is a V1
   *    `CreatableRelationProvider` (and `"kafka"` sits in the default
   *    `spark.sql.sources.useV1SourceList`), so the fake implements the same
-  *    interface and captures (topic, key, value) into [[FakeKafka.sent]].
+  *    interface and captures (topic, key, value) into [[FakeKafka.sent]],
+  *    the topic taken per record from the `topic` column unless a `topic`
+  *    option names one for all.
   */
 object FakeKafka {
 
@@ -52,8 +55,9 @@ object FakeKafka {
   def seed(topic: String, values: String*): Unit =
     values.foreach(v => sourceRecords.add((topic, v)))
 
-  /** A topic whose next non-empty send fails once, as a broker outage in
-    * the middle of an epoch would.
+  /** A topic whose first record in the next send that carries one fails
+    * that send once, as a broker outage in the middle of an epoch would:
+    * the records before it are captured, that one and the rest are not.
     */
   @volatile private[testkit] var outageTopic: Option[String] = None
   def outageOn(topic: String): Unit = outageTopic = Some(topic)
@@ -90,17 +94,22 @@ class FakeKafkaProvider extends TableProvider with CreatableRelationProvider
                         properties: java.util.Map[String, String]): Table =
     new FakeKafkaTable
 
-  // the batch-sink path: capture instead of producing to a broker
+  // the batch-sink path: capture instead of producing to a broker. As in
+  // the real connector, a `topic` option sends every record there, and
+  // without one each record goes to the topic in its own `topic` column
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
                               parameters: Map[String, String],
                               data: DataFrame): BaseRelation = {
-    val topic = parameters.getOrElse("topic", "")
-    if (FakeKafka.outageTopic.contains(topic) && !data.isEmpty) {
+    val topic = parameters.get("topic").fold(col("topic"))(lit)
+    val records = data.select(topic.cast("string"), col("key").cast("string"),
+        col("value").cast("string")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    val cut = FakeKafka.outageTopic.map(t => records.indexWhere(_._1 == t)).filter(_ >= 0)
+    records.take(cut.getOrElse(records.length)).foreach(FakeKafka.sent.add)
+    if (cut.isDefined) {
       FakeKafka.outageTopic = None
       throw new java.io.IOException("fake broker outage")
     }
-    data.selectExpr("CAST(key AS STRING)", "CAST(value AS STRING)").collect()
-      .foreach(r => FakeKafka.sent.add((topic, r.getString(0), r.getString(1))))
     val ctx = sqlContext
     val outSchema = data.schema
     new BaseRelation {
