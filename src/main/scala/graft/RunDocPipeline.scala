@@ -65,12 +65,10 @@ object RunDocPipeline {
     * (checkpoint `ckpt`), [[drain]] it, and read back what landed.
     */
   private def landed(df: DataFrame, path: String, ckpt: String, stage: String): DataFrame = {
-    val q = df.writeStream.format("parquet")
+    val q = LocalFs.startStream(df, ckpt)(_.format("parquet")
       .option("path", path)
-      .option("checkpointLocation", ckpt)
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow()))
     drain(q, stage)
     df.sparkSession.read.parquet(path)
   }

@@ -221,6 +221,8 @@ object Readings {
     * discovery), so the relay never recomputes routing on the hot path.
     */
   def priorityFromTopics(spark: SparkSession, dir: String, t: Thresholds): DataFrame = {
+    val relay = graft.streaming.Transport.Dir(inPath = "", outPath = "")
+    val (_, criticalT, dirtyT) = graft.streaming.Transport.topicNames(relay)
     // The topic-dir WRITE is a once-per-session scaffold (SharedRel.once):
     // the producers populate the topics once; what this operator is ABOUT
     // is the relay consumer's read-back mechanism, so repeated runs (bench
@@ -239,7 +241,6 @@ object Readings {
         System.getProperty("java.io.tmpdir"),
         s"graft-topics-$jvmRunId-${java.lang.Integer.toHexString(dir.hashCode)}" +
           s"-${java.lang.Integer.toHexString(t.hashCode)}").toString
-      val v = enriched(spark, dir, t).filter(col("status") === "valid")
       // ONE pass over the enriched relation: partitionBy fans the rows into
       // the two topic dirs (`topic=normal-data/`, `topic=critical-data/`) in
       // a single scan+write — the two-write form re-parsed the source once
@@ -247,16 +248,18 @@ object Readings {
       // from the PARTITION DIR each record lives in (partition-dir discovery,
       // metadata-only — no per-row path regexp), which is exactly the relay
       // consumer's "which topic did this arrive on" mechanism.
-      // the WRITER routes by the predicate (flink_process.py:327-351 side);
-      // only the reader derives the tag from the dir
-      v.withColumn("topic",
-          when(col("critical"), "critical-data").otherwise("normal-data"))
+      // the WRITER routes by the stream's own rule (RadiationPipeline's
+      // topicOf, flink_process.py:327-351 side) and relays the two valid
+      // topics; only the reader derives the tag from the dir
+      enriched(spark, dir, t)
+        .withColumn("topic", graft.streaming.RadiationPipeline.topicOf(relay))
+        .filter(col("topic") =!= dirtyT)
         .write.mode("overwrite").partitionBy("topic").parquet(path)
       path
     }
     spark.read.parquet(out)
       .withColumn("data_priority",
-        when(col("topic") === "critical-data", "critical").otherwise("normal"))
+        when(col("topic") === criticalT, "critical").otherwise("normal"))
       .select("event_id", "cpm", "data_priority")
   }
 }

@@ -62,8 +62,7 @@ object DupSpanStream {
     */
   def appendStream(docs: DataFrame, frozen: DataFrame, outDir: String,
                    ckptDir: String, n: Int = 5): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", ckptDir)
+    graft.LocalFs.startStream(docs, ckptDir)(_
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // same words construction as the batch tier's `prepared`
         val pw = batch
@@ -84,6 +83,5 @@ object DupSpanStream {
             array_join(col("words"), " ").as("text_clean"))
         TextOps.spanFold(long, hits).unionAll(short)
           .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
+      })
 }

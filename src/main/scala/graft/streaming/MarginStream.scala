@@ -100,13 +100,11 @@ object MarginStream {
                    outDir: String, ckptDir: String, k: Int = 4,
                    minMargin: Double = 1.0, nProbe: Int = 4): StreamingQuery = {
     val (cents, target) = frozen
-    vecs.writeStream
-      .option("checkpointLocation", ckptDir)
+    graft.LocalFs.startStream(vecs, ckptDir)(_
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         mineBatch(batch.select(col("vec_id"), col("v")), cents, target, k,
             minMargin, nProbe)
           .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
+      })
   }
 }

@@ -238,7 +238,7 @@ object RadiationPipeline {
   }
 
   /** Each row's sink topic on transport `t`, by [[route]]'s rule. */
-  private def topicOf(t: Transport): Column = {
+  private[graft] def topicOf(t: Transport): Column = {
     val (normal, critical, dirty) = routes
     val (normalT, criticalT, dirtyT) = Transport.topicNames(t)
     when(normal, normalT).when(critical, criticalT).when(dirty, dirtyT)
@@ -394,9 +394,7 @@ object RadiationPipeline {
     val finalStream = withCohort(validate(parse(raw), thresholds),
       watermark = watermark, bounded = bounded, window_ = window_,
       annotate = annotate)
-    finalStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+    LocalFs.startStream(finalStream, checkpointDir)(_.trigger(trigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val cached = batch.cache()
         try {
@@ -413,7 +411,6 @@ object RadiationPipeline {
           }
         } finally batch.unpersist()
         ()
-      }
-      .start()
+      })
   }
 }

@@ -165,10 +165,8 @@ object ShardStream {
 
   def appendStream(docs: DataFrame, outPath: String, checkpointDir: String,
                    buckets: Int = 8, budget: Long = 500L): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
+    graft.LocalFs.startStream(docs, checkpointDir)(_
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         processBatch(batch, epochId, outPath, buckets, budget)
-      }
-      .start()
+      })
 }

@@ -73,8 +73,7 @@ object VideoDedupStream {
   def appendStream(media: DataFrame, baseFrames: DataFrame, outDir: String,
                    ckptDir: String, maxDist: Int = 6,
                    contThreshold: Double = 0.5): StreamingQuery =
-    withSig(media).dropDuplicates("vsig").writeStream
-      .option("checkpointLocation", ckptDir)
+    graft.LocalFs.startStream(withSig(media).dropDuplicates("vsig"), ckptDir)(_
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // one evaluation of the stateful micro-batch feeds both uses below
         val arrivals = batch.localCheckpoint(eager = true)
@@ -86,6 +85,5 @@ object VideoDedupStream {
           .withColumnRenamed("video_id", "media_id")
         arrivals.join(rejected, Seq("media_id"), "left_anti")
           .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
+      })
 }

@@ -279,6 +279,7 @@ class TransportSpec extends SparkSuite {
   test("Dir transport: a restart from the checkpoint writes what one uninterrupted run writes") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
     def at(s: Int) = f"2011-03-15 10:00:$s%02d"
     // first half: normal and critical readings 10:00:00-09, one dirty record
     val firstHalf = Seq(
@@ -309,36 +310,140 @@ class TransportSpec extends SparkSuite {
       try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
       finally walk.close()
     }
-    val (inA, outA, ckptA) = (Files.createTempDirectory("graft-restart-in").toString,
-      Files.createTempDirectory("graft-restart-out").toString,
-      Files.createTempDirectory("graft-restart-ckpt").toString)
-    write(inA, firstHalf)
-    run(inA, outA, ckptA)
-    val firstParts = parts(outA)
-    write(inA, secondHalf)
-    run(inA, outA, ckptA) // the restart: same checkpoint, more input
-    // it resumes after the committed epochs instead of replaying them
-    assert(firstParts.subsetOf(parts(outA)), "the restart rewrote the first run's epochs")
-    assert(parts(outA).size > firstParts.size, "the restart wrote no new epoch")
     val (inB, outB, ckptB) = (Files.createTempDirectory("graft-once-in").toString,
       Files.createTempDirectory("graft-once-out").toString,
       Files.createTempDirectory("graft-once-ckpt").toString)
     write(inB, firstHalf ++ secondHalf)
     run(inB, outB, ckptB)
-    for (topic <- Seq("normal-data", "critical-data", "dirty-data")) {
-      val (restarted, once) = (sink(outA, topic), sink(outB, topic))
-      assert(restarted.count() > 0, s"$topic: fixture must populate every sink")
-      assert(restarted.count() == once.count() && restarted.exceptAll(once).isEmpty &&
-        once.exceptAll(restarted).isEmpty, s"$topic: restarted run diverges from one run")
+    // the first run's checkpoint manager: the one `run` picks, or Spark's
+    // FileContext-based one set on the session (the rule keeps a manager
+    // the session names); the restart always runs with none set
+    for (firstManager <- Seq(None, Some(classOf[FileContextBasedCheckpointFileManager].getName))) {
+      val (inA, outA, ckptA) = (Files.createTempDirectory("graft-restart-in").toString,
+        Files.createTempDirectory("graft-restart-out").toString,
+        Files.createTempDirectory("graft-restart-ckpt").toString)
+      write(inA, firstHalf)
+      firstManager.foreach(spark.conf.set(CheckpointManagerKey, _))
+      try run(inA, outA, ckptA)
+      finally firstManager.foreach(_ => spark.conf.unset(CheckpointManagerKey))
+      val firstParts = parts(outA)
+      write(inA, secondHalf)
+      run(inA, outA, ckptA) // the restart: same checkpoint, more input
+      val clue = s"first run on ${firstManager.getOrElse("the default manager")}"
+      // it resumes after the committed epochs instead of replaying them
+      assert(firstParts.subsetOf(parts(outA)), s"$clue: the restart rewrote the first run's epochs")
+      assert(parts(outA).size > firstParts.size, s"$clue: the restart wrote no new epoch")
+      for (topic <- Seq("normal-data", "critical-data", "dirty-data")) {
+        val (restarted, once) = (sink(outA, topic), sink(outB, topic))
+        assert(restarted.count() > 0, s"$topic: fixture must populate every sink")
+        assert(restarted.count() == once.count() && restarted.exceptAll(once).isEmpty &&
+          once.exceptAll(restarted).isEmpty, s"$clue, $topic: restarted run diverges from one run")
+      }
+      val all = Seq("normal-data", "critical-data", "dirty-data").map(sink(outA, _).select("raw"))
+        .reduce(_ union _)
+      assert(all.filter(col("raw") === dup).count() == 1,
+        s"$clue: the duplicate reading reached a sink twice")
+      assert(all.filter(col("raw") === dirtyDup).count() == 1,
+        s"$clue: the dirty duplicate reached dirty twice")
+      // the pane the restart straddles was counted across both runs
+      val pane = sink(outA, "critical-data").filter(col("raw") === rec(at(9), v = 459.0, lat = 39.0))
+      assert(pane.select("temporal_batch_size").head.getLong(0) == 2, clue)
     }
-    val all = Seq("normal-data", "critical-data", "dirty-data").map(sink(outA, _).select("raw"))
-      .reduce(_ union _)
-    assert(all.filter(col("raw") === dup).count() == 1,
-      "the duplicate reading reached a sink twice")
-    assert(all.filter(col("raw") === dirtyDup).count() == 1,
-      "the dirty duplicate reached dirty twice")
-    // the pane the restart straddles was counted across both runs
-    val pane = sink(outA, "critical-data").filter(col("raw") === rec(at(9), v = 459.0, lat = 39.0))
-    assert(pane.select("temporal_batch_size").head.getLong(0) == 2)
   }
+
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  test("a local checkpoint runs its query on the FileSystem-based manager; the caller's session keeps its own") {
+    import java.nio.file.Path
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+    // (a) the rule reads the scheme and builds no FileSystem: it answers for
+    // schemes whose file system cannot even be loaded
+    val conf = new Configuration()
+    Seq("hdfs", "s3a").foreach(s => conf.set(s"fs.$s.impl", "no.such.FileSystem"))
+    for (p <- Seq("/tmp/ckpt", "ckpt", "file:/tmp/ckpt", "file:///tmp/ckpt"))
+      assert(LocalFs.isLocal(p, conf), s"$p counts as local")
+    for (p <- Seq("hdfs://nn:8020/x", "s3a://b/x"))
+      assert(!LocalFs.isLocal(p, conf), s"$p counts as remote")
+    conf.set("fs.defaultFS", "hdfs://nn:8020")
+    assert(!LocalFs.isLocal("/tmp/ckpt", conf) && LocalFs.isLocal("file:/tmp/ckpt", conf),
+      "a path without a scheme resolves against the default file system")
+
+    def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+    def start(ckpt: String): StreamingQuery = {
+      val in = tmp("graft-mgr-in")
+      Files.writeString(Path.of(in, "a.jsonl"), rec("2011-03-15 10:00:00"))
+      RadiationPipeline.run(spark, Transport.Dir(in, tmp("graft-mgr-out")), ckpt,
+        graft.operators.Readings.Thresholds(), bounded = true, Trigger.AvailableNow(),
+        onEpoch = (_, _) => ())
+    }
+    // the manager the query's own session runs on; sparkSessionForStream is
+    // protected[sql] in Spark, its bytecode method is public
+    def streamManager(q: StreamingQuery): Option[String] = {
+      val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      exec.getClass.getMethod("sparkSessionForStream").invoke(exec)
+        .asInstanceOf[SparkSession].conf.getOption(CheckpointManagerKey)
+    }
+    // the manager of the file source's log, which the query builds from the
+    // caller's session on its own thread after start() returns
+    // (FileStreamSource.metadataLog is private, HDFSMetadataLog.fileManager
+    // protected: both read reflectively)
+    def sourceLogManager(q: StreamingQuery): String = {
+      import org.apache.spark.sql.execution.streaming.runtime.StreamingExecutionRelation
+      val src = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.logicalPlan
+        .collectFirst { case r: StreamingExecutionRelation => r.source }.get
+      val field = src.getClass.getDeclaredField("metadataLog")
+      field.setAccessible(true)
+      val log = field.get(src)
+      log.getClass.getMethod("fileManager").invoke(log).getClass.getName
+    }
+    assert(spark.conf.getOption(CheckpointManagerKey).isEmpty, "fixture: the session names no manager")
+
+    // (d) the query's session carries the FileSystem-based manager ...
+    val ckpt = tmp("graft-mgr-ckpt")
+    val q = start(ckpt)
+    q.awaitTermination()
+    assert(streamManager(q).contains(LocalFs.FsCheckpointManager))
+    assert(sourceLogManager(q) == LocalFs.FsCheckpointManager)
+    // (b) ... and the caller's session does not, also after a start that throws
+    assert(spark.conf.getOption(CheckpointManagerKey).isEmpty, "the setting leaked into the session")
+    val notADir = Files.createTempFile("graft-mgr-ckpt", ".file").toString
+    val thrown = intercept[org.apache.hadoop.fs.FileAlreadyExistsException](start(notADir))
+    assert(thrown.getStackTrace.exists(_.getClassName == LocalFs.FsCheckpointManager),
+      "fixture: start must throw while the setting is in place")
+    assert(spark.conf.getOption(CheckpointManagerKey).isEmpty,
+      "a start that threw leaked the setting into the session")
+    // Hadoop's .crc files and Spark's checkpoint checksums are still written
+    val state = new java.io.File(s"$ckpt/state/0/0").list().toSet
+    assert(Set("1.delta", ".1.delta.crc", "1.delta.crc", ".1.delta.crc.crc").subsetOf(state),
+      s"state store files: $state")
+
+    // (c) a manager the session names is kept and used
+    val own = classOf[CountingCheckpointManager].getName
+    spark.conf.set(CheckpointManagerKey, own)
+    try {
+      val before = CountingCheckpointManager.made.get
+      val q2 = start(tmp("graft-mgr-ckpt"))
+      q2.awaitTermination()
+      assert(streamManager(q2).contains(own))
+      assert(CountingCheckpointManager.made.get > before, "the session's manager was never built")
+      assert(spark.conf.getOption(CheckpointManagerKey).contains(own))
+    } finally spark.conf.unset(CheckpointManagerKey)
+  }
+}
+
+/** Spark's FileContext-based checkpoint manager, counting how often Spark
+  * builds it: a session that names it shows whether its queries used it.
+  */
+class CountingCheckpointManager(path: org.apache.hadoop.fs.Path,
+                                conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.spark.sql.execution.streaming.checkpointing
+      .FileContextBasedCheckpointFileManager(path, conf) {
+  CountingCheckpointManager.made.incrementAndGet()
+}
+
+object CountingCheckpointManager {
+  val made = new java.util.concurrent.atomic.AtomicInteger()
 }
