@@ -34,24 +34,12 @@ _INGEST = "member of sources/Ingest.scala, the allowlisted producer above"
 ALLOWED_MEMBERS = {
     "functions/VectorOps.scala: VectorOps.dotBuiltin": _REFERENCE,
     "functions/Bpe.scala: Bpe.segmentWordsNested": _REFERENCE,
-    "functions/Bpe.scala: Bpe.trainBatched":
-        "batched-merge BPE trainer; specs hold it to the per-merge `train`",
     "functions/MixOps.scala: MixOps.qualityTiersWindowed": _REFERENCE,
     "functions/TextOps.scala: TextOps.compressRatio":
         "zlib ratio that specs cross-foot against the oracle-checked compressBytes",
     "functions/TextOps.scala: TextOps.compressRatioExpr": "compressRatio's column",
     "multimodal/Multimodal.scala: Multimodal.decodeHeaders":
         "header decoder the codec specs cross-check the production decoders with",
-    "functions/VectorOps.scala: VectorOps.kmeansTrain":
-        "Table-path trainer MaterializeSpec pins (fault-tolerant materialization)",
-    "functions/VectorOps.scala: VectorOps.pqTrainCodebook":
-        "Table-path trainer MaterializeSpec pins (fault-tolerant materialization)",
-    "functions/VectorOps.scala: VectorOps.annPqWith":
-        "external-codebook PQ search; MaterializeSpec pins its codebook check",
-    "SparkEntry.scala: SparkEntry.entry":
-        "the flagship parse-validate-cohort query in one plan (SURVEY 7.3); OperatorsSpec runs it",
-    "operators/Skew.scala: Skew.saltedJoin":
-        "salted skew join (README skew row); SkewRetentionSpec holds it to the plain join",
     "sources/Ingest.scala: Ingest.readCsv": _INGEST,
     "sources/Ingest.scala: Ingest.writeKeyed": _INGEST,
     "sources/Ingest.scala: Ingest.rateReplay": _INGEST,

@@ -2,42 +2,24 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Mid-plan materialization strategy for operators that reuse an expensive
+/** The one mid-plan materialization, for operators that reuse an expensive
   * subplan across several consumers (LSH signatures, IVF assignments) or
-  * iterate over it (connected-components label propagation).
+  * iterate over it (connected-components label propagation), and for
+  * stream batches walked more than once.
   */
-sealed trait Materialize {
-  def apply(df: DataFrame): DataFrame
-}
-
 object Materialize {
 
   /** `localCheckpoint(eager = true)`: executor-local blocks. Fastest, and
     * right for single-node and verification runs — but NOT fault-tolerant:
     * on a cluster, losing an executor loses its blocks and fails the query
-    * instead of recomputing them. Inside a [[SharedRel.capture]] the plan
-    * the checkpoint ran is recorded.
+    * instead of recomputing them; Spark's reliable `df.checkpoint()` here
+    * is the swap for that. Inside a [[SharedRel.capture]] the plan the
+    * checkpoint ran is recorded.
     */
-  case object Local extends Materialize {
-    def apply(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint(eager = true)
-      SharedRel.record(df)
-      out
-    }
-  }
-
-  /** Write to a parquet dir under `dir` (one subdir per materialization)
-    * and read back. Survives executor loss — the cluster-scale posture for
-    * anything long-running; also gives the re-read plan real parquet
-    * statistics and column pruning.
-    */
-  final case class Table(dir: String) extends Materialize {
-    private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    def apply(df: DataFrame): DataFrame = {
-      val p = s"$dir/mat-${n.getAndIncrement()}"
-      df.write.mode("overwrite").parquet(p)
-      df.sparkSession.read.parquet(p)
-    }
+  def apply(df: DataFrame): DataFrame = {
+    val out = df.localCheckpoint(eager = true)
+    SharedRel.record(df)
+    out
   }
 }
 
@@ -47,16 +29,12 @@ object Materialize {
   * from them; recomputing + re-materializing the identical deterministic
   * relation inside each query is pure waste, and reuse is value-neutral.
   *
-  * [[apply]] is the ONE place the memo policy lives: only
-  * `Materialize.Local` memoizes — a `Table(...)` materialization is an
-  * explicit caller-owned location, not a query cache. Operators take a
-  * `mat` parameter only on the chains the fault-tolerant `Table` path
-  * reaches; everywhere else they pass `Materialize.Local`. [[once]]
+  * [[apply]] memoizes a [[Materialize]]d relation per key; [[once]]
   * memoizes any other per-key result (a tuple of relations, a side-effect
-  * scaffold). [[capture]] reads back the plans the `Local` builds actually
-  * ran, which is how plan audits see a shared build behind its checkpoint
-  * scan. Assumes `dir` contents are immutable within a session (the
-  * testdata contract).
+  * scaffold). [[capture]] reads back the plans the materializations
+  * actually ran, which is how plan audits see a shared build behind its
+  * checkpoint scan. Assumes `dir` contents are immutable within a session
+  * (the testdata contract).
   * Entries are keyed on the session OBJECT through a WeakHashMap (an
   * identityHashCode string key could collide a new session with a stopped
   * one and hand back a DataFrame bound to a dead block manager). NOTE the
@@ -142,7 +120,7 @@ object SharedRel {
   private val capturing =
     new ThreadLocal[(SparkSession, collection.mutable.ArrayBuffer[(String, SparkPlan)])]
 
-  /** Called by `Materialize.Local` after its eager checkpoint ran `df`. */
+  /** Called by [[Materialize]] after its eager checkpoint ran `df`. */
   private[graft] def record(df: DataFrame): Unit = {
     val open = capturing.get()
     if (open != null && (df.sparkSession eq open._1))
@@ -151,7 +129,7 @@ object SharedRel {
   }
 
   /** Runs `body` and returns its result with the executed plan of every
-    * `Materialize.Local` materialization it ran on this thread over
+    * [[Materialize]] materialization it ran on this thread over
     * `spark`, in run order, each labelled with the innermost enclosing
     * memo-miss key ("" for a checkpoint outside any shared build, e.g. a
     * per-round one). Shared builds and per-round checkpoints run eagerly
@@ -167,12 +145,11 @@ object SharedRel {
     finally capturing.set(outer)
   }
 
-  /** The relation `build` materialized by `mat`, memoized under `key`
-    * when `mat` is `Local` (see [[once]]).
+  /** The relation `build` [[Materialize]]d, memoized under `key` (see
+    * [[once]]).
     */
-  def apply(spark: SparkSession, key: String,
-            mat: Materialize)(build: => DataFrame): DataFrame =
-    if (mat == Materialize.Local) once(spark, key)(mat(build)) else mat(build)
+  def apply(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    once(spark, key)(Materialize(build))
 
   /** Once-per-session result, any type — a relation, a tuple of relations,
     * or a SIDE-EFFECT scaffold (e.g. writing a topic dir a query then

@@ -22,14 +22,6 @@ object SparkEntry {
     */
   val T: Readings.Thresholds = Readings.Thresholds(low = 50, moderate = 200, danger = 400.0)
 
-  /** Flagship query (SURVEY.md §7.3): per 1-second cohort of valid
-    * readings — count, max CPM, critical count. Exercises parse →
-    * validate → event-time cohort → aggregate in one plan.
-    */
-  def entry(spark: SparkSession): DataFrame =
-    CohortWindow.cohortAgg(
-      Readings.enriched(spark, "/root/testdata/sf0.001", T).filter(col("status") === "valid"))
-
   private def valid(s: SparkSession, dir: String): DataFrame =
     Readings.enriched(s, dir, T).filter(col("status") === "valid")
 

@@ -142,7 +142,7 @@ object Bpe {
       "level in the projection, and >200 levels risks codegen/stack limits")
     val init = df.withColumn("syms", expr(charsExpr))
     merges.grouped(batchSize).foldLeft(init) { (d, batch) =>
-      graft.Materialize.Local(batch.foldLeft(d) { case (acc, (a, b)) => applyMerge(acc, a, b) })
+      graft.Materialize(batch.foldLeft(d) { case (acc, (a, b)) => applyMerge(acc, a, b) })
     }
   }
 
@@ -529,111 +529,5 @@ object Bpe {
     }
     v.unpersist()
     merges.toSeq
-  }
-
-  /** Result of [[trainBatched]]: the ordered merge table plus the number of
-    * pair-count rounds it took — the batched trainer's whole point is
-    * `rounds < merges.size` wherever the pair distribution allows it.
-    */
-  final case class BatchedTrain(merges: Seq[(Int, String, String, Long)], rounds: Int)
-
-  /** Batched BPE training: SAME merge table as [[train]], fewer Spark jobs.
-    *
-    * [[train]] runs one full pair-count aggregation + 1-row collect PER
-    * MERGE — at a production vocabulary (~30k merges) that is ~30k
-    * sequential driver-coordinated jobs, days of scheduler overhead
-    * regardless of data size. This trainer applies a BATCH of merges per
-    * pair-count round, chosen so the result is provably identical to the
-    * sequential trainer's:
-    *
-    * From one ranked pair table (weight desc, pair asc) it accepts the
-    * maximal PREFIX of candidates that are pairwise symbol-disjoint —
-    * counting the fused string `a+b` as part of each candidate's symbol
-    * set — stopping at the first candidate that overlaps. Disjointness
-    * makes every accepted pair's count invariant under the others' merges,
-    * so the recorded weights equal what the sequential trainer would see.
-    * Three further guards make the ORDER provably sequential-identical:
-    *
-    *  1. every accepted candidate after the first must have weight STRICTLY
-    *     above `w_skip` (the first skipped candidate's weight). Any pair a
-    *     merge newly creates — `(x, ab)` from `x a b`, `(ab, y)` from
-    *     `a b y`, `(ab, ab)` from `a b a b` — is bounded by the count of an
-    *     OVERLAPPING old pair (`(x,a)`, `(b,y)`, `(b,a)` respectively),
-    *     which by the prefix rule ranks at or below `w_skip`; strict
-    *     inequality means no new pair can tie-and-win on string order.
-    *  2. a SELF-pair (a == b) closes its batch: fusing `a a` can create
-    *     `(aa, aa)` adjacencies bounded only by the self-pair's own weight
-    *     (the bridging pair IS the candidate), so nothing may be batched
-    *     after it.
-    *  3. fused strings must not collide with ANY existing vocabulary symbol
-    *     (one distributed membership probe per round): a collision would
-    *     silently add the new pair's count onto an existing pair's,
-    *     breaking the invariance argument. The batch truncates at the
-    *     first colliding candidate.
-    *
-    * Truncation is always toward FEWER merges per round, which degrades to
-    * exactly [[train]] in the worst case (heavily overlapping top pairs)
-    * and collapses fully-disjoint pair distributions to a single round.
-    * Jobs per round: pair-count collect + collision probe + one
-    * materializing count = 3, amortized over the whole batch.
-    */
-  def trainBatched(spark: SparkSession, dir: String, nMerges: Int = 10,
-                   scanWidth: Int = 64): BatchedTrain = {
-    var v = vocab(spark, dir).cache()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rounds = 0
-    var exhausted = false
-    while (merges.size < nMerges && !exhausted) {
-      val remaining = nMerges - merges.size
-      val m = math.min(scanWidth, math.max(remaining * 4, 8))
-      val ranked = bpePairsFrom(v)
-        .orderBy(col("weight").desc, col("pair")).limit(m + 1)
-        .select("pair", "weight").collect()
-        .map(r => { val Array(a, b) = r.getString(0).split(" ", 2); (a, b, r.getLong(1)) })
-      rounds += 1
-      if (ranked.isEmpty) exhausted = true
-      else {
-        // greedy disjoint PREFIX over the ranked list, fused string included
-        // in each candidate's symbol set; stop at the first overlap
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var used = Set.empty[String]
-        val scan = ranked.take(math.min(m, remaining))
-        // bound for everything the scan never looked at: the first candidate
-        // past the scan prefix (ranked desc, so it dominates the whole tail)
-        var wSkip =
-          if (ranked.length > scan.length) ranked(scan.length)._3 else Long.MinValue
-        var i = 0
-        var open = true
-        while (open && i < scan.length) {
-          val (a, b, w) = scan(i)
-          val syms = Set(a, b, a + b)
-          if (used.intersect(syms).isEmpty) {
-            accepted += ((a, b, w)); used ++= syms
-            if (a == b) open = false // guard 2: self-pair closes the batch
-          } else { wSkip = w; open = false }
-          i += 1
-        }
-        // guard 1: strict dominance over anything a batch merge can create
-        val strict = accepted.head +: accepted.tail.takeWhile(_._3 > wSkip)
-        // guard 3: fused strings must be new symbols (one membership probe)
-        val fused = strict.map { case (a, b, _) => a + b }
-        val colliding = v.select(explode(col("syms")).as("s"))
-          .where(col("s").isInCollection(fused)).select("s").distinct()
-          .collect().map(_.getString(0)).toSet
-        val batch = {
-          val firstHit = strict.indexWhere { case (a, b, _) => colliding(a + b) }
-          if (firstHit < 0) strict
-          else if (firstHit == 0) strict.take(1) // head is always sequential-correct
-          else strict.take(firstHit)
-        }
-        batch.foreach { case (a, b, w) => merges += ((merges.size + 1, a, b, w)) }
-        val next = batch.foldLeft(v) { case (d, (a, b, _)) => applyMerge(d, a, b) }.cache()
-        next.count() // materialize before unpersisting the parent
-        v.unpersist()
-        v = next
-      }
-    }
-    v.unpersist()
-    BatchedTrain(merges.toSeq, rounds)
   }
 }

@@ -300,7 +300,7 @@ object MixOps {
   private[graft] def qualityTiersOf(spark: SparkSession, base: DataFrame,
                                     rangeParts: Int = 32): DataFrame = {
     import spark.implicits._
-    val ranged = graft.Materialize.Local(base
+    val ranged = graft.Materialize(base
       .repartitionByRange(rangeParts, col("lang"), col("quality_score").desc, col("doc_id"))
       .withColumn("pid", spark_partition_id()))
     // bounded collect: rangeParts × |langs| rows — partition-slice counts,
@@ -918,7 +918,7 @@ object MixOps {
       val clean = cleanRel(spark, dir, probeMax)
       // nearDupLsh is session-shared (SharedRel) — no second pin here
       val pairs = VectorOps.nearDupLsh(spark, dir).select("id_a", "id_b")
-      val b = graft.Materialize.Local(incrDocs(spark, dir, deltaMod).filter(!col("is_delta")))
+      val b = graft.Materialize(incrDocs(spark, dir, deltaMod).filter(!col("is_delta")))
       val repB = b.groupBy("hmd5").agg(min("doc_id").as("rep_doc_id"))
       val curB = rowGatesF(b, cont, keepLang, probeMax, contamMin, sampleMod, sampleKeep)
         .join(repB, "hmd5").filter(col("doc_id") === col("rep_doc_id"))
@@ -930,10 +930,10 @@ object MixOps {
       val statsB = b.groupBy("source").agg(count(lit(1)).as("cnt"))
         .withColumn("w", weightE(col("source")))
       val totB = statsB.agg(sum("cnt").as("total"), sum("w").as("sumw"))
-      val tiersB = graft.Materialize.Local(qualityTiersOf(spark,
+      val tiersB = graft.Materialize(qualityTiersOf(spark,
         b.select(col("doc_id"), col("lang"), col("quality_score")))
         .select("doc_id", "lang", "quality_score", "tier"))
-      val survB = graft.Materialize.Local(survivorsF(b, curB, dropB, tiersB, clean, statsB, totB, mixMod))
+      val survB = graft.Materialize(survivorsF(b, curB, dropB, tiersB, clean, statsB, totB, mixMod))
       val walkB = walkOffsets(survB, buckets)
         .withColumn("shard_id", expr(s"off div ${budget}L"))
         .withColumn("from_delta", lit(false))
@@ -956,7 +956,7 @@ object MixOps {
     val cont = contRel(spark, dir, probeMax)
     val clean = cleanRel(spark, dir, probeMax)
     val pairs = VectorOps.nearDupLsh(spark, dir).select("id_a", "id_b")
-    val d = graft.Materialize.Local(incrDocs(spark, dir, deltaMod).filter(col("is_delta")))
+    val d = graft.Materialize(incrDocs(spark, dir, deltaMod).filter(col("is_delta")))
     val repD = d.groupBy("hmd5").agg(min("doc_id").as("rep_doc_id"))
     val curD = rowGatesF(d, cont, keepLang, probeMax, contamMin, sampleMod, sampleKeep)
       .join(repD, "hmd5").filter(col("doc_id") === col("rep_doc_id"))
@@ -1253,7 +1253,7 @@ object MixOps {
                   buckets: Int = 64): DataFrame =
     // session-shared: the verdict relation feeds its own driver query AND
     // the per-source mix monitor
-    graft.SharedRel(spark, s"dsir|$dir|$probeMax|$buckets", graft.Materialize.Local) {
+    graft.SharedRel(spark, s"dsir|$dir|$probeMax|$buckets") {
       val d = TextOps.prepared(spark, dir).select(
         col("doc_id"), filter(col("words"), w => w =!= "").as("ws"))
       // r21: unigram + bigram features explode from ONE row-local array —
@@ -1261,7 +1261,7 @@ object MixOps {
       // through a full shuffle+sort of the token mass, then unioned a second
       // explode pass for the unigrams; adjacency is a property of the row's
       // own array (slice-guarded index list, safe for 0/1-word docs)
-      val feats = graft.Materialize.Local(d.select(col("doc_id"), explode(concat(col("ws"), expr(
+      val feats = graft.Materialize(d.select(col("doc_id"), explode(concat(col("ws"), expr(
           """transform(slice(sequence(0, greatest(size(ws) - 1, 0)),
             |          1, greatest(size(ws) - 1, 0)),
             |  i -> concat(ws[i], ' ', ws[i + 1]))""".stripMargin))).as("f"))

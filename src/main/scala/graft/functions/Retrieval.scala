@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Exprs, Materialize}
+import graft.Exprs
 
 /** Retrieval tier over the corpus: BM25 lexical search and
   * reciprocal-rank-fusion hybrid search (lexical ∪ semantic), the query
@@ -67,7 +67,7 @@ object Retrieval {
       col("doc_id"),
       filter(col("words"), w => w =!= "").as("ws"))
       .select(col("doc_id"), col("ws"), size(col("ws")).as("len"))
-    val tf = graft.SharedRel(spark, s"bm25idx|$dir", Materialize.Local)(
+    val tf = graft.SharedRel(spark, s"bm25idx|$dir")(
       withLen.select(col("doc_id"), col("len"), explode(col("ws")).as("w"))
         .groupBy(col("doc_id"), col("len"), col("w"))
         .agg(count(lit(1)).as("tf")))

@@ -44,7 +44,7 @@ object TextOps {
     * table this shape re-reads from memory anyway.
     */
   def prepared(spark: SparkSession, dir: String): DataFrame =
-    graft.SharedRel(spark, s"prepared|$dir", Materialize.Local) {
+    graft.SharedRel(spark, s"prepared|$dir") {
       Tables.documents(spark, dir).select(
         col("doc_id"), col("lang"), col("source"), col("n_chars"),
         Exprs.normText(col("text")).as("norm"))
@@ -661,7 +661,7 @@ object TextOps {
     * Vocabulary-bounded rows, one explode+agg pass to build.
     */
   private def wordCounts(spark: SparkSession, dir: String): DataFrame =
-    graft.SharedRel(spark, s"wordcounts|$dir", Materialize.Local)(
+    graft.SharedRel(spark, s"wordcounts|$dir")(
       prepared(spark, dir)
         .select(explode(col("words")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("n_exact")))
@@ -806,7 +806,7 @@ object TextOps {
       // explode+distinct passes measured 6.5 s vs 4.1 s at sf0.1; a
       // shingle living on both sides keeps one row per side, which is
       // exactly the two DISTINCT sets)
-      val sides = Materialize.Local(
+      val sides = Materialize(
         shingles3(spark, dir).select(col("sh").as("shingle"),
             (Exprs.arrivalSplit(col("doc_id"), deltaMod) === 0).as("is_delta"))
           .distinct())
@@ -825,7 +825,7 @@ object TextOps {
     */
   private[graft] def bloomBits(spark: SparkSession, dir: String, m: Int, k: Int,
                                deltaMod: Int): DataFrame =
-    graft.SharedRel(spark, s"bloombits|$dir|$deltaMod|$m|$k", Materialize.Local) {
+    graft.SharedRel(spark, s"bloombits|$dir|$deltaMod|$m|$k") {
       val (base, _) = bloomSplit(spark, dir, deltaMod)
       base.select(explode(array((0 until k).map(i =>
           bloomPosE(i, col("shingle"), m)): _*)).as("pos"))
@@ -842,7 +842,7 @@ object TextOps {
     */
   private def bloomProbe(spark: SparkSession, dir: String, m: Int, k: Int,
                          deltaMod: Int): DataFrame =
-    graft.SharedRel(spark, s"bloomprobe|$dir|$deltaMod|$m|$k", Materialize.Local) {
+    graft.SharedRel(spark, s"bloomprobe|$dir|$deltaMod|$m|$k") {
       val (base, probes) = bloomSplit(spark, dir, deltaMod)
       val bits = bloomBits(spark, dir, m, k, deltaMod)
       val pp = probes.select(col("shingle"),
@@ -1413,7 +1413,7 @@ object TextOps {
     // session-shared: the contamination index is consumed by d_contamination,
     // curate (d_curate + both corpus builds) and the incremental delta pass —
     // a production pipeline persists this relation once per benchmark set
-    graft.SharedRel(spark, s"contam|$dir|$probeMax", graft.Materialize.Local) {
+    graft.SharedRel(spark, s"contam|$dir|$probeMax") {
       import org.apache.spark.sql.expressions.Window
       val ex = shingles3(spark, dir)
       val probe = ex.filter(col("doc_id") < probeMax)
@@ -1463,7 +1463,7 @@ object TextOps {
   def decontamSpans(spark: SparkSession, dir: String, probeMax: Long = 10): DataFrame =
     // session-shared: the span-cleaned relation feeds d_decontam_spans AND
     // both corpus builds
-    graft.SharedRel(spark, s"decontam|$dir|$probeMax", Materialize.Local) {
+    graft.SharedRel(spark, s"decontam|$dir|$probeMax") {
       import org.apache.spark.sql.expressions.Window
       val probe = shingles3(spark, dir).filter(col("doc_id") < probeMax)
         .select("sh").distinct()
@@ -1471,7 +1471,7 @@ object TextOps {
       // (positioned shingles, word re-assembly, final counts); norm itself is
       // not needed past this point (≥3-word docs never take the whole-norm
       // shingle fallback), so the checkpoint carries only (doc_id, words)
-      val pw = Materialize.Local(prepared(spark, dir)
+      val pw = Materialize(prepared(spark, dir)
         .filter(col("doc_id") >= probeMax && size(col("words")) >= 3)
         .select(col("doc_id"), col("words")))
       val sh = pw.select(col("doc_id"), posexplode(expr(
@@ -1553,8 +1553,8 @@ object TextOps {
   def dupSpans(spark: SparkSession, dir: String, n: Int = 5): DataFrame =
     // session-shared: the relation feeds its own verdict query and the
     // optional [[curate]] gate
-    graft.SharedRel(spark, s"dupspans|$dir|$n", Materialize.Local) {
-      val pw = Materialize.Local(prepared(spark, dir).filter(size(col("words")) >= n)
+    graft.SharedRel(spark, s"dupspans|$dir|$n") {
+      val pw = Materialize(prepared(spark, dir).filter(size(col("words")) >= n)
         .select(col("doc_id"), col("words")))
       spanFoldArr(pw, sortedCutArrays(spark, dir, n)
         .withColumnRenamed("all_cuts", "cuts"))
@@ -1597,7 +1597,7 @@ object TextOps {
     * base-set + in-increment-keeper chain is likewise identical pairwise).
     */
   private def sortedCutArrays(spark: SparkSession, dir: String, n: Int): DataFrame =
-    graft.SharedRel(spark, s"spancuts|$dir|$n", Materialize.Local)(
+    graft.SharedRel(spark, s"spancuts|$dir|$n")(
       cutArraysOf(firstOccCutHits(
         prepared(spark, dir).filter(size(col("words")) >= n)
           .select(col("doc_id"), col("words")), n)))
@@ -1676,7 +1676,7 @@ object TextOps {
     */
   def dupSpansIncr(spark: SparkSession, dir: String, n: Int = 5,
                    deltaMod: Int = 5): DataFrame = {
-    val pw = Materialize.Local(incrPw(spark, dir, n, deltaMod).filter(col("is_delta"))
+    val pw = Materialize(incrPw(spark, dir, n, deltaMod).filter(col("is_delta"))
       .select("doc_id", "words"))
     spanFoldArr(pw, sortedCutArraysIncr(spark, dir, n, deltaMod)
       .withColumnRenamed("all_cuts", "cuts"))
@@ -1718,9 +1718,9 @@ object TextOps {
     */
   private def sortedCutArraysIncr(spark: SparkSession, dir: String, n: Int,
                                   deltaMod: Int): DataFrame =
-    graft.SharedRel(spark, s"spancuts|inc|$dir|$n|$deltaMod", Materialize.Local)(
+    graft.SharedRel(spark, s"spancuts|inc|$dir|$n|$deltaMod")(
       cutArraysOf(incrCutHits(spark, dir, n, deltaMod,
-        Materialize.Local(incrPw(spark, dir, n, deltaMod)
+        Materialize(incrPw(spark, dir, n, deltaMod)
           .filter(col("is_delta")).select("doc_id", "words")))))
 
   def dupSpansIncrSql(n: Int = 5, deltaMod: Int = 5): String =
@@ -1831,7 +1831,7 @@ object TextOps {
     * is the duplicated-token subset, far below corpus token mass.
     */
   def dupRuns(spark: SparkSession, dir: String, n: Int = 5, minRun: Int = 8): DataFrame = {
-    val pw = Materialize.Local(prepared(spark, dir).filter(size(col("words")) >= n)
+    val pw = Materialize(prepared(spark, dir).filter(size(col("words")) >= n)
       .select(col("doc_id"), col("words")))
     // the cut chain is the session-shared spancuts relation — only the
     // row-local minRun floor differs between dupSpans/dupRuns variants
@@ -1873,7 +1873,7 @@ object TextOps {
     */
   def dupRunsIncr(spark: SparkSession, dir: String, n: Int = 5,
                   minRun: Int = 8, deltaMod: Int = 5): DataFrame = {
-    val pw = Materialize.Local(incrPw(spark, dir, n, deltaMod).filter(col("is_delta"))
+    val pw = Materialize(incrPw(spark, dir, n, deltaMod).filter(col("is_delta"))
       .select("doc_id", "words"))
     spanFoldArr(pw, minRunFloor(sortedCutArraysIncr(spark, dir, n, deltaMod), minRun))
   }
@@ -2253,11 +2253,11 @@ object TextOps {
     */
   def jaccardPairs(spark: SparkSession, dir: String, threshold: Double = 0.9,
                    dfCap: Int = 100): DataFrame =
-    graft.SharedRel(spark, s"jacpairs|$dir|$threshold|$dfCap", Materialize.Local) {
+    graft.SharedRel(spark, s"jacpairs|$dir|$threshold|$dfCap") {
       // materialized once: normText + split + array_distinct feed three
       // consumers (candidate explode + both exact-verify sides) and dominate
       // the per-doc cost
-      val d = Materialize.Local(prepared(spark, dir).select(
+      val d = Materialize(prepared(spark, dir).select(
         col("doc_id"), col("lang"), expr("n_chars DIV 100").as("bkt"),
         array_distinct(col("words")).as("ws")))
       val ex = d.select(col("doc_id"), col("lang"), col("bkt"), explode(col("ws")).as("w"))
@@ -2439,12 +2439,11 @@ object TextOps {
     * a probe side of the same subplan). The cluster-scale analog is writing
     * signatures to a table and joining that.
     */
-  def bandedSignatures(spark: SparkSession, dir: String,
-                       mat: Materialize = Materialize.Local): DataFrame =
+  def bandedSignatures(spark: SparkSession, dir: String): DataFrame =
     // the signature TABLE a production dedup maintains once per corpus —
     // shared per session across its consumers (pair join, CC clustering,
     // the recall harness) via SharedRel
-    graft.SharedRel(spark, s"minhash-banded|$dir", mat)(
+    graft.SharedRel(spark, s"minhash-banded|$dir")(
       minhashSignatures(spark, dir)
         .withColumn("band1", concat_ws(",", col("m0"), col("m1"), col("m2"), col("m3")))
         .withColumn("band2", concat_ws(",", col("m4"), col("m5"), col("m6"), col("m7"))))
@@ -2457,7 +2456,7 @@ object TextOps {
     * analog of storing the candidate index a dedup pipeline probes.
     */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.SharedRel(spark, s"minhashpairs|$dir", Materialize.Local) {
+    graft.SharedRel(spark, s"minhashpairs|$dir") {
       val sig = bandedSignatures(spark, dir)
       // A pair can only appear in both joins when BOTH bands match, so the
       // band2 join emits only pairs whose band1 differs — exact dedup with a
@@ -2544,9 +2543,8 @@ object TextOps {
     * re-propagating per consumer — the [[bandedSignatures]] argument one
     * level up.
     */
-  def dupClusters(spark: SparkSession, dir: String,
-                  mat: Materialize = Materialize.Local): DataFrame =
-    graft.SharedRel(spark, s"dupcc|$dir", mat) {
+  def dupClusters(spark: SparkSession, dir: String): DataFrame =
+    graft.SharedRel(spark, s"dupcc|$dir") {
       // Propagate over the bipartite doc ↔ band-bucket incidence graph (2 rows
       // per doc), NOT the pairwise candidate graph: a bucket holding b docs
       // contributes b incidence rows instead of b·(b-1)/2 edges, so a
@@ -2555,11 +2553,11 @@ object TextOps {
       // feasible and quadratic blow-up at 100 TB. Components are identical:
       // two docs share a band value iff they are connected through its bucket
       // node.
-      val banded = bandedSignatures(spark, dir, mat)
-      val inc = mat(
+      val banded = bandedSignatures(spark, dir)
+      val inc = Materialize(
         banded.select(col("doc_id"), concat(lit("1:"), col("band1")).as("bkt"))
           .union(banded.select(col("doc_id"), concat(lit("2:"), col("band2")).as("bkt"))))
-      var labels = mat(banded.select(col("doc_id")).withColumn("label", col("doc_id")))
+      var labels = Materialize(banded.select(col("doc_id")).withColumn("label", col("doc_id")))
       var changed = 1L
       var rounds = 0
       while (changed > 0 && rounds < 25) {
@@ -2575,7 +2573,7 @@ object TextOps {
             (col("nbr_min") < col("label")).cast("long").as("chg"))
         val obs = org.apache.spark.sql.Observation()
         // sever lineage: each round is one shuffle, not a growing chain
-        val next = mat(stepped.observe(obs, sum(col("chg")).as("changed")))
+        val next = Materialize(stepped.observe(obs, sum(col("chg")).as("changed")))
         changed = obs.get("changed").asInstanceOf[Long]
         labels = next.drop("chg")
         rounds += 1
@@ -3209,8 +3207,7 @@ object TextOps {
     // report, the corpus build's keep set) and a deterministic relation —
     // the dupClusters argument
     graft.SharedRel(spark,
-      s"curate|$dir|$keepLang|$probeMax|$contamMin|$sampleMod|$sampleKeep|$dupTokenMax",
-      Materialize.Local) {
+      s"curate|$dir|$keepLang|$probeMax|$contamMin|$sampleMod|$sampleKeep|$dupTokenMax") {
       val base = curatePrefix(spark, dir, probeMax)
       val dupCond: Column =
         if (dupTokenMax >= 0) coalesce(col("n_dup"), lit(0L)) > dupTokenMax
@@ -3246,7 +3243,7 @@ object TextOps {
   private def curatePrefix(spark: SparkSession, dir: String,
                            probeMax: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.SharedRel(spark, s"curatebase|$dir|$probeMax", Materialize.Local) {
+    graft.SharedRel(spark, s"curatebase|$dir|$probeMax") {
       val base = prepared(spark, dir)
         .withColumn("pred_lang", predLangE)
         .withColumn("quality_bucket", qualityBucketE)
@@ -3387,7 +3384,7 @@ object TextOps {
   def simhashPairs(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
     val blocks = (0 until SimhashBlocks).map(k => s"b$k")
     // signature agg feeds all join sides; materialize once
-    val s = Materialize.Local(blocks.zipWithIndex.foldLeft(simhash(spark, dir)) { case (df, (b, k)) =>
+    val s = Materialize(blocks.zipWithIndex.foldLeft(simhash(spark, dir)) { case (df, (b, k)) =>
       df.withColumn(b, shiftright(col("simhash60"), k * BlockBits).bitwiseAND(BlockMask))
     })
     def joinOn(k: Int): DataFrame = {
@@ -3467,7 +3464,7 @@ object TextOps {
     val segs = prepared(spark, dir)
       .select(col("doc_id"), posexplode(segments).as(Seq("pos", "seg")))
     // pinned: consumed by the sketch build (eager) and the exact join
-    val dups = Materialize.Local(segs.groupBy(col("seg")).agg(count(lit(1)).as("n"))
+    val dups = Materialize(segs.groupBy(col("seg")).agg(count(lit(1)).as("n"))
       .filter(col("n") >= 2).select(col("seg")))
     // sketch sized by BIT BUDGET (1 MB default ≈ 840k duplicate segments at
     // ~1% fpp), not by counting dups — the count was one extra job per call
@@ -3522,23 +3519,17 @@ object TextOps {
     *
     * Scale shape: token explode → map-side-combined count agg → equi-join
     * tokens⋈counts on the word key → per-doc sum. The count table is
-    * Zipf-distributed: at 100 TB it cannot broadcast whole, but its head
-    * answers >99% of probe rows — pass `headWords` to route the join
-    * through [[graft.operators.Skew.headTailJoin]] (broadcast the
-    * `headWords` most frequent words, shuffle only rare-token rows).
-    * Output is row-identical either way (asserted in OperatorsSpec); the
-    * corpus total N is a 1-row agg, a free broadcast.
+    * Zipf-distributed: at 100 TB it cannot broadcast whole, and AQE's
+    * skew-join split (`spark.sql.adaptive.skewJoin.enabled`) cuts a hot
+    * word's oversized shuffle partition at run time. The corpus total N is
+    * a 1-row agg, a free broadcast.
     */
-  def lmBits(spark: SparkSession, dir: String, headWords: Int = 0): DataFrame = {
+  def lmBits(spark: SparkSession, dir: String): DataFrame = {
     val tokens = prepared(spark, dir)
       .select(col("doc_id"), explode(col("words")).as("w"))
     val counts = tokens.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum(col("cnt")).as("n_total"))
-    val joined =
-      if (headWords > 0)
-        graft.operators.Skew.headTailJoin(tokens, counts, "w", headWords, col("cnt"))
-      else tokens.join(counts, "w")
-    joined
+    tokens.join(counts, "w")
       .crossJoin(broadcast(total))
       .select(col("doc_id"),
         (length(bin(col("n_total"))) - length(bin(col("cnt")))).cast("long").as("bits"))
@@ -3589,7 +3580,7 @@ object TextOps {
   def lm2Bits(spark: SparkSession, dir: String): DataFrame =
     // session-shared: the relation feeds its own driver query AND the
     // ensemble gate; the bigram model build is the expensive half
-    graft.SharedRel(spark, s"lm2|$dir", graft.Materialize.Local) {
+    graft.SharedRel(spark, s"lm2|$dir") {
       val d = prepared(spark, dir).select(col("doc_id"), col("words"))
       val toks = d.select(col("doc_id"), explode(col("words")).as("w"))
       // r21: adjacent-word pairs are a row-local array transform (the former
@@ -3887,7 +3878,7 @@ object TextOps {
     * scoring pass is the expensive half of the classifier.
     */
   def nbClassify(spark: SparkSession, dir: String): DataFrame =
-    graft.SharedRel(spark, s"nbpred|$dir", Materialize.Local) {
+    graft.SharedRel(spark, s"nbpred|$dir") {
       val p = prepared(spark, dir)
       val lab = p.select(col("doc_id"), qualityBucketE.as("cls"))
       val tokens = p.select(col("doc_id"), explode(col("words")).as("w"))
@@ -4044,11 +4035,11 @@ object TextOps {
   private def shinglePairCounts(spark: SparkSession, dir: String, dfCap: Int): DataFrame =
     // the candidate scaffold is itself a derived relation two operators
     // score differently — computed once per (session, dir, dfCap)
-    graft.SharedRel(spark, s"shingle-pairs|$dir|$dfCap", Materialize.Local) {
+    graft.SharedRel(spark, s"shingle-pairs|$dir|$dfCap") {
       // materialized once: the shingle explode feeds FOUR consumers (df
       // counts, both self-join sides, per-doc sizes) and dominates per-doc
       // cost — same shape as [[jaccardPairs]]'s materialization point
-      val ex = Materialize.Local(shingles3(spark, dir))
+      val ex = Materialize(shingles3(spark, dir))
       // the hot list is tiny (shingles in > dfCap docs) → broadcast anti-join,
       // never a shuffle join against the full per-shingle df relation
       val hot = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -4493,7 +4484,7 @@ object TextOps {
   def lshSweep(spark: SparkSession, dir: String, threshold: Double = 0.9): DataFrame =
     // session-shared: the 3-row S-curve feeds its own query AND the retune
     // action's pick
-    graft.SharedRel(spark, s"lshsweep|$dir|$threshold", Materialize.Local) {
+    graft.SharedRel(spark, s"lshsweep|$dir|$threshold") {
       val exact = jaccardPairs(spark, dir, threshold)
         .select(col("doc_a"), col("doc_b"))
       val nTrue = exact.agg(count(lit(1)).as("n_true"))

@@ -64,14 +64,13 @@ object VectorOps {
     * them, assignment is deterministic, so reuse changes no values, only
     * work (a bench run previously rebuilt the identical assignment ~6×).
     */
-  private def sharedIvfAssign(spark: SparkSession, dir: String, k: Int,
-                              mat: Materialize): DataFrame =
-    graft.SharedRel(spark, s"ivf|$dir|$k", mat)(
+  private def sharedIvfAssign(spark: SparkSession, dir: String, k: Int): DataFrame =
+    graft.SharedRel(spark, s"ivf|$dir|$k")(
       ivfAssign(spark, dir, k).select("vec_id", "centroid_id"))
 
   private def sharedPqCodes(spark: SparkSession, dir: String, blocks: Int,
                             k: Int): DataFrame =
-    graft.SharedRel(spark, s"pq|$dir|$blocks|$k", Materialize.Local)(
+    graft.SharedRel(spark, s"pq|$dir|$blocks|$k")(
       pqAssign(spark, dir, blocks, k))
 
   /** The quantized-Lloyd trained centroid relation, session-shared: the
@@ -80,7 +79,7 @@ object VectorOps {
     */
   private def sharedTrained(spark: SparkSession, dir: String, k: Int,
                             iters: Int): DataFrame =
-    graft.SharedRel(spark, s"kmtrained|$dir|$k|$iters", Materialize.Local)(
+    graft.SharedRel(spark, s"kmtrained|$dir|$k|$iters")(
       kmeansTrainRounded(spark, dir, k, iters))
 
   /** Approximate top-k hit relations, session-shared (key `annhits`, one
@@ -96,8 +95,7 @@ object VectorOps {
     */
   private def sharedAnnHits(spark: SparkSession, variant: String, dir: String,
                             params: String)(build: => DataFrame): DataFrame =
-    graft.SharedRel(spark, s"annhits|$variant|$dir|$params",
-      Materialize.Local)(build)
+    graft.SharedRel(spark, s"annhits|$variant|$dir|$params")(build)
 
   /** The exact brute-force top-k baseline every `v_recall_*` harness
     * compares against, session-shared as its narrow (q_id, neighbor_id)
@@ -109,12 +107,12 @@ object VectorOps {
     */
   private def sharedKnnExact(spark: SparkSession, dir: String,
                              nQueries: Int, k: Int): DataFrame =
-    graft.SharedRel(spark, s"knnexact|$dir|$nQueries|$k", Materialize.Local)(
+    graft.SharedRel(spark, s"knnexact|$dir|$nQueries|$k")(
       knn(spark, dir, nQueries, k).select(col("q_id"), col("neighbor_id")))
 
   private[graft] def sharedKnnFilteredExact(spark: SparkSession, dir: String,
                                             nQueries: Int, k: Int): DataFrame =
-    graft.SharedRel(spark, s"knnexact|f|$dir|$nQueries|$k", Materialize.Local)(
+    graft.SharedRel(spark, s"knnexact|f|$dir|$nQueries|$k")(
       knnFiltered(spark, dir, nQueries, k).select(col("q_id"), col("neighbor_id")))
 
   /** Per-vector norms — the smallest verifiable unit of the vector path. */
@@ -230,7 +228,7 @@ object VectorOps {
     // v_neardup_lsh, semantic dedup (d_semantic_dedup + both corpus
     // builds) — a production pipeline maintains this pair index, not
     // per-query rebuilds of the bucketed self-join
-    graft.SharedRel(spark, s"neardup|$dir|$threshold|$bits", graft.Materialize.Local)(
+    graft.SharedRel(spark, s"neardup|$dir|$threshold|$bits")(
       lshPairsOn(prepared(spark, dir), threshold, bits))
 
   /** The bucketed pair join over an arbitrary (vec_id, v, nrm) relation —
@@ -426,11 +424,11 @@ object VectorOps {
     // to evaluate its zip_with division on a zero-norm row first, which
     // under ANSI semantics is an error, not an Infinity (found by the
     // degenerate-corpus probe: a zero vector in embeddings)
-    val base = Materialize.Local(prepared(spark, dir))
+    val base = Materialize(prepared(spark, dir))
     // materialize the projected relation: the pair join consumes it as
     // BOTH sides, and unmaterialized the whole projection subtree (dot +
     // zip_with per row) would execute twice (measured 5.3 s → ~2.6 s)
-    val proj = Materialize.Local(base
+    val proj = Materialize(base
       .withColumn("dp", dot(col("v"), xl) / col("nrm"))
       .withColumn("v2", zip_with(col("v"), xl,
         (a, b) => a / col("nrm") - col("dp") * b))
@@ -910,8 +908,8 @@ object VectorOps {
     */
   private def sharedKnnEdges(spark: SparkSession, dir: String, kNn: Int,
                              kCentroids: Int): DataFrame =
-    graft.SharedRel(spark, s"knng|$dir|$kNn|$kCentroids", Materialize.Local) {
-      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+    graft.SharedRel(spark, s"knng|$dir|$kNn|$kCentroids") {
+      val assigned = sharedIvfAssign(spark, dir, kCentroids)
       val e = prepared(spark, dir).join(assigned, "vec_id")
       val a = e.select(col("centroid_id"), col("vec_id").as("src"),
         col("v").as("va"), col("nrm").as("na"))
@@ -1045,8 +1043,8 @@ object VectorOps {
     */
   def semClusters(spark: SparkSession, dir: String, threshold: Double = 0.4,
                   kNn: Int = 5, kCentroids: Int = 16): DataFrame =
-    graft.SharedRel(spark, s"semcc|$dir|$threshold|$kNn|$kCentroids", Materialize.Local) {
-      val edges = Materialize.Local(knnGraph(spark, dir, kNn, kCentroids)
+    graft.SharedRel(spark, s"semcc|$dir|$threshold|$kNn|$kCentroids") {
+      val edges = Materialize(knnGraph(spark, dir, kNn, kCentroids)
         .filter(col("mutual") && col("cos_sim") >= threshold)
         .select(col("src"), col("dst")))
       val nodes = prepared(spark, dir).select(col("vec_id"))
@@ -1067,7 +1065,7 @@ object VectorOps {
     */
   private[graft] def propagateMinLabels(nodes: DataFrame, edges: DataFrame,
                                         maxRounds: Int = 40): DataFrame = {
-    var labels = Materialize.Local(nodes.select(col("vec_id"))
+    var labels = Materialize(nodes.select(col("vec_id"))
       .withColumn("label", col("vec_id")))
     var changed = 1L
     var rounds = 0
@@ -1081,7 +1079,7 @@ object VectorOps {
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"),
           (coalesce(col("nbr_min"), col("label")) < col("label")).cast("long").as("chg"))
       val obs = org.apache.spark.sql.Observation()
-      val next = Materialize.Local(stepped.observe(obs, sum(col("chg")).as("changed")))
+      val next = Materialize(stepped.observe(obs, sum(col("chg")).as("changed")))
       changed = obs.get("changed").asInstanceOf[Long]
       labels = next.drop("chg")
       rounds += 1
@@ -1114,7 +1112,7 @@ object VectorOps {
   private[graft] def propagateLsLs(nodes: DataFrame, edges0: DataFrame,
                                    maxRounds: Int = 25): DataFrame = {
     // canonicalize: undirected, no self-loops, deduped, a < b
-    var e = Materialize.Local(edges0.filter(col("src") =!= col("dst"))
+    var e = Materialize(edges0.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct())
@@ -1136,7 +1134,7 @@ object VectorOps {
     var rounds = 0
     var stable = e.isEmpty
     while (!stable && rounds < maxRounds) {
-      val next = Materialize.Local(smallStar(largeStar(e)))
+      val next = Materialize(smallStar(largeStar(e)))
       stable = next.exceptAll(e).isEmpty && e.exceptAll(next).isEmpty
       e = next
       rounds += 1
@@ -1162,7 +1160,7 @@ object VectorOps {
     */
   def semClustersLsLs(spark: SparkSession, dir: String, threshold: Double = 0.4,
                       kNn: Int = 5, kCentroids: Int = 16): DataFrame = {
-    val edges = Materialize.Local(knnGraph(spark, dir, kNn, kCentroids)
+    val edges = Materialize(knnGraph(spark, dir, kNn, kCentroids)
       .filter(col("mutual") && col("cos_sim") >= threshold)
       .select(col("src"), col("dst")))
     val nodes = prepared(spark, dir).select(col("vec_id"))
@@ -1249,7 +1247,7 @@ object VectorOps {
   def graphRank(spark: SparkSession, dir: String, threshold: Double = 0.4,
                 kNn: Int = 5, kCentroids: Int = 16, iters: Int = 3,
                 damp: Int = 85): DataFrame = {
-    val edges = Materialize.Local(knnGraph(spark, dir, kNn, kCentroids)
+    val edges = Materialize(knnGraph(spark, dir, kNn, kCentroids)
       .filter(col("mutual") && col("cos_sim") >= threshold)
       .select(col("src"), col("dst")))
     val nodes = prepared(spark, dir).select(col("vec_id"))
@@ -1269,7 +1267,7 @@ object VectorOps {
         .join(deg, "src")
         .select(col("dst"), expr("score div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("in_c"))
-      scores = Materialize.Local(nodes
+      scores = Materialize(nodes
         .join(contrib.withColumnRenamed("dst", "vec_id"), Seq("vec_id"), "left")
         .select(col("vec_id"),
           (lit((100L - damp) * 10000L) +
@@ -1407,7 +1405,7 @@ object VectorOps {
     * window runs over k rows — nothing downstream of the join exceeds k.
     */
   def domainMix(spark: SparkSession, dir: String, k: Int = 16): DataFrame = {
-    val assigned = sharedIvfAssign(spark, dir, k, Materialize.Local)
+    val assigned = sharedIvfAssign(spark, dir, k)
     val toks = TextOps.prepared(spark, dir)
       .select(col("doc_id").as("vec_id"), size(col("words")).as("ws_tokens"))
     assigned.join(toks, "vec_id")
@@ -1484,7 +1482,7 @@ object VectorOps {
     * plain id-only [[sharedIvfAssign]] already paid for.
     */
   private def sharedIvfAssignSim(spark: SparkSession, dir: String, k: Int): DataFrame =
-    graft.SharedRel(spark, s"ivfsim|$dir|$k", Materialize.Local)(ivfAssign(spark, dir, k))
+    graft.SharedRel(spark, s"ivfsim|$dir|$k")(ivfAssign(spark, dir, k))
 
   def ivfStatsSql(k: Int = 16): String =
     s"""WITH a AS (${ivfAssignSql(k)}),
@@ -1530,7 +1528,7 @@ object VectorOps {
   private def ivfSplitRels(spark: SparkSession, dir: String, k: Int,
                            topM: Int): IvfSplitRels = {
     val e0 = prepared(spark, dir)
-    val assign = sharedIvfAssign(spark, dir, k, Materialize.Local)
+    val assign = sharedIvfAssign(spark, dir, k)
     val tot = assign.agg(count(lit(1)).as("n"))
     val sz = assign.groupBy(col("centroid_id")).agg(count(lit(1)).as("n_vecs"))
     // k rows: the single-partition rank window is over the CELL relation,
@@ -1750,7 +1748,7 @@ object VectorOps {
     // side and the probe side, and canonical-plan reuse doesn't cover that
     // split (same rationale as TextOps.bandedSignatures); shared across the
     // ANN family per session (deterministic, so reuse is value-neutral)
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+    val assigned = sharedIvfAssign(spark, dir, kCentroids)
     val e = prepared(spark, dir).join(assigned, "vec_id")
     val q = broadcast(e.filter(col("vec_id") < nQueries)
       .select(col("centroid_id").as("q_cent"), col("vec_id").as("q_id"),
@@ -1816,7 +1814,7 @@ object VectorOps {
   def annIvfMulti(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
                   kCentroids: Int = 16, nProbe: Int = 2): DataFrame =
     sharedAnnHits(spark, "ivfmulti", dir, s"$nQueries|$kNn|$kCentroids|$nProbe") {
-      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+      val assigned = sharedIvfAssign(spark, dir, kCentroids)
       val e = prepared(spark, dir).join(assigned, "vec_id")
       val qProbes = queryProbes(prepared(spark, dir), nQueries, kCentroids, nProbe)
       val sims = e.join(broadcast(qProbes),
@@ -1852,86 +1850,31 @@ object VectorOps {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** Full spherical k-means (Lloyd) training loop over the corpus — the
-    * TRAIN side whose single step [[kmeansStep]] oracle-checks. Centroid
-    * state is k×dim doubles held on the driver (the [[graft.functions.Bpe.train]]
-    * contract: iterations bounded by the parameter, per-round driver
-    * traffic bounded by k×dim, never the corpus). Each round: broadcast
-    * centroids → one corpus assignment (argmax cosine) → per-dim means of
-    * the NORMALIZED members v/‖v‖ (map-side-combined agg, k×dim rows
-    * back) → renormalize. Averaging unit vectors — not raw members — is
-    * the true spherical-k-means update: the mean direction maximizes
-    * Σ cos(x, c) over its members, which is what makes the objective
-    * non-decreasing under Lloyd regardless of how heterogeneous the member
-    * norms are. Empty clusters keep their previous centroid. Returns
-    * (trained centroid relation, per-round objective Σ max-cos —
-    * non-decreasing, asserted in OperatorsSpec).
+  /** ORACLE-PORTABLE spherical k-means (Lloyd) training loop over the
+    * corpus — the TRAIN side whose single step [[kmeansStep]]
+    * oracle-checks — with every round's centroid coordinates ROUNDED to 4
+    * decimals before the next assignment: the [[kmeansStep]] cross-engine
+    * trick extended to the full loop. Rounding re-anchors both engines each
+    * round: the only cross-engine float divergence (summation order inside
+    * `avg`) is absorbed by `round(·, 4)`, and everything downstream of the
+    * rounded coordinates (sequential dot products, `sqrt`, the argmax with
+    * centroid_id ties) is bit-identical arithmetic over identical doubles,
+    * so a TRAINED quantizer sits inside a differentially-checked query
+    * instead of taking a rows-only pass. The update averages UNIT vectors
+    * v/‖v‖, not raw members: the mean direction maximizes Σ cos(x, c) over
+    * its members (the true spherical-k-means update).
     *
-    * `mat` controls how the per-round assignment is pinned: `Local` for
-    * single-node runs, `Table` for cluster runs where executor loss must
-    * recompute from storage instead of killing the training job.
-    */
-  def kmeansTrain(spark: SparkSession, dir: String, k: Int = 16,
-                  iters: Int = 5,
-                  mat: Materialize = Materialize.Local): (DataFrame, Seq[Double]) = {
-    import spark.implicits._
-    val e = mat(prepared(spark, dir).select(col("vec_id"), col("v"), col("nrm")))
-    var cents: Map[Int, Array[Double]] = e.filter(col("vec_id") < k)
-      .select(col("vec_id"), col("v")).as[(Long, Seq[Double])]
-      .collect().map { case (id, v) => id.toInt -> v.toArray }.toMap
-    val objective = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def centDf(c: Map[Int, Array[Double]]): DataFrame =
-      c.toSeq.sortBy(_._1).map { case (id, v) =>
-        val n = math.sqrt(v.map(x => x * x).sum)
-        (id, v.toSeq, n)
-      }.toDF("centroid_id", "cv", "cn")
-    for (_ <- 1 to iters) {
-      val cDf = broadcast(centDf(cents))
-      val best = Dedup.keepFirst(e.join(cDf)
-          .withColumn("c_sim", dot(col("v"), col("cv")) / (col("nrm") * col("cn"))),
-          Seq(col("vec_id")), nearestCentroid)
-        .select(col("vec_id"), col("centroid_id"), col("c_sim"), col("v"), col("nrm"))
-      val pinned = mat(best)
-      objective += pinned.agg(sum(col("c_sim"))).head().getDouble(0)
-      val means = pinned
-        .select(col("centroid_id"), col("nrm"), posexplode(col("v")).as(Seq("dim", "x")))
-        // spherical update: mean of UNIT vectors x/‖x‖, not raw members
-        .groupBy(col("centroid_id"), col("dim")).agg(avg(col("x") / col("nrm")).as("m"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (cid, rows) =>
-          val arr = new Array[Double](rows.length)
-          rows.foreach(r => arr(r.getInt(1)) = r.getDouble(2))
-          cid -> arr
-        }
-      // spherical update: means renormalize via cn in centDf; empty
-      // clusters (absent from `means`) keep their previous centroid
-      cents = cents.map { case (cid, old) => cid -> means.getOrElse(cid, old) }
-    }
-    (centDf(cents), objective.toSeq)
-  }
-
-  /** ORACLE-PORTABLE spherical k-means: [[kmeansTrain]]'s Lloyd loop with
-    * every round's centroid coordinates ROUNDED to 4 decimals before the
-    * next assignment — the [[kmeansStep]] cross-engine trick extended to
-    * the full loop. Rounding re-anchors both engines each round: the only
-    * cross-engine float divergence (summation order inside `avg`) is
-    * absorbed by `round(·, 4)`, and everything downstream of the rounded
-    * coordinates (sequential dot products, `sqrt`, the argmax with
-    * centroid_id ties) is bit-identical arithmetic over identical doubles.
-    * The production trainer stays [[kmeansTrain]] (no quantization, full
-    * precision); this variant exists so a TRAINED quantizer can sit inside
-    * a differentially-checked query instead of taking a rows-only pass.
-    *
-    * Same bounded-driver-state contract as [[kmeansTrain]]: k×dim doubles
-    * per round, one broadcast + one map-side-combined agg per round, the
-    * corpus never collected. Empty clusters keep their previous centroid.
-    * Returns (centroid_id, cv, cn) — the [[annIvfMultiWith]] input shape.
+    * Centroid state is k×dim doubles held on the driver (the
+    * [[graft.functions.Bpe.train]] contract: iterations bounded by the
+    * parameter, per-round driver traffic bounded by k×dim, never the
+    * corpus): one broadcast + one map-side-combined agg per round. Empty
+    * clusters keep their previous centroid. Returns (centroid_id, cv, cn) —
+    * the [[annIvfMultiWith]] input shape.
     */
   def kmeansTrainRounded(spark: SparkSession, dir: String, k: Int = 16,
                          iters: Int = 3): DataFrame = {
     import spark.implicits._
-    val e = Materialize.Local(prepared(spark, dir).select(col("vec_id"), col("v"), col("nrm")))
+    val e = Materialize(prepared(spark, dir).select(col("vec_id"), col("v"), col("nrm")))
     // seed = raw first-k vectors (float32→double, exactly representable on
     // both engines — no rounding needed at round 0)
     var cents: Seq[(Int, Seq[Double])] = e.filter(col("vec_id") < k)
@@ -2061,83 +2004,6 @@ object VectorOps {
        |FROM seed JOIN tr USING (q_id) ORDER BY q_id""".stripMargin
   }
 
-  /** Train the PQ sub-quantizers with per-block L2 Lloyd iterations — the
-    * missing TRAIN half of [[pqAssign]]'s fixed first-k codebook (which is
-    * exactly this trainer's round-0 state, so recall deltas isolate what
-    * training buys). Per block: assign every sub-vector by the L2-argmin
-    * dot form `argmax ⟨x,c⟩ − ½⟨c,c⟩`, recompute codewords as member
-    * means (plain means — PQ is Euclidean, no renormalization), empty
-    * codewords keep their previous value. Codebook state is
-    * blocks × k × (dim/blocks) doubles on the driver — the bounded
-    * train-loop contract of [[kmeansTrain]]. Returns the
-    * (cid, block, cv) relation [[annPqWith]] consumes plus the per-block
-    * objective traces (Σ score, non-decreasing under Lloyd). `mat` as in
-    * [[kmeansTrain]]: `Table` is the cluster-survivable posture.
-    */
-  def pqTrainCodebook(spark: SparkSession, dir: String, blocks: Int = 4,
-                      k: Int = 16, iters: Int = 4,
-                      mat: Materialize = Materialize.Local): (DataFrame, Seq[Seq[Double]]) = {
-    import spark.implicits._
-    val sv = mat(pqSubVectors(prepared(spark, dir), "vec_id", blocks))
-    var books: Map[(Int, Int), Array[Double]] = sv.filter(col("vec_id") < k)
-      .select(col("vec_id"), col("block"), col("sv"))
-      .as[(Long, Int, Seq[Double])].collect()
-      .map { case (id, b, v) => (b, id.toInt) -> v.toArray }.toMap
-    val traces = Array.fill(blocks)(scala.collection.mutable.ArrayBuffer.empty[Double])
-    def bookDf(m: Map[(Int, Int), Array[Double]]): DataFrame =
-      m.toSeq.sortBy(_._1).map { case ((b, cid), v) => (cid, b, v.toSeq) }
-        .toDF("cid", "block", "cv")
-    for (_ <- 1 to iters) {
-      val cb = broadcast(bookDf(books))
-      val best = nearestCodeword(sv.join(cb, "block"), "__rn")
-        .select(col("block"), col("cid"), col("score"), col("sv"))
-      val pinned = mat(best)
-      pinned.groupBy(col("block")).agg(sum(col("score")).as("s"))
-        .collect().foreach(r => traces(r.getInt(0)) += r.getDouble(1))
-      val means = pinned
-        .select(col("block"), col("cid"), posexplode(col("sv")).as(Seq("dim", "x")))
-        .groupBy(col("block"), col("cid"), col("dim")).agg(avg(col("x")).as("m"))
-        .collect()
-        .groupBy(r => (r.getInt(0), r.getInt(1)))
-        .map { case (key, rows) =>
-          val arr = new Array[Double](rows.length)
-          rows.foreach(r => arr(r.getInt(2)) = r.getDouble(3))
-          key -> arr
-        }
-      books = books.map { case (key, old) => key -> means.getOrElse(key, old) }
-    }
-    (bookDf(books), traces.map(_.toSeq).toSeq)
-  }
-
-  /** [[annPq]] generalized to an EXPLICIT (cid, block, cv) codebook — the
-    * form [[pqTrainCodebook]]'s output plugs into. Identical ADC plan:
-    * broadcast codebook and LUT, one scan of the code relation, fixed-order
-    * block sum, per-query top-k.
-    */
-  def annPqWith(e: DataFrame, codebook: DataFrame, nQueries: Int, kNn: Int,
-                blocks: Int): DataFrame = {
-    requireCodebookBlocks(codebook, blocks)
-    val cb = broadcast(codebook)
-    val corpusSub = pqSubVectors(e, "vec_id", blocks)
-    val codes = nearestCodeword(corpusSub.join(cb, "block"), "__rn")
-      .select(col("vec_id"), col("block"), col("cid").cast("long").as("code"))
-    val qs = pqSubVectors(e.filter(col("vec_id") < nQueries), "q_id", blocks)
-    val lut = broadcast(qs.join(cb, "block")
-      .select(col("q_id"), col("block"), col("cid").cast("long").as("code"),
-        dot(col("sv"), col("cv")).as("s")))
-    val scored = codes.join(lut, Seq("block", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(
-        first(when(col("block") === 0, col("s")), ignoreNulls = true).as("s0"),
-        (1 until blocks).map(b =>
-          first(when(col("block") === b, col("s")), ignoreNulls = true).as(s"s$b")): _*)
-      .withColumn("adc_score",
-        round((0 until blocks).map(b => col(s"s$b")).reduce(_ + _), 4))
-    topHits(scored, "adc_score", kNn)
-      .orderBy(col("q_id"), col("rank"))
-  }
-
   def annIvfMultiSql(nQueries: Int = 20, kNn: Int = 5, kCentroids: Int = 16,
                      nProbe: Int = 2): String =
     s"""WITH e0 AS ($preparedSql),
@@ -2219,7 +2085,7 @@ object VectorOps {
   def annIvfFiltered(spark: SparkSession, dir: String, nQueries: Int = 20,
                      kNn: Int = 5, kCentroids: Int = 16, nProbe: Int = 2): DataFrame =
     sharedAnnHits(spark, "ivff", dir, s"$nQueries|$kNn|$kCentroids|$nProbe") {
-      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+      val assigned = sharedIvfAssign(spark, dir, kCentroids)
       val e = prepared(spark, dir).join(assigned, "vec_id")
       val qProbes = queryProbes(prepared(spark, dir), nQueries, kCentroids, nProbe, withLabel = true)
       val sims = e.join(broadcast(qProbes),
@@ -2273,7 +2139,7 @@ object VectorOps {
   def annIvfPostFiltered(spark: SparkSession, dir: String, nQueries: Int = 20,
                          kNn: Int = 5, kCentroids: Int = 16, nProbe: Int = 2,
                          expand: Int = 3): DataFrame = {
-    val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+    val assigned = sharedIvfAssign(spark, dir, kCentroids)
     val e = prepared(spark, dir).join(assigned, "vec_id")
     val qProbes = queryProbes(prepared(spark, dir), nQueries, kCentroids, nProbe, withLabel = true)
     val sims = e.join(broadcast(qProbes),
@@ -2416,8 +2282,7 @@ object VectorOps {
   def marginPairs(spark: SparkSession, dir: String, k: Int = 4,
                   kCentroids: Int = 16, minMargin: Double = 1.0,
                   nProbe: Int = 4): DataFrame =
-    graft.SharedRel(spark, s"margpairs|$dir|$k|$kCentroids|$minMargin|$nProbe",
-      Materialize.Local)(
+    graft.SharedRel(spark, s"margpairs|$dir|$k|$kCentroids|$minMargin|$nProbe")(
       marginCore(spark, dir, pmod(col("label"), lit(2)) === 0,
         k, kCentroids, minMargin, nProbe)).orderBy(col("a_id"))
 
@@ -2470,7 +2335,7 @@ object VectorOps {
           col("v").as("vb"), col("nrm").as("nb"))
       marginJoinScore(a, b, k, minMargin)
     } else {
-      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+      val assigned = sharedIvfAssign(spark, dir, kCentroids)
       val a = Exprs.keepTop(e.filter(aFilter).join(cents), Seq(col("vec_id")), nearestCentroid,
           nProbe, "__rn")
         .select(col("centroid_id"), col("vec_id").as("a_id"),
@@ -2604,7 +2469,7 @@ object VectorOps {
     */
   private def sharedMarginExact(spark: SparkSession, dir: String, k: Int,
                                 minMargin: Double): DataFrame =
-    graft.SharedRel(spark, s"marginexact|$dir|$k|$minMargin", Materialize.Local)(
+    graft.SharedRel(spark, s"marginexact|$dir|$k|$minMargin")(
       // the kCentroids = 1 miner built directly (not via the shared
       // marginPairs surface — a nested one-consumer `margpairs|…|1` entry
       // would just duplicate this checkpoint)
@@ -2682,11 +2547,11 @@ object VectorOps {
     // identical across the curve
     def sides(cents0: DataFrame): (DataFrame, DataFrame) = {
       val cents = broadcast(cents0.select(col("centroid_id"), col("cv"), col("cn")))
-      val a = Materialize.Local(Exprs.keepTop(e.filter(aF).join(cents), Seq(col("vec_id")),
+      val a = Materialize(Exprs.keepTop(e.filter(aF).join(cents), Seq(col("vec_id")),
           nearestCentroid, probes.max, "__rn")
         .select(col("centroid_id"), col("vec_id").as("a_id"),
           col("v").as("va"), col("nrm").as("na"), col("__rn")))
-      val b = Materialize.Local(Dedup.keepFirst(
+      val b = Materialize(Dedup.keepFirst(
           e.filter(pmod(col("label"), lit(2)) === 1).join(cents), Seq(col("vec_id")),
           nearestCentroid)
         .select(col("centroid_id"), col("vec_id").as("b_id"),
@@ -2806,38 +2671,10 @@ object VectorOps {
        |  END AS INT) AS n_exact
        |FROM m ORDER BY vec_id""".stripMargin
 
-  /** Product-quantization code assignment — the codebook half of the
-    * IVF+PQ stack ([[annIvf]]/[[annIvfMulti]] being the IVF half): the
-    * vector splits into `blocks` sub-vectors, each assigned to its nearest
-    * sub-codeword by L2 (computed as the dot-product form
-    * `argmax ⟨x,c⟩ − ½⟨c,c⟩`, reusing the codegen'd dot product). Like
-    * [[ivfAssign]], the codebook is the first `k` vectors' blocks —
-    * deterministic, so the assignment is oracle-checkable; a trained
-    * codebook swaps in without changing the plan: broadcast codebook, one
-    * scan of the corpus, argmax window per (vector, block), no shuffle of
-    * the embedding payload. Output codes are `blocks` small ints per
-    * vector — the 4-bytes/dim → blocks-bytes/vector storage path.
-    */
   /** Split vectors into `blocks` equal sub-vectors, one row per
     * (id, block, sub-vector) — shared by the PQ assign and search halves so
     * the block layout can never diverge between them.
     */
-  /** Guard for operators taking an EXTERNAL trained codebook: one trained
-    * with a different `blocks` would otherwise join to nothing and silently
-    * produce null block scores and a null adc_score. The distinct is one
-    * tiny job over a k×blocks relation (always broadcast-bound).
-    */
-  private def requireCodebookBlocks(codebook: DataFrame, blocks: Int): Unit = {
-    require(Set("cid", "block", "cv").subsetOf(codebook.columns.toSet),
-      s"codebook must have columns (cid, block, cv); " +
-      s"got (${codebook.columns.mkString(", ")})")
-    val got = codebook.select(col("block")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    require(got == (0 until blocks),
-      s"codebook covers blocks ${got.mkString("[", ", ", "]")} but the query " +
-      s"expects 0..${blocks - 1} — was it trained with a different `blocks`?")
-  }
-
   private def pqSubVectors(df: DataFrame, idCol: String, blocks: Int): DataFrame = {
     val dim = 64 // embeddings table width (TESTDATA.md)
     require(dim % blocks == 0, s"dim $dim not divisible by $blocks blocks")
@@ -2848,6 +2685,17 @@ object VectorOps {
         slice(col("v"), col("block") * sub + 1, lit(sub)).as("sv"))
   }
 
+  /** Product-quantization code assignment — the codebook half of the
+    * IVF+PQ stack ([[annIvf]]/[[annIvfMulti]] being the IVF half): the
+    * vector splits into `blocks` sub-vectors, each assigned to its nearest
+    * sub-codeword by L2 (computed as the dot-product form
+    * `argmax ⟨x,c⟩ − ½⟨c,c⟩`, reusing the codegen'd dot product). Like
+    * [[ivfAssign]], the codebook is the first `k` vectors' blocks —
+    * deterministic, so the assignment is oracle-checkable. Plan: broadcast
+    * codebook, one scan of the corpus, argmax window per (vector, block),
+    * no shuffle of the embedding payload. Output codes are `blocks` small
+    * ints per vector — the 4-bytes/dim → blocks-bytes/vector storage path.
+    */
   def pqAssign(spark: SparkSession, dir: String, blocks: Int = 4,
                k: Int = 16): DataFrame = {
     val e = prepared(spark, dir)
@@ -2973,9 +2821,8 @@ object VectorOps {
     * distributed k-means step. A full training loop is this query iterated
     * with the recomputed centroids fed back in.
     */
-  def kmeansStep(spark: SparkSession, dir: String, k: Int = 16,
-                 mat: Materialize = Materialize.Local): DataFrame = {
-    val assigned = sharedIvfAssign(spark, dir, k, mat)
+  def kmeansStep(spark: SparkSession, dir: String, k: Int = 16): DataFrame = {
+    val assigned = sharedIvfAssign(spark, dir, k)
     prepared(spark, dir).join(assigned, "vec_id")
       .select(col("centroid_id"), posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("centroid_id"), (col("pos") + 1).as("dim"))
@@ -3253,7 +3100,7 @@ object VectorOps {
   def annIvfSq(spark: SparkSession, dir: String, nQueries: Int = 20, kNn: Int = 5,
                kCentroids: Int = 16, nProbe: Int = 2): DataFrame =
     sharedAnnHits(spark, "ivfsq", dir, s"$nQueries|$kNn|$kCentroids|$nProbe") {
-      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+      val assigned = sharedIvfAssign(spark, dir, kCentroids)
       val e = prepared(spark, dir)
       val sq = e
         .withColumn("max_abs",
@@ -3377,8 +3224,7 @@ object VectorOps {
     // session-shared: the search result feeds its own query AND the
     // recall row (deterministic relation)
     graft.SharedRel(spark,
-      s"anngraph|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$nProbe",
-      Materialize.Local)(
+      s"anngraph|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$nProbe")(
       annGraphBeamBuild(spark, dir, nQueries, k, beam, hops, kNn,
         kCentroids, nProbe))
 
@@ -3413,7 +3259,7 @@ object VectorOps {
     def best(df: DataFrame, bound: Int, rankCol: String): DataFrame =
       Exprs.keepTop(df, Seq(col("q_id")), Seq(col("c_int").desc, col("vec_id")), bound, rankCol)
     // routing layer: the seed nodes, top-nProbe per query
-    var visited = Materialize.Local(best(queries
+    var visited = Materialize(best(queries
       .crossJoin(broadcast(seeds
         .select(col("vec_id"), col("label"), col("v"), col("nrm"))))
       .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
@@ -3444,7 +3290,7 @@ object VectorOps {
           cInt.as("c_int"))
       // re-scored revisits carry the identical quantized score — the
       // (q, vec) max-dedup is value-neutral
-      visited = Materialize.Local(best(visited.unionAll(scored)
+      visited = Materialize(best(visited.unionAll(scored)
         .groupBy(col("q_id"), col("q_label"), col("vec_id"), col("label"))
         .agg(max(col("c_int")).as("c_int")), beam, "__rn")
         .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
@@ -3452,7 +3298,7 @@ object VectorOps {
       if (filtered) pool = pool.unionAll(scored)
     }
     val out = if (filtered) {
-      Materialize.Local(pool).filter(col("label") === col("q_label"))
+      Materialize(pool).filter(col("label") === col("q_label"))
         .groupBy(col("q_id"), col("vec_id")).agg(max(col("c_int")).as("c_int"))
     } else visited.select(col("q_id"), col("vec_id"), col("c_int"))
     best(out.filter(col("vec_id") =!= col("q_id")), k, "rank")
@@ -3474,8 +3320,7 @@ object VectorOps {
                        k: Int = 5, beam: Int = 16, hops: Int = 3, kNn: Int = 5,
                        kCentroids: Int = 16, nProbe: Int = 4): DataFrame =
     graft.SharedRel(spark,
-      s"anngraphf|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$nProbe",
-      Materialize.Local)(
+      s"anngraphf|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$nProbe")(
       annGraphBeamBuild(spark, dir, nQueries, k, beam, hops, kNn,
         kCentroids, nProbe, filtered = true))
 
@@ -3593,7 +3438,7 @@ object VectorOps {
     */
   private def staleGraphEdges(spark: SparkSession, dir: String, kNn: Int,
                               kCentroids: Int, mod: Int): DataFrame =
-    graft.SharedRel(spark, s"staleedges|$dir|$kNn|$kCentroids|$mod", Materialize.Local) {
+    graft.SharedRel(spark, s"staleedges|$dir|$kNn|$kCentroids|$mod") {
       val e = prepared(spark, dir)
       val cents = frozenCentroids(e, kCentroids, mod)
       val centroidId = argmaxFold(typedLit(cents), c =>
@@ -3624,8 +3469,7 @@ object VectorOps {
                             k: Int, beam: Int, hops: Int, kNn: Int,
                             kCentroids: Int, mod: Int, nProbe: Int): DataFrame =
     graft.SharedRel(spark,
-      s"stalehits|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$mod|$nProbe",
-      Materialize.Local) {
+      s"stalehits|$dir|$nQueries|$k|$beam|$hops|$kNn|$kCentroids|$mod|$nProbe") {
       val e = prepared(spark, dir)
       val queries = broadcast(e.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -3762,7 +3606,7 @@ object VectorOps {
     // round identically, so the reverse edge carries the same cos_sim
     val revEdges = deltaEdges.select(col("dst").as("src"),
       col("src").as("dst"), col("cos_sim"))
-    val merged = Materialize.Local(Exprs.keepTop(
+    val merged = Materialize(Exprs.keepTop(
         edges.select(col("src"), col("dst"), col("cos_sim"))
           .unionAll(revEdges)
           .groupBy(col("src"), col("dst")).agg(max(col("cos_sim")).as("cos_sim")),
@@ -3906,7 +3750,7 @@ object VectorOps {
     sharedAnnHits(spark, "ivfpq", dir,
       s"$nQueries|$kNn|$kCentroids|$nProbe|$blocks|$k") {
       val e = prepared(spark, dir)
-      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+      val assigned = sharedIvfAssign(spark, dir, kCentroids)
       // IVF half: shared probe-list builder; PQ half: shared ADC LUT
       val qProbes = queryProbes(e, nQueries, kCentroids, nProbe)
         .select(col("q_id"), col("q_cent"))
@@ -4080,9 +3924,9 @@ object VectorOps {
       val e = prepared(spark, dir)
       val cents = e.filter(col("vec_id") < kCentroids)
         .select(col("vec_id").as("centroid_id"), col("v").as("cv"))
-      val assigned = sharedIvfAssign(spark, dir, kCentroids, Materialize.Local)
+      val assigned = sharedIvfAssign(spark, dir, kCentroids)
       // residuals: row-local subtraction after a broadcast centroid join
-      val resid = Materialize.Local(e.select(col("vec_id"), col("v"))
+      val resid = Materialize(e.select(col("vec_id"), col("v"))
         .join(assigned, "vec_id")
         .join(broadcast(cents), "centroid_id")
         .select(col("vec_id"), col("centroid_id"),
@@ -4223,9 +4067,9 @@ object VectorOps {
 
   /** The frozen index structure: the `kCentroids` smallest-id BASE vectors
     * as (id, vector, norm) driver state — k×dim doubles, the same bounded
-    * driver-traffic contract as [[kmeansTrain]] (whose trained centroids
-    * swap in without a plan change, exactly like the other `*With`
-    * operators).
+    * driver-traffic contract as [[kmeansTrainRounded]] (whose trained
+    * centroids swap in without a plan change, exactly like the other
+    * `*With` operators).
     */
   private def frozenCentroids(e: DataFrame, kCentroids: Int,
                               mod: Int): Seq[(Long, Seq[Double], Double)] = {

@@ -784,7 +784,7 @@ object Multimodal {
   }
 
   private def sharedAudioFps(spark: SparkSession, dir: String): DataFrame =
-    graft.SharedRel(spark, s"afp|$dir", graft.Materialize.Local)(
+    graft.SharedRel(spark, s"afp|$dir")(
       audioFingerprint(spark, dir))
 
   /** Audio near-duplicate pairs — the [[imageNearDup]] machinery pointed at
@@ -1095,7 +1095,7 @@ object Multimodal {
     hammingJoin(rel, rel, maxDist, _ < _)
 
   private def sharedHashes(spark: SparkSession, dir: String): DataFrame =
-    graft.SharedRel(spark, s"phash|$dir", graft.Materialize.Local)(
+    graft.SharedRel(spark, s"phash|$dir")(
       perceptualHash(spark, dir))
 
   def imageNearDup(spark: SparkSession, dir: String, maxDist: Int = 6): DataFrame =
@@ -1368,11 +1368,11 @@ object Multimodal {
     */
   def imageDupClusters(spark: SparkSession, dir: String, maxDist: Int = 6): DataFrame = {
     val hashes = sharedHashes(spark, dir)
-    val groups = graft.Materialize.Local(hashes.groupBy("dhash").agg(min("media_id").as("id")))
+    val groups = graft.Materialize(hashes.groupBy("dhash").agg(min("media_id").as("id")))
     val pairs = hammingPairs(groups, maxDist).select("id_a", "id_b")
-    val edges = graft.Materialize.Local(pairs.union(
+    val edges = graft.Materialize(pairs.union(
       pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b"))))
-    var labels = graft.Materialize.Local(groups.select(col("id"), col("id").as("label")))
+    var labels = graft.Materialize(groups.select(col("id"), col("id").as("label")))
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 25) {
@@ -1385,7 +1385,7 @@ object Multimodal {
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"),
           (coalesce(col("nbr_min"), col("label")) < col("label")).cast("long").as("chg"))
       val obs = org.apache.spark.sql.Observation()
-      val next = graft.Materialize.Local(stepped.observe(obs, sum(col("chg")).as("changed")))
+      val next = graft.Materialize(stepped.observe(obs, sum(col("chg")).as("changed")))
       changed = obs.get("changed").asInstanceOf[Long]
       labels = next.drop("chg")
       rounds += 1
@@ -1452,7 +1452,7 @@ object Multimodal {
     * streaming admission index all read.
     */
   private[graft] def sharedFrames(spark: SparkSession, dir: String): DataFrame =
-    graft.SharedRel(spark, s"vframes|$dir", graft.Materialize.Local)(
+    graft.SharedRel(spark, s"vframes|$dir")(
       videoFrameHashes(spark, dir))
 
   def videoFrameHashes(spark: SparkSession, dir: String): DataFrame = {

@@ -78,7 +78,7 @@ object AsofJoin {
     // drops locf_cpm) so exchange reuse cannot deduplicate them — unpinned,
     // the big side's parse+validate+agg ran twice per query (the r8→r9
     // e_resample drift). One pass now feeds both.
-    val readings = graft.Materialize.Local(valid.groupBy(col("user_id"), col("sec"))
+    val readings = graft.Materialize(valid.groupBy(col("user_id"), col("sec"))
       .agg(max(col("cpm")).as("locf_cpm")))
     val bounds = readings.groupBy(col("user_id"))
       .agg(min(col("sec")).as("mn"), max(col("sec")).as("mx"))

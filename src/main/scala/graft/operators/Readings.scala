@@ -172,7 +172,7 @@ object Readings {
     * available as [[validated]]∘[[readings]] for plan audits.
     */
   def enriched(spark: SparkSession, dir: String, t: Thresholds): DataFrame =
-    graft.SharedRel(spark, s"readings|$dir|$t", graft.Materialize.Local)(
+    graft.SharedRel(spark, s"readings|$dir|$t")(
       validated(readings(spark, dir), t))
 
   /** P16: the dashboard's 5-bucket scale (front_end/src/utils/

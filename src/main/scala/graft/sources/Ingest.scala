@@ -105,8 +105,7 @@ object Ingest {
     // subtree independently, and a non-deterministic upstream (round-robin
     // repartition, sample) or a re-evaluation with a different partition
     // layout would silently mis-assign __idx (skipped/duplicated rows).
-    val mid = data.withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(eager = true)
+    val mid = graft.Materialize(data.withColumn("__mid", monotonically_increasing_id()))
     val offsets = mid
       .groupBy(shiftright(col("__mid"), PosBits).as("__pid"))
       .agg(count(lit(1)).as("__n"))

@@ -49,12 +49,11 @@ object DupSpanStream {
     */
   def frozenShingles(spark: SparkSession, dir: String, n: Int = 5,
                      deltaMod: Int = 5): DataFrame =
-    TextOps.posShingles(
+    graft.Materialize(TextOps.posShingles(
       TextOps.prepared(spark, dir)
         .filter(Exprs.arrivalSplit(col("doc_id"), deltaMod) =!= 0 && size(col("words")) >= n)
         .select(col("doc_id"), col("words")), n)
-      .select("sh").distinct()
-      .localCheckpoint(eager = true)
+      .select("sh").distinct())
 
   /** Cut each arrival against the frozen index; survivors land in
     * `outDir` as (doc_id, n_words, n_dup, n_spans, text_clean),
@@ -65,11 +64,10 @@ object DupSpanStream {
     graft.LocalFs.startStream(docs, ckptDir)(_
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // same words construction as the batch tier's `prepared`
-        val pw = batch
+        val pw = graft.Materialize(batch
           .withColumn("norm", Exprs.normText(col("text")))
           .withColumn("words", split(col("norm"), " "))
-          .select(col("doc_id"), col("words"))
-          .localCheckpoint(eager = true)
+          .select(col("doc_id"), col("words")))
         val long = pw.filter(size(col("words")) >= n)
         val hits = TextOps.posShingles(long, n).join(frozen, "sh")
           .select(col("doc_id"),

@@ -52,16 +52,14 @@ object MarginStream {
   def frozenTarget(spark: SparkSession, dir: String,
                    kCentroids: Int = 16): (DataFrame, DataFrame) = {
     val e = VectorOps.prepared(spark, dir)
-    val cents = e.filter(col("vec_id") < kCentroids)
+    val cents = graft.Materialize(e.filter(col("vec_id") < kCentroids)
       .select(col("vec_id").as("centroid_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
-      .localCheckpoint(eager = true)
-    val b = e.join(VectorOps.ivfAssign(spark, dir, kCentroids)
+        col("nrm").as("cn")))
+    val b = graft.Materialize(e.join(VectorOps.ivfAssign(spark, dir, kCentroids)
           .select(col("vec_id"), col("centroid_id")), "vec_id")
       .filter(pmod(col("label"), lit(2)) === 1)
       .select(col("centroid_id"), col("vec_id").as("b_id"),
-        col("v").as("vb"), col("nrm").as("nb"))
-      .localCheckpoint(eager = true)
+        col("v").as("vb"), col("nrm").as("nb")))
     (cents, b)
   }
 

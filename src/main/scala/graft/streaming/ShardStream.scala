@@ -119,13 +119,13 @@ object ShardStream {
     // O(#shards) rows), not a scan of the assign log
     val hwm = prior.agg(coalesce(sum("n_tokens"), lit(0L))).head().getLong(0)
 
-    val walked = MixOps.walkOffsets(
+    // one walk feeds both the log write and the delta agg
+    val walked = graft.Materialize(MixOps.walkOffsets(
         batch.select(col("doc_id"), col("source"), col("text_md5"),
           col("n_tokens").as("tok")), buckets)
       .withColumn("off", col("off") + lit(hwm))
       .withColumn("shard_id", expr(s"off div ${budget}L"))
-      .select("doc_id", "source", "text_md5", "tok", "off", "shard_id")
-      .localCheckpoint(eager = true) // one walk feeds both the log write and the delta agg
+      .select("doc_id", "source", "text_md5", "tok", "off", "shard_id"))
     walked.write.mode("overwrite").parquet(s"$outPath/assign/epoch=$epochId")
 
     // associative merge: prior state + batch delta (applyDeltaFrom's fold)

@@ -76,7 +76,7 @@ object VideoDedupStream {
     graft.LocalFs.startStream(withSig(media).dropDuplicates("vsig"), ckptDir)(_
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // one evaluation of the stateful micro-batch feeds both uses below
-        val arrivals = batch.localCheckpoint(eager = true)
+        val arrivals = graft.Materialize(batch)
         val frames = arrivals.select(col("media_id").as("video_id"),
             posexplode(split(col("vsig"), ",")).as(Seq("frame", "h")))
           .select(col("video_id"), col("frame"), col("h").cast("long").as("dhash"))

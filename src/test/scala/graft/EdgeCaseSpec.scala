@@ -58,8 +58,6 @@ class EdgeCaseSpec extends SparkSuite {
     assert(TextOps.prepared(spark, tmp).count() == 4)
     assert(Bpe.bpePairs(spark, tmp).isEmpty)
     assert(Bpe.train(spark, tmp, nMerges = 3).isEmpty)
-    val batched = Bpe.trainBatched(spark, tmp, nMerges = 3)
-    assert(batched.merges.isEmpty && batched.rounds == 1)
   }
 
   test("containment and jaccard candidate paths survive degenerate docs") {

@@ -18,13 +18,6 @@ class OperatorsSpec extends SparkSuite {
     assert(out.toSeq == Seq("first", "only"))
   }
 
-  test("entry flagship query returns cohorts with positive counts") {
-    val df = SparkEntry.entry(spark)
-    val n = df.count()
-    assert(n > 0)
-    assert(df.agg(min("n")).head().getLong(0) >= 1)
-  }
-
   test("exact text dedup groups identical normalized docs") {
     val docs = Seq(
       (1L, "Hello  World", "en", "s", 11L),
@@ -917,25 +910,6 @@ class OperatorsSpec extends SparkSuite {
     assert(out == Seq((1L, 4L, 4L), (2L, 4L, 12L)))
   }
 
-  test("headTailJoin is row-identical to the plain join and broadcasts the head") {
-    // Zipf-ish: key "hot" carries most probe rows, the rest are rare
-    val left = (Seq.fill(50)("hot") ++ Seq("warm", "warm", "cold"))
-      .zipWithIndex.map { case (k, i) => (k, i) }.toDF("k", "row_id")
-    val right = Seq(("hot", 50L), ("warm", 2L), ("cold", 1L)).toDF("k", "cnt")
-    val split = operators.Skew.headTailJoin(left, right, "k", headRows = 1, col("cnt"))
-    val plain = left.join(right, "k")
-    assert(split.orderBy("row_id").collect().toSeq ==
-      plain.orderBy("row_id").collect().toSeq)
-    val plan = split.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"head path must broadcast:\n$plan")
-  }
-
-  test("lmBits head/tail path equals the plain-join path") {
-    val a = TextOps.lmBits(spark, sf()).collect().toSeq
-    val b = TextOps.lmBits(spark, sf(), headWords = 10).collect().toSeq
-    assert(a == b)
-  }
-
   test("decontamSpans removes contaminated windows, keeps the rest in order") {
     val docs = Seq(
       (0L, "alpha beta gamma", "en", "s", 1L),                         // probe
@@ -1730,25 +1704,6 @@ class OperatorsSpec extends SparkSuite {
     assert(seg("slow") == Seq("s", "low"))
   }
 
-  test("bpe: batched trainer emits the identical merge table to the sequential one") {
-    // heavy symbol overlap (the classic corpus) — batches degrade toward 1,
-    // output must STILL be byte-identical to the sequential trainer
-    val docs = Seq(
-      (1L, "low low low low low lower lower newest newest", "en", "s", 1L)
-    ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("bpeb").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val seqMerges = functions.Bpe.train(spark, tmp, nMerges = 6)
-    val batched = functions.Bpe.trainBatched(spark, tmp, nMerges = 6)
-    assert(batched.merges == seqMerges)
-
-    // realistic mixed corpus: still identical, strictly fewer rounds than merges
-    val seqSf = functions.Bpe.train(spark, sf(), nMerges = 8)
-    val batSf = functions.Bpe.trainBatched(spark, sf(), nMerges = 8)
-    assert(batSf.merges == seqSf)
-    assert(batSf.rounds <= seqSf.size, s"rounds ${batSf.rounds} > merges ${seqSf.size}")
-  }
-
   test("bpe: embedded trainedMerges is what train() produces on its source corpus") {
     // d_bpe_apply folds the EMBEDDED table — provenance must be live, not
     // a comment: the sequential trainer over the table's source corpus
@@ -1758,23 +1713,6 @@ class OperatorsSpec extends SparkSuite {
     val merges = functions.Bpe.train(spark, sf("sf0.01"), nMerges = 8)
     assert(merges.map(m => (m._2, m._3)) == functions.Bpe.trainedMerges.take(8),
       s"embedded table diverged from training: $merges")
-  }
-
-  test("bpe: disjoint pair distribution collapses to a single pair-count round") {
-    // 8 two-letter words over 16 distinct letters, strictly decreasing freqs:
-    // every top pair is symbol-disjoint from every other, so ONE round must
-    // emit all 8 merges — the sub-linear-jobs contract the sequential
-    // trainer (one job per merge) cannot meet
-    val words = Seq("ab", "cd", "ef", "gh", "ij", "kl", "mn", "op")
-    val text = words.zipWithIndex
-      .flatMap { case (w, i) => Seq.fill(100 - i * 5)(w) }.mkString(" ")
-    val docs = Seq((1L, text, "en", "s", 1L)).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("bped").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val batched = functions.Bpe.trainBatched(spark, tmp, nMerges = 8)
-    assert(batched.merges == functions.Bpe.train(spark, tmp, nMerges = 8))
-    assert(batched.rounds == 1, s"expected 1 round, got ${batched.rounds}")
-    assert(batched.merges.map(m => m._2 + m._3) == words)
   }
 
   test("bpe apply: 1000+ merge table in one constant-depth pass, identical to the batched nested fold") {
@@ -3029,25 +2967,6 @@ class OperatorsSpec extends SparkSuite {
     assert(salted.size == 5 + 7 * 5, s"cap sizes wrong: ${salted.size}")
   }
 
-  test("kmeansTrain: Lloyd objective is non-decreasing; trained centroids don't lose recall") {
-    val (trained, obj) = VectorOps.kmeansTrain(spark, sf(), k = 8, iters = 4)
-    assert(obj.size == 4)
-    // Lloyd's guarantee on the spherical objective (Σ max cosine)
-    obj.sliding(2).foreach { case Seq(a, b) =>
-      assert(b >= a - 1e-9, s"objective decreased: $obj")
-    }
-    assert(obj.last > obj.head, s"training never improved: $obj")
-    // trained centroids, same probe budget: recall must not regress vs the
-    // fixed first-k quantizer
-    def meanRecall(df: org.apache.spark.sql.DataFrame): Double =
-      df.agg(avg("recall_at_k")).head().getDouble(0)
-    val init = meanRecall(VectorOps.recall(spark, sf(),
-      VectorOps.annIvfMulti(spark, sf(), kCentroids = 8), 20, 5))
-    val post = meanRecall(VectorOps.recall(spark, sf(),
-      VectorOps.annIvfMultiWith(VectorOps.prepared(spark, sf()), trained, 20, 5, 2), 20, 5))
-    assert(post >= init - 0.05, s"trained recall $post regressed vs init $init")
-  }
-
   /** 4-cluster embedding fixture: centers first (they become the IVF
     * centroids), members = center + small noise. The sf embeddings are
     * cluster-free (residual norm > raw norm, see annIvfPqRes scaladoc), so
@@ -3078,29 +2997,6 @@ class OperatorsSpec extends SparkSuite {
 
   private def meanRecall(df: org.apache.spark.sql.DataFrame): Double =
     df.agg(avg("recall_at_k")).head().getDouble(0)
-
-  test("pqTrainCodebook: per-block Lloyd improves; trained PQ wins on clustered data") {
-    // Lloyd's objective guarantee holds on ANY data — assert it on the
-    // cluster-free sf embeddings
-    val (_, traces) = VectorOps.pqTrainCodebook(spark, sf(), blocks = 4, k = 16, iters = 4)
-    traces.foreach { t =>
-      t.sliding(2).foreach { case Seq(a, b) =>
-        assert(b >= a - 1e-9, s"block objective decreased: $t")
-      }
-      assert(t.last > t.head, s"block training never improved: $t")
-    }
-    // recall gain is structure-dependent (on random data trained means
-    // shrink toward 0 and LOSE ADC discrimination — measured 0.18 vs 0.23);
-    // on clustered data training must pay
-    val (cb, _) = VectorOps.pqTrainCodebook(spark, clusteredDir, blocks = 4,
-      k = 16, iters = 4)
-    val fixed = meanRecall(VectorOps.recall(spark, clusteredDir,
-      VectorOps.annPq(spark, clusteredDir), 20, 5))
-    val trained = meanRecall(VectorOps.recall(spark, clusteredDir,
-      VectorOps.annPqWith(VectorOps.prepared(spark, clusteredDir), cb, 20, 5, 4), 20, 5))
-    assert(trained >= fixed,
-      s"trained-codebook recall $trained must not lose to fixed $fixed on clustered data")
-  }
 
   test("residual IVF+PQ beats plain IVF+PQ on clustered embeddings") {
     val res = meanRecall(VectorOps.recall(spark, clusteredDir,

@@ -36,7 +36,7 @@ class PlanAuditSpec extends SparkSuite {
     plan
   }
 
-  /** Every `Materialize.Local` materialization `body` runs on a fresh
+  /** Every [[Materialize]] materialization `body` runs on a fresh
     * session (empty memo, so every shared build it needs runs), in run
     * order: (innermost SharedRel key or "" outside one, the plan the
     * planner gave it). That is AQE's initial plan, the one an unexecuted
