@@ -19,6 +19,12 @@ object LocalFs {
   private[graft] val FsCheckpointManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
+  /** The settings a query with a local checkpoint runs with ([[startStream]]). */
+  private[graft] val LocalQuerySettings = Seq(
+    CheckpointManagerKey -> FsCheckpointManager,
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   /** Whether `path` resolves to the local file system: by its own scheme,
     * or, without one, by the scheme of `conf`'s default file system. No
     * FileSystem is instantiated.
@@ -30,33 +36,49 @@ object LocalFs {
   /** Start `ds`'s stream, shaped by `configure`, with its checkpoint at
     * `checkpointDir`. The one start path of every checkpointed stream.
     *
-    * Spark's default checkpoint manager for `file:` paths goes through
-    * Hadoop's `FileContext`, whose local file system forks a `readlink`
-    * process (no native Hadoop library) several times per rename of every
-    * state-store delta, checksum and offset/commit-log entry. For a local
-    * checkpoint, and unless the session names a manager of its own, the
-    * query runs on Spark's FileSystem-based manager instead: on a local
-    * file system both check that the destination is absent and then
-    * rename, and both write the same `.crc` and checksum files, so a
-    * checkpoint either one wrote restarts under the other. The setting
-    * lives only until the query has started and built its sources: the
-    * query clones the session when it is built and keeps the setting,
-    * while the caller's session is restored even when `start()` throws.
+    * Without a native Hadoop library the local file system forks
+    * processes. Spark's default checkpoint manager for `file:` paths goes
+    * through Hadoop's `FileContext`, which forks a `readlink` several times
+    * per rename of every state-store delta, checksum and offset/commit-log
+    * entry; `RawLocalFileSystem` forks a `chmod` for every file it creates
+    * with a mode and every directory it makes (state-store temp files,
+    * parquet part files, the output committer's directories). So a query
+    * with a local checkpoint runs with [[LocalQuerySettings]]: Spark's
+    * FileSystem-based manager, and [[NioLocalFileSystem]] for `file:`
+    * paths, which sets the same bits through `java.nio`. Hadoop caches one
+    * file system per scheme and user whatever the configuration names, so
+    * the settings also turn that cache off for `file:`: with it on, the
+    * query would get the stock instance another caller cached. Both
+    * managers and both file systems write the same files (`.crc` and
+    * checksum files included), so a checkpoint written either way restarts
+    * under the other. A key that the session or the Hadoop configuration
+    * (`spark.hadoop.…`) already names keeps its value.
+    *
+    * The settings live only until the query has started and built its
+    * sources: the query clones the session when it is built and keeps them
+    * (every Hadoop configuration it makes copies them: its logs, state
+    * stores and sinks), while the caller's session is restored even when
+    * `start()` throws.
     */
   def startStream[T](ds: Dataset[T], checkpointDir: String)(
       configure: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
     val spark = ds.sparkSession
     val w = configure(ds.writeStream).option("checkpointLocation", checkpointDir)
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
     StartLock.synchronized {
-      if (spark.conf.getOption(CheckpointManagerKey).nonEmpty ||
-          !isLocal(checkpointDir, spark.sparkContext.hadoopConfiguration)) w.start()
+      val unnamed =
+        if (!isLocal(checkpointDir, hadoopConf)) Nil
+        else LocalQuerySettings.filter { case (k, _) =>
+          spark.conf.getOption(k).isEmpty && hadoopConf.get(k) == null
+        }
+      if (unnamed.isEmpty) w.start()
       else {
-        spark.conf.set(CheckpointManagerKey, FsCheckpointManager)
+        unnamed.foreach { case (k, v) => spark.conf.set(k, v) }
         try {
           val q = w.start()
           // the query builds its sources (a file source's log among them)
           // from the caller's session on its own thread after `start()`
-          // returns: keep the setting until it has; a failure there still
+          // returns: keep the settings until it has; a failure there still
           // surfaces through the query, as before
           q match {
             case qw: StreamingQueryWrapper =>
@@ -65,13 +87,13 @@ object LocalFs {
             case _ =>
           }
           q
-        } finally spark.conf.unset(CheckpointManagerKey)
+        } finally unnamed.foreach { case (k, _) => spark.conf.unset(k) }
       }
     }
   }
 
   private val SourcesInitMs = 60000L
-  // serializes the helper's set/unset of the session setting; not the
+  // serializes the helper's set/unset of the session settings; not the
   // session's own monitor, which the query's thread may take (Scala lazy
   // vals) while the helper waits for it
   private object StartLock

@@ -255,6 +255,54 @@ class TransportSpec extends SparkSuite {
     assert(normal.select("value").head.getInt(0) == 42)
   }
 
+  /** The programs (base names) of the processes this JVM forks while `body`
+    * runs, from an in-process Flight Recorder recording.
+    */
+  private def forks(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val recording = new jdk.jfr.Recording()
+    val file = Files.createTempFile("graft-forks", ".jfr")
+    try {
+      recording.enable("jdk.ProcessStart")
+      recording.start()
+      try body finally recording.stop()
+      recording.dump(file)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
+        .map(e => java.nio.file.Path.of(e.getString("command").trim.split("\\s+").head)
+          .getFileName.toString)
+    } finally {
+      recording.close()
+      Files.deleteIfExists(file)
+    }
+  }
+
+  test("a local Dir query forks no chmod and no readlink process") {
+    // the recording sees forks: Hadoop's stock local file system forks chmod
+    val stock = new org.apache.hadoop.fs.RawLocalFileSystem
+    stock.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    val probe = Files.createTempFile("graft-forks", ".txt")
+    assert(forks(stock.setPermission(new org.apache.hadoop.fs.Path(probe.toUri),
+      new org.apache.hadoop.fs.permission.FsPermission("644"))).contains("chmod"),
+      "fixture: the recording must see the stock file system's chmod")
+
+    val in = Files.createTempDirectory("graft-forks-in").toString
+    val out = Files.createTempDirectory("graft-forks-out").toString
+    val ckpt = Files.createTempDirectory("graft-forks-ckpt").toString
+    Files.writeString(java.nio.file.Path.of(in, "a.jsonl"),
+      Seq(rec("2011-03-15 10:00:00"), rec("2011-03-15 10:00:01", v = 5000),
+        rec("2011-03-15 10:00:02", unit = "bq"), rec("2011-03-15 10:00:30", lat = 10.0))
+        .mkString("\n"))
+    val forked = forks {
+      RadiationPipeline.run(spark, Transport.Dir(in, out), ckpt,
+        graft.operators.Readings.Thresholds(), bounded = true,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow(), onEpoch = (_, _) => ())
+        .awaitTermination()
+    }
+    for (topic <- Seq("normal-data", "critical-data", "dirty-data"))
+      assert(spark.read.parquet(s"$out/$topic").count() == 1, s"fixture: $topic holds one row")
+    assert(!forked.contains("chmod") && !forked.contains("readlink"), s"forks: $forked")
+  }
+
   test("a failing sink fails the query and leaves no cached epoch behind") {
     val in = Files.createTempDirectory("graft-dir-in").toString
     val out = Files.createTempDirectory("graft-dir-out").toString
@@ -315,21 +363,28 @@ class TransportSpec extends SparkSuite {
       Files.createTempDirectory("graft-once-ckpt").toString)
     write(inB, firstHalf ++ secondHalf)
     run(inB, outB, ckptB)
-    // the first run's checkpoint manager: the one `run` picks, or Spark's
-    // FileContext-based one set on the session (the rule keeps a manager
-    // the session names); the restart always runs with none set
-    for (firstManager <- Seq(None, Some(classOf[FileContextBasedCheckpointFileManager].getName))) {
+    // the first run's settings: the ones `run` picks, Spark's
+    // FileContext-based checkpoint manager, or Hadoop's stock local file
+    // system, which stands in for a checkpoint written before `run` picked
+    // its own (the rule keeps what the session names); the restart always
+    // runs with none set
+    for ((first, settings) <- Seq(
+        "the default settings" -> Nil,
+        "the FileContext-based manager" ->
+          Seq(CheckpointManagerKey -> classOf[FileContextBasedCheckpointFileManager].getName),
+        "Hadoop's stock LocalFileSystem" ->
+          Seq(FileImplKey -> classOf[org.apache.hadoop.fs.LocalFileSystem].getName))) {
       val (inA, outA, ckptA) = (Files.createTempDirectory("graft-restart-in").toString,
         Files.createTempDirectory("graft-restart-out").toString,
         Files.createTempDirectory("graft-restart-ckpt").toString)
       write(inA, firstHalf)
-      firstManager.foreach(spark.conf.set(CheckpointManagerKey, _))
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
       try run(inA, outA, ckptA)
-      finally firstManager.foreach(_ => spark.conf.unset(CheckpointManagerKey))
+      finally settings.foreach { case (k, _) => spark.conf.unset(k) }
       val firstParts = parts(outA)
       write(inA, secondHalf)
       run(inA, outA, ckptA) // the restart: same checkpoint, more input
-      val clue = s"first run on ${firstManager.getOrElse("the default manager")}"
+      val clue = s"first run on $first"
       // it resumes after the committed epochs instead of replaying them
       assert(firstParts.subsetOf(parts(outA)), s"$clue: the restart rewrote the first run's epochs")
       assert(parts(outA).size > firstParts.size, s"$clue: the restart wrote no new epoch")
@@ -352,6 +407,7 @@ class TransportSpec extends SparkSuite {
   }
 
   private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val FileImplKey = "fs.file.impl"
 
   test("a local checkpoint runs its query on the FileSystem-based manager; the caller's session keeps its own") {
     import java.nio.file.Path
@@ -379,12 +435,12 @@ class TransportSpec extends SparkSuite {
         graft.operators.Readings.Thresholds(), bounded = true, Trigger.AvailableNow(),
         onEpoch = (_, _) => ())
     }
-    // the manager the query's own session runs on; sparkSessionForStream is
+    // a setting of the query's own session; sparkSessionForStream is
     // protected[sql] in Spark, its bytecode method is public
-    def streamManager(q: StreamingQuery): Option[String] = {
+    def streamConf(q: StreamingQuery, key: String): Option[String] = {
       val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
       exec.getClass.getMethod("sparkSessionForStream").invoke(exec)
-        .asInstanceOf[SparkSession].conf.getOption(CheckpointManagerKey)
+        .asInstanceOf[SparkSession].conf.getOption(key)
     }
     // the manager of the file source's log, which the query builds from the
     // caller's session on its own thread after start() returns
@@ -399,22 +455,28 @@ class TransportSpec extends SparkSuite {
       val log = field.get(src)
       log.getClass.getMethod("fileManager").invoke(log).getClass.getName
     }
-    assert(spark.conf.getOption(CheckpointManagerKey).isEmpty, "fixture: the session names no manager")
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    def leaked = LocalFs.LocalQuerySettings.map(_._1).filter(spark.conf.getOption(_).nonEmpty)
+    assert(LocalFs.LocalQuerySettings.forall { case (k, _) => hadoopConf.get(k) == null } &&
+      leaked.isEmpty, "fixture: neither the session nor the Hadoop configuration names a setting")
 
-    // (d) the query's session carries the FileSystem-based manager ...
+    // (d) the query's session carries the FileSystem-based manager and the
+    // java.nio local file system, uncached ...
     val ckpt = tmp("graft-mgr-ckpt")
     val q = start(ckpt)
     q.awaitTermination()
-    assert(streamManager(q).contains(LocalFs.FsCheckpointManager))
+    assert(streamConf(q, CheckpointManagerKey).contains(LocalFs.FsCheckpointManager))
     assert(sourceLogManager(q) == LocalFs.FsCheckpointManager)
-    // (b) ... and the caller's session does not, also after a start that throws
-    assert(spark.conf.getOption(CheckpointManagerKey).isEmpty, "the setting leaked into the session")
+    assert(streamConf(q, FileImplKey).contains(classOf[NioLocalFileSystem].getName))
+    assert(streamConf(q, "fs.file.impl.disable.cache").contains("true"))
+    // (b) ... and the caller's session carries none of them, also after a
+    // start that throws
+    assert(leaked.isEmpty, s"settings leaked into the session: $leaked")
     val notADir = Files.createTempFile("graft-mgr-ckpt", ".file").toString
     val thrown = intercept[org.apache.hadoop.fs.FileAlreadyExistsException](start(notADir))
     assert(thrown.getStackTrace.exists(_.getClassName == LocalFs.FsCheckpointManager),
-      "fixture: start must throw while the setting is in place")
-    assert(spark.conf.getOption(CheckpointManagerKey).isEmpty,
-      "a start that threw leaked the setting into the session")
+      "fixture: start must throw while the settings are in place")
+    assert(leaked.isEmpty, s"a start that threw leaked settings into the session: $leaked")
     // Hadoop's .crc files and Spark's checkpoint checksums are still written
     val state = new java.io.File(s"$ckpt/state/0/0").list().toSet
     assert(Set("1.delta", ".1.delta.crc", "1.delta.crc", ".1.delta.crc.crc").subsetOf(state),
@@ -427,10 +489,30 @@ class TransportSpec extends SparkSuite {
       val before = CountingCheckpointManager.made.get
       val q2 = start(tmp("graft-mgr-ckpt"))
       q2.awaitTermination()
-      assert(streamManager(q2).contains(own))
+      assert(streamConf(q2, CheckpointManagerKey).contains(own))
       assert(CountingCheckpointManager.made.get > before, "the session's manager was never built")
       assert(spark.conf.getOption(CheckpointManagerKey).contains(own))
     } finally spark.conf.unset(CheckpointManagerKey)
+
+    // (c) so is a local file system the session or the Hadoop configuration
+    // (`spark.hadoop.fs.file.impl`) names
+    val ownFs = classOf[CountingLocalFileSystem].getName
+    for ((where, set, unset) <- Seq[(String, () => Unit, () => Unit)](
+        ("the session", () => spark.conf.set(FileImplKey, ownFs), () => spark.conf.unset(FileImplKey)),
+        ("the Hadoop configuration", () => hadoopConf.set(FileImplKey, ownFs),
+          () => hadoopConf.unset(FileImplKey)))) {
+      set()
+      try {
+        val before = CountingLocalFileSystem.made.get
+        val q3 = start(tmp("graft-mgr-ckpt"))
+        q3.awaitTermination()
+        assert(!streamConf(q3, FileImplKey).contains(classOf[NioLocalFileSystem].getName),
+          s"$where: the query replaced the file system")
+        assert(CountingLocalFileSystem.made.get > before, s"$where: its file system was never built")
+      } finally unset()
+      assert(leaked.isEmpty, s"$where: settings leaked into the session: $leaked")
+    }
+    assert(spark.conf.getOption(FileImplKey).isEmpty && hadoopConf.get(FileImplKey) == null)
   }
 }
 
@@ -445,5 +527,16 @@ class CountingCheckpointManager(path: org.apache.hadoop.fs.Path,
 }
 
 object CountingCheckpointManager {
+  val made = new java.util.concurrent.atomic.AtomicInteger()
+}
+
+/** Hadoop's local file system, counting how often Hadoop builds it: a
+  * session that names it shows whether its queries used it.
+  */
+class CountingLocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  CountingLocalFileSystem.made.incrementAndGet()
+}
+
+object CountingLocalFileSystem {
   val made = new java.util.concurrent.atomic.AtomicInteger()
 }
