@@ -2,9 +2,10 @@
 """List the src/main files and members that no other program code reaches.
 
 A file is unreached when none of its top-level names (object, class,
-trait, case class) is mentioned, outside comments, in any other
-src/main file or in perfbench/src. Files that define a `main` are entry
-points and are skipped. A member is unreached when a non-`override`
+trait, case class) is mentioned in any other src/main file or in
+perfbench/src. Comments and the text of string literals mention nothing;
+the `$x`/`${...}` splices of an interpolated literal are code. Files
+that define a `main` are entry points and are skipped. A member is unreached when a non-`override`
 `def`/`val`/`var` of an object or class (nested ones included; `main`
 and `apply` excepted) is mentioned nowhere outside its own definition:
 not elsewhere in its file, not in another src/main file, not in
@@ -34,6 +35,7 @@ _INGEST = "member of sources/Ingest.scala, the allowlisted producer above"
 ALLOWED_MEMBERS = {
     "functions/VectorOps.scala: VectorOps.dotBuiltin": _REFERENCE,
     "functions/Bpe.scala: Bpe.segmentWordsNested": _REFERENCE,
+    "functions/Bpe.scala: Bpe.train": _REFERENCE,
     "functions/MixOps.scala: MixOps.qualityTiersWindowed": _REFERENCE,
     "functions/TextOps.scala: TextOps.compressRatio":
         "zlib ratio that specs cross-foot against the oracle-checked compressBytes",
@@ -60,21 +62,53 @@ MEMBER = re.compile(
     r"(?:def|val|var)\s+(\w+)")
 
 
+def literal(src, i):
+    """(end, splices) of the string literal that opens at src[i]: the index
+    past its closing quote, and, when an interpolator (`s`, `f`, `raw`, ...)
+    precedes it, the code of its `$x` and `${...}` splices with their own
+    literals reduced the same way."""
+    quote = '"""' if src.startswith('"""', i) else '"'
+    interp = i > 0 and (src[i - 1].isalnum() or src[i - 1] == "_")
+    j, n, splices = i + len(quote), len(src), []
+    while j < n:
+        if src.startswith(quote, j):
+            return j + len(quote), splices
+        if quote == '"' and src[j] == "\n":
+            return j, splices
+        if quote == '"' and src[j] == "\\" or interp and src.startswith("$$", j):
+            j += 2
+        elif interp and src.startswith("${", j):
+            depth, k = 1, j + 2
+            while k < n and depth:
+                if src[k] == '"':
+                    k = literal(src, k)[0]
+                    continue
+                depth += {"{": 1, "}": -1}.get(src[k], 0)
+                k += 1
+            splices.append(strip_comments(src[j + 2:k - 1]))
+            j = k
+        elif interp and src[j] == "$" and (m := SPLICE.match(src, j + 1)):
+            splices.append(m.group())
+            j = m.end()
+        else:
+            j += 1
+    return n, splices
+
+
+SPLICE = re.compile(r"[A-Za-z_]\w*")
+
+
 def strip_comments(src):
-    """Drop // and /* */ comments, keeping string literals intact."""
+    """Drop // and /* */ comments and reduce each string literal to its
+    splices: text inside quotes mentions nothing."""
     out, i, n = [], 0, len(src)
     while i < n:
-        if src.startswith('"""', i):
-            j = src.find('"""', i + 3)
-            j = n if j < 0 else j + 3
-            out.append(src[i:j])
-            i = j
+        if src.startswith("'\"'", i):
+            out.append(src[i:i + 3])
+            i += 3
         elif src[i] == '"':
-            j = i + 1
-            while j < n and src[j] not in '"\n':
-                j += 2 if src[j] == "\\" else 1
-            out.append(src[i:j + 1])
-            i = j + 1
+            i, splices = literal(src, i)
+            out.append('"' + " ".join(splices) + '"')
         elif src.startswith("//", i):
             j = src.find("\n", i)
             i = n if j < 0 else j

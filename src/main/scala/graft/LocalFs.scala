@@ -92,6 +92,18 @@ object LocalFs {
     }
   }
 
+  /** Wait for a bounded (AvailableNow) query to finish, then stop it. The
+    * timeout is checked: `awaitTermination(ms)` returning false means the
+    * query is still writing, and a caller that went on would read a partial
+    * output directory as the result. So a timeout throws, naming `stage`,
+    * and the query is stopped either way.
+    */
+  def drain(q: StreamingQuery, stage: String, ms: Long = 300000L): Unit =
+    try {
+      if (!q.awaitTermination(ms))
+        sys.error(s"$stage stream did not drain within ${ms / 1000} s")
+    } finally q.stop()
+
   private val SourcesInitMs = 60000L
   // serializes the helper's set/unset of the session settings; not the
   // session's own monitor, which the query's thread may take (Scala lazy

@@ -47,29 +47,16 @@ object RunDocPipeline {
     degradedStages.asScala.map("\"" + _ + "\"").mkString("[", ",", "]")
   }
 
-  /** Drain an AvailableNow query with a CHECKED timeout and a guaranteed
-    * stop: a bare `awaitTermination(ms)` returning false means the query
-    * is STILL WRITING while the stage reads its output dir — the readout
-    * would count a partial directory as a real result (the r18 q11/q12
-    * fix, applied to every gate; a timeout raises into [[guarded]]'s
-    * loud sentinel path instead).
-    */
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery,
-                    stage: String, ms: Long = 300000L): Unit =
-    try {
-      if (!q.awaitTermination(ms))
-        sys.error(s"$stage stream did not drain within ${ms / 1000} s")
-    } finally q.stop()
-
   /** One parquet stage: run `df` as an AvailableNow query into `path`
-    * (checkpoint `ckpt`), [[drain]] it, and read back what landed.
+    * (checkpoint `ckpt`), [[LocalFs.drain]] it, and read back what landed;
+    * a drain timeout raises into [[guarded]]'s loud sentinel path.
     */
   private def landed(df: DataFrame, path: String, ckpt: String, stage: String): DataFrame = {
     val q = LocalFs.startStream(df, ckpt)(_.format("parquet")
       .option("path", path)
       .outputMode("append")
       .trigger(Trigger.AvailableNow()))
-    drain(q, stage)
+    LocalFs.drain(q, stage)
     df.sparkSession.read.parquet(path)
   }
 

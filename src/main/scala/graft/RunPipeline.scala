@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{AnalysisException, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Readings
-import graft.streaming.RadiationPipeline
+import graft.streaming.{RadiationPipeline, Transport}
 
 /** Executable end-to-end streaming demo — the Spark analog of the
   * reference's `flink_process.py:main` wired to its `data_provider`:
@@ -63,32 +63,32 @@ object RunPipeline {
     val snap = new streaming.Serve.Snapshot(cap = 50)
     val speed = new java.util.concurrent.atomic.AtomicReference[java.lang.Double](1.0)
     val server = streaming.Serve.http(snap, speed)
-    val q = RadiationPipeline.run(raw, s"$workDir/out", s"$workDir/ckpt",
-      Readings.Thresholds(danger = 400.0),
-      onEpoch = streaming.Serve.foldEpoch(_, snap, _))
-    q.awaitTermination(300000)
-    console.foreach { c => c.processAllAvailable(); c.stop() }
-
-    // poll our own endpoint — the demo proves the serve path end to end
-    val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-    def get(url: String): String = {
-      val c = java.net.URI.create(url).toURL.openConnection()
-      new String(c.getInputStream.readAllBytes(), "UTF-8")
-    }
-    val served = get(s"$base/api/snapshot")
-    val dashboard = get(s"$base/api/dashboard")
+    val sink = Transport.Dir(inPath = "", outPath = s"$workDir/out")
+    // the server and the console query stop also when the drain throws
+    val (served, dashboard, speedResp) = try {
+      LocalFs.drain(RadiationPipeline.run(raw, sink.outPath, s"$workDir/ckpt",
+        Readings.Thresholds(danger = 400.0),
+        onEpoch = streaming.Serve.foldEpoch(_, snap, _)), "radiation")
+      console.foreach(_.processAllAvailable())
+      // poll our own endpoint — the demo proves the serve path end to end
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      def get(url: String): String = {
+        val c = java.net.URI.create(url).toURL.openConnection()
+        new String(c.getInputStream.readAllBytes(), "UTF-8")
+      }
+      val served = get(s"$base/api/snapshot")
+      val dashboard = get(s"$base/api/dashboard")
+      // the reference's speed-control POST round-trips through the same server
+      val post = java.net.URI.create(s"$base/api/playback_speed").toURL
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      post.setRequestMethod("POST"); post.setDoOutput(true)
+      post.getOutputStream.write("""{"playback_speed": 2.5}""".getBytes("UTF-8"))
+      (served, dashboard, new String(post.getInputStream.readAllBytes(), "UTF-8"))
+    } finally { console.foreach(_.stop()); server.stop(0) }
     val (nServed, cServed) = snap.counts
-    // the reference's speed-control POST round-trips through the same server
-    val post = java.net.URI.create(s"$base/api/playback_speed").toURL
-      .openConnection().asInstanceOf[java.net.HttpURLConnection]
-    post.setRequestMethod("POST"); post.setDoOutput(true)
-    post.getOutputStream.write("""{"playback_speed": 2.5}""".getBytes("UTF-8"))
-    val speedResp = new String(post.getInputStream.readAllBytes(), "UTF-8")
-    server.stop(0)
 
-    val counts = Seq("normal-data", "critical-data", "dirty-data").map { t =>
-      t -> sinkRows(spark, s"$workDir/out/$t")
-    }
+    val (normalT, criticalT, dirtyT) = Transport.topicNames(sink)
+    val counts = Seq(normalT, criticalT, dirtyT).map(t => t -> sinkRows(spark, s"${sink.outPath}/$t"))
     val stats = new ObjectMapper().readTree(dashboard).get("stats")
     val summary = s"""{"pipeline":"radiation","sf":"$sfDir",""" +
       counts.map { case (t, n) => s""""$t":$n,""" }.mkString +

@@ -17,16 +17,12 @@ import graft.operators.Readings.Thresholds
   * `GLOBAL_PARALLELISM` and `IDLE_TIMEOUT_MINUTES` are accepted and
   * ignored: Spark sets parallelism per session (the master's cores and
   * `spark.sql.shuffle.partitions`), not per job config.
+  *
+  * The file sets the endpoints (`transport`) and the plan's thresholds,
+  * watermark, cohort window and ENABLE_TEMPORAL_ORDERING gate (`pipeline`);
+  * the rest of `pipeline` keeps [[RadiationPipeline.Config]]'s defaults.
   */
-final case class GraftConfig(
-    transport: Transport.Kafka,
-    thresholds: Thresholds,
-    watermarkSeconds: Int,
-    temporalWindowSeconds: Int,
-    temporalOrdering: Boolean) {
-  def watermark: String = s"$watermarkSeconds seconds"
-  def temporalWindow: String = s"$temporalWindowSeconds seconds"
-}
+final case class GraftConfig(transport: Transport.Kafka, pipeline: RadiationPipeline.Config)
 
 object GraftConfig {
 
@@ -50,8 +46,9 @@ object GraftConfig {
     val m = parseIni(text)
     def str(k: String, d: String) = m.getOrElse(k, d)
     def int(k: String, d: Int) = m.get(k).map(_.toInt).getOrElse(d)
-    def first(keys: Seq[String], d: Int) =
-      keys.collectFirst { case k if m.contains(k) => m(k).toInt }.getOrElse(d)
+    def seconds(keys: Seq[String], d: String) =
+      keys.collectFirst { case k if m.contains(k) => s"${m(k).toInt} seconds" }.getOrElse(d)
+    val job = RadiationPipeline.Config()
     GraftConfig(
       transport = Transport.Kafka(
         bootstrapServers = str("KAFKA_BOOTSTRAP_SERVERS", "localhost:9092"),
@@ -59,18 +56,18 @@ object GraftConfig {
         normalTopic = str("KAFKA_OUTPUT_TOPIC", "normal-data"),
         criticalTopic = str("KAFKA_CRITICAL_TOPIC", "critical-data"),
         dirtyTopic = str("KAFKA_DIRTY_TOPIC", "dirty-data")),
-      thresholds = Thresholds(
-        low = int("LOW_THRESHOLD", 50),
-        moderate = int("MODERATE_THRESHOLD", 200),
-        danger = m.get("DANGER_THRESHOLD").map(_.toDouble).getOrElse(1000.0)),
-      // the file's spelling first, then the spelling the reference job
-      // reads, then the job's default
-      watermarkSeconds = first(
-        Seq("MAX_OUT_OF_ORDERNESS_SECONDS", "WATERMARK_OUT_OF_ORDERNESS_SECONDS"), 5),
-      temporalWindowSeconds = first(
-        Seq("TEMPORAL_WINDOW_SIZE_SECONDS", "TEMPORAL_WINDOW_SECONDS"), 1),
-      temporalOrdering =
-        str("ENABLE_TEMPORAL_ORDERING", "true").toLowerCase == "true")
+      pipeline = RadiationPipeline.Config(
+        thresholds = Thresholds(
+          low = int("LOW_THRESHOLD", 50),
+          moderate = int("MODERATE_THRESHOLD", 200),
+          danger = m.get("DANGER_THRESHOLD").map(_.toDouble).getOrElse(1000.0)),
+        // the file's spelling first, then the spelling the reference job
+        // reads, then the job's default
+        watermark = seconds(
+          Seq("MAX_OUT_OF_ORDERNESS_SECONDS", "WATERMARK_OUT_OF_ORDERNESS_SECONDS"), job.watermark),
+        window = seconds(
+          Seq("TEMPORAL_WINDOW_SIZE_SECONDS", "TEMPORAL_WINDOW_SECONDS"), job.window),
+        annotate = str("ENABLE_TEMPORAL_ORDERING", "true").toLowerCase == "true"))
   }
 
   def load(path: String): GraftConfig =

@@ -21,12 +21,16 @@ import graft.operators.Readings.Thresholds
   *  - per-operator json.loads (py:111 etc.)        → ONE `from_json` parse
   *  - timestamp normalization (py:56-84)           → [[normalizeTimestamp]]
   *  - composite dedup key (py:248-263)             → [[compositeKey]]
-  *  - keyed dedup, unbounded state (py:265-281)    → `dropDuplicates` or
-  *    bounded `dropDuplicatesWithinWatermark` (production-sane; SURVEY §7.5)
+  *  - keyed dedup, unbounded state (py:265-281)    → [[withCohort]]:
+  *    `dropDuplicates` or bounded `dropDuplicatesWithinWatermark`
+  *    (production-sane; SURVEY §7.5)
   *  - validate/enrich (py:93-176)                  → [[validate]]
-  *  - 5 s watermark (py:241-243)                   → `withWatermark`
+  *  - 5 s watermark (py:241-243)                   → `withWatermark` in
+  *    [[withCohort]]
+  *  - config.ini (py:196-216)                      → [[Config]], built from
+  *    the file by [[GraftConfig]]
   *  - 1 s cohort window + batch annotation
-  *    (py:23-54, 298-316)                          → [[cohortAnnotate]]
+  *    (py:23-54, 298-316)                          → [[withCohort]]
   *  - invalid bypass + union (py:318-320)          → [[withCohort]]
   *  - 3-way routing (py:327-351)                   → [[Routed]]
   *  - 3 transactional sinks (py:354-390)           → one `foreachBatch`
@@ -112,111 +116,83 @@ object RadiationPipeline {
         col("captured_time"), col("unit")).as("dedup_key"))
   }
 
-  /** The one split both topologies build from: valid rows with a parseable
-    * event time go to watermark-bounded state; every other row — invalid
-    * records (W5, flink_process.py:318-320) and valid records whose
-    * timestamp fails [[normalizeTimestamp]] (W2) — takes the unbounded
-    * bypass. An invalid record never meets the watermark, so one with a
-    * parseable but late timestamp still reaches dirty-data instead of
-    * being dropped as late.
+  /** The pipeline's settings, one per knob of the reference's `config.ini`
+    * (flink_process.py:196-216) plus the engine's own: `bounded` picks the
+    * timed side's dedup state (see [[withCohort]]), `watermark` is the
+    * allowed out-of-orderness (py:241-243), `window` the cohort window
+    * (py:298-316), `annotate` the ENABLE_TEMPORAL_ORDERING gate (W7),
+    * `trigger` as on the [[Transport]] overload of [[run]], and `onEpoch`
+    * runs after the sinks in the same epoch. [[GraftConfig]] builds one
+    * from a config file.
     */
-  private def split(validated: DataFrame): (DataFrame, DataFrame) = {
-    val timed = col("status") === "valid" && col("event_time").isNotNull
-    (validated.filter(timed), validated.filter(!timed))
-  }
+  final case class Config(
+      thresholds: Thresholds = Thresholds(),
+      bounded: Boolean = true,
+      watermark: String = "5 seconds",
+      window: String = "1 second",
+      annotate: Boolean = true,
+      trigger: Trigger = Trigger.AvailableNow(),
+      onEpoch: (Routed, Long) => Unit = (_, _) => ())
 
-  /** The timed side's dedup, one watermark definition feeding the dedup
-    * state and (in [[windowedPath]]) the cohort window — Spark 4 disallows
-    * redefining a watermark mid-plan.
-    */
-  private def dedupTimed(timed: DataFrame, watermark: String,
-                         bounded: Boolean): DataFrame = {
-    val marked = timed.withWatermark("event_time", watermark)
-    if (bounded) marked.dropDuplicatesWithinWatermark(Seq("dedup_key"))
-    else marked.dropDuplicates(Seq("dedup_key"))
-  }
-
-  /** D1 streaming form. `bounded=true` uses watermark-bounded state (sane at
-    * scale); `bounded=false` reproduces the reference's never-expiring
-    * ValueState exactly (grows forever, like flink_process.py:265-277).
+  /** The plan between [[validate]] and the sinks: dedup, cohort window and
+    * the bypass union.
     *
-    * Ordering note: the reference dedups BEFORE validation; validation here
-    * is a stateless row-preserving projection and the key is built from the
-    * same raw fields on both sides, so validate→dedup ≡ dedup→validate.
-    * Bounded mode delta: the [[split]] bypass (invalid records and rows
-    * without a parseable event time) cannot use watermark-bounded state, so
-    * it dedups through unbounded `dropDuplicates` — reference-faithful (its
-    * ValueState never expires), with state limited to the dirty and
-    * malformed-timestamp slice of the stream.
+    * One split: valid rows with a parseable event time go to
+    * watermark-bounded state; every other row — invalid records (W5,
+    * flink_process.py:318-320) and valid records whose timestamp fails
+    * [[normalizeTimestamp]] (W2) — takes the bypass. An invalid record
+    * never meets the watermark, so one with a parseable but late timestamp
+    * still reaches dirty-data instead of being dropped as late.
+    *
+    * D1 dedup, on both sides: the reference's keyed dedup runs on EVERY
+    * record before validation, so duplicate malformed records reach
+    * dirty-data once, not twice. The timed side carries the one watermark
+    * definition, which feeds its dedup state and the cohort window (Spark 4
+    * disallows redefining a watermark mid-plan). `bounded = true` dedups it
+    * within the watermark (sane at scale); `bounded = false` reproduces the
+    * reference's never-expiring ValueState (grows forever, like
+    * flink_process.py:265-277). Either way the timed side drops a row
+    * behind the watermark as late, with or without the cohort window. The
+    * bypass cannot use watermark-bounded state, so it always dedups
+    * through unbounded `dropDuplicates` — reference-faithful, with state
+    * limited to the dirty and malformed-timestamp slice of the stream.
+    * Ordering note: validation is a stateless row-preserving projection
+    * and the key is built from the same raw fields on both sides, so
+    * validate→dedup ≡ dedup→validate.
+    *
+    * W3+W4 cohort window: a tumbling event-time window over the timed side,
+    * each pane re-emitted with `temporal_batch_size` (cohort count),
+    * `timestamp_key` and `temporal_ordering` — via windowed `collect_list`
+    * + `explode` (fires when the watermark passes, exactly the Flink
+    * trigger semantics; late rows are dropped = py's no allowed-lateness).
+    * The bypass unions back un-annotated on the superset schema (W6). With
+    * `annotate = false` (ENABLE_TEMPORAL_ORDERING=false) there is no
+    * cohort window at all: the annotation columns stay null on every row.
     */
-  def dedup(validated: DataFrame, watermark: String = "5 seconds",
-            bounded: Boolean = true): DataFrame =
-    if (bounded) {
-      val (timed, bypass) = split(validated)
-      dedupTimed(timed, watermark, bounded)
-        .unionByName(bypass.dropDuplicates(Seq("dedup_key")))
-    } else
-      validated.dropDuplicates(Seq("dedup_key"))
-
-  /** The windowed path of [[run]]: the [[split]]'s timed side, deduped and
-    * annotated with its cohort.
-    */
-  def windowedPath(validated: DataFrame, watermark: String = "5 seconds",
-                   bounded: Boolean = true, window_ : String = "1 second"): DataFrame =
-    cohortAnnotate(dedupTimed(split(validated)._1, watermark, bounded),
-      window_ = window_, setWatermark = false)
-
-  /** W3+W4 streaming form: 1 s tumbling event-time window over the valid
-    * stream, each pane re-emitted with `temporal_batch_size` (cohort count),
-    * `timestamp_key`, `temporal_ordering` — via windowed
-    * `collect_list` + `explode` (fires when the watermark passes, exactly
-    * the Flink trigger semantics; late rows are dropped = py's no
-    * allowed-lateness).
-    */
-  def cohortAnnotate(valid: DataFrame, watermark: String = "5 seconds",
-                     window_ : String = "1 second",
-                     setWatermark: Boolean = true): DataFrame = {
-    val cols = valid.columns.toSeq
-    val base = valid.filter(col("event_time").isNotNull) // W2: no et → excluded
-    val marked = if (setWatermark) base.withWatermark("event_time", watermark) else base
-    marked
-      .groupBy(window(col("event_time"), window_))
+  def withCohort(validated: DataFrame, config: Config = Config()): DataFrame = {
+    val timed = col("status") === "valid" && col("event_time").isNotNull
+    val marked = validated.filter(timed).withWatermark("event_time", config.watermark)
+    val deduped =
+      if (config.bounded) marked.dropDuplicatesWithinWatermark(Seq("dedup_key"))
+      else marked.dropDuplicates(Seq("dedup_key"))
+    val bypass = validated.filter(!timed).dropDuplicates(Seq("dedup_key"))
+    def unannotated(df: DataFrame): DataFrame = df
+      .withColumn("temporal_batch_size", lit(null).cast("long"))
+      .withColumn("timestamp_key", lit(null: String))
+      .withColumn("temporal_ordering", lit(null: String))
+    if (!config.annotate) unannotated(deduped.unionByName(bypass))
+    else deduped
+      .filter(col("event_time").isNotNull) // already so; kept for the plan's shape
+      .groupBy(window(col("event_time"), config.window))
       .agg(count(lit(1)).as("temporal_batch_size"),
-           collect_list(struct(cols.map(col): _*)).as("rows"))
+           collect_list(struct(deduped.columns.toSeq.map(col): _*)).as("rows"))
       .select(col("window.start").as("window_start"), col("temporal_batch_size"),
         explode(col("rows")).as("r"))
       .select(col("r.*") +: Seq(
         col("temporal_batch_size"),
         date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("timestamp_key"),
         lit("compliant").as("temporal_ordering")): _*)
-  }
-
-  /** Valid path through the cohort window; the [[split]] bypass unions
-    * back un-annotated on the superset schema (W6).
-    *
-    * The bypass is deduplicated too: the reference's keyed dedup runs on
-    * EVERY record before validation, so duplicate malformed records reach
-    * dirty-data once, not twice. The bypass never meets the watermark ⇒
-    * unbounded `dropDuplicates` (see the [[dedup]] bounded-mode note).
-    * With `annotate = false` the same split feeds [[dedup]].
-    */
-  def withCohort(validated: DataFrame, watermark: String = "5 seconds",
-                 bounded: Boolean = true, window_ : String = "1 second",
-                 annotate: Boolean = true): DataFrame = {
-    if (!annotate)
-      // W7 config gate (ENABLE_TEMPORAL_ORDERING=false): dedup + route with
-      // no cohort window at all — annotation columns stay null on every row
-      return dedup(validated, watermark, bounded)
-        .withColumn("temporal_batch_size", lit(null).cast("long"))
-        .withColumn("timestamp_key", lit(null: String))
-        .withColumn("temporal_ordering", lit(null: String))
-    val annotated = windowedPath(validated, watermark, bounded, window_)
-    val bypass = split(validated)._2
-      .dropDuplicates(Seq("dedup_key"))
-      .withColumn("temporal_batch_size", lit(null).cast("long"))
-      .withColumn("timestamp_key", lit(null: String))
-      .withColumn("temporal_ordering", lit(null: String))
-    annotated.unionByName(bypass)
+      .unionByName(unannotated(bypass))
   }
 
   /** P11-P13 routing (flink_process.py:327-351) — the one definition, used
@@ -270,7 +246,7 @@ object RadiationPipeline {
   /** S6: write one epoch's batch to the three sink "topics" of a transport
     * in one Spark job: each row is tagged with its topic by [[topicOf]] and
     * the batch is written once. Cache `batch` when it is read again
-    * afterwards, as [[runRouted]]'s serving fold does.
+    * afterwards, as [[start]]'s serving fold does.
     *
     *  - [[Transport.Kafka]]: one send of (key = dedup key, value = JSON of
     *    the enriched record minus `raw`, topic = the tag); the kafka batch
@@ -342,8 +318,8 @@ object RadiationPipeline {
           thresholds: Thresholds, bounded: Boolean,
           trigger: Trigger,
           onEpoch: (Routed, Long) => Unit): StreamingQuery =
-    runRouted(source(spark, t), t, checkpointDir, thresholds, bounded,
-      trigger = trigger, onEpoch = onEpoch)
+    start(source(spark, t), t, checkpointDir, Config(thresholds, bounded,
+      trigger = trigger, onEpoch = onEpoch))
 
   /** End-to-end driven entirely by a reference `config.ini`
     * ([[GraftConfig]]): topics, thresholds, watermark, cohort window, and
@@ -352,10 +328,8 @@ object RadiationPipeline {
     */
   def run(spark: SparkSession, cfg: GraftConfig, checkpointDir: String,
           trigger: Trigger): StreamingQuery =
-    runRouted(source(spark, cfg.transport), cfg.transport, checkpointDir,
-      cfg.thresholds, bounded = true, watermark = cfg.watermark,
-      window_ = cfg.temporalWindow, annotate = cfg.temporalOrdering,
-      trigger = trigger)
+    start(source(spark, cfg.transport), cfg.transport, checkpointDir,
+      cfg.pipeline.copy(trigger = trigger))
 
   /** End-to-end: source of JSON strings → parse → validate → dedup → cohort →
     * route → one foreachBatch epoch writing the three outputs as parquet
@@ -374,27 +348,20 @@ object RadiationPipeline {
   def run(raw: DataFrame, outDir: String, checkpointDir: String,
           t: Thresholds = Thresholds(), bounded: Boolean = true,
           onEpoch: (Routed, Long) => Unit = (_, _) => ()): StreamingQuery =
-    runRouted(raw, Transport.Dir(inPath = "", outPath = outDir), checkpointDir, t, bounded,
-      onEpoch = onEpoch)
+    start(raw, Transport.Dir(inPath = "", outPath = outDir), checkpointDir,
+      Config(t, bounded, onEpoch = onEpoch))
 
-  /** Shared tail of every `run` overload: transforms + one foreachBatch
-    * epoch routed through [[writeEpoch]]. foreachBatch is at-least-once —
-    * a retried epoch re-runs the body; each transport's writer documents
-    * how it absorbs the retry. The epoch's cached batch is released even
-    * when a sink throws, so a failed query leaves nothing pinned in the
-    * session's cache.
+  /** Shared tail of every `run` overload: [[withCohort]] under `config` +
+    * one foreachBatch epoch routed through [[writeEpoch]]. foreachBatch is
+    * at-least-once — a retried epoch re-runs the body; each transport's
+    * writer documents how it absorbs the retry. The epoch's cached batch is
+    * released even when a sink throws, so a failed query leaves nothing
+    * pinned in the session's cache.
     */
-  private def runRouted(raw: DataFrame, t: Transport, checkpointDir: String,
-                        thresholds: Thresholds, bounded: Boolean,
-                        watermark: String = "5 seconds",
-                        window_ : String = "1 second",
-                        annotate: Boolean = true,
-                        trigger: Trigger = Trigger.AvailableNow(),
-                        onEpoch: (Routed, Long) => Unit = (_, _) => ()): StreamingQuery = {
-    val finalStream = withCohort(validate(parse(raw), thresholds),
-      watermark = watermark, bounded = bounded, window_ = window_,
-      annotate = annotate)
-    LocalFs.startStream(finalStream, checkpointDir)(_.trigger(trigger)
+  private def start(raw: DataFrame, t: Transport, checkpointDir: String,
+                    config: Config): StreamingQuery = {
+    val finalStream = withCohort(validate(parse(raw), config.thresholds), config)
+    LocalFs.startStream(finalStream, checkpointDir)(_.trigger(config.trigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val cached = batch.cache()
         try {
@@ -405,7 +372,7 @@ object RadiationPipeline {
           // log and the stream continues (the hook is idempotent per epoch,
           // see Serve.Snapshot.fold, so a skipped/failed fold is a
           // stale snapshot, not corruption)
-          try onEpoch(route(cached), epochId)
+          try config.onEpoch(route(cached), epochId)
           catch { case scala.util.control.NonFatal(e) =>
             System.err.println(s"[serve] epoch $epochId fold failed (snapshot stale): $e")
           }

@@ -35,25 +35,30 @@ class GraftConfigSpec extends SparkSuite {
   test("parses the reference's shipped config.ini verbatim") {
     val cfg = GraftConfig.fromIni(referenceIni)
     assert(cfg.transport == Transport.Kafka("kafka:9092"))
-    assert(cfg.thresholds.low == 50 && cfg.thresholds.moderate == 200 &&
-      cfg.thresholds.danger == 1000.0)
+    val p = cfg.pipeline
+    assert(p.thresholds.low == 50 && p.thresholds.moderate == 200 &&
+      p.thresholds.danger == 1000.0)
     // the file's spelling applies — in the reference it silently doesn't
     // (the job reads WATERMARK_OUT_OF_ORDERNESS_SECONDS, default 5)
-    assert(cfg.watermarkSeconds == 10)
-    assert(cfg.temporalWindowSeconds == 1 && cfg.temporalOrdering)
+    assert(p.watermark == "10 seconds")
+    assert(p.window == "1 seconds" && p.annotate && p.bounded)
   }
 
   test("defaults mirror the job's defaults; the job's key spelling also works") {
     val empty = GraftConfig.fromIni("")
-    assert(empty.watermarkSeconds == 5 && empty.temporalWindowSeconds == 1)
-    assert(empty.thresholds == graft.operators.Readings.Thresholds())
+    val job = RadiationPipeline.Config()
+    assert(empty.pipeline.watermark == job.watermark && empty.pipeline.window == job.window)
+    assert(job.watermark == "5 seconds" && job.window == "1 second")
+    assert(empty.pipeline.thresholds == graft.operators.Readings.Thresholds())
+    assert(empty.pipeline.annotate && empty.pipeline.bounded)
     val jobSpelling = GraftConfig.fromIni(
       "WATERMARK_OUT_OF_ORDERNESS_SECONDS = 7\nTEMPORAL_WINDOW_SECONDS = 2")
-    assert(jobSpelling.watermarkSeconds == 7 && jobSpelling.temporalWindowSeconds == 2)
+    assert(jobSpelling.pipeline.watermark == "7 seconds" &&
+      jobSpelling.pipeline.window == "2 seconds")
     // file spelling wins when both are present
     val both = GraftConfig.fromIni(
       "MAX_OUT_OF_ORDERNESS_SECONDS = 10\nWATERMARK_OUT_OF_ORDERNESS_SECONDS = 7")
-    assert(both.watermarkSeconds == 10)
+    assert(both.pipeline.watermark == "10 seconds")
   }
 
   test("producer config.ini maps SEND_DELAY_MS to a replay rate") {

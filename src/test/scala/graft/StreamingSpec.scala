@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.RadiationPipeline
+import graft.streaming.RadiationPipeline.Config
 import graft.operators.Readings.Thresholds
 
 /** Streaming-semantics tests (FIXTURES.md §A5 streaming rows): dedup within
@@ -22,8 +23,8 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming dedup drops exact duplicates, keeps 6th-decimal near-dups") {
     val in = MemoryStream[String]
-    val out = RadiationPipeline.dedup(
-      RadiationPipeline.validate(RadiationPipeline.parse(in.toDF())))
+    val out = RadiationPipeline.withCohort(
+      RadiationPipeline.validate(RadiationPipeline.parse(in.toDF())), Config(annotate = false))
     val q = out.writeStream.format("memory").queryName("dedup_t").outputMode("append").start()
     in.addData(
       rec("2011-03-15 10:00:00"),
@@ -49,8 +50,8 @@ class StreamingSpec extends SparkSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val in = MemoryStream[String]
-      val out = RadiationPipeline.dedup(
-        RadiationPipeline.validate(RadiationPipeline.parse(in.toDF())))
+      val out = RadiationPipeline.withCohort(
+        RadiationPipeline.validate(RadiationPipeline.parse(in.toDF())), Config(annotate = false))
       val q = out.writeStream.format("memory").queryName("rocks_t")
         .outputMode("append").start()
       in.addData(rec("2011-03-15 10:00:00"), rec("2011-03-15 10:00:00"))
@@ -89,8 +90,9 @@ class StreamingSpec extends SparkSuite {
 
   test("unbounded dedup (reference-faithful) drops dups across batches beyond the watermark") {
     val in = MemoryStream[String]
-    val out = RadiationPipeline.dedup(
-      RadiationPipeline.validate(RadiationPipeline.parse(in.toDF())), bounded = false)
+    val out = RadiationPipeline.withCohort(
+      RadiationPipeline.validate(RadiationPipeline.parse(in.toDF())),
+      Config(bounded = false, annotate = false))
     val q = out.writeStream.format("memory").queryName("dedup_ub_t").outputMode("append").start()
     in.addData(rec("2011-03-15 10:00:00"))
     q.processAllAvailable()
@@ -130,7 +132,7 @@ class StreamingSpec extends SparkSuite {
     // take the unbounded bypass, never the watermark-bounded dedup
     val in = MemoryStream[String]
     val out = RadiationPipeline.withCohort(
-      RadiationPipeline.validate(RadiationPipeline.parse(in.toDF())), annotate = false)
+      RadiationPipeline.validate(RadiationPipeline.parse(in.toDF())), Config(annotate = false))
     val q = out.writeStream.format("memory").queryName("late_dirty_t")
       .outputMode("append").start()
     in.addData(rec("2011-03-15 12:00:00"))
@@ -146,9 +148,8 @@ class StreamingSpec extends SparkSuite {
 
   test("cohort window annotates same-second batch size; late rows dropped") {
     val in = MemoryStream[String]
-    val out = RadiationPipeline.cohortAnnotate(
-      RadiationPipeline.validate(RadiationPipeline.parse(in.toDF()))
-        .filter(col("status") === "valid"))
+    val out = RadiationPipeline.withCohort(
+      RadiationPipeline.validate(RadiationPipeline.parse(in.toDF())), Config())
     val q = out.writeStream.format("memory").queryName("cohort_t").outputMode("append").start()
     // batch 1: a 3-cohort at :00, a 1-cohort at :01
     in.addData(

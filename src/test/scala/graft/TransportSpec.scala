@@ -255,6 +255,34 @@ class TransportSpec extends SparkSuite {
     assert(normal.select("value").head.getInt(0) == 42)
   }
 
+  test("a Dir run reports its three state operators by the names the benchmark reads") {
+    // the traced benchmark run reads each state operator's progress by name
+    val in = Files.createTempDirectory("graft-ops-in").toString
+    val out = Files.createTempDirectory("graft-ops-out").toString
+    val ckpt = Files.createTempDirectory("graft-ops-ckpt").toString
+    Files.writeString(java.nio.file.Path.of(in, "a.jsonl"),
+      Seq(rec("2011-03-15 10:00:00"), rec("2011-03-15 10:00:00", lat = 99))
+        .mkString("\n"))
+    val q = RadiationPipeline.run(spark, Transport.Dir(in, out), ckpt,
+      graft.operators.Readings.Thresholds(), bounded = true,
+      org.apache.spark.sql.streaming.Trigger.AvailableNow(), onEpoch = (_, _) => ())
+    q.awaitTermination()
+    val names = q.recentProgress.toSeq.map(_.stateOperators.map(_.operatorName).toSeq.sorted)
+    assert(names.nonEmpty && names.forall(_ == Seq("dedupe", "dedupeWithinWatermark", "stateStoreSave")),
+      s"state operators per epoch: $names")
+  }
+
+  test("drain: a query that outlives its timeout throws and is stopped") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[String]
+    val q = in.toDF().writeStream.format("memory").queryName("drain_t").start()
+    val e = intercept[RuntimeException](LocalFs.drain(q, "endless", ms = 200L))
+    assert(e.getMessage.contains("endless stream did not drain"))
+    assert(!q.isActive)
+  }
+
   /** The programs (base names) of the processes this JVM forks while `body`
     * runs, from an in-process Flight Recorder recording.
     */
